@@ -71,4 +71,12 @@ object HashFunctions {
     * 16, 10).cast("long")`. */
   def md5Hash60(c: Column): Column =
     GraftBridge.column(Md5Hash60(GraftBridge.expression(c)))
+
+  /** DuckDB twin of [[md5Hash60]] for oracle SQL: the Horner parse of
+    * md5's first 15 hex chars over the VARCHAR expression `s`. The
+    * lambda variable is `j`, so `s` may reference an outer `i`. */
+  def md5Hash60Sql(s: String): String =
+    s"""CAST(list_reduce(list_transform(generate_series(1, 15),
+       |  j -> strpos('0123456789abcdef', substring(md5(($s)), j, 1)) - 1),
+       |  (a, x) -> a * 16 + x) AS BIGINT)""".stripMargin
 }

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Custom aggregation / UDF / typed-decode surface (SURVEY.md §2.2 "custom
   * aggregates" and "UDF surface"). Native `functions._` stay the default;
@@ -219,16 +220,13 @@ object CustomAgg {
     // (v_lo + (r - floor(r)) * (v_hi - v_lo), then / 100.0) so the
     // doubles agree bit-for-bit.
     "q52_quantile_sketch" ->
-      """WITH cents AS (
+      s"""WITH cents AS (
            SELECT l_returnflag,
                   CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS v
            FROM lineitem),
          hv AS (
            SELECT DISTINCT l_returnflag,
-             CAST(list_reduce(list_transform(generate_series(1, 15),
-               i -> strpos('0123456789abcdef',
-                      substring(md5(CAST(v AS VARCHAR)), i, 1)) - 1),
-               (a, x) -> a * 16 + x) AS BIGINT) AS h, v
+             ${md5Hash60Sql("CAST(v AS VARCHAR)")} AS h, v
            FROM cents),
          samp AS (
            SELECT l_returnflag, v,

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Parity, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Large-scale training-data deduplication operators over `documents`.
   *
@@ -1612,10 +1613,7 @@ object DedupOps {
                      FROM documents),
          wf AS (SELECT doc_id, ws FROM w WHERE LEN(ws) >= 3),
          gr AS (SELECT DISTINCT doc_id,
-                  CAST(list_reduce(list_transform(generate_series(1, 15),
-                    p -> strpos('0123456789abcdef', substring(
-                      md5(array_to_string(ws[i:i+2], ' ')), p, 1)) - 1),
-                    (a, x) -> a * 16 + x) AS BIGINT) AS fp
+                  ${md5Hash60Sql("array_to_string(ws[i:i+2], ' ')")} AS fp
                 FROM wf, UNNEST(GENERATE_SERIES(1, LEN(ws) - 2)) AS t(i)),
          xl AS (SELECT doc_id, list(fp % $P31) AS xs FROM gr
                 GROUP BY doc_id),
@@ -1916,10 +1914,7 @@ object DedupOps {
                        FROM documents),
            wf AS (SELECT doc_id, ws FROM w WHERE LEN(ws) >= 3),
            gr AS (SELECT DISTINCT doc_id,
-                    CAST(list_reduce(list_transform(generate_series(1, 15),
-                      p -> strpos('0123456789abcdef', substring(
-                        md5(array_to_string(ws[i:i+2], ' ')), p, 1)) - 1),
-                      (a, x) -> a * 16 + x) AS BIGINT) AS fp
+                    ${md5Hash60Sql("array_to_string(ws[i:i+2], ' ')")} AS fp
                   FROM wf, UNNEST(GENERATE_SERIES(1, LEN(ws) - 2)) AS t(i)),
            xl AS (SELECT doc_id, list(fp % $P31) AS xs FROM gr
                   GROUP BY doc_id),
@@ -1969,10 +1964,7 @@ object DedupOps {
                        FROM documents),
            wf AS (SELECT doc_id, ws FROM w WHERE LEN(ws) >= 3),
            gr AS (SELECT DISTINCT doc_id,
-                    CAST(list_reduce(list_transform(generate_series(1, 15),
-                      p -> strpos('0123456789abcdef', substring(
-                        md5(array_to_string(ws[i:i+2], ' ')), p, 1)) - 1),
-                      (a, x) -> a * 16 + x) AS BIGINT) AS fp
+                    ${md5Hash60Sql("array_to_string(ws[i:i+2], ' ')")} AS fp
                   FROM wf, UNNEST(GENERATE_SERIES(1, LEN(ws) - 2)) AS t(i)),
            df AS (SELECT fp, COUNT(1) AS df FROM gr GROUP BY fp),
            tot AS (SELECT CAST(SUM(df) AS BIGINT) AS total_postings
@@ -2090,10 +2082,7 @@ object DedupOps {
                        FROM documents),
            wf AS (SELECT source, ws FROM w WHERE LEN(ws) >= 3),
            gr AS (SELECT DISTINCT source,
-                    CAST(list_reduce(list_transform(generate_series(1, 15),
-                      p -> strpos('0123456789abcdef', substring(
-                        md5(array_to_string(ws[i:i+2], ' ')), p, 1)) - 1),
-                      (a, x) -> a * 16 + x) % $P31 AS BIGINT) AS x
+                    ${md5Hash60Sql("array_to_string(ws[i:i+2], ' ')")} % $P31 AS x
                   FROM wf, UNNEST(GENERATE_SERIES(1, LEN(ws) - 2)) AS t(i)),
            sig AS (SELECT source, $sigTerms FROM gr GROUP BY source),
            sz AS (SELECT source, COUNT(1) AS sz FROM gr GROUP BY source),
@@ -2175,11 +2164,7 @@ object DedupOps {
              GROUP BY n_docs, total_postings"""
         def grams(w: Int) =
           s"""g$w AS (SELECT DISTINCT doc_id,
-               CAST(list_reduce(list_transform(generate_series(1, 15),
-                   j -> strpos('0123456789abcdef', substring(
-                     md5(array_to_string(ws[i:i+${w - 1}], ' ')), j, 1))
-                     - 1),
-                 (a, x) -> a * 16 + x) AS BIGINT) AS g
+               ${md5Hash60Sql(s"array_to_string(ws[i:i+${w - 1}], ' ')")} AS g
              FROM (SELECT doc_id, string_split(TRIM(text), ' ') AS ws
                    FROM documents) dd,
                UNNEST(generate_series(1, LEN(ws) - ${w - 1})) AS t(i)
@@ -2234,14 +2219,10 @@ object DedupOps {
 
   // d05's oracle, shared with the d22 agreement matrix.
   private val simhashSql =
-    """WITH w AS (SELECT doc_id, UNNEST(string_split(TRIM(text), ' ')) AS w
+    s"""WITH w AS (SELECT doc_id, UNNEST(string_split(TRIM(text), ' ')) AS w
                   FROM documents),
        h AS (SELECT doc_id,
-               CAST(list_reduce(
-                 list_transform(generate_series(1, 15),
-                   i -> strpos('0123456789abcdef',
-                          substring(md5(w), i, 1)) - 1),
-                 (a, x) -> a * 16 + x) AS BIGINT) AS h
+               ${md5Hash60Sql("w")} AS h
              FROM w),
        bits AS (SELECT doc_id, i,
                   SUM(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END) AS s
@@ -2282,15 +2263,12 @@ object DedupOps {
   // DuckDB twin of [[winnowFps]]: the same row-local list pipeline —
   // hash stream, sliding list_min, list_distinct — then one UNNEST.
   private val WinnowCte =
-    """WITH d AS (SELECT doc_id, string_split(TRIM(text), ' ') AS ws
+    s"""WITH d AS (SELECT doc_id, string_split(TRIM(text), ' ') AS ws
                   FROM documents
                   WHERE LEN(string_split(TRIM(text), ' ')) >= 3),
        h AS (SELECT doc_id, CAST(LEN(ws) - 2 AS BIGINT) AS n_grams,
                list_transform(generate_series(1, LEN(ws) - 2), i ->
-                 CAST(list_reduce(list_transform(generate_series(1, 15),
-                   j -> strpos('0123456789abcdef', substring(
-                     md5(array_to_string(ws[i:i+2], ' ')), j, 1)) - 1),
-                   (a, x) -> a * 16 + x) AS BIGINT)) AS hs
+                 ${md5Hash60Sql("array_to_string(ws[i:i+2], ' ')")}) AS hs
              FROM d),
        fl AS (SELECT doc_id, n_grams,
                 list_distinct(list_transform(

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Round-2 widening of the analytical surface (SURVEY.md §2.2): array
   * higher-order functions, map functions over decoded JSON, CSV
@@ -327,12 +328,8 @@ object Extended {
          ORDER BY vec_id""",
 
     "q51_kmv_distinct_sketch" ->
-      """WITH h AS (SELECT DISTINCT event_type,
-           CAST(list_reduce(
-             list_transform(generate_series(1, 15),
-               i -> strpos('0123456789abcdef',
-                      substring(md5(CAST(user_id AS VARCHAR)), i, 1)) - 1),
-             (a, x) -> a * 16 + x) AS BIGINT) AS h
+      s"""WITH h AS (SELECT DISTINCT event_type,
+           ${md5Hash60Sql("CAST(user_id AS VARCHAR)")} AS h
            FROM events),
          r AS (SELECT event_type, h,
                  ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS rn
@@ -345,12 +342,8 @@ object Extended {
          FROM r GROUP BY event_type ORDER BY event_type""",
 
     "q63_kmv_sketch_union" ->
-      """WITH h AS (SELECT DISTINCT event_type,
-           CAST(list_reduce(
-             list_transform(generate_series(1, 15),
-               i -> strpos('0123456789abcdef',
-                      substring(md5(CAST(user_id AS VARCHAR)), i, 1)) - 1),
-             (a, x) -> a * 16 + x) AS BIGINT) AS h
+      s"""WITH h AS (SELECT DISTINCT event_type,
+           ${md5Hash60Sql("CAST(user_id AS VARCHAR)")} AS h
            FROM events),
          r AS (SELECT event_type, h,
                  ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS rn

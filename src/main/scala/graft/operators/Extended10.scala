@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
+import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Tenth analytics batch: graph structure beyond centrality (triangle
   * counting / clustering coefficients via the degree-orientation trick),
@@ -1190,6 +1191,21 @@ object Extended10 {
     })
   )
 
+  /** Oracle CTEs `rho`, `regs`, `sk` (priority, n_buckets_hit, z_hit)
+    * of q114/q126: the 64-register HLL sketch over CTE
+    * `hashed(priority, h)`. */
+  private val hllRegistersSql =
+    """rho AS (SELECT priority, h & 63 AS bucket,
+             CASE WHEN (h >> 6) = 0 THEN 55
+               ELSE 55 - length(bin(h >> 6)) END AS rho
+           FROM hashed),
+         regs AS (SELECT priority, bucket, MAX(rho) AS m
+           FROM rho GROUP BY 1, 2),
+         sk AS (SELECT priority, COUNT(1) AS n_buckets_hit,
+             CAST(SUM(CAST(1 AS BIGINT) << CAST(55 - m AS INT))
+               AS BIGINT) AS z_hit
+           FROM regs GROUP BY 1)"""
+
   def oracleSql: Map[String, String] = Map(
 
     "q107_triangle_count" ->
@@ -1431,22 +1447,10 @@ object Extended10 {
          FROM sw ORDER BY suppkey""",
 
     "q114_hll_distinct" ->
-      """WITH hashed AS (SELECT o_orderpriority AS priority, o_custkey,
-             CAST(list_reduce(list_transform(generate_series(1, 15),
-                 i -> strpos('0123456789abcdef', substring(
-                   md5(CAST(o_custkey AS VARCHAR)), i, 1)) - 1),
-               (a, x) -> a * 16 + x) AS BIGINT) AS h
+      s"""WITH hashed AS (SELECT o_orderpriority AS priority, o_custkey,
+             ${md5Hash60Sql("CAST(o_custkey AS VARCHAR)")} AS h
            FROM orders),
-         rho AS (SELECT priority, h & 63 AS bucket,
-             CASE WHEN (h >> 6) = 0 THEN 55
-               ELSE 55 - length(bin(h >> 6)) END AS rho
-           FROM hashed),
-         regs AS (SELECT priority, bucket, MAX(rho) AS m
-           FROM rho GROUP BY 1, 2),
-         sk AS (SELECT priority, COUNT(1) AS n_buckets_hit,
-             CAST(SUM(CAST(1 AS BIGINT) << CAST(55 - m AS INT))
-               AS BIGINT) AS z_hit
-           FROM regs GROUP BY 1),
+         $hllRegistersSql,
          zz AS (SELECT priority, n_buckets_hit,
              z_hit + (64 - n_buckets_hit) * (CAST(1 AS BIGINT) << 55)
                AS z
@@ -1745,22 +1749,10 @@ object Extended10 {
     // q114's register oracle minus the exact-distinct join — the
     // aggregate must reproduce the declarative build's sketch exactly
     "q126_hll_agg" ->
-      """WITH hashed AS (SELECT o_orderpriority AS priority,
-             CAST(list_reduce(list_transform(generate_series(1, 15),
-                 i -> strpos('0123456789abcdef', substring(
-                   md5(CAST(o_custkey AS VARCHAR)), i, 1)) - 1),
-               (a, x) -> a * 16 + x) AS BIGINT) AS h
+      s"""WITH hashed AS (SELECT o_orderpriority AS priority,
+             ${md5Hash60Sql("CAST(o_custkey AS VARCHAR)")} AS h
            FROM orders),
-         rho AS (SELECT priority, h & 63 AS bucket,
-             CASE WHEN (h >> 6) = 0 THEN 55
-               ELSE 55 - length(bin(h >> 6)) END AS rho
-           FROM hashed),
-         regs AS (SELECT priority, bucket, MAX(rho) AS m
-           FROM rho GROUP BY 1, 2),
-         sk AS (SELECT priority, COUNT(1) AS n_buckets_hit,
-             CAST(SUM(CAST(1 AS BIGINT) << CAST(55 - m AS INT))
-               AS BIGINT) AS z_hit
-           FROM regs GROUP BY 1)
+         $hllRegistersSql
          SELECT priority, n_buckets_hit,
            CAST(0.709365049 AS DOUBLE) * CAST(4096.0 AS DOUBLE)
              * CAST(36028797018963968.0 AS DOUBLE)
@@ -1826,13 +1818,10 @@ object Extended10 {
          ORDER BY purchase_id""",
 
     "q124_hll_weekly_union" ->
-      """WITH hashed AS (SELECT o_orderpriority AS priority,
+      s"""WITH hashed AS (SELECT o_orderpriority AS priority,
              CAST(datediff('day', DATE '1970-01-01',
                CAST(o_orderdate AS DATE)) // 7 AS BIGINT) AS wk,
-             CAST(list_reduce(list_transform(generate_series(1, 15),
-                 i -> strpos('0123456789abcdef', substring(
-                   md5(CAST(o_custkey AS VARCHAR)), i, 1)) - 1),
-               (a, x) -> a * 16 + x) AS BIGINT) AS h
+             ${md5Hash60Sql("CAST(o_custkey AS VARCHAR)")} AS h
            FROM orders),
          rho AS (SELECT priority, wk, h & 63 AS bucket,
              CASE WHEN (h >> 6) = 0 THEN 55

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Parity, Tables}
+import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Eleventh analytics batch: the Count-Min frequency sketch surface
   * (the mergeable-summary family's missing member — HLL says "how many
@@ -52,34 +53,11 @@ object Extended11 {
               "unix_micros(CAST(ft AS TIMESTAMP))) div 60000000"))
           .as("dur")))
 
-  /** The two-sample contrast carrier shared by q134 Mann–Whitney and
-    * Extended15's q184/q185/q186: per-order whole-dollar revenue
-    * tagged wide (≥ 6 items) vs narrow (≤ 2) — the pair that
-    * genuinely separates on this corpus (the q108 attainability
-    * rule). One fact rollup; everything downstream runs on value
-    * grids. */
-  private[graft] def orderWidthValues(
-      s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_orderkey"))
-      .agg(count(lit(1)).as("n_items"),
-        sum(Parity.cents2(col("l_extendedprice"))).as("cents"))
-      .filter(col("n_items") <= 2 || col("n_items") >= 6)
-      .select(expr("cents div 100").as("value"),
-        (col("n_items") >= 6).as("wide"))
-
   /** Portable 60-bit hash both engines can compute bit-identically:
     * the first 15 hex chars of md5 over the value's UTF-8 string form
     * (the q114/q51 discipline). */
   private def phash(c: Column): Column =
     graft.functions.HashFunctions.md5Hash60(c.cast("string"))
-
-  /** DuckDB twin of [[phash]]. */
-  private def phashSql(expr: String): String =
-    s"""CAST(list_reduce(list_transform(generate_series(1, 15),
-       |  i -> strpos('0123456789abcdef', substring(
-       |    md5(CAST(($expr) AS VARCHAR)), i, 1)) - 1),
-       |(a, x) -> a * 16 + x) AS BIGINT)""".stripMargin
 
   /** Shared BPE trainer for t37 (merge table) and Extended12's t39
     * (encode audit): 5 rounds of deterministic argmax over weighted
@@ -369,11 +347,7 @@ object Extended11 {
     // only fact exchange is the per-order rollup; everything after
     // runs on the value grid.
     "q134_mannwhitney_u" -> ((s, d) => {
-      val per = orderWidthValues(s, d)
-      val ev = per.groupBy(col("value"))
-        .agg(sum(when(col("wide"), 1L).otherwise(0L)).as("ca"),
-          sum(when(!col("wide"), 1L).otherwise(0L)).as("cb"))
-        .withColumn("t", col("ca") + col("cb"))
+      val ev = OrderRevenue.widthCounts(s, d)
       val wBelow = Window.orderBy(col("value"))
         .rowsBetween(Window.unboundedPreceding, -1)
       val grid = ev
@@ -417,17 +391,8 @@ object Extended11 {
     // longs to ~5e5 orders per nation; the final n·Sxy products run in
     // doubles (correctly rounded, cross-engine identical) at any n.
     "q135_spearman_corr" -> ((s, d) => {
-      val items = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_items"),
-          sum(Parity.cents2(col("l_extendedprice"))).as("rev"))
-      val orders = Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(items, col("o_orderkey") === col("l_orderkey"))
-        .select(col("n_name").as("nation"),
-          col("rev").as("x"), col("n_items").as("y"))
+      val orders = OrderRevenue.perOrderNation(s, d)
+        .select(col("nation"), col("cents").as("x"), col("n_items").as("y"))
       def rank2(c: String): Column = {
         val wLess = Window.partitionBy(col("nation")).orderBy(col(c))
         val wTie = Window.partitionBy(col("nation"), col(c))
@@ -679,7 +644,7 @@ object Extended11 {
   def oracleSql: Map[String, String] = Map(
 
     "q129_cms_frequency" ->
-      s"""WITH ev AS (SELECT user_id, ${phashSql("user_id")} AS h
+      s"""WITH ev AS (SELECT user_id, ${md5Hash60Sql("CAST(user_id AS VARCHAR)")} AS h
          |    FROM events),
          |  uc AS (SELECT user_id, h, COUNT(1) AS n_exact FROM ev
          |    GROUP BY 1, 2),
@@ -796,10 +761,7 @@ object Extended11 {
         |ORDER BY t_min""".stripMargin,
 
     "q134_mannwhitney_u" ->
-      """WITH per AS (SELECT l_orderkey, COUNT(1) AS n_items,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS cents
-        |  FROM lineitem GROUP BY 1),
+      s"""WITH ${OrderRevenue.perOrderSql},
         |  s AS (SELECT cents // 100 AS value, n_items >= 6 AS wide
         |    FROM per WHERE n_items <= 2 OR n_items >= 6),
         |  ev AS (SELECT value,
@@ -978,8 +940,8 @@ object Extended11 {
          |  qb AS (SELECT DISTINCT l_partkey FROM lineitem
          |    WHERE l_shipdate >= DATE '1996-04-01'
          |      AND l_shipdate < DATE '1996-07-01'),
-         |  ha AS (SELECT ${phashSql("l_partkey")} AS h FROM qa),
-         |  hb AS (SELECT ${phashSql("l_partkey")} AS h FROM qb),
+         |  ha AS (SELECT ${md5Hash60Sql("CAST(l_partkey AS VARCHAR)")} AS h FROM qa),
+         |  hb AS (SELECT ${md5Hash60Sql("CAST(l_partkey AS VARCHAR)")} AS h FROM qb),
          |  ska AS (SELECT h FROM
          |    (SELECT h, ROW_NUMBER() OVER (ORDER BY h) AS rn FROM ha)
          |    WHERE rn <= 64),

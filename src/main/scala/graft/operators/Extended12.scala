@@ -39,30 +39,12 @@ object Extended12 {
     */
   private[graft] def kruskalWallisH(rows: DataFrame,
       groups: Seq[String]): DataFrame = {
-    require(groups.size >= 2 && groups.size <= 26, "2..26 groups")
     val sfx = groups.indices.map(i => ('a' + i).toChar.toString)
-    val ev = rows.groupBy(col("value"))
-      .agg(sfx.zip(groups).map { case (x, g) =>
-          sum(when(col("grp") === g, 1L).otherwise(0L)).as(s"c$x")
-        }.head,
-        sfx.zip(groups).map { case (x, g) =>
-          sum(when(col("grp") === g, 1L).otherwise(0L)).as(s"c$x")
-        }.tail: _*)
-      .withColumn("t", sfx.map(x => col(s"c$x")).reduce(_ + _))
-    val wBelow = Window.orderBy(col("value"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val grid = ev
-      .withColumn("below", coalesce(sum(col("t")).over(wBelow), lit(0L)))
-      .withColumn("r2", lit(2L) * col("below") + col("t") + 1L)
-    val agg = grid.agg(
-      (sfx.map(x => sum(col(s"c$x")).as(s"n_$x")) ++
-        sfx.map(x => sum(col(s"c$x") * col("r2")).as(s"r2_$x")) :+
-        sum(col("t") * col("t") * col("t") - col("t")).as("tie3")).head,
-      (sfx.map(x => sum(col(s"c$x")).as(s"n_$x")) ++
-        sfx.map(x => sum(col(s"c$x") * col("r2")).as(s"r2_$x")) :+
-        sum(col("t") * col("t") * col("t") - col("t")).as("tie3"))
-        .tail: _*)
-    agg
+    val sums = sfx.map(x => sum(col(s"c$x")).as(s"n_$x")) ++
+      sfx.map(x => sum(col(s"c$x") * col("r2")).as(s"r2_$x")) :+
+      sum(col("t") * col("t") * col("t") - col("t")).as("tie3")
+    OrderRevenue.midrankGrid(rows, groups)
+      .agg(sums.head, sums.tail: _*)
       .withColumn("n", sfx.map(x => col(s"n_$x")).reduce(_ + _))
       .withColumn("nd", col("n").cast("double"))
       .withColumn("hsum", sfx.map(x =>
@@ -136,21 +118,6 @@ object Extended12 {
           .as("tau_b"))
   }
 
-  /** Per-order whole-dollar revenue tagged with its order-size bucket —
-    * the shared input of q139/q140. The only fact-table exchange either
-    * test needs: one keyed rollup of lineitem; everything downstream
-    * runs on the value grid (q134's stance).
-    */
-  private[operators] def orderSizeBuckets(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_orderkey"))
-      .agg(count(lit(1)).as("n_items"),
-        sum(Parity.cents2(col("l_extendedprice"))).as("cents"))
-      .select(expr("cents div 100").as("value"),
-        when(col("n_items") <= 2, lit("narrow"))
-          .when(col("n_items") <= 5, lit("mid"))
-          .otherwise(lit("wide")).as("grp"))
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // KRUSKAL-WALLIS H — the k-sample rank test: one statistic for
@@ -171,7 +138,7 @@ object Extended12 {
     // grid is bounded by the price range, not the order count. Exact-
     // carrier range: Σ c·r2 ≤ 2N² holds in longs to N ≈ 2e9 orders.
     "q139_kruskal_wallis" -> ((s, d) => {
-      kruskalWallisH(orderSizeBuckets(s, d),
+      kruskalWallisH(OrderRevenue.orderSizeBuckets(s, d),
         Seq("narrow", "mid", "wide"))
         .select(col("n_a").as("na"), col("n_b").as("nb"),
           col("n_c").as("nc"), col("n"),
@@ -195,34 +162,11 @@ object Extended12 {
     // rank test and the moment test agree this strongly, the location
     // shift is real, not a tail artifact.
     "q140_anova_oneway" -> ((s, d) => {
-      val g = orderSizeBuckets(s, d).groupBy(col("grp"))
+      val g = OrderRevenue.orderSizeBuckets(s, d).groupBy(col("grp"))
         .agg(count(lit(1)).as("n_g"), sum(col("value")).as("sx"),
           sum(col("value") * col("value")).as("sxx"))
-      g.agg(
-          sum(col("n_g")).as("n"),
-          sum(col("sx")).as("sx_all"),
-          sum(col("sxx")).as("sxx_all"),
-          sum(when(col("grp") === "narrow", col("n_g"))).as("na"),
-          sum(when(col("grp") === "mid", col("n_g"))).as("nb"),
-          sum(when(col("grp") === "wide", col("n_g"))).as("nc"),
-          sum(when(col("grp") === "narrow", col("sx"))).as("sa"),
-          sum(when(col("grp") === "mid", col("sx"))).as("sb"),
-          sum(when(col("grp") === "wide", col("sx"))).as("sc"))
-        .withColumn("nd", col("n").cast("double"))
-        .withColumn("gsum",
-          col("sa").cast("double") * col("sa").cast("double") /
-            col("na").cast("double") +
-          col("sb").cast("double") * col("sb").cast("double") /
-            col("nb").cast("double") +
-          col("sc").cast("double") * col("sc").cast("double") /
-            col("nc").cast("double"))
-        .withColumn("ssb",
-          col("gsum") - col("sx_all").cast("double") *
-            col("sx_all").cast("double") / col("nd"))
-        .withColumn("ssw", col("sxx_all").cast("double") - col("gsum"))
-        .withColumn("f_stat",
-          col("ssb") / lit(2.0) /
-            (col("ssw") / (col("nd") - lit(3.0))))
+      val sums = OrderRevenue.bucketMomentSums
+      OrderRevenue.oneWayF(g.agg(sums.head, sums.tail: _*))
         .select(col("na"), col("nb"), col("nc"), col("n"),
           col("ssb"), col("ssw"), col("f_stat"),
           (col("f_stat") > 2.9957).as("reject_95"))
@@ -250,17 +194,8 @@ object Extended12 {
     // the per-nation value grid, and the final agg is one row per
     // nation with map-side partials.
     "q141_kendall_tau" -> ((s, d) => {
-      val items = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_items"),
-          sum(Parity.cents2(col("l_extendedprice"))).as("rev"))
-      val pts = Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(items, col("o_orderkey") === col("l_orderkey"))
-        .select(col("n_name").as("nation"),
-          expr("rev div 100").as("x"),
+      val pts = OrderRevenue.perOrderNation(s, d)
+        .select(col("nation"), expr("cents div 100").as("x"),
           least(col("n_items"), lit(7L)).as("y"))
       kendallTauB(pts, 7).orderBy(col("nation"))
     }),
@@ -437,14 +372,7 @@ object Extended12 {
         .select(col("doc_id"), (col("quality") === "ok").as("a"))
       val b = TextOps.repetitionStats(Tables.documents(s, d))
         .select(col("doc_id"), (col("n_dup_pos") === 0).as("b"))
-      a.join(b, "doc_id")
-        .agg(
-          sum(when(col("a") && col("b"), 1L).otherwise(0L)).as("n11"),
-          sum(when(col("a") && !col("b"), 1L).otherwise(0L)).as("n10"),
-          sum(when(!col("a") && col("b"), 1L).otherwise(0L)).as("n01"),
-          sum(when(!col("a") && !col("b"), 1L).otherwise(0L)).as("n00"))
-        .withColumn("n",
-          col("n11") + col("n10") + col("n01") + col("n00"))
+      Extended14.agreementCells(a.join(b, "doc_id"))
         .withColumn("expsum",
           (col("n11") + col("n10")) * (col("n11") + col("n01")) +
             (col("n01") + col("n00")) * (col("n10") + col("n00")))
@@ -485,9 +413,7 @@ object Extended12 {
     // shape would drop.
     "q145_quantile_coverage" -> ((s, d) => {
       val wk = Tables.orders(s, d)
-        .select(
-          expr("CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT)" +
-            " div 7").as("wk"),
+        .select(OrderRevenue.orderWeek.as("wk"),
           Parity.cents2(col("o_totalprice")).as("cents"))
       val fan = wk.groupBy(col("wk"), col("cents"))
         .agg(count(lit(1)).as("cnt"))
@@ -544,16 +470,7 @@ object Extended12 {
     // (single fact join), the grid median runs on the bounded price
     // grid, and the stratum table is |nations| rows.
     "q146_cmh_test" -> ((s, d) => {
-      val items = Tables.lineitem(s, d).groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_items"),
-          sum(Parity.cents2(col("l_extendedprice"))).as("cents"))
-      val per = Materialize.LocalCheckpoint(Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(items, col("o_orderkey") === col("l_orderkey"))
-        .select(col("n_name").as("nation"), col("cents"),
-          col("n_items")))
+      val per = Materialize.LocalCheckpoint(OrderRevenue.perOrderNation(s, d))
       val wCum = Window.orderBy(col("cents"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wAll = Window
@@ -621,12 +538,8 @@ object Extended12 {
     // identical to q139 — one fact rollup, then the bounded value
     // grid.
     "q147_jonckheere_trend" -> ((s, d) => {
-      val ev = orderSizeBuckets(s, d).groupBy(col("value"))
-        .agg(sum(when(col("grp") === "narrow", 1L).otherwise(0L))
-            .as("ca"),
-          sum(when(col("grp") === "mid", 1L).otherwise(0L)).as("cb"),
-          sum(when(col("grp") === "wide", 1L).otherwise(0L)).as("cc"))
-        .withColumn("t", col("ca") + col("cb") + col("cc"))
+      val ev = OrderRevenue.groupCounts(OrderRevenue.orderSizeBuckets(s, d),
+        Seq("narrow", "mid", "wide"))
       val wB = Window.orderBy(col("value"))
         .rowsBetween(Window.unboundedPreceding, -1)
       val grid = ev
@@ -722,30 +635,7 @@ object Extended12 {
     // doubles. Scale shape: one fact rollup to |nations|×3 rows;
     // everything after is grid-local.
     "q148_friedman_concordance" -> ((s, d) => {
-      val obs = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_items"),
-          sum(Parity.cents2(col("l_extendedprice"))).as("cents"))
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name").as("nation"),
-          when(col("n_items") <= 2, lit("narrow"))
-            .when(col("n_items") <= 5, lit("mid"))
-            .otherwise(lit("wide")).as("grp"),
-          col("cents"))
-        .groupBy(col("nation"), col("grp"))
-        .agg(count(lit(1)).as("n_g"), sum(col("cents")).as("tot"))
-        .withColumn("mean",
-          col("tot").cast("double") / col("n_g").cast("double"))
-      val w = Window.partitionBy(col("nation"))
-        .orderBy(col("mean"), col("grp"))
-      obs.withColumn("rk", row_number().over(w).cast("long"))
-        .agg(countDistinct(col("nation")).as("n_blocks"),
-          sum(when(col("grp") === "narrow", col("rk"))).as("r_narrow"),
-          sum(when(col("grp") === "mid", col("rk"))).as("r_mid"),
-          sum(when(col("grp") === "wide", col("rk"))).as("r_wide"))
+      OrderRevenue.blockRankSums(s, d)
         .withColumn("sr2",
           col("r_narrow") * col("r_narrow") + col("r_mid") * col("r_mid")
             + col("r_wide") * col("r_wide"))
@@ -779,17 +669,9 @@ object Extended12 {
     // |nations| and |buckets| rows; weights localCheckpointed per
     // round so the plan stays flat.
     "q149_raking_weights" -> ((s, d) => {
-      val grid = Materialize.LocalCheckpoint(Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_items"))
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name").as("nation"),
-          when(col("n_items") <= 2, lit("narrow"))
-            .when(col("n_items") <= 5, lit("mid"))
-            .otherwise(lit("wide")).as("grp"))
+      val grid = Materialize.LocalCheckpoint(OrderRevenue.perOrderNation(s, d)
+        .select(col("nation"),
+          OrderRevenue.sizeBucket(col("n_items")).as("grp"))
         .groupBy(col("nation"), col("grp"))
         .agg(count(lit(1)).as("cnt")))
       val tot = grid.agg(sum(col("cnt")).as("n_all"),
@@ -850,15 +732,9 @@ object Extended12 {
     // per segment. Scale shape: one rollup, map-side partial sums,
     // |nations| rows out.
     "q150_moment_profile" -> ((s, d) => {
-      val per = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(Parity.cents2(col("l_extendedprice"))).as("rev"))
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name").as("nation"),
-          expr("CAST((rev div 100) AS DECIMAL(38,0))").as("x"))
+      val per = OrderRevenue.perOrderNation(s, d)
+        .select(col("nation"),
+          expr("CAST((cents div 100) AS DECIMAL(38,0))").as("x"))
       per.groupBy(col("nation"))
         .agg(count(lit(1)).as("n"),
           sum(col("x")).as("s1"),
@@ -901,22 +777,7 @@ object Extended12 {
     // cumulative window, conditional-min lookups in the same grouped
     // aggregate — |nations| rows out.
     "q151_median_ci" -> ((s, d) => {
-      val pts = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(Parity.cents2(col("l_extendedprice"))).as("rev"))
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name").as("nation"), expr("rev div 100").as("v"))
-      val grid = pts.groupBy(col("nation"), col("v"))
-        .agg(count(lit(1)).as("c"))
-      val wCum = Window.partitionBy(col("nation")).orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wTot = Window.partitionBy(col("nation"))
-      grid
-        .withColumn("cum", sum(col("c")).over(wCum))
-        .withColumn("n", sum(col("c")).over(wTot))
+      OrderRevenue.nationValueCum(s, d)
         .withColumn("nd", col("n").cast("double"))
         .withColumn("k_lo",
           floor((col("nd") - lit(1.96) * sqrt(col("nd"))) / lit(2.0))
@@ -947,16 +808,7 @@ object Extended12 {
     // to the per-nation value grid, window totals, one grouped agg.
     // Exact-carrier range: v·n holds in longs to ~1.5e13 value·rows.
     "q152_sign_test" -> ((s, d) => {
-      val grid = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(Parity.cents2(col("l_extendedprice"))).as("rev"))
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name").as("nation"), expr("rev div 100").as("v"))
-        .groupBy(col("nation"), col("v"))
-        .agg(count(lit(1)).as("c"))
+      val grid = OrderRevenue.nationValueGrid(s, d)
       val wTot = Window.partitionBy(col("nation"))
       grid
         .withColumn("n", sum(col("c")).over(wTot))
@@ -992,22 +844,7 @@ object Extended12 {
     // Scale shape: identical to q151 — grid, keyed windows, one
     // grouped agg.
     "q153_bowley_skew" -> ((s, d) => {
-      val grid = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(Parity.cents2(col("l_extendedprice"))).as("rev"))
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name").as("nation"), expr("rev div 100").as("v"))
-        .groupBy(col("nation"), col("v"))
-        .agg(count(lit(1)).as("c"))
-      val wCum = Window.partitionBy(col("nation")).orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wTot = Window.partitionBy(col("nation"))
-      grid
-        .withColumn("cum", sum(col("c")).over(wCum))
-        .withColumn("n", sum(col("c")).over(wTot))
+      OrderRevenue.nationValueCum(s, d)
         .groupBy(col("nation"))
         .agg(max(col("n")).as("n"),
           min(when(lit(4L) * col("cum") >= col("n"), col("v")))
@@ -1027,37 +864,7 @@ object Extended12 {
   def oracleSql: Map[String, String] = Map(
 
     "q139_kruskal_wallis" ->
-      """WITH per AS (SELECT l_orderkey, COUNT(1) AS n_items,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS cents
-        |  FROM lineitem GROUP BY 1),
-        |  s AS (SELECT cents // 100 AS value,
-        |    CASE WHEN n_items <= 2 THEN 'narrow'
-        |         WHEN n_items <= 5 THEN 'mid'
-        |         ELSE 'wide' END AS grp
-        |    FROM per),
-        |  ev AS (SELECT value,
-        |    CAST(SUM(CASE WHEN grp = 'narrow' THEN 1 ELSE 0
-        |      END) AS BIGINT) AS ca,
-        |    CAST(SUM(CASE WHEN grp = 'mid' THEN 1 ELSE 0
-        |      END) AS BIGINT) AS cb,
-        |    CAST(SUM(CASE WHEN grp = 'wide' THEN 1 ELSE 0
-        |      END) AS BIGINT) AS cc
-        |  FROM s GROUP BY 1),
-        |  g AS (SELECT value, ca, cb, cc, ca + cb + cc AS t FROM ev),
-        |  grid AS (SELECT ca, cb, cc, t,
-        |    COALESCE(CAST(SUM(t) OVER (ORDER BY value
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS BIGINT), 0) AS below
-        |  FROM g),
-        |  r AS (SELECT ca, cb, cc, t, 2 * below + t + 1 AS r2 FROM grid),
-        |  agg AS (SELECT CAST(SUM(ca) AS BIGINT) AS na,
-        |    CAST(SUM(cb) AS BIGINT) AS nb,
-        |    CAST(SUM(cc) AS BIGINT) AS nc,
-        |    CAST(SUM(ca * r2) AS BIGINT) AS ra2,
-        |    CAST(SUM(cb * r2) AS BIGINT) AS rb2,
-        |    CAST(SUM(cc * r2) AS BIGINT) AS rc2,
-        |    CAST(SUM(t * t * t - t) AS BIGINT) AS tie3 FROM r),
+      s"""WITH ${OrderRevenue.midrankSumsSql},
         |  st AS (SELECT na, nb, nc, na + nb + nc AS n,
         |    CAST(na + nb + nc AS DOUBLE) AS nd,
         |    CAST(ra2 AS DOUBLE) * CAST(ra2 AS DOUBLE) / CAST(na AS DOUBLE) +
@@ -1076,15 +883,7 @@ object Extended12 {
         |FROM h""".stripMargin,
 
     "q140_anova_oneway" ->
-      """WITH per AS (SELECT l_orderkey, COUNT(1) AS n_items,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS cents
-        |  FROM lineitem GROUP BY 1),
-        |  s AS (SELECT cents // 100 AS value,
-        |    CASE WHEN n_items <= 2 THEN 'narrow'
-        |         WHEN n_items <= 5 THEN 'mid'
-        |         ELSE 'wide' END AS grp
-        |    FROM per),
+      s"""WITH ${OrderRevenue.orderSizeBucketsSql},
         |  g AS (SELECT grp, CAST(COUNT(1) AS BIGINT) AS n_g,
         |    CAST(SUM(value) AS BIGINT) AS sx,
         |    CAST(SUM(value * value) AS BIGINT) AS sxx
@@ -1270,7 +1069,7 @@ object Extended12 {
         |ORDER BY ship_month""".stripMargin,
 
     "q144_cohens_kappa" ->
-      """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
+      s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
         |    AS words FROM documents),
         |  ra AS (SELECT doc_id,
         |    (LEN(words) >= 10 AND
@@ -1280,30 +1079,10 @@ object Extended12 {
         |       ('the', 'and', 'of', 'to', 'a', 'in', 'is'))) AS DOUBLE)
         |       / LEN(words) <= 0.4) AS a
         |  FROM w),
-        |  g AS (SELECT doc_id,
-        |    UNNEST(list_transform(
-        |      generate_series(1, GREATEST(LEN(words) - 2, 0)),
-        |      i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))
-        |      AS gram
-        |  FROM w),
-        |  c AS (SELECT doc_id, gram, COUNT(1) AS cnt FROM g
-        |    GROUP BY doc_id, gram),
-        |  dup AS (SELECT doc_id,
-        |    CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT)
-        |      AS n_dup
-        |  FROM c GROUP BY doc_id),
+        |  ${Extended14.repetitionSql},
         |  rb AS (SELECT w.doc_id, COALESCE(dup.n_dup, 0) = 0 AS b
         |  FROM w LEFT JOIN dup USING (doc_id)),
-        |  cells AS (SELECT
-        |    CAST(SUM(CASE WHEN a AND b THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n11,
-        |    CAST(SUM(CASE WHEN a AND NOT b THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n10,
-        |    CAST(SUM(CASE WHEN NOT a AND b THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n01,
-        |    CAST(SUM(CASE WHEN NOT a AND NOT b THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n00
-        |  FROM ra JOIN rb USING (doc_id)),
+        |  ${Extended14.agreementCellsSql("ra JOIN rb USING (doc_id)")},
         |  st AS (SELECT n11, n10, n01, n00,
         |    n11 + n10 + n01 + n00 AS n,
         |    (n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00)
@@ -1408,24 +1187,7 @@ object Extended12 {
         |FROM tt""".stripMargin,
 
     "q147_jonckheere_trend" ->
-      """WITH per AS (SELECT l_orderkey, COUNT(1) AS n_items,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS cents
-        |  FROM lineitem GROUP BY 1),
-        |  s AS (SELECT cents // 100 AS value,
-        |    CASE WHEN n_items <= 2 THEN 'narrow'
-        |         WHEN n_items <= 5 THEN 'mid'
-        |         ELSE 'wide' END AS grp
-        |    FROM per),
-        |  ev AS (SELECT value,
-        |    CAST(SUM(CASE WHEN grp = 'narrow' THEN 1 ELSE 0
-        |      END) AS BIGINT) AS ca,
-        |    CAST(SUM(CASE WHEN grp = 'mid' THEN 1 ELSE 0
-        |      END) AS BIGINT) AS cb,
-        |    CAST(SUM(CASE WHEN grp = 'wide' THEN 1 ELSE 0
-        |      END) AS BIGINT) AS cc
-        |  FROM s GROUP BY 1),
-        |  g AS (SELECT value, ca, cb, cc, ca + cb + cc AS t FROM ev),
+      s"""WITH ${OrderRevenue.bucketCountsSql},
         |  grid AS (SELECT ca, cb, cc, t,
         |    COALESCE(CAST(SUM(ca) OVER wb AS BIGINT), 0) AS ba,
         |    COALESCE(CAST(SUM(cb) OVER wb AS BIGINT), 0) AS bb,
@@ -1500,36 +1262,7 @@ object Extended12 {
     },
 
     "q148_friedman_concordance" ->
-      """WITH per AS (SELECT l_orderkey, COUNT(1) AS n_items,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS cents
-        |  FROM lineitem GROUP BY 1),
-        |  j AS (SELECT n.n_name AS nation,
-        |    CASE WHEN p.n_items <= 2 THEN 'narrow'
-        |         WHEN p.n_items <= 5 THEN 'mid'
-        |         ELSE 'wide' END AS grp,
-        |    p.cents
-        |  FROM per p
-        |  JOIN orders o ON p.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation n ON c.c_nationkey = n.n_nationkey),
-        |  m AS (SELECT nation, grp, CAST(COUNT(1) AS BIGINT) AS n_g,
-        |    CAST(SUM(cents) AS BIGINT) AS tot
-        |  FROM j GROUP BY 1, 2),
-        |  r AS (SELECT nation, grp,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY nation
-        |      ORDER BY CAST(tot AS DOUBLE) / CAST(n_g AS DOUBLE), grp)
-        |      AS BIGINT) AS rk
-        |  FROM m),
-        |  agg AS (SELECT
-        |    CAST(COUNT(DISTINCT nation) AS BIGINT) AS n_blocks,
-        |    CAST(SUM(CASE WHEN grp = 'narrow' THEN rk END) AS BIGINT)
-        |      AS r_narrow,
-        |    CAST(SUM(CASE WHEN grp = 'mid' THEN rk END) AS BIGINT)
-        |      AS r_mid,
-        |    CAST(SUM(CASE WHEN grp = 'wide' THEN rk END) AS BIGINT)
-        |      AS r_wide
-        |  FROM r),
+      s"""WITH ${OrderRevenue.blockRankSumsSql},
         |  st AS (SELECT n_blocks, r_narrow, r_mid, r_wide,
         |    r_narrow * r_narrow + r_mid * r_mid + r_wide * r_wide
         |      AS sr2,
@@ -1643,17 +1376,7 @@ object Extended12 {
         |ORDER BY nation""".stripMargin,
 
     "q151_median_ci" ->
-      """WITH per AS (SELECT l_orderkey,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM lineitem GROUP BY 1),
-        |  pts AS (SELECT n.n_name AS nation, p.rev // 100 AS v
-        |  FROM per p
-        |  JOIN orders o ON p.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation n ON c.c_nationkey = n.n_nationkey),
-        |  grid AS (SELECT nation, v, CAST(COUNT(1) AS BIGINT) AS c
-        |    FROM pts GROUP BY 1, 2),
+      s"""WITH ${OrderRevenue.nationValueGridSql},
         |  cm AS (SELECT nation, v, c,
         |    CAST(SUM(c) OVER (PARTITION BY nation ORDER BY v
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -1675,17 +1398,7 @@ object Extended12 {
         |ORDER BY nation""".stripMargin,
 
     "q152_sign_test" ->
-      """WITH per AS (SELECT l_orderkey,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM lineitem GROUP BY 1),
-        |  pts AS (SELECT n.n_name AS nation, p.rev // 100 AS v
-        |  FROM per p
-        |  JOIN orders o ON p.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation n ON c.c_nationkey = n.n_nationkey),
-        |  grid AS (SELECT nation, v, CAST(COUNT(1) AS BIGINT) AS c
-        |    FROM pts GROUP BY 1, 2),
+      s"""WITH ${OrderRevenue.nationValueGridSql},
         |  wm AS (SELECT nation, v, c,
         |    CAST(SUM(c) OVER (PARTITION BY nation) AS BIGINT) AS n,
         |    CAST(SUM(v * c) OVER (PARTITION BY nation) AS BIGINT) AS s1
@@ -1710,17 +1423,7 @@ object Extended12 {
         |ORDER BY nation""".stripMargin,
 
     "q153_bowley_skew" ->
-      """WITH per AS (SELECT l_orderkey,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM lineitem GROUP BY 1),
-        |  pts AS (SELECT n.n_name AS nation, p.rev // 100 AS v
-        |  FROM per p
-        |  JOIN orders o ON p.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation n ON c.c_nationkey = n.n_nationkey),
-        |  grid AS (SELECT nation, v, CAST(COUNT(1) AS BIGINT) AS c
-        |    FROM pts GROUP BY 1, 2),
+      s"""WITH ${OrderRevenue.nationValueGridSql},
         |  cm AS (SELECT nation, v,
         |    CAST(SUM(c) OVER (PARTITION BY nation ORDER BY v
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)

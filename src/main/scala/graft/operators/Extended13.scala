@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{Parity, Tables}
+import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Thirteenth analytics batch: robust statistics and series
   * diagnostics — the screens an analyst runs when q150's moment
@@ -26,96 +27,6 @@ import graft.{Parity, Tables}
   */
 object Extended13 {
 
-  /** Deterministic Poisson(1) weight machinery shared by q164 (mean
-    * bootstrap) and q170 (median bootstrap): the portable 60-bit md5
-    * hash of (orderkey, replicate) mapped to [0,1), inverted through
-    * hardcoded Poisson(1) CDF literals (tail truncated at 9, mass
-    * < 1.2e-6). Both queries AND their DuckDB oracles replay the same
-    * construction, so the entire bootstrap — CI included — is
-    * hash-checked; an RNG bootstrap never could be. Deterministic by
-    * key, so weights are stable under task retry (spec-pinned). */
-  private[graft] val poissonCdf = Seq(0.36787944117144233,
-    0.7357588823428847, 0.9196986029286058, 0.9810118431238463,
-    0.9963401531726563, 0.9994058151824183, 0.999916758850712,
-    0.9999897508033253, 0.999998874797402)
-
-  private[graft] def poissonU(okey: Column, b: Column): Column =
-    graft.functions.HashFunctions.md5Hash60(concat(
-      okey.cast("string"), lit(":"), b.cast("string")))
-      .cast("double") / lit(1152921504606846976.0) // 2^60
-
-  private[graft] def poissonW(u: Column): Column =
-    poissonCdf.zipWithIndex.reverse.foldLeft(lit(9L)) {
-      case (acc, (c, k)) => when(u < lit(c), lit(k.toLong)).otherwise(acc)
-    }
-
-  /** The (nation-KEY, week, whole-dollar revenue) aggregate shared by
-    * q155 Theil–Sen and Extended15's q179 Siegel repeated median:
-    * calendar-bounded (~350 weeks per nation at ANY data scale), so
-    * the pairwise-slope joins downstream are grid², never rows².
-    * Materialized once — both consumers self-join it.
-    *
-    * Round 13: the carrier keys on `nk` = c_nationkey (int) instead of
-    * the n_name string — the nation dimension join moved OUT of the
-    * carrier entirely; consumers join [[nationNames]] back over their
-    * |nations|-row results (key↔name is 1:1, so grouping by nk groups
-    * exactly as n_name did). The (nk, w) rollup exchange then carries
-    * a long instead of a 25-char string per partial row, and the hot
-    * fan-out stages never touch a string. */
-  private[graft] def nationWeeklyRevenue(
-      s: SparkSession, d: String): DataFrame =
-    // pre-aggregate the fact table to per-order cents BEFORE the
-    // dimension joins (guide §2.3, aggregate-before-shuffle): the
-    // orderkey exchange carries |orders| partial sums instead of
-    // |lineitem| raw rows, and the single-split scan needs no
-    // round-robin spread — the partial aggregate replaces it. The
-    // (nk, week) sum of per-order cents sums is the same exact
-    // long, divided by 100 once at the end as before.
-    Materialize.LocalCheckpoint(
-      Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_extendedprice"))
-        .groupBy(col("l_orderkey"))
-        .agg(sum(Parity.cents2(col("l_extendedprice"))).as("cents"))
-        .join(Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, d)
-          .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_nationkey").as("nk"),
-          expr("CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT)" +
-            " div 7").as("w"))
-        .agg(expr("sum(cents) div 100").as("y")))
-
-  /** The |nations|-row (nk, nation) name lookup q155/q179 broadcast-
-    * join back AFTER their per-nation aggregates (round 13): the
-    * string never rides an exchange wider than the final result. */
-  private[graft] def nationNames(s: SparkSession, d: String): DataFrame =
-    Tables.nation(s, d)
-      .select(col("n_nationkey").as("nk"), col("n_name").as("nation"))
-
-  /** Per-order revenue in whole dollars, tagged with the customer
-    * nation — the shared input frame of q154. One fact rollup, the
-    * dimension joins broadcast. */
-  private def nationOrderDollars(s: SparkSession, d: String): DataFrame =
-    // no round-robin spread before the per-order rollup: the groupBy
-    // exchange is the spread (guide §2.3 — the partial aggregate's
-    // per-row work is trivial, so the extra exchange never repaid
-    // itself), and the dimension joins carry only the columns they use
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_extendedprice"))
-      .groupBy(col("l_orderkey"))
-      .agg(sum(Parity.cents2(col("l_extendedprice"))).as("rev"))
-      .join(Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, d)
-        .select(col("c_custkey"), col("c_nationkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, d)),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name").as("nation"), expr("rev div 100").as("v"))
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // MAD + ROBUST-Z OUTLIER PROFILE — the robust scale estimate that
@@ -131,15 +42,8 @@ object Extended13 {
     // windows again, |nations| rows out — a single linear pipeline,
     // no self-join, no re-scan.
     "q154_mad_profile" -> ((s, d) => {
-      val grid = nationOrderDollars(s, d)
-        .groupBy(col("nation"), col("v"))
-        .agg(count(lit(1)).as("c"))
-      val wCum = Window.partitionBy(col("nation")).orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wTot = Window.partitionBy(col("nation"))
-      val withMed = grid
-        .withColumn("cum", sum(col("c")).over(wCum))
-        .withColumn("n", sum(col("c")).over(wTot))
+      val withMed = OrderRevenue.nationValueCum(s, d)
         .withColumn("med",
           min(when(lit(2L) * col("cum") >= col("n"), col("v"))).over(wTot))
       val devGrid = withMed
@@ -179,7 +83,7 @@ object Extended13 {
     // aggregate — O(weeks²)·|nations| ≈ 1.5M rows at ANY data scale,
     // never O(rows²).
     "q155_theil_sen" -> ((s, d) => {
-      val wk = nationWeeklyRevenue(s, d)
+      val wk = OrderRevenue.nationWeeklyRevenue(s, d)
       // the selection threshold is knowable without counting inside
       // the pair frame: np = C(n_weeks, 2) — a 25-row broadcast join
       // replaces a count-window pass over the grid² pairs (the q179
@@ -211,7 +115,7 @@ object Extended13 {
         .groupBy(col("nk"))
         .agg(sort_array(collect_list(col("slope"))).as("sl"))
         .join(broadcast(weeks), "nk")
-        .join(broadcast(nationNames(s, d)), "nk")
+        .join(broadcast(OrderRevenue.nationNames(s, d)), "nk")
         .select(col("nation"), col("n_weeks"), col("np").as("n_pairs"),
           element_at(col("sl"), expr("CAST((np + 1) div 2 AS INT)"))
             .as("ts_slope"))
@@ -241,14 +145,7 @@ object Extended13 {
       val lags = 1 to 6
       val crit = Map(1 -> 3.8415, 2 -> 5.9915, 3 -> 7.8147,
         4 -> 9.4877, 5 -> 11.0705, 6 -> 12.5916)
-      val wk = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(expr(
-          "CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT) div 7")
-          .as("w"))
-        .agg(expr(
-          "sum(CAST(round(l_extendedprice * 100) AS BIGINT)) div 100")
-          .as("y"))
+      val wk = OrderRevenue.weeklyRevenue(s, d)
         .select(col("w"), col("y").cast(DecimalType(38, 0)).as("x"))
       val wOrd = Window.orderBy(col("w"))
       val led = wk.select(
@@ -410,14 +307,7 @@ object Extended13 {
     // window; the single-partition windows run over that tiny frame
     // at any SF.
     "q159_pettitt_changepoint" -> ((s, d) => {
-      val wk = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(expr(
-          "CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT) div 7")
-          .as("w"))
-        .agg(expr(
-          "sum(CAST(round(l_extendedprice * 100) AS BIGINT)) div 100")
-          .as("y"))
+      val wk = OrderRevenue.weeklyRevenue(s, d)
       val wVal = Window.orderBy(col("y"))
       val wValTies = Window.partitionBy(col("y"))
       val wSeq = Window.orderBy(col("w"))
@@ -470,7 +360,7 @@ object Extended13 {
       val wCum = Window.partitionBy(col("grp")).orderBy(col("value"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wTot = Window.partitionBy(col("grp"))
-      val dev = Extended12.orderSizeBuckets(s, d)
+      val dev = OrderRevenue.orderSizeBuckets(s, d)
         .groupBy(col("grp"), col("value"))
         .agg(count(lit(1)).as("c"))
         .withColumn("cum", sum(col("c")).over(wCum))
@@ -485,34 +375,11 @@ object Extended13 {
           sum(col("z") * col("c")).as("sx"),
           sum(col("z") * col("z") * col("c")).as("sxx"),
           max(col("med")).as("med_g"))
-      g.agg(
-          sum(col("n_g")).as("n"),
-          sum(col("sx")).as("sx_all"),
-          sum(col("sxx")).as("sxx_all"),
-          sum(when(col("grp") === "narrow", col("n_g"))).as("na"),
-          sum(when(col("grp") === "mid", col("n_g"))).as("nb"),
-          sum(when(col("grp") === "wide", col("n_g"))).as("nc"),
-          sum(when(col("grp") === "narrow", col("sx"))).as("sa"),
-          sum(when(col("grp") === "mid", col("sx"))).as("sb"),
-          sum(when(col("grp") === "wide", col("sx"))).as("sc"),
-          sum(when(col("grp") === "narrow", col("med_g"))).as("med_a"),
-          sum(when(col("grp") === "mid", col("med_g"))).as("med_b"),
-          sum(when(col("grp") === "wide", col("med_g"))).as("med_c"))
-        .withColumn("nd", col("n").cast("double"))
-        .withColumn("gsum",
-          col("sa").cast("double") * col("sa").cast("double") /
-            col("na").cast("double") +
-          col("sb").cast("double") * col("sb").cast("double") /
-            col("nb").cast("double") +
-          col("sc").cast("double") * col("sc").cast("double") /
-            col("nc").cast("double"))
-        .withColumn("ssb",
-          col("gsum") - col("sx_all").cast("double") *
-            col("sx_all").cast("double") / col("nd"))
-        .withColumn("ssw", col("sxx_all").cast("double") - col("gsum"))
-        .withColumn("f_stat",
-          col("ssb") / lit(2.0) /
-            (col("ssw") / (col("nd") - lit(3.0))))
+      val sums = OrderRevenue.bucketMomentSums ++ Seq(
+        sum(when(col("grp") === "narrow", col("med_g"))).as("med_a"),
+        sum(when(col("grp") === "mid", col("med_g"))).as("med_b"),
+        sum(when(col("grp") === "wide", col("med_g"))).as("med_c"))
+      OrderRevenue.oneWayF(g.agg(sums.head, sums.tail: _*))
         .select(col("na"), col("nb"), col("nc"), col("n"),
           col("med_a"), col("med_b"), col("med_c"),
           col("ssb"), col("ssw"), col("f_stat"),
@@ -535,7 +402,7 @@ object Extended13 {
     // agrees with q139's rank test. Scale shape: q140's exactly — one
     // rollup, one grouped pass of exact moments, 1 row out.
     "q166_welch_anova" -> ((s, d) => {
-      val g = Extended12.orderSizeBuckets(s, d).groupBy(col("grp"))
+      val g = OrderRevenue.orderSizeBuckets(s, d).groupBy(col("grp"))
         .agg(count(lit(1)).as("n_g"), sum(col("value")).as("sx"),
           sum(col("value") * col("value")).as("sxx"))
         .withColumn("nd", col("n_g").cast("double"))
@@ -606,23 +473,8 @@ object Extended13 {
     // pruned pass (the d22 method-comparison bucket).
     "q164_poisson_bootstrap" -> ((s, d) => {
       val b = 32
-      // no round-robin spread: the per-order groupBy exchange is the
-      // spread (guide §2.3)
-      val per = Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_extendedprice"))
-        .groupBy(col("l_orderkey"))
-        .agg(sum(Parity.cents2(col("l_extendedprice"))).as("rev"))
-        .select(col("l_orderkey"), expr("rev div 100").as("v"))
-      // spread the SMALL per-order frame before the ×32 hash fan-out,
-      // not the fact scan: AQE coalesces the few-MB rollup exchange to
-      // one partition, which would run all 32·|orders| md5s single-
-      // task; an explicit repartition pins the fan-out stage at session
-      // parallelism for the price of one |orders|-row narrow exchange
-      val reps = per.repartition(s.sparkContext.defaultParallelism)
-        .select(col("l_orderkey"), col("v"),
-          explode(sequence(lit(1), lit(b))).as("b"))
-        .withColumn("u", poissonU(col("l_orderkey"), col("b")))
-        .withColumn("w", poissonW(col("u")))
+      val per = OrderRevenue.orderValues(s, d)
+      val reps = OrderRevenue.poissonReplicates(per, b)
         .groupBy(col("b"))
         .agg(sum(col("w")).as("n_eff"), sum(col("w") * col("v")).as("swv"))
         .withColumn("mean_b",
@@ -668,16 +520,8 @@ object Extended13 {
     // shape: q139's exactly — one rollup, one grid window, one
     // 1-row aggregate fanned out to the 3 pair rows.
     "q163_dunn_posthoc" -> ((s, d) => {
-      val wCum = Window.orderBy(col("value"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val grid = Extended12.orderSizeBuckets(s, d)
-        .groupBy(col("value"))
-        .agg(sum(when(col("grp") === "narrow", 1L).otherwise(0L)).as("ca"),
-          sum(when(col("grp") === "mid", 1L).otherwise(0L)).as("cb"),
-          sum(when(col("grp") === "wide", 1L).otherwise(0L)).as("cc"))
-        .withColumn("t", col("ca") + col("cb") + col("cc"))
-        .withColumn("below", sum(col("t")).over(wCum) - col("t"))
-        .withColumn("r2", lit(2L) * col("below") + col("t") + 1L)
+      val grid = OrderRevenue.midrankGrid(OrderRevenue.orderSizeBuckets(s, d),
+        Seq("narrow", "mid", "wide"))
       val agg = grid.agg(
         sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
         sum(col("cc")).as("nc"),
@@ -734,42 +578,7 @@ object Extended13 {
     // first to (nation, week), one materialization cut feeding the
     // pair join and the tie grid, O(weeks²) per nation at any SF.
     "q162_mann_kendall" -> ((s, d) => {
-      val wk = Materialize.LocalCheckpoint(
-        Tables.lineitem(s, d)
-          .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-          .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(Tables.nation(s, d)),
-            col("c_nationkey") === col("n_nationkey"))
-          .groupBy(col("n_name").as("nation"),
-            expr("CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT)" +
-              " div 7").as("w"))
-          .agg(expr(
-            "sum(CAST(round(l_extendedprice * 100) AS BIGINT)) div 100")
-            .as("y")))
-      val sAgg = wk.as("a").join(wk.as("b"),
-          col("a.nation") === col("b.nation") && col("a.w") < col("b.w"))
-        .select(col("a.nation").as("nation"),
-          signum(col("b.y") - col("a.y")).cast("long").as("sgn"))
-        .groupBy(col("nation"))
-        .agg(sum(col("sgn")).as("s_stat"))
-      val ties = wk.groupBy(col("nation"), col("y"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("nation"))
-        .agg(count(lit(1)).as("n_values"),
-          sum(col("c")).as("n_weeks"),
-          sum(col("c") * (col("c") - 1L) * (lit(2L) * col("c") + 5L))
-            .as("tie_term"))
-      sAgg.join(ties, "nation")
-        .withColumn("var_s",
-          (col("n_weeks") * (col("n_weeks") - 1L) *
-            (lit(2L) * col("n_weeks") + 5L) - col("tie_term"))
-            .cast("double") / lit(18.0))
-        .withColumn("z",
-          when(col("s_stat") > 0L,
-            (col("s_stat") - 1L).cast("double") / sqrt(col("var_s")))
-            .when(col("s_stat") < 0L,
-              (col("s_stat") + 1L).cast("double") / sqrt(col("var_s")))
-            .otherwise(lit(0.0)))
+      OrderRevenue.mannKendall(s, d)
         .select(col("nation"), col("n_weeks"), col("s_stat"),
           col("var_s"), col("z"),
           (abs(col("z")) > lit(1.96)).as("reject_95"))
@@ -800,21 +609,7 @@ object Extended13 {
     // window contract).
     "q170_bootstrap_median_ci" -> ((s, d) => {
       val b = 32
-      // no round-robin spread: the per-order groupBy exchange is the
-      // spread (guide §2.3)
-      val per = Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_extendedprice"))
-        .groupBy(col("l_orderkey"))
-        .agg(sum(Parity.cents2(col("l_extendedprice"))).as("rev"))
-        .select(col("l_orderkey"), expr("rev div 100").as("v"))
-      // spread the SMALL per-order frame before the ×32 hash fan-out
-      // (see q164): AQE coalesces the few-MB rollup exchange to one
-      // partition, which would run all 32·|orders| md5s single-task
-      val rep = per.repartition(s.sparkContext.defaultParallelism)
-        .select(col("l_orderkey"), col("v"),
-          explode(sequence(lit(1), lit(b))).as("b"))
-        .withColumn("u", poissonU(col("l_orderkey"), col("b")))
-        .withColumn("w", poissonW(col("u")))
+      val rep = OrderRevenue.poissonReplicates(OrderRevenue.orderValues(s, d), b)
       val wsums = (1 to b).map(g =>
         sum(when(col("b") === g, col("w")).otherwise(0L)).as(s"w$g"))
       val grid = rep.groupBy(col("v"))
@@ -948,30 +743,7 @@ object Extended13 {
     // Scale shape: q148's exactly — one rollup to the nation×bucket
     // grid, one block-keyed rank window, 1 row out.
     "q168_page_trend" -> ((s, d) => {
-      val obs = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_items"),
-          sum(Parity.cents2(col("l_extendedprice"))).as("cents"))
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name").as("nation"),
-          when(col("n_items") <= 2, lit("narrow"))
-            .when(col("n_items") <= 5, lit("mid"))
-            .otherwise(lit("wide")).as("grp"),
-          col("cents"))
-        .groupBy(col("nation"), col("grp"))
-        .agg(count(lit(1)).as("n_g"), sum(col("cents")).as("tot"))
-        .withColumn("mean",
-          col("tot").cast("double") / col("n_g").cast("double"))
-      val w = Window.partitionBy(col("nation"))
-        .orderBy(col("mean"), col("grp"))
-      obs.withColumn("rk", row_number().over(w).cast("long"))
-        .agg(countDistinct(col("nation")).as("n_blocks"),
-          sum(when(col("grp") === "narrow", col("rk"))).as("r_narrow"),
-          sum(when(col("grp") === "mid", col("rk"))).as("r_mid"),
-          sum(when(col("grp") === "wide", col("rk"))).as("r_wide"))
+      OrderRevenue.blockRankSums(s, d)
         .withColumn("page_l",
           col("r_narrow") + lit(2L) * col("r_mid") +
             lit(3L) * col("r_wide"))
@@ -998,45 +770,11 @@ object Extended13 {
     // |err| < 7.5e-8, far below any BH threshold gap), then round
     // through DECIMAL(18,12) — the q159 stance — so a last-ulp libm
     // exp() divergence can neither break the hash nor flip a
-    // decision (decisions compare the ROUNDED p). Scale shape: the
-    // q162 pipeline verbatim, then three windows over the 25-row
-    // test battery.
+    // decision (decisions compare the ROUNDED p). Scale shape: q162's
+    // [[OrderRevenue.mannKendall]] pipeline, then three windows over
+    // the 25-row test battery.
     "q167_bh_fdr" -> ((s, d) => {
-      val wk = Materialize.LocalCheckpoint(
-        Tables.lineitem(s, d)
-          .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-          .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(Tables.nation(s, d)),
-            col("c_nationkey") === col("n_nationkey"))
-          .groupBy(col("n_name").as("nation"),
-            expr("CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT)" +
-              " div 7").as("w"))
-          .agg(expr(
-            "sum(CAST(round(l_extendedprice * 100) AS BIGINT)) div 100")
-            .as("y")))
-      val sAgg = wk.as("a").join(wk.as("b"),
-          col("a.nation") === col("b.nation") && col("a.w") < col("b.w"))
-        .select(col("a.nation").as("nation"),
-          signum(col("b.y") - col("a.y")).cast("long").as("sgn"))
-        .groupBy(col("nation"))
-        .agg(sum(col("sgn")).as("s_stat"))
-      val ties = wk.groupBy(col("nation"), col("y"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("nation"))
-        .agg(sum(col("c")).as("n_weeks"),
-          sum(col("c") * (col("c") - 1L) * (lit(2L) * col("c") + 5L))
-            .as("tie_term"))
-      val z = sAgg.join(ties, "nation")
-        .withColumn("var_s",
-          (col("n_weeks") * (col("n_weeks") - 1L) *
-            (lit(2L) * col("n_weeks") + 5L) - col("tie_term"))
-            .cast("double") / lit(18.0))
-        .withColumn("z",
-          when(col("s_stat") > 0L,
-            (col("s_stat") - 1L).cast("double") / sqrt(col("var_s")))
-            .when(col("s_stat") < 0L,
-              (col("s_stat") + 1L).cast("double") / sqrt(col("var_s")))
-            .otherwise(lit(0.0)))
+      val z = OrderRevenue.mannKendall(s, d)
       // Zelen–Severo 26.2.17: 1 − Φ(x) ≈ φ(x)·(b1 t + … + b5 t⁵),
       // t = 1/(1 + 0.2316419 x), x = |z| — identical sequence both
       // engines; p two-sided = 2·(1 − Φ(|z|)), rounded to 12 dp
@@ -1166,14 +904,7 @@ object Extended13 {
     // Scale shape: identical to q159 — aggregate-first onto the
     // calendar-bounded weekly frame, tiny single-partition windows.
     "q160_runs_test" -> ((s, d) => {
-      val wk = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(expr(
-          "CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT) div 7")
-          .as("w"))
-        .agg(expr(
-          "sum(CAST(round(l_extendedprice * 100) AS BIGINT)) div 100")
-          .as("y"))
+      val wk = OrderRevenue.weeklyRevenue(s, d)
       val wVal = Window.orderBy(col("y"))
       val wValTies = Window.partitionBy(col("y"))
       val wAll = Window.partitionBy(lit(1))
@@ -1218,17 +949,7 @@ object Extended13 {
 
   def oracleSql: Map[String, String] = Map(
     "q154_mad_profile" ->
-      """WITH per AS (SELECT l_orderkey,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM lineitem GROUP BY 1),
-        |  pts AS (SELECT n.n_name AS nation, p.rev // 100 AS v
-        |  FROM per p
-        |  JOIN orders o ON p.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation n ON c.c_nationkey = n.n_nationkey),
-        |  grid AS (SELECT nation, v, CAST(COUNT(1) AS BIGINT) AS c
-        |    FROM pts GROUP BY 1, 2),
+      s"""WITH ${OrderRevenue.nationValueGridSql},
         |  wm AS (SELECT nation, v, c,
         |    CAST(SUM(c) OVER (PARTITION BY nation ORDER BY v
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -1261,15 +982,7 @@ object Extended13 {
         |FROM fin ORDER BY nation""".stripMargin,
 
     "q155_theil_sen" ->
-      """WITH wk AS (SELECT n.n_name AS nation,
-        |    datediff('day', DATE '1992-01-01', o.o_orderdate) // 7 AS w,
-        |    CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) // 100 AS y
-        |  FROM lineitem l
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |  GROUP BY 1, 2),
+      s"""WITH ${OrderRevenue.nationWeeklyRevenueSql},
         |  sl AS (SELECT a.nation,
         |    CAST(b.y - a.y AS DOUBLE) / CAST(b.w - a.w AS DOUBLE) AS slope
         |  FROM wk a JOIN wk b ON a.nation = b.nation AND a.w < b.w),
@@ -1410,12 +1123,7 @@ object Extended13 {
         |FROM agg ORDER BY region_a, region_b""".stripMargin,
 
     "q159_pettitt_changepoint" ->
-      """WITH wk AS (SELECT
-        |    datediff('day', DATE '1992-01-01', o.o_orderdate) // 7 AS w,
-        |    CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) // 100 AS y
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  GROUP BY 1),
+      s"""WITH ${OrderRevenue.weeklyRevenueSql},
         |  rk AS (SELECT w,
         |    CAST(RANK() OVER (ORDER BY y) AS BIGINT) AS rk,
         |    CAST(COUNT(1) OVER (PARTITION BY y) AS BIGINT) AS ties
@@ -1447,15 +1155,7 @@ object Extended13 {
         |FROM lp""".stripMargin,
 
     "q166_welch_anova" ->
-      """WITH per AS (SELECT l_orderkey, COUNT(1) AS n_items,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS cents
-        |  FROM lineitem GROUP BY 1),
-        |  s AS (SELECT cents // 100 AS value,
-        |    CASE WHEN n_items <= 2 THEN 'narrow'
-        |         WHEN n_items <= 5 THEN 'mid'
-        |         ELSE 'wide' END AS grp
-        |    FROM per),
+      s"""WITH ${OrderRevenue.orderSizeBucketsSql},
         |  g0 AS (SELECT grp, CAST(COUNT(1) AS BIGINT) AS n_g,
         |    CAST(SUM(value) AS BIGINT) AS sx,
         |    CAST(SUM(value * value) AS BIGINT) AS sxx
@@ -1501,15 +1201,7 @@ object Extended13 {
         |FROM w3""".stripMargin,
 
     "q165_brown_forsythe" ->
-      """WITH per AS (SELECT l_orderkey, COUNT(1) AS n_items,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS cents
-        |  FROM lineitem GROUP BY 1),
-        |  s AS (SELECT cents // 100 AS value,
-        |    CASE WHEN n_items <= 2 THEN 'narrow'
-        |         WHEN n_items <= 5 THEN 'mid'
-        |         ELSE 'wide' END AS grp
-        |    FROM per),
+      s"""WITH ${OrderRevenue.orderSizeBucketsSql},
         |  grid AS (SELECT grp, value, CAST(COUNT(1) AS BIGINT) AS c
         |    FROM s GROUP BY 1, 2),
         |  wm AS (SELECT grp, value, c,
@@ -1563,33 +1255,7 @@ object Extended13 {
         |FROM fin""".stripMargin,
 
     "q164_poisson_bootstrap" ->
-      """WITH per AS (SELECT l_orderkey,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) // 100 AS v
-        |  FROM lineitem GROUP BY 1),
-        |  reps AS (SELECT p.l_orderkey, p.v, bb.b
-        |  FROM per p CROSS JOIN
-        |    (SELECT unnest(generate_series(1, 32)) AS b) bb),
-        |  hu AS (SELECT v, b,
-        |    CAST(list_reduce(list_transform(generate_series(1, 15),
-        |      i -> strpos('0123456789abcdef',
-        |        substring(md5(CAST(l_orderkey AS VARCHAR) || ':' ||
-        |          CAST(b AS VARCHAR)), i, 1)) - 1),
-        |      (a, x) -> a * 16 + x) AS BIGINT)
-        |      / 1152921504606846976.0 AS u
-        |  FROM reps),
-        |  ww AS (SELECT b, v,
-        |    CASE WHEN u < 0.36787944117144233 THEN 0
-        |      WHEN u < 0.7357588823428847 THEN 1
-        |      WHEN u < 0.9196986029286058 THEN 2
-        |      WHEN u < 0.9810118431238463 THEN 3
-        |      WHEN u < 0.9963401531726563 THEN 4
-        |      WHEN u < 0.9994058151824183 THEN 5
-        |      WHEN u < 0.999916758850712 THEN 6
-        |      WHEN u < 0.9999897508033253 THEN 7
-        |      WHEN u < 0.999998874797402 THEN 8
-        |      ELSE 9 END AS w
-        |  FROM hu),
+      s"""WITH ${OrderRevenue.poissonReplicatesSql},
         |  rm AS (SELECT b, CAST(SUM(w) AS BIGINT) AS n_eff,
         |    CAST(SUM(w * v) AS BIGINT) AS swv
         |  FROM ww GROUP BY 1),
@@ -1617,37 +1283,7 @@ object Extended13 {
         |FROM ex2 e CROSS JOIN ci c CROSS JOIN sq s""".stripMargin,
 
     "q163_dunn_posthoc" ->
-      """WITH per AS (SELECT l_orderkey, COUNT(1) AS n_items,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS cents
-        |  FROM lineitem GROUP BY 1),
-        |  s AS (SELECT cents // 100 AS value,
-        |    CASE WHEN n_items <= 2 THEN 'narrow'
-        |         WHEN n_items <= 5 THEN 'mid'
-        |         ELSE 'wide' END AS grp
-        |    FROM per),
-        |  ev AS (SELECT value,
-        |    CAST(SUM(CASE WHEN grp = 'narrow' THEN 1 ELSE 0
-        |      END) AS BIGINT) AS ca,
-        |    CAST(SUM(CASE WHEN grp = 'mid' THEN 1 ELSE 0
-        |      END) AS BIGINT) AS cb,
-        |    CAST(SUM(CASE WHEN grp = 'wide' THEN 1 ELSE 0
-        |      END) AS BIGINT) AS cc
-        |  FROM s GROUP BY 1),
-        |  g AS (SELECT value, ca, cb, cc, ca + cb + cc AS t FROM ev),
-        |  grid AS (SELECT ca, cb, cc, t,
-        |    COALESCE(CAST(SUM(t) OVER (ORDER BY value
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS BIGINT), 0) AS below
-        |  FROM g),
-        |  r AS (SELECT ca, cb, cc, t, 2 * below + t + 1 AS r2 FROM grid),
-        |  agg AS (SELECT CAST(SUM(ca) AS BIGINT) AS na,
-        |    CAST(SUM(cb) AS BIGINT) AS nb,
-        |    CAST(SUM(cc) AS BIGINT) AS nc,
-        |    CAST(SUM(ca * r2) AS BIGINT) AS ra2,
-        |    CAST(SUM(cb * r2) AS BIGINT) AS rb2,
-        |    CAST(SUM(cc * r2) AS BIGINT) AS rc2,
-        |    CAST(SUM(t * t * t - t) AS BIGINT) AS tie3 FROM r),
+      s"""WITH ${OrderRevenue.midrankSumsSql},
         |  nn AS (SELECT *, na + nb + nc AS n FROM agg),
         |  pairs AS (
         |    SELECT n, tie3, 'narrow' AS grp_i, 'mid' AS grp_j,
@@ -1689,22 +1325,7 @@ object Extended13 {
         |WHERE n_hits >= 1 ORDER BY lang, doc_id""".stripMargin,
 
     "q162_mann_kendall" ->
-      """WITH wk AS (SELECT n.n_name AS nation,
-        |    datediff('day', DATE '1992-01-01', o.o_orderdate) // 7 AS w,
-        |    CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) // 100 AS y
-        |  FROM lineitem l
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |  GROUP BY 1, 2),
-        |  sa AS (SELECT a.nation,
-        |    CAST(SUM(CASE WHEN b.y > a.y THEN 1
-        |      WHEN b.y < a.y THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
-        |  FROM wk a JOIN wk b ON a.nation = b.nation AND a.w < b.w
-        |  GROUP BY 1),
-        |  tg AS (SELECT nation, y, CAST(COUNT(1) AS BIGINT) AS c
-        |    FROM wk GROUP BY 1, 2),
+      s"""WITH ${OrderRevenue.mannKendallSql},
         |  ti AS (SELECT nation, CAST(COUNT(1) AS BIGINT) AS n_values,
         |    CAST(SUM(c) AS BIGINT) AS n_weeks,
         |    CAST(SUM(c * (c - 1) * (2 * c + 5)) AS BIGINT) AS tie_term
@@ -1727,33 +1348,7 @@ object Extended13 {
         |FROM vv ORDER BY nation""".stripMargin,
 
     "q170_bootstrap_median_ci" ->
-      """WITH per AS (SELECT l_orderkey,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) // 100 AS v
-        |  FROM lineitem GROUP BY 1),
-        |  reps AS (SELECT p.l_orderkey, p.v, bb.b
-        |  FROM per p CROSS JOIN
-        |    (SELECT unnest(generate_series(1, 32)) AS b) bb),
-        |  hu AS (SELECT v, b,
-        |    CAST(list_reduce(list_transform(generate_series(1, 15),
-        |      i -> strpos('0123456789abcdef',
-        |        substring(md5(CAST(l_orderkey AS VARCHAR) || ':' ||
-        |          CAST(b AS VARCHAR)), i, 1)) - 1),
-        |      (a, x) -> a * 16 + x) AS BIGINT)
-        |      / 1152921504606846976.0 AS u
-        |  FROM reps),
-        |  ww AS (SELECT b, v,
-        |    CASE WHEN u < 0.36787944117144233 THEN 0
-        |      WHEN u < 0.7357588823428847 THEN 1
-        |      WHEN u < 0.9196986029286058 THEN 2
-        |      WHEN u < 0.9810118431238463 THEN 3
-        |      WHEN u < 0.9963401531726563 THEN 4
-        |      WHEN u < 0.9994058151824183 THEN 5
-        |      WHEN u < 0.999916758850712 THEN 6
-        |      WHEN u < 0.9999897508033253 THEN 7
-        |      WHEN u < 0.999998874797402 THEN 8
-        |      ELSE 9 END AS w
-        |  FROM hu),
+      s"""WITH ${OrderRevenue.poissonReplicatesSql},
         |  bg AS (SELECT b, v, CAST(SUM(w) AS BIGINT) AS wc
         |    FROM ww GROUP BY 1, 2),
         |  bc AS (SELECT b, v,
@@ -1823,36 +1418,7 @@ object Extended13 {
         |FROM est""".stripMargin,
 
     "q168_page_trend" ->
-      """WITH per AS (SELECT l_orderkey, COUNT(1) AS n_items,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) AS cents
-        |  FROM lineitem GROUP BY 1),
-        |  j AS (SELECT n.n_name AS nation,
-        |    CASE WHEN p.n_items <= 2 THEN 'narrow'
-        |         WHEN p.n_items <= 5 THEN 'mid'
-        |         ELSE 'wide' END AS grp,
-        |    p.cents
-        |  FROM per p
-        |  JOIN orders o ON p.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation n ON c.c_nationkey = n.n_nationkey),
-        |  m AS (SELECT nation, grp, CAST(COUNT(1) AS BIGINT) AS n_g,
-        |    CAST(SUM(cents) AS BIGINT) AS tot
-        |  FROM j GROUP BY 1, 2),
-        |  r AS (SELECT nation, grp,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY nation
-        |      ORDER BY CAST(tot AS DOUBLE) / CAST(n_g AS DOUBLE), grp)
-        |      AS BIGINT) AS rk
-        |  FROM m),
-        |  agg AS (SELECT
-        |    CAST(COUNT(DISTINCT nation) AS BIGINT) AS n_blocks,
-        |    CAST(SUM(CASE WHEN grp = 'narrow' THEN rk END) AS BIGINT)
-        |      AS r_narrow,
-        |    CAST(SUM(CASE WHEN grp = 'mid' THEN rk END) AS BIGINT)
-        |      AS r_mid,
-        |    CAST(SUM(CASE WHEN grp = 'wide' THEN rk END) AS BIGINT)
-        |      AS r_wide
-        |  FROM r),
+      s"""WITH ${OrderRevenue.blockRankSumsSql},
         |  st AS (SELECT n_blocks, r_narrow, r_mid, r_wide,
         |    r_narrow + 2 * r_mid + 3 * r_wide AS page_l,
         |    CAST(n_blocks AS DOUBLE) AS bd
@@ -1864,22 +1430,7 @@ object Extended13 {
         |FROM st""".stripMargin,
 
     "q167_bh_fdr" ->
-      """WITH wk AS (SELECT n.n_name AS nation,
-        |    datediff('day', DATE '1992-01-01', o.o_orderdate) // 7 AS w,
-        |    CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) // 100 AS y
-        |  FROM lineitem l
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |  GROUP BY 1, 2),
-        |  sa AS (SELECT a.nation,
-        |    CAST(SUM(CASE WHEN b.y > a.y THEN 1
-        |      WHEN b.y < a.y THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
-        |  FROM wk a JOIN wk b ON a.nation = b.nation AND a.w < b.w
-        |  GROUP BY 1),
-        |  tg AS (SELECT nation, y, CAST(COUNT(1) AS BIGINT) AS c
-        |    FROM wk GROUP BY 1, 2),
+      s"""WITH ${OrderRevenue.mannKendallSql},
         |  ti AS (SELECT nation, CAST(SUM(c) AS BIGINT) AS n_weeks,
         |    CAST(SUM(c * (c - 1) * (2 * c + 5)) AS BIGINT) AS tie_term
         |  FROM tg GROUP BY 1),
@@ -1923,14 +1474,11 @@ object Extended13 {
         |FROM mk ORDER BY rank""".stripMargin,
 
     "q161_sketch_error_profile" ->
-      """WITH cents AS (SELECT l_returnflag,
+      s"""WITH cents AS (SELECT l_returnflag,
         |    CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS v
         |  FROM lineitem),
         |  hv AS (SELECT DISTINCT l_returnflag,
-        |    CAST(list_reduce(list_transform(generate_series(1, 15),
-        |      i -> strpos('0123456789abcdef',
-        |             substring(md5(CAST(v AS VARCHAR)), i, 1)) - 1),
-        |      (a, x) -> a * 16 + x) AS BIGINT) AS h, v
+        |    ${md5Hash60Sql("CAST(v AS VARCHAR)")} AS h, v
         |  FROM cents),
         |  samp AS (SELECT l_returnflag, v,
         |    ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY h, v)
@@ -1984,12 +1532,7 @@ object Extended13 {
         |ORDER BY l_returnflag""".stripMargin,
 
     "q160_runs_test" ->
-      """WITH wk AS (SELECT
-        |    datediff('day', DATE '1992-01-01', o.o_orderdate) // 7 AS w,
-        |    CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) // 100 AS y
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  GROUP BY 1),
+      s"""WITH ${OrderRevenue.weeklyRevenueSql},
         |  md AS (SELECT w, y,
         |    CAST(RANK() OVER (ORDER BY y) AS BIGINT) +
         |      CAST(COUNT(1) OVER (PARTITION BY y) AS BIGINT) - 1

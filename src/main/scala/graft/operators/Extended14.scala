@@ -44,6 +44,84 @@ object Extended14 {
         (col("n_dup_pos") === 0).as("b"))
   }
 
+  /** DuckDB twin of [[TextOps.repetitionStats]]' repeated-trigram
+    * count over a CTE `w(doc_id, words)`: CTEs `g`, `c`, `dup`
+    * (doc_id, n_dup) — docs without a repeat have no `dup` row. */
+  private[operators] val repetitionSql =
+    """g AS (SELECT doc_id,
+      |    UNNEST(list_transform(
+      |      generate_series(1, GREATEST(LEN(words) - 2, 0)),
+      |      i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))
+      |      AS gram
+      |  FROM w),
+      |  c AS (SELECT doc_id, gram, COUNT(1) AS cnt FROM g
+      |    GROUP BY doc_id, gram),
+      |  dup AS (SELECT doc_id,
+      |    CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT)
+      |      AS n_dup
+      |  FROM c GROUP BY doc_id)""".stripMargin
+
+  /** Shared oracle CTE prefix: per-doc score s, screens a/c_len, and
+    * the repetition label b, mirroring [[scoredDocs]]. */
+  private val docCte =
+    s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
+      |    AS words FROM documents),
+      |  sc AS (SELECT doc_id,
+      |    CAST(LEN(list_distinct(words)) AS DOUBLE) / LEN(words) AS s,
+      |    (LEN(words) >= 10 AND
+      |     CAST(LEN(list_distinct(words)) AS DOUBLE) / LEN(words)
+      |       >= 0.5 AND
+      |     CAST(LEN(list_filter(words, x -> x IN
+      |       ('the', 'and', 'of', 'to', 'a', 'in', 'is'))) AS DOUBLE)
+      |       / LEN(words) <= 0.4) AS a,
+      |    LEN(words) >= 30 AND LEN(words) <= 120 AS c_len
+      |  FROM w),
+      |  $repetitionSql,
+      |  lab AS (SELECT sc.doc_id, sc.s, sc.a, sc.c_len,
+      |    COALESCE(dup.n_dup, 0) = 0 AS b
+      |  FROM sc LEFT JOIN dup USING (doc_id))""".stripMargin
+
+  /** The 2×2 agreement table of two boolean raters `a`, `b`
+    * (n11, n10, n01, n00, n) — q144's kappa and q172's McNemar. */
+  private[operators] def agreementCells(rated: DataFrame): DataFrame =
+    rated
+      .agg(
+        sum(when(col("a") && col("b"), 1L).otherwise(0L)).as("n11"),
+        sum(when(col("a") && !col("b"), 1L).otherwise(0L)).as("n10"),
+        sum(when(!col("a") && col("b"), 1L).otherwise(0L)).as("n01"),
+        sum(when(!col("a") && !col("b"), 1L).otherwise(0L)).as("n00"))
+      .withColumn("n",
+        col("n11") + col("n10") + col("n01") + col("n00"))
+
+  /** DuckDB twin of [[agreementCells]] over the rows of `from`: CTE
+    * `cells`. */
+  private[operators] def agreementCellsSql(from: String): String =
+    s"""cells AS (SELECT
+       |    CAST(SUM(CASE WHEN a AND b THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS n11,
+       |    CAST(SUM(CASE WHEN a AND NOT b THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS n10,
+       |    CAST(SUM(CASE WHEN NOT a AND b THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS n01,
+       |    CAST(SUM(CASE WHEN NOT a AND NOT b THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS n00
+       |  FROM $from)""".stripMargin
+
+  /** Per-document (bin, train, rep) rows of the q180/q182 calibration
+    * screens: token-count bin (20-token steps, capped at 5), the even
+    * doc_id training split, and the repeated-trigram label. */
+  private def calibrationDocs(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+      .withColumn("words", split(trim(col("text")), " "))
+      .withColumn("n_tok", size(col("words")))
+      .withColumn("train", col("doc_id") % 2 === 0)
+    TextOps.repetitionStatsKeeping(docs, col("n_tok"), col("train"))
+      .select(col("n_tok"), col("train"),
+        (col("n_dup_pos") > 0).as("rep"))
+      .withColumn("bin",
+        least(expr("CAST(n_tok AS BIGINT) div 20"), lit(5L)))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ROC AUC — the threshold-free quality-score evaluation: how well
@@ -99,14 +177,7 @@ object Extended14 {
     // Scale shape: one documents scan, map-side partial aggregation to
     // a single 4-cell row — no exchange carries more than the cells.
     "q172_mcnemar_screens" -> ((s, d) => {
-      scoredDocs(s, d)
-        .agg(
-          sum(when(col("a") && col("b"), 1L).otherwise(0L)).as("n11"),
-          sum(when(col("a") && !col("b"), 1L).otherwise(0L)).as("n10"),
-          sum(when(!col("a") && col("b"), 1L).otherwise(0L)).as("n01"),
-          sum(when(!col("a") && !col("b"), 1L).otherwise(0L)).as("n00"))
-        .withColumn("n",
-          col("n11") + col("n10") + col("n01") + col("n00"))
+      agreementCells(scoredDocs(s, d))
         .withColumn("chi2_cc",
           when(col("n10") + col("n01") === 0L, lit(null))
             .otherwise(
@@ -283,15 +354,7 @@ object Extended14 {
     // NULL rates, not silent drops. Scale shape: one documents scan,
     // map-side partial aggregation to ≤6 bin rows.
     "q180_calibration_oos" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-        .withColumn("words", split(trim(col("text")), " "))
-        .withColumn("n_tok", size(col("words")))
-        .withColumn("train", col("doc_id") % 2 === 0)
-      TextOps.repetitionStatsKeeping(docs, col("n_tok"), col("train"))
-        .select(col("n_tok"), col("train"),
-          (col("n_dup_pos") > 0).as("rep"))
-        .withColumn("bin",
-          least(expr("CAST(n_tok AS BIGINT) div 20"), lit(5L)))
+      calibrationDocs(s, d)
         .groupBy(col("bin"))
         .agg(
           sum(when(col("train"), 1L).otherwise(0L)).as("n_train"),
@@ -376,16 +439,8 @@ object Extended14 {
     // Scale shape: everything downstream of the ≤6-bin lattice is
     // constant-size; ONE documents scan feeds both splits.
     "q182_hosmer_lemeshow" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-        .withColumn("words", split(trim(col("text")), " "))
-        .withColumn("n_tok", size(col("words")))
-        .withColumn("train", col("doc_id") % 2 === 0)
       val bins = Materialize.LocalCheckpoint(
-        TextOps.repetitionStatsKeeping(docs, col("n_tok"), col("train"))
-          .select(col("n_tok"), col("train"),
-            (col("n_dup_pos") > 0).as("rep"))
-          .withColumn("bin",
-            least(expr("CAST(n_tok AS BIGINT) div 20"), lit(5L)))
+        calibrationDocs(s, d)
           .groupBy(col("bin"))
           .agg(
             sum(when(col("train"), 1L).otherwise(0L)).as("n"),
@@ -495,37 +550,6 @@ object Extended14 {
         .orderBy(col("thr"))
     }))
 
-  /** Shared oracle CTE prefix: per-doc score s, screens a/c_len, and
-    * the repetition label b, mirroring [[scoredDocs]]. */
-  private val docCte =
-    """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
-      |    AS words FROM documents),
-      |  sc AS (SELECT doc_id,
-      |    CAST(LEN(list_distinct(words)) AS DOUBLE) / LEN(words) AS s,
-      |    (LEN(words) >= 10 AND
-      |     CAST(LEN(list_distinct(words)) AS DOUBLE) / LEN(words)
-      |       >= 0.5 AND
-      |     CAST(LEN(list_filter(words, x -> x IN
-      |       ('the', 'and', 'of', 'to', 'a', 'in', 'is'))) AS DOUBLE)
-      |       / LEN(words) <= 0.4) AS a,
-      |    LEN(words) >= 30 AND LEN(words) <= 120 AS c_len
-      |  FROM w),
-      |  g AS (SELECT doc_id,
-      |    UNNEST(list_transform(
-      |      generate_series(1, GREATEST(LEN(words) - 2, 0)),
-      |      i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))
-      |      AS gram
-      |  FROM w),
-      |  c AS (SELECT doc_id, gram, COUNT(1) AS cnt FROM g
-      |    GROUP BY doc_id, gram),
-      |  dup AS (SELECT doc_id,
-      |    CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT)
-      |      AS n_dup
-      |  FROM c GROUP BY doc_id),
-      |  lab AS (SELECT sc.doc_id, sc.s, sc.a, sc.c_len,
-      |    COALESCE(dup.n_dup, 0) = 0 AS b
-      |  FROM sc LEFT JOIN dup USING (doc_id))""".stripMargin
-
   /** The survival-carrier oracle CTEs shared by q174/q175 (mirrors
     * [[Extended11.survivalDurations]]). */
   private val survCte =
@@ -571,17 +595,8 @@ object Extended14 {
 
     "q172_mcnemar_screens" ->
       (docCte +
-        """,
-          |  cells AS (SELECT
-          |    CAST(SUM(CASE WHEN a AND b THEN 1 ELSE 0 END)
-          |      AS BIGINT) AS n11,
-          |    CAST(SUM(CASE WHEN a AND NOT b THEN 1 ELSE 0 END)
-          |      AS BIGINT) AS n10,
-          |    CAST(SUM(CASE WHEN NOT a AND b THEN 1 ELSE 0 END)
-          |      AS BIGINT) AS n01,
-          |    CAST(SUM(CASE WHEN NOT a AND NOT b THEN 1 ELSE 0 END)
-          |      AS BIGINT) AS n00
-          |  FROM lab),
+        s""",
+          |  ${agreementCellsSql("lab")},
           |  st AS (SELECT n11, n10, n01, n00,
           |    n11 + n10 + n01 + n00 AS n,
           |    CASE WHEN n10 + n01 = 0 THEN NULL
@@ -702,20 +717,9 @@ object Extended14 {
           |ORDER BY t_min""".stripMargin),
 
     "q180_calibration_oos" ->
-      """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
+      s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
         |    AS words FROM documents),
-        |  g AS (SELECT doc_id,
-        |    UNNEST(list_transform(
-        |      generate_series(1, GREATEST(LEN(words) - 2, 0)),
-        |      i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))
-        |      AS gram
-        |  FROM w),
-        |  c AS (SELECT doc_id, gram, COUNT(1) AS cnt FROM g
-        |    GROUP BY doc_id, gram),
-        |  dup AS (SELECT doc_id,
-        |    CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT)
-        |      AS n_dup
-        |  FROM c GROUP BY doc_id),
+        |  $repetitionSql,
         |  lab AS (SELECT w.doc_id, LEN(words) AS n_tok,
         |    w.doc_id % 2 = 0 AS train,
         |    COALESCE(dup.n_dup, 0) > 0 AS rep
@@ -746,20 +750,9 @@ object Extended14 {
         |ORDER BY bin""".stripMargin,
 
     "q181_isotonic_calibration" ->
-      """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
+      s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
         |    AS words FROM documents WHERE doc_id % 2 = 0),
-        |  g AS (SELECT doc_id,
-        |    UNNEST(list_transform(
-        |      generate_series(1, GREATEST(LEN(words) - 2, 0)),
-        |      i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))
-        |      AS gram
-        |  FROM w),
-        |  c AS (SELECT doc_id, gram, COUNT(1) AS cnt FROM g
-        |    GROUP BY doc_id, gram),
-        |  dup AS (SELECT doc_id,
-        |    CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT)
-        |      AS n_dup
-        |  FROM c GROUP BY doc_id),
+        |  $repetitionSql,
         |  lab AS (SELECT LEAST(CAST(LEN(words) AS BIGINT) // 20, 5)
         |      AS bin,
         |    COALESCE(dup.n_dup, 0) > 0 AS rep
@@ -784,20 +777,9 @@ object Extended14 {
         |ORDER BY bin""".stripMargin,
 
     "q182_hosmer_lemeshow" ->
-      """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
+      s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
         |    AS words FROM documents),
-        |  g AS (SELECT doc_id,
-        |    UNNEST(list_transform(
-        |      generate_series(1, GREATEST(LEN(words) - 2, 0)),
-        |      i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))
-        |      AS gram
-        |  FROM w),
-        |  c AS (SELECT doc_id, gram, COUNT(1) AS cnt FROM g
-        |    GROUP BY doc_id, gram),
-        |  dup AS (SELECT doc_id,
-        |    CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT)
-        |      AS n_dup
-        |  FROM c GROUP BY doc_id),
+        |  $repetitionSql,
         |  lab AS (SELECT LEAST(CAST(LEN(words) AS BIGINT) // 20, 5)
         |      AS bin,
         |    w.doc_id % 2 = 0 AS train,

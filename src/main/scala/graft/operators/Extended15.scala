@@ -37,23 +37,8 @@ object Extended15 {
     * single-partition lag window (~350 rows at ANY data scale — the
     * q156 aggregate-first stance). */
   private def weeklyBacktest(s: SparkSession, d: String): DataFrame = {
-    // pre-aggregate to per-order cents before the orders join (guide
-    // §2.3): |orders| partial sums cross the orderkey exchange instead
-    // of |lineitem| raw rows, replacing the round-robin spread.
-    val wk = Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_extendedprice"))
-      .groupBy(col("l_orderkey"))
-      .agg(expr("sum(CAST(round(l_extendedprice * 100) AS BIGINT))")
-        .as("cents"))
-      .join(Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(expr(
-        "CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT) div 7")
-        .as("w"))
-      .agg(expr("sum(cents) div 100").as("y"))
     val wLag = Window.orderBy(col("w"))
-    wk
+    OrderRevenue.weeklyRevenue(s, d)
       .withColumn("y1", lag(col("y"), 1).over(wLag))
       .withColumn("y2", lag(col("y"), 2).over(wLag))
       .withColumn("y3", lag(col("y"), 3).over(wLag))
@@ -204,11 +189,7 @@ object Extended15 {
     // one fact rollup, grid-keyed windows, one row out.
     "q184_brunner_munzel" -> ((s, d) => {
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      val grid = Extended11.orderWidthValues(s, d)
-        .groupBy(col("value"))
-        .agg(sum(when(col("wide"), 1L).otherwise(0L)).as("ca"),
-          sum(when(!col("wide"), 1L).otherwise(0L)).as("cb"))
-        .withColumn("t", col("ca") + col("cb"))
+      val grid = OrderRevenue.widthCounts(s, d)
       val wB = Window.orderBy(col("value"))
         .rowsBetween(Window.unboundedPreceding, -1)
       val rk = grid
@@ -273,11 +254,7 @@ object Extended15 {
     // row.
     "q185_cramer_von_mises" -> ((s, d) => {
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      val grid = Extended11.orderWidthValues(s, d)
-        .groupBy(col("value"))
-        .agg(sum(when(col("wide"), 1L).otherwise(0L)).as("ca"),
-          sum(when(!col("wide"), 1L).otherwise(0L)).as("cb"))
-        .withColumn("t", col("ca") + col("cb"))
+      val grid = OrderRevenue.widthCounts(s, d)
       val wCum = Window.orderBy(col("value"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wAll = Window.orderBy(col("value")).rowsBetween(
@@ -312,7 +289,7 @@ object Extended15 {
     // shape: one fact rollup, map-side partials to one row.
     "q186_effect_sizes" -> ((s, d) => {
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      val m = Extended11.orderWidthValues(s, d).agg(
+      val m = OrderRevenue.orderWidthValues(s, d).agg(
         sum(when(col("wide"), 1L).otherwise(0L)).as("na"),
         sum(when(!col("wide"), 1L).otherwise(0L)).as("nb"),
         sum(when(col("wide"), col("value")).otherwise(0L)).as("sa"),
@@ -365,14 +342,7 @@ object Extended15 {
     // table collapses to the calendar-bounded week grid before the
     // single-partition windows (the q156 aggregate-first stance).
     "q188_walkforward_ols" -> ((s, d) => {
-      val wk = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(expr(
-          "CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT)" +
-            " div 7").as("w"))
-        .agg(expr(
-          "sum(CAST(round(l_extendedprice * 100) AS BIGINT)) div 100")
-          .as("y"))
+      val wk = OrderRevenue.weeklyRevenue(s, d)
       val wPrior = Window.orderBy(col("w"))
         .rowsBetween(Window.unboundedPreceding, -1)
       val wLag = Window.orderBy(col("w"))
@@ -424,9 +394,7 @@ object Extended15 {
       // answers on one of them
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       Tables.orders(s, d)
-        .groupBy(expr(
-          "CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT)" +
-            " div 7").as("w"))
+        .groupBy(OrderRevenue.orderWeek.as("w"))
         .agg(count(lit(1)).as("c"))
         .agg(count(lit(1)).as("n"), sum(col("c")).as("s1"),
           sum(col("c") * col("c")).as("s2"))
@@ -564,7 +532,7 @@ object Extended15 {
     // grid² on ~350 weeks per nation — O(weeks²)·|nations| at ANY
     // data scale, never O(rows²).
     "q179_siegel_slope" -> ((s, d) => {
-      val wk = Extended13.nationWeeklyRevenue(s, d)
+      val wk = OrderRevenue.nationWeeklyRevenue(s, d)
       // the selection thresholds are knowable without counting inside
       // the pair frame: every week has exactly n_weeks − 1 partners
       // and every nation has n_weeks per-week medians — a broadcast
@@ -608,7 +576,7 @@ object Extended15 {
         .agg(max(col("n_weeks")).as("n_weeks"),
           sort_array(collect_list(struct(col("med_i"), col("wi"))))
             .as("ml"))
-        .join(broadcast(Extended13.nationNames(s, d)), "nk")
+        .join(broadcast(OrderRevenue.nationNames(s, d)), "nk")
         .select(col("nation"), col("n_weeks"),
           element_at(col("ml"), expr("CAST((n_weeks + 1) div 2 AS INT)"))
             .getField("med_i").as("siegel_slope"))
@@ -813,15 +781,20 @@ object Extended15 {
           col("var_y"), col("var_d"), col("var_r"))
     }))
 
-  /** Shared oracle CTEs: the weekly backtest frame (mirrors
-    * [[weeklyBacktest]]). */
-  private val backtestCte =
-    """WITH wk AS (SELECT
+  /** Oracle CTE `wk` (w, y) of q176–q178 and q188, mirroring
+    * [[OrderRevenue.weeklyRevenue]]. */
+  private val weeklySql =
+    """wk AS (SELECT
       |    datediff('day', DATE '1992-01-01', o_orderdate) // 7 AS w,
       |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
       |      AS BIGINT) // 100 AS y
       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |  GROUP BY 1),
+      |  GROUP BY 1)""".stripMargin
+
+  /** Shared oracle CTEs: the weekly backtest frame (mirrors
+    * [[weeklyBacktest]]). */
+  private val backtestCte =
+    s"""WITH $weeklySql,
       |  lg AS (SELECT w, y,
       |    LAG(y, 1) OVER (ORDER BY w) AS y1,
       |    LAG(y, 2) OVER (ORDER BY w) AS y2,
@@ -950,18 +923,7 @@ object Extended15 {
         |SELECT n_orders, beta0, beta1, beta2, r2 FROM fin""".stripMargin,
 
     "q184_brunner_munzel" ->
-      """WITH per AS (SELECT l_orderkey, COUNT(1) AS n_items,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) // 100 AS value
-        |  FROM lineitem GROUP BY 1
-        |  HAVING COUNT(1) <= 2 OR COUNT(1) >= 6),
-        |  tagged AS (SELECT value, n_items >= 6 AS wide FROM per),
-        |  grid AS (SELECT value,
-        |    CAST(SUM(CASE WHEN wide THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS ca,
-        |    CAST(SUM(CASE WHEN NOT wide THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS cb
-        |  FROM tagged GROUP BY 1),
+      s"""WITH ${OrderRevenue.widthCountsSql},
         |  rk AS (SELECT ca, cb, ca + cb AS t,
         |    COALESCE(CAST(SUM(ca + cb) OVER (ORDER BY value
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
@@ -1012,18 +974,7 @@ object Extended15 {
         |FROM fin""".stripMargin,
 
     "q185_cramer_von_mises" ->
-      """WITH per AS (SELECT l_orderkey, COUNT(1) AS n_items,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) // 100 AS value
-        |  FROM lineitem GROUP BY 1
-        |  HAVING COUNT(1) <= 2 OR COUNT(1) >= 6),
-        |  tagged AS (SELECT value, n_items >= 6 AS wide FROM per),
-        |  grid AS (SELECT value,
-        |    CAST(SUM(CASE WHEN wide THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS ca,
-        |    CAST(SUM(CASE WHEN NOT wide THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS cb
-        |  FROM tagged GROUP BY 1),
+      s"""WITH ${OrderRevenue.widthCountsSql},
         |  rk AS (SELECT ca, cb, ca + cb AS t,
         |    CAST(SUM(ca) OVER (ORDER BY value
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -1049,12 +1000,7 @@ object Extended15 {
         |FROM fin""".stripMargin,
 
     "q186_effect_sizes" ->
-      """WITH per AS (SELECT l_orderkey, COUNT(1) AS n_items,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) // 100 AS value
-        |  FROM lineitem GROUP BY 1
-        |  HAVING COUNT(1) <= 2 OR COUNT(1) >= 6),
-        |  tagged AS (SELECT value, n_items >= 6 AS wide FROM per),
+      s"""WITH ${OrderRevenue.orderWidthValuesSql},
         |  m AS (SELECT
         |    CAST(SUM(CASE WHEN wide THEN 1 ELSE 0 END) AS BIGINT)
         |      AS na,
@@ -1096,12 +1042,7 @@ object Extended15 {
         |FROM cd""".stripMargin,
 
     "q188_walkforward_ols" ->
-      """WITH wk AS (SELECT
-        |    datediff('day', DATE '1992-01-01', o_orderdate) // 7 AS w,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) // 100 AS y
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  GROUP BY 1),
+      s"""WITH $weeklySql,
         |  cw AS (SELECT w, y,
         |    COALESCE(CAST(COUNT(y) OVER pri AS BIGINT), 0) AS cn,
         |    COALESCE(CAST(SUM(w) OVER pri AS BIGINT), 0) AS sx,
@@ -1182,15 +1123,7 @@ object Extended15 {
         |ORDER BY lang""".stripMargin,
 
     "q179_siegel_slope" ->
-      """WITH wk AS (SELECT n.n_name AS nation,
-        |    datediff('day', DATE '1992-01-01', o.o_orderdate) // 7 AS w,
-        |    CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) // 100 AS y
-        |  FROM lineitem l
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |  GROUP BY 1, 2),
+      s"""WITH ${OrderRevenue.nationWeeklyRevenueSql},
         |  sl AS (SELECT a.nation, a.w AS wi, b.w AS wj,
         |    CAST(b.y - a.y AS DOUBLE) / CAST(b.w - a.w AS DOUBLE)
         |      AS slope

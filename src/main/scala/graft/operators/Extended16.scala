@@ -27,29 +27,6 @@ object Extended16 {
 
   private val dec = DecimalType(38, 0)
 
-  /** The global weekly revenue series (whole dollars, exact longs) —
-    * the q159/q176 carrier: one calendar-bounded row per observed week
-    * (~350 at ANY data scale), so every downstream single-partition
-    * window in this file is over the grid, never over fact rows. */
-  private def weekly(s: SparkSession, d: String): DataFrame =
-    // pre-aggregate the fact table to per-order cents BEFORE the
-    // orders join (guide §2.3, aggregate-before-shuffle): the orderkey
-    // exchange carries |orders| partial sums instead of |lineitem| raw
-    // rows, and the partial aggregate replaces the round-robin spread.
-    // Sum of per-order long sums == the flat long sum, divided once.
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_extendedprice"))
-      .groupBy(col("l_orderkey"))
-      .agg(expr("sum(CAST(round(l_extendedprice * 100) AS BIGINT))")
-        .as("cents"))
-      .join(Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(expr(
-        "CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT) div 7")
-        .as("w"))
-      .agg(expr("sum(cents) div 100").as("y"))
-
   /** q197's scoring engine over ANY undirected edge list `(pa, pb)`
     * (deduplicated, pa < pb): every NON-adjacent pair sharing ≥ 1
     * neighbor, scored by common-neighbor count, neighborhood Jaccard,
@@ -107,6 +84,9 @@ object Extended16 {
     * for users matching `targetFilter` and candidates the user does
     * NOT own. Returns (c, cand, score_fp, n_terms). The item
     * vocabulary must be BOUNDED (the affinity matrix broadcasts).
+    * `brand` must be non-null: the dedup's `collect_set` silently
+    * drops NULL items, so a NULL brand would vanish from the matrix
+    * rather than count as an item.
     * Property-checked against brute force on random matrices
     * (Round8OpsSpec). Long-range note: co²·10⁹ needs the
     * DECIMAL(38,0) carrier past ~2e17 (see q196). The matrix is
@@ -120,11 +100,11 @@ object Extended16 {
     // The matrix is deduplicated HERE, keyed on c (round 13): one
     // c-keyed exchange (collect_set dedups inside the aggregate, then
     // explode restores rows — partitioning-preserving) replaces the
-    // caller's (c, brand)-keyed distinct, and the cut frame comes out
-    // HASH-PARTITIONED ON c — so the co-occurrence self-join below
-    // reuses that partitioning on BOTH sides and needs no further
-    // exchange of the matrix. Measured at sf0.1: matrix build 2.6 s →
-    // 1.0 s, co join 1.37 s → 0.57 s. The in-row collect_set pair
+    // caller's (c, brand)-keyed distinct. The cut frame does NOT come
+    // out hash-partitioned on c: with AQE on, the checkpointed plan
+    // reports UnknownPartitioning(0), so the co-occurrence self-join
+    // below still exchanges the matrix on both sides. Measured at
+    // sf0.1: matrix build 2.6 s → 1.0 s, co join 1.37 s → 0.57 s. The in-row collect_set pair
     // fan-out (the q84/q197 basket shape) was tried first and measured
     // SLOWER (1.5–2.5 s): the O(k²) fan-out runs as an interpreted HOF
     // lambda over string structs, while the co-partitioned self-join
@@ -214,7 +194,7 @@ object Extended16 {
     // aggregate both run over ~350 rows at ANY scale.
     "q192_chow_test" -> ((s, d) => {
       val wAll = Window.partitionBy(lit(1))
-      val seg = weekly(s, d)
+      val seg = OrderRevenue.weeklyRevenue(s, d)
         .withColumn("wmin", min(col("w")).over(wAll))
         .withColumn("wmax", max(col("w")).over(wAll))
         .withColumn("mid", expr("(wmin + wmax + 1) div 2"))
@@ -271,7 +251,7 @@ object Extended16 {
     // ~350 rows, one 9-sum aggregate row.
     "q193_durbin_watson" -> ((s, d) => {
       val wSeq = Window.orderBy(col("w"))
-      val b0 = weekly(s, d)
+      val b0 = OrderRevenue.weeklyRevenue(s, d)
         .withColumn("dy", col("y") - lag(col("y"), 1).over(wSeq))
         .withColumn("dx", col("w") - lag(col("w"), 1).over(wSeq))
       b0.agg(
@@ -375,20 +355,7 @@ object Extended16 {
     // ~350-row calendar grid (q159's allowlisted class), top-10 via
     // TakeOrdered, never a full sort.
     "q195_influence" -> ((s, d) => {
-      val wAll = Window.partitionBy(lit(1))
-      val st = weekly(s, d)
-        .withColumn("n", count(lit(1)).over(wAll))
-        .withColumn("sx", sum(col("w")).over(wAll))
-        .withColumn("sy", sum(col("y")).over(wAll))
-        .withColumn("sxx", sum(col("w") * col("w")).over(wAll))
-        .withColumn("sxy", sum((col("w") * col("y")).cast(dec)).over(wAll))
-        .withColumn("syy", sum(col("y").cast(dec) * col("y")).over(wAll))
-        .withColumn("cc", col("n") * col("sxx") - col("sx") * col("sx"))
-        .withColumn("bb", col("n") * col("sxy") - col("sx") * col("sy"))
-        .withColumn("aa", col("n").cast(dec) * col("syy") -
-          col("sy").cast(dec) * col("sy").cast(dec))
-        .withColumn("beta",
-          col("bb").cast("double") / col("cc").cast("double"))
+      val st = OrderRevenue.weeklyOlsMoments(s, d)
         .withColumn("rss",
           (col("aa").cast("double") -
             col("bb").cast("double") * col("bb").cast("double") /
@@ -468,21 +435,8 @@ object Extended16 {
     // grid, 4 lag columns, one aggregate row.
     "q199_hac_se" -> ((s, d) => {
       val dec6 = org.apache.spark.sql.types.DecimalType(38, 6)
-      val wAll = Window.partitionBy(lit(1))
       val wOrd = Window.orderBy(col("w"))
-      val st = weekly(s, d)
-        .withColumn("n", count(lit(1)).over(wAll))
-        .withColumn("sx", sum(col("w")).over(wAll))
-        .withColumn("sy", sum(col("y")).over(wAll))
-        .withColumn("sxx", sum(col("w") * col("w")).over(wAll))
-        .withColumn("sxy", sum((col("w") * col("y")).cast(dec)).over(wAll))
-        .withColumn("syy", sum(col("y").cast(dec) * col("y")).over(wAll))
-        .withColumn("cc", col("n") * col("sxx") - col("sx") * col("sx"))
-        .withColumn("bb", col("n") * col("sxy") - col("sx") * col("sy"))
-        .withColumn("aa", col("n").cast(dec) * col("syy") -
-          col("sy").cast(dec) * col("sy").cast(dec))
-        .withColumn("beta",
-          col("bb").cast("double") / col("cc").cast("double"))
+      val st = OrderRevenue.weeklyOlsMoments(s, d)
         .withColumn("v", col("n") * col("w") - col("sx"))
         .withColumn("u", col("n") * col("y") - col("sy"))
         .withColumn("eh",
@@ -549,7 +503,7 @@ object Extended16 {
       val wSeq = wOrd.rowsBetween(Window.unboundedPreceding,
         Window.currentRow)
       val wAll = Window.partitionBy(lit(1))
-      val st = weekly(s, d)
+      val st = OrderRevenue.weeklyRevenue(s, d)
         .withColumn("t", row_number().over(wOrd).cast("long"))
         .withColumn("csx", sum(col("w")).over(wSeq))
         .withColumn("csy", sum(col("y")).over(wSeq))
@@ -640,14 +594,6 @@ object Extended16 {
     def rss(n: String, a: String, b: String, c: String) =
       s"""CASE WHEN $c = 0 THEN NULL ELSE
          (${vd(a)} - ${vd(b)} * ${vd(b)} / ${vd(c)}) / ${vd(n)} END"""
-    val wkCte =
-      """wk AS (SELECT
-        |    datediff('day', DATE '1992-01-01', o.o_orderdate) // 7 AS w,
-        |    CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-        |      AS BIGINT) // 100 AS y
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  GROUP BY 1)""".stripMargin
-
     Map(
       "q192_chow_test" -> {
         def mm(pred: String, sfx: String) =
@@ -667,7 +613,7 @@ object Extended16 {
           s"""n$sfx * syy$sfx - sy$sfx * sy$sfx AS a$sfx,
              n$sfx * sxy$sfx - sx$sfx * sy$sfx AS b$sfx,
              n$sfx * sxx$sfx - sx$sfx * sx$sfx AS c$sfx"""
-        s"""WITH $wkCte,
+        s"""WITH ${OrderRevenue.weeklyRevenueSql},
            sg AS (SELECT w, y,
              (MIN(w) OVER () + MAX(w) OVER () + 1) // 2 AS mid FROM wk),
            m AS (SELECT MAX(mid) AS mid,
@@ -692,7 +638,7 @@ object Extended16 {
       },
 
       "q193_durbin_watson" ->
-        s"""WITH $wkCte,
+        s"""WITH ${OrderRevenue.weeklyRevenueSql},
            lg AS (SELECT w, y,
              y - LAG(y, 1) OVER (ORDER BY w) AS dy,
              w - LAG(w, 1) OVER (ORDER BY w) AS dx FROM wk),
@@ -760,7 +706,7 @@ object Extended16 {
       },
 
       "q199_hac_se" ->
-        s"""WITH $wkCte,
+        s"""WITH ${OrderRevenue.weeklyRevenueSql},
            st AS (SELECT w, y,
              CAST(COUNT(1) OVER () AS BIGINT) AS n,
              CAST(SUM(w) OVER () AS HUGEINT) AS sx,
@@ -817,7 +763,7 @@ object Extended16 {
           s"""$nc * $syy - $sy * $sy AS a$sfx,
              $nc * $sxy - $sx * $sy AS b$sfx,
              $nc * $sxx - $sx * $sx AS c$sfx"""
-        s"""WITH $wkCte,
+        s"""WITH ${OrderRevenue.weeklyRevenueSql},
            st AS (SELECT w, y,
              CAST(ROW_NUMBER() OVER (ORDER BY w) AS BIGINT) AS t,
              CAST(SUM(w) OVER seq AS HUGEINT) AS csx,
@@ -927,7 +873,7 @@ object Extended16 {
           .stripMargin,
 
       "q195_influence" ->
-        s"""WITH $wkCte,
+        s"""WITH ${OrderRevenue.weeklyRevenueSql},
            st AS (SELECT w, y,
              CAST(COUNT(1) OVER () AS HUGEINT) AS n,
              CAST(SUM(w) OVER () AS HUGEINT) AS sx,

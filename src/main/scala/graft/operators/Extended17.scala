@@ -27,35 +27,6 @@ object Extended17 {
 
   private val dec = DecimalType(38, 0)
 
-  /** Shared weekly two-series carrier: exact revenue in WHOLE
-    * THOUSANDS of dollars (kept small so the 4th-order moment
-    * products below stay ~1e25 at sf0.1 — thirteen orders of
-    * precision-38 headroom, enough for a ×1e6 data scale-up) and
-    * order count per observed week (~350 calendar-bounded rows at ANY
-    * data scale — the q159/q176/q193 grid). One fact-join exchange,
-    * then every downstream window is over the grid, never fact rows.
-    */
-  private def weeklyPair(s: SparkSession, d: String): DataFrame =
-    // pre-aggregate the fact table to per-order cents BEFORE the
-    // orders join (guide §2.3): the orderkey exchange carries |orders|
-    // partial sums instead of |lineitem| raw rows (replacing the
-    // round-robin spread), and the per-week COUNT DISTINCT of order
-    // keys collapses to a plain count(1) over the now-unique per-order
-    // rows — no Expand pass. Same exact longs both ways.
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_extendedprice"))
-      .groupBy(col("l_orderkey"))
-      .agg(expr("sum(CAST(round(l_extendedprice * 100) AS BIGINT))")
-        .as("cents"))
-      .join(Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(expr(
-        "CAST(datediff(o_orderdate, DATE '1992-01-01') AS BIGINT) div 7")
-        .as("w"))
-      .agg(expr("sum(cents) div 100000").as("yv"),
-        count(lit(1)).as("xv"))
-
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // GRANGER CAUSALITY (both directions, one lag frame) — does
@@ -74,7 +45,7 @@ object Extended17 {
     // exchange to the ~350-row grid, one lag window over the grid,
     // 14 moments map-side-combined to a single row.
     "q200_granger_causality" -> ((s: SparkSession, d: String) =>
-      grangerFromWeekly(weeklyPair(s, d))),
+      grangerFromWeekly(OrderRevenue.weeklyPair(s, d))),
 
     // ENGLE–GRANGER COINTEGRATION — do weekly revenue and weekly
     // order count share ONE stochastic trend? Stage 1 fits the levels
@@ -98,7 +69,7 @@ object Extended17 {
     // 21 moments map-side-combined to a single row, two broadcast
     // 1-row frames crossed.
     "q201_engle_granger" -> ((s: SparkSession, d: String) => {
-      val wk = weeklyPair(s, d)
+      val wk = OrderRevenue.weeklyPair(s, d)
       val wSeq = Window.orderBy(col("w"))
       val lagf = wk
         .withColumn("yl", lag(col("yv"), 1).over(wSeq))
@@ -334,14 +305,7 @@ object Extended17 {
   val oracleSql: Map[String, String] = Map(
 
     "q200_granger_causality" ->
-      """WITH wk AS (SELECT
-        |    CAST(datediff('day', DATE '1992-01-01', o_orderdate)
-        |      AS BIGINT) // 7 AS w,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      // 100000 AS HUGEINT) AS yv,
-        |    CAST(COUNT(DISTINCT l_orderkey) AS HUGEINT) AS xv
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  GROUP BY 1),
+      s"""WITH ${OrderRevenue.weeklyPairSql},
         |  lg AS (SELECT yv, xv,
         |    LAG(yv) OVER (ORDER BY w) AS yl,
         |    LAG(xv) OVER (ORDER BY w) AS xl
@@ -393,14 +357,7 @@ object Extended17 {
         |FROM r""".stripMargin,
 
     "q201_engle_granger" ->
-      """WITH wk AS (SELECT
-        |    CAST(datediff('day', DATE '1992-01-01', o_orderdate)
-        |      AS BIGINT) // 7 AS w,
-        |    CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-        |      // 100000 AS HUGEINT) AS yv,
-        |    CAST(COUNT(DISTINCT l_orderkey) AS HUGEINT) AS xv
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  GROUP BY 1),
+      s"""WITH ${OrderRevenue.weeklyPairSql},
         |  lg AS (SELECT yv, xv,
         |    LAG(yv) OVER (ORDER BY w) AS yl,
         |    LAG(xv) OVER (ORDER BY w) AS xl

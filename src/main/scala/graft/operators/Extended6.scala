@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Parity, Tables}
+import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Sixth analytics batch: ABC/Pareto inventory classification, open-order
   * backlog aging, inter-purchase interval statistics, deterministic
@@ -310,12 +311,7 @@ object Extended6 {
   )
 
   private val bucketHashSql =
-    """CAST(list_reduce(
-         list_transform(generate_series(1, 15),
-           i -> strpos('0123456789abcdef',
-                  substring(md5('shard|' || CAST(doc_id AS VARCHAR)), i, 1))
-                - 1),
-         (a, x) -> a * 16 + x) AS BIGINT) % 16"""
+    s"""${md5Hash60Sql("'shard|' || CAST(doc_id AS VARCHAR)")} % 16"""
 
   def oracleSql: Map[String, String] = Map(
 

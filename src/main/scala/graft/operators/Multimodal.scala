@@ -195,8 +195,14 @@ object Multimodal {
       .toDF()
   }
 
-  private def phashPairs(s: SparkSession, d: String): DataFrame =
-    phashPairsFrom(s, Materialize.LocalCheckpoint(ahashFrame(s, d)))
+  private def phashPairs(s: SparkSession, d: String): DataFrame = {
+    val fp = Materialize.LocalCheckpoint(ahashFrame(s, d))
+    phashPairsFrom(s, fp, fp.count())
+  }
+
+  /** Media count up to which the banding stays 4 x 15 bits and an
+    * n-row fingerprint side may be broadcast (see [[phashPairsFrom]]). */
+  private val BandKnee = 32768L
 
   /** The banded-LSH pair search over a MATERIALIZED fingerprint frame
     * (round 13). The cut means the documents scan + ahash map pass runs
@@ -206,9 +212,9 @@ object Multimodal {
     * auto-broadcast to sort-merge, 0.6 s -> 3.1 s") is answered the way
     * the lesson prescribed rather than by giving up the cut: the join
     * strategy is chosen HERE, deterministically, from the actual media
-    * count — counting an eagerly-checkpointed frame is a local block
-    * scan, and n_media is exactly the scalar the count-adaptive banding
-    * already keys on. Banding stays COUNT-ADAPTIVE (the ScaleCurve
+    * count `nMedia` of `fp`, which the caller takes — counting an
+    * eagerly-checkpointed frame is a local block scan, and n_media is
+    * exactly the scalar the count-adaptive banding already keys on. Banding stays COUNT-ADAPTIVE (the ScaleCurve
     * lesson): 4 bands x 15 bits carries a random-collision candidate
     * term ~ 4n²/2^15 that turns super-linear past n ≈ 32768 media
     * items; above that the banding widens to 3 bands x 20 bits — one
@@ -220,9 +226,9 @@ object Multimodal {
     * a corpus-sized broadcast. Values are identical either way (same
     * nb/w per n_media as the old in-plan scalar; join strategy does not
     * change results), so the oracle CTEs are untouched. */
-  private def phashPairsFrom(s: SparkSession, fp: DataFrame): DataFrame = {
-    val nMedia = fp.count()
-    val (nb, w) = if (nMedia <= 32768L) (4, 15) else (3, 20)
+  private def phashPairsFrom(s: SparkSession, fp: DataFrame,
+      nMedia: Long): DataFrame = {
+    val (nb, w) = if (nMedia <= BandKnee) (4, 15) else (3, 20)
     val banded = fp
       .select(col("doc_id"), col("ahash"),
         explode(expr(s"sequence(0, ${nb - 1})")).as("band"))
@@ -233,7 +239,7 @@ object Multimodal {
       col("ahash").as("ha"), col("band"), col("bh"))
     val b = banded.select(col("doc_id").as("doc_b"),
       col("ahash").as("hb"), col("band"), col("bh"))
-    val probe = if (nMedia <= 32768L) broadcast(b) else b
+    val probe = if (nMedia <= BandKnee) broadcast(b) else b
     a.join(probe, Seq("band", "bh"))
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
@@ -407,15 +413,19 @@ object Multimodal {
       // + twice inside phashPairs). The truth side's build frame is
       // explicitly broadcast — n rows of 16 bytes, and the O(n²) scan
       // is this query's DECLARED eval-twin contract — because the cut
-      // erases the stats the auto-broadcast decision used.
+      // erases the stats the auto-broadcast decision used. The hint is
+      // guarded by the banded index's knee, on the count the index
+      // needs anyway, so no corpus-sized frame is ever broadcast.
       val fp = Materialize.LocalCheckpoint(ahashFrame(s, d))
+      val nMedia = fp.count()
       val a = fp.select(col("doc_id").as("doc_a"), col("ahash").as("ha"))
       val b = fp.select(col("doc_id").as("doc_b"), col("ahash").as("hb"))
-      val truth = a.join(broadcast(b), col("doc_a") < col("doc_b"))
+      val truth = a.join(if (nMedia <= BandKnee) broadcast(b) else b,
+          col("doc_a") < col("doc_b"))
         .select(col("doc_a"), col("doc_b"),
           expr("CAST(bit_count(ha ^ hb) AS INT)").as("hamming"))
         .filter(col("hamming") <= 12)
-      val found = phashPairsFrom(s, fp)
+      val found = phashPairsFrom(s, fp, nMedia)
         .select(col("doc_a"), col("doc_b"), lit(1L).as("hit"))
       truth.join(found, Seq("doc_a", "doc_b"), "left")
         .groupBy(when(col("hamming") <= 4, "d00_04")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Relational operator surface (SURVEY.md §2.2): projection/filter, every
   * join shape, aggregation (hash/partial, distinct, rollup/cube/grouping
@@ -754,11 +755,8 @@ object Relational {
     // identical α·m²/Z expression order) and q52's KMV bottom-128
     // distinct (h, v) sample with type-7 interpolation at p = 0.5.
     "q29_approx_aggregates" ->
-      """WITH hashed AS (SELECT event_type,
-             CAST(list_reduce(list_transform(generate_series(1, 15),
-                 i -> strpos('0123456789abcdef', substring(
-                   md5(CAST(user_id AS VARCHAR)), i, 1)) - 1),
-               (a, x) -> a * 16 + x) AS BIGINT) AS h
+      s"""WITH hashed AS (SELECT event_type,
+             ${md5Hash60Sql("CAST(user_id AS VARCHAR)")} AS h
            FROM events),
          rho AS (SELECT event_type, h & 63 AS bucket,
              CASE WHEN (h >> 6) = 0 THEN 55
@@ -780,10 +778,7 @@ object Relational {
              CAST(ROUND(value * 100, 0) AS BIGINT) AS v
            FROM events),
          hv AS (SELECT DISTINCT event_type,
-             CAST(list_reduce(list_transform(generate_series(1, 15),
-                 i -> strpos('0123456789abcdef', substring(
-                   md5(CAST(v AS VARCHAR)), i, 1)) - 1),
-               (a, x) -> a * 16 + x) AS BIGINT) AS h, v
+             ${md5Hash60Sql("CAST(v AS VARCHAR)")} AS h, v
            FROM cents),
          samp AS (SELECT event_type, v,
              ROW_NUMBER() OVER (PARTITION BY event_type

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Text-analysis operators for training-data pipelines over `documents`:
   * token counting (whitespace + BPE-ish regex), quality scoring, n-gram
@@ -1237,7 +1238,7 @@ object TextOps {
          ORDER BY lang, pred_lang""",
 
     "t33_mixture_resample" ->
-      """WITH docs AS (SELECT doc_id, lang,
+      s"""WITH docs AS (SELECT doc_id, lang,
              CAST(LEN(string_split(TRIM(text), ' ')) AS BIGINT) AS nt
            FROM documents),
          r0 AS (SELECT lang, COUNT(1) AS n_before,
@@ -1254,10 +1255,7 @@ object TextOps {
          r3 AS (SELECT *, CAST(round((ratio / MAX(ratio) OVER ())
                   * 1000000) AS BIGINT) AS thr FROM r2),
          h AS (SELECT doc_id, lang, nt,
-                 CAST(list_reduce(list_transform(generate_series(1, 15),
-                   i -> strpos('0123456789abcdef', substring(
-                     md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1),
-                   (a, x) -> a * 16 + x) AS BIGINT) % 1000000 AS b
+                 ${md5Hash60Sql("CAST(doc_id AS VARCHAR)")} % 1000000 AS b
                FROM docs),
          kept AS (SELECT h.lang, COUNT(1) AS n_after,
                     CAST(SUM(h.nt) AS BIGINT) AS tok_after
@@ -1301,12 +1299,8 @@ object TextOps {
          ORDER BY doc_id""",
 
     "t08_stratified_sample" ->
-      """WITH h AS (SELECT doc_id, lang,
-           CAST(list_reduce(
-             list_transform(generate_series(1, 15),
-               i -> strpos('0123456789abcdef',
-                      substring(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1),
-             (a, x) -> a * 16 + x) AS BIGINT) % 100 AS bucket
+      s"""WITH h AS (SELECT doc_id, lang,
+           ${md5Hash60Sql("CAST(doc_id AS VARCHAR)")} % 100 AS bucket
            FROM documents)
          SELECT doc_id, lang, CAST(bucket AS INT) AS bucket,
            CASE WHEN lang = 'en' THEN 50 WHEN lang = 'de' THEN 25
@@ -1416,14 +1410,10 @@ object TextOps {
          FROM rt ORDER BY lang""",
 
     "t15_leakage_safe_split" ->
-      """WITH f AS (SELECT doc_id, MD5(text) AS fp FROM documents),
+      s"""WITH f AS (SELECT doc_id, MD5(text) AS fp FROM documents),
          r AS (SELECT fp, MIN(doc_id) AS rep FROM f GROUP BY fp),
          j AS (SELECT f.doc_id, r.rep,
-                 CAST(CAST(list_reduce(
-                   list_transform(generate_series(1, 15),
-                     i -> strpos('0123456789abcdef',
-                            substring(md5(CAST(r.rep AS VARCHAR)), i, 1)) - 1),
-                   (a, x) -> a * 16 + x) AS BIGINT) % 100 AS INT) AS bucket
+                 CAST(${md5Hash60Sql("CAST(r.rep AS VARCHAR)")} % 100 AS INT) AS bucket
                FROM f JOIN r USING (fp))
          SELECT doc_id, rep, bucket,
            CASE WHEN bucket < 90 THEN 'train'
@@ -1490,14 +1480,10 @@ object TextOps {
 
     // same 16-word chunk + 60-bit md5-prefix integer as the Spark side
     "t20_source_overlap" ->
-      """WITH w AS (SELECT source, string_split(TRIM(text), ' ') AS words
+      s"""WITH w AS (SELECT source, string_split(TRIM(text), ' ') AS words
                     FROM documents),
          cf AS (SELECT DISTINCT source,
-                  CAST(list_reduce(list_transform(generate_series(1, 15),
-                    i -> strpos('0123456789abcdef',
-                           substring(md5(array_to_string(
-                             words[(p*16 + 1):(p*16 + 16)], ' ')), i, 1)) - 1),
-                    (a, x) -> a * 16 + x) AS BIGINT) AS fp
+                  ${md5Hash60Sql("array_to_string( words[(p*16 + 1):(p*16 + 16)], ' ')")} AS fp
                 FROM w, UNNEST(generate_series(0, (LEN(words) - 1) // 16))
                   AS t(p))
          SELECT a.source AS source_a, b.source AS source_b,
@@ -1507,14 +1493,10 @@ object TextOps {
 
     // identical 60-bit md5-prefix integer fingerprint (d05/q51 idiom)
     "t19_source_novelty" ->
-      """WITH w AS (SELECT source, string_split(TRIM(text), ' ') AS words
+      s"""WITH w AS (SELECT source, string_split(TRIM(text), ' ') AS words
                     FROM documents),
          g AS (SELECT DISTINCT source,
-                 CAST(list_reduce(list_transform(generate_series(1, 15),
-                   i -> strpos('0123456789abcdef',
-                          substring(md5(array_to_string(words[p:p+7], ' ')),
-                            i, 1)) - 1),
-                   (a, x) -> a * 16 + x) AS BIGINT) AS fp
+                 ${md5Hash60Sql("array_to_string(words[p:p+7], ' ')")} AS fp
                FROM w, UNNEST(generate_series(1,
                  GREATEST(LEN(words) - 7, 0))) AS t(p)),
          f AS (SELECT fp, MIN(source) AS first_src FROM g GROUP BY fp)
@@ -1601,19 +1583,12 @@ object TextOps {
          WHERE rk <= 40 ORDER BY word""",
 
     "t29_coverage_curve" ->
-      """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS ws
+      s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS ws
                     FROM documents),
          wf AS (SELECT doc_id, ws FROM w WHERE LEN(ws) >= 8),
          sg AS (SELECT DISTINCT
-                  CAST(CAST(list_reduce(list_transform(
-                    generate_series(1, 15),
-                    p -> strpos('0123456789abcdef', substring(
-                      md5('shard|' || CAST(doc_id AS VARCHAR)), p, 1)) - 1),
-                    (a, x) -> a * 16 + x) AS BIGINT) % 16 AS INT) AS shard,
-                  CAST(list_reduce(list_transform(generate_series(1, 15),
-                    p -> strpos('0123456789abcdef', substring(
-                      md5(array_to_string(ws[i:i+7], ' ')), p, 1)) - 1),
-                    (a, x) -> a * 16 + x) AS BIGINT) AS fp
+                  CAST(${md5Hash60Sql("'shard|' || CAST(doc_id AS VARCHAR)")} % 16 AS INT) AS shard,
+                  ${md5Hash60Sql("array_to_string(ws[i:i+7], ' ')")} AS fp
                 FROM wf, UNNEST(GENERATE_SERIES(1, LEN(ws) - 7)) AS t(i)),
          f AS (SELECT shard, fp,
                  MIN(shard) OVER (PARTITION BY fp) AS first_shard
@@ -1672,14 +1647,9 @@ object TextOps {
     // within-source rank by the portable 60-bit hash (Horner md5 parse,
     // t24's idiom with a 'split|' prefix); integer // thresholds
     "t43_stratified_split" ->
-      """WITH h AS (SELECT doc_id, source,
+      s"""WITH h AS (SELECT doc_id, source,
            CAST(LEN(string_split(TRIM(text), ' ')) AS BIGINT) AS toks,
-           CAST(list_reduce(
-             list_transform(generate_series(1, 15),
-               i -> strpos('0123456789abcdef',
-                      substring(md5('split|' || CAST(doc_id AS VARCHAR)),
-                        i, 1)) - 1),
-             (a, x) -> a * 16 + x) AS BIGINT) AS h
+           ${md5Hash60Sql("'split|' || CAST(doc_id AS VARCHAR)")} AS h
            FROM documents),
          r AS (SELECT *,
            ROW_NUMBER() OVER (PARTITION BY source ORDER BY h, doc_id)

@@ -112,8 +112,11 @@ final class GraftSinkWriter(
   }
 
   override def close(errorOrNull: Throwable): Unit = {
-    // flushSync: wait until every in-flight record is acked
+    // flushSync: wait until every in-flight record is acked. A
+    // collection-buffering transport must ship its buffer (and fire
+    // the acks) first, or the drain waits on acks only close() sends.
     if (window != null && errorOrNull == null) {
+      client.flushPending()
       if (!window.tryAcquire(conf.maxOutstandingRequests,
           conf.drainTimeout.toMillis, TimeUnit.MILLISECONDS))
         throw new IllegalStateException(

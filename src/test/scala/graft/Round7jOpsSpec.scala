@@ -299,10 +299,10 @@ class Round7jOpsSpec extends SparkSpec {
         r.getAs[Double]("siegel_slope")).toMap
     // the carrier keys on nk (round 13) — resolve names for the
     // comparison against q179's nation-string output
-    val names = graft.operators.Extended13.nationNames(spark, sf)
+    val names = graft.operators.OrderRevenue.nationNames(spark, sf)
       .collect()
       .map(r => r.getAs[Number](0).longValue -> r.getString(1)).toMap
-    val wk = graft.operators.Extended13
+    val wk = graft.operators.OrderRevenue
       .nationWeeklyRevenue(spark, sf).collect()
       .map(r => (names(r.getAs[Number](0).longValue),
         r.getLong(1), r.getLong(2)))

@@ -160,6 +160,28 @@ class TransportSpec extends SparkSpec {
     }
   }
 
+  test("batch sink over the wire: a partition holding fewer records " +
+      "than one PutRecords collection is flushed before the ack drain") {
+    withStub() { (stub, svc) =>
+      import spark.implicits._
+      val id = ShardServiceRegistry.register(svc)
+      val df = (1 to 30).map(n => (s"key-${n % 7}", s"row-$n")).toDF("k", "v")
+        .select(col("k").as("partitionKey"),
+          encode(col("v"), "UTF-8").as("data"))
+      // 30 rows < collectionMaxCount (500): without the flush, no
+      // request is ever sent and close() times out on the drain
+      graft.sinks.GraftKinesisSink.writeBatch(df,
+        HttpRecordClient.Factory(id),
+        graft.config.ProducerConf("wire",
+          drainTimeout = scala.concurrent.duration.Duration(3, "s")))
+      val landed = stub.store.listShards().flatMap(s =>
+        stub.store.read(s, ShardPos.Beginning, ShardPos(BigInt(2).pow(159),
+          Long.MaxValue)).toSeq)
+        .flatMap(_.subRecords.map(r => new String(r.data, UTF_8)))
+      assert(landed.sorted === (1 to 30).map(n => s"row-$n").sorted)
+    }
+  }
+
   test("PutRecords partial failure retries ONLY the failed entries") {
     withStub() { (stub, svc) =>
       val client = new HttpRecordClient(svc, collectionMaxCount = 5,
