@@ -15,7 +15,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2.
+    *
+    * Eager-build contract: calling an entry builds its DataFrame. For most
+    * queries that runs no Spark job beyond reading the input tables'
+    * schemas. The queries declared in `OperatorsSmokeSpec.eagerBuild` do
+    * run jobs while they are built: eager Materialize cuts, and counts
+    * that pick a plan (the media pair search takes its band width and
+    * broadcast choice from a count of the cut fingerprint frame). So even
+    * a plan-only consumer (`Explain`, plan lint, a dry run) executes data
+    * for them and can fail on bad input at build time. That spec fails
+    * whenever a query's build behaviour and the declared set disagree. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     operators.Relational.queries ++
       operators.CustomAgg.queries ++

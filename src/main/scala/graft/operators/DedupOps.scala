@@ -240,6 +240,24 @@ object DedupOps {
     (labels, iters)
   }
 
+  /** DuckDB twin of [[connectedComponents]]: the transitive closure of
+    * the undirected edge CTE `pairs` (doc_a, doc_b) — the declarative
+    * form of label propagation — and CTE `comp` (doc_id, cluster_rep =
+    * the component minimum; singletons point at themselves) over the
+    * node relation `nodes` (doc_id). Needs WITH RECURSIVE. */
+  private[operators] def componentCtes(pairs: String,
+      nodes: String): String =
+    s"""bidir AS (SELECT doc_a AS a, doc_b AS b FROM $pairs
+                 UNION SELECT doc_b, doc_a FROM $pairs),
+       reach(a, b) AS (SELECT a, b FROM bidir
+                       UNION
+                       SELECT r.a, e.b FROM reach r
+                       JOIN bidir e ON r.b = e.a),
+       rep AS (SELECT a AS doc_id, MIN(b) AS m FROM reach GROUP BY a),
+       comp AS (SELECT n.doc_id,
+                  COALESCE(LEAST(n.doc_id, r.m), n.doc_id) AS cluster_rep
+                FROM $nodes n LEFT JOIN rep r ON r.doc_id = n.doc_id)"""
+
   /** Eval-set n-gram decontamination, the reusable surface behind d08:
     * returns (idCol, n_shared) for every training document sharing at
     * least one word n-gram with the eval corpus — drop them with an
@@ -938,23 +956,8 @@ object DedupOps {
     // integer arithmetic in any engine, so unlike a seeded xxhash64 the
     // whole operator is DuckDB-oracle-checkable.
     "d05_simhash_pairs" -> ((s, d) => {
-      val fp = simhashFrame(s, d)
       // candidates: any of 4 15-bit bands equal; verified hamming <= 8
-      val banded = fp.select(col("doc_id"), col("simhash"),
-        explode(array((0 until 4).map(j =>
-          struct(lit(j).as("band"),
-            shiftright(col("simhash"), j * 15)
-              .bitwiseAND(lit(0x7FFFL)).as("bh"))): _*)).as("e"))
-        .select(col("doc_id"), col("simhash"), col("e.band"), col("e.bh"))
-      banded.select(col("doc_id").as("doc_a"), col("simhash").as("sim_a"),
-          col("band"), col("bh"))
-        .join(banded.select(col("doc_id").as("doc_b"),
-          col("simhash").as("sim_b"), col("band"), col("bh")),
-          Seq("band", "bh"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
-        .distinct()
+      simhashCandidates(simhashFrame(s, d))
         .filter(col("hamming") <= 8)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
@@ -986,42 +989,14 @@ object DedupOps {
       import s.implicits._
       val nH = 64
       val cfgs = Seq(8, 16, 32)
-      // one-pass codegen'd gram fps (Md5GramFps — bit-identical to the
-      // declarative conv(md5(...)) lambda); size(hs) > 0 <=> >= 3 words
-      val g = Materialize.LocalCheckpoint(Tables.documents(s, d)
-        .select(col("doc_id"), graft.functions.TextFunctions
-          .md5GramFps(col("text"), 3).as("hs"))
-        .filter(size(col("hs")) > 0)
-        .select(col("doc_id"), array_distinct(col("hs")).as("gs")))
-      val sig = g.select(col("doc_id"),
-        graft.functions.TextFunctions
-          .affineMinhashSignature(col("gs"), nH).as("sig"))
-      val bandStructs = cfgs.flatMap { b =>
-        val r = nH / b
-        (0 until b).map { j =>
-          val terms = (0 until r).map { k =>
-            s"(element_at(sig, ${j * r + k + 1}) * ${powMod(131071L, r - 1 - k)}L) % $P31"
-          }.mkString(" + ")
-          s"named_struct('bands', $b, 'band', $j, 'bh', ($terms) % $P31)"
-        }
-      }
-      val bands = sig
-        .select(col("doc_id"),
-          explode(expr(s"array(${bandStructs.mkString(", ")})")).as("e"))
-        .select(col("doc_id"), col("e.bands").as("bands"),
-          col("e.band").as("band"), col("e.bh").as("bh"))
-      val cand = bands
-        .select(col("bands"), col("band"), col("bh"), col("doc_id").as("doc_a"))
-        .join(bands.select(col("bands"), col("band"), col("bh"),
-          col("doc_id").as("doc_b")), Seq("bands", "band", "bh"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("bands"), col("doc_a"), col("doc_b")).distinct()
-      val posting = g.select(col("doc_id"), explode(col("gs")).as("fp"))
-      val sizes = g.select(col("doc_id"), size(col("gs")).as("sz"))
-      val truth = posting.select(col("doc_id").as("doc_a"), col("fp"))
-        .join(posting.select(col("doc_id").as("doc_b"), col("fp")), Seq("fp"))
-        .filter(col("doc_a") < col("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
+      val g = gramSets(s, d)
+      val bands = affineBands(affineSigs(g), cfgs.flatMap { b =>
+        (0 until b).map(j =>
+          s"named_struct('bands', $b, 'band', $j, 'bh', ${bandHash(j, nH / b)})")
+      }, Seq("bands", "band", "bh"))
+      val cand = bandCandidates(bands, Seq("bands"))
+      val sizes = gramSizes(g)
+      val truth = gramInter(g)
         .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sa")),
           "doc_a")
         .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sb")),
@@ -1066,10 +1041,7 @@ object DedupOps {
     // rollup (≤ 17 groups); the posting total rides a 1-row
     // broadcast.
     "d19_shingle_df_profile" -> ((s, d) => {
-      val df = Tables.documents(s, d)
-        .select(col("doc_id"), graft.functions.TextFunctions
-          .md5GramFps(col("text"), 3).as("hs"))
-        .filter(size(col("hs")) > 0)
+      val df = md5Grams(s, d, "doc_id", 3)
         .select(col("doc_id"), explode(array_distinct(col("hs")))
           .as("fp"))
         .groupBy(col("fp")).agg(count(lit(1)).as("df"))
@@ -1153,40 +1125,14 @@ object DedupOps {
     // join, signatures joined per candidate pair; the rollup is <= 10
     // buckets.
     "d23_minhash_error_profile" -> ((s, d) => {
-      val nH = 64
-      val g = Materialize.LocalCheckpoint(Tables.documents(s, d)
-        .select(col("doc_id"), graft.functions.TextFunctions
-          .md5GramFps(col("text"), 3).as("hs"))
-        .filter(size(col("hs")) > 0)
-        .select(col("doc_id"), array_distinct(col("hs")).as("gs")))
-      val sig = g.select(col("doc_id"),
-        graft.functions.TextFunctions
-          .affineMinhashSignature(col("gs"), nH).as("sig"))
-      val r = nH / 16
-      val bandStructs = (0 until 16).map { j =>
-        val terms = (0 until r).map { k =>
-          s"(element_at(sig, ${j * r + k + 1}) * ${powMod(131071L, r - 1 - k)}L) % $P31"
-        }.mkString(" + ")
-        s"named_struct('band', $j, 'bh', ($terms) % $P31)"
-      }
-      val bands = sig
-        .select(col("doc_id"),
-          explode(expr(s"array(${bandStructs.mkString(", ")})")).as("e"))
-        .select(col("doc_id"), col("e.band").as("band"), col("e.bh").as("bh"))
-      val cand = bands
-        .select(col("band"), col("bh"), col("doc_id").as("doc_a"))
-        .join(bands.select(col("band"), col("bh"),
-          col("doc_id").as("doc_b")), Seq("band", "bh"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct()
-      val posting = g.select(col("doc_id"), explode(col("gs")).as("fp"))
-      val sizes = g.select(col("doc_id"), size(col("gs")).as("sz"))
-      val inter = posting.select(col("doc_id").as("doc_a"), col("fp"))
-        .join(posting.select(col("doc_id").as("doc_b"), col("fp")), Seq("fp"))
-        .filter(col("doc_a") < col("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
-      val pairs = cand
-        .join(inter, Seq("doc_a", "doc_b"), "left")
+      val g = gramSets(s, d)
+      val sig = affineSigs(g)
+      val bands = affineBands(sig, (0 until 16).map(j =>
+        s"named_struct('band', $j, 'bh', ${bandHash(j, 4)})"),
+        Seq("band", "bh"))
+      val sizes = gramSizes(g)
+      val pairs = bandCandidates(bands, Nil)
+        .join(gramInter(g), Seq("doc_a", "doc_b"), "left")
         .withColumn("inter", coalesce(col("inter"), lit(0L)))
         .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sa")),
           "doc_a")
@@ -1221,9 +1167,10 @@ object DedupOps {
     // method, the one table a user reads to pick a near-dup method
     // for their corpus (d18 tunes minhash's bands; this compares
     // across families). Scale shape: each method's pair frame is the
-    // already-bucketed candidate join it ships with; the truth frame
-    // and count are tiny and broadcast; each method reduces to a
-    // 1-row aggregate before the 3-row union.
+    // already-bucketed candidate join it ships with; the truth join
+    // carries no broadcast hint (the verified pair set grows with the
+    // corpus) and AQE broadcasts it from its runtime size; each method
+    // reduces to a 1-row aggregate before the 3-row union.
     "d22_method_agreement" -> ((s, d) => {
       // the truth pair set is consumed by THREE method joins plus its
       // own count — cut it once so the d03 pipeline (the most
@@ -1238,7 +1185,7 @@ object DedupOps {
         "winnowing" -> queries("d21_winnow_pairs"))
       methods.map { case (name, fn) =>
         fn(s, d).select(col("doc_a"), col("doc_b"))
-          .join(broadcast(truth), Seq("doc_a", "doc_b"), "left")
+          .join(truth, Seq("doc_a", "doc_b"), "left")
           .agg(count(lit(1)).as("n_pairs"),
             sum(coalesce(col("hit"), lit(0))).cast("long").as("n_true"))
           .withColumn("method", lit(name))
@@ -1366,10 +1313,7 @@ object DedupOps {
       // the gram frame feeds the signature AND the exact-set branch
       // (sizes + the intersection self-join) — cut it so the md5 gram
       // hashing runs once, not once per consumer
-      val g = Materialize.LocalCheckpoint(Tables.documents(s, d)
-        .select(col("source"), graft.functions.TextFunctions
-          .md5GramFps(col("text"), 3).as("hs"))
-        .filter(size(col("hs")) > 0)
+      val g = Materialize.LocalCheckpoint(md5Grams(s, d, "source", 3)
         .select(col("source"),
           expr(s"transform(array_distinct(hs), x -> x % $P31)")
             .as("xs")))
@@ -1434,25 +1378,11 @@ object DedupOps {
           col("simhash").as("sa"))
         .join(fp.select(col("doc_id").as("doc_b"),
           col("simhash").as("sb")), col("doc_a") < col("doc_b"))
-        .select(bit_count(col("sa").bitwiseXOR(col("sb"))).as("h"))
-      val banded = fp.select(col("doc_id"), col("simhash"),
-        explode(array((0 until 4).map(j =>
-          struct(lit(j).as("band"),
-            shiftright(col("simhash"), j * 15)
-              .bitwiseAND(lit(0x7FFFL)).as("bh"))): _*)).as("e"))
-        .select(col("doc_id"), col("simhash"), col("e.band"), col("e.bh"))
-      val caught = banded.select(col("doc_id").as("doc_a"),
-          col("simhash").as("sa"), col("band"), col("bh"))
-        .join(banded.select(col("doc_id").as("doc_b"),
-          col("simhash").as("sb"), col("band"), col("bh")),
-          Seq("band", "bh"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          bit_count(col("sa").bitwiseXOR(col("sb"))).as("h"))
-        .distinct()
+        .select(bit_count(col("sa").bitwiseXOR(col("sb"))).as("hamming"))
+      val caught = simhashCandidates(fp)
       def perRadius(pairs: DataFrame, out: String) = pairs
-        .select(col("h"), explode(sequence(lit(0), lit(8))).as("r"))
-        .filter(col("h") <= col("r"))
+        .select(col("hamming"), explode(sequence(lit(0), lit(8))).as("r"))
+        .filter(col("hamming") <= col("r"))
         .groupBy(col("r")).agg(count(lit(1)).as(out))
       val radii = s.range(0, 9).select(col("id").cast("int").as("r"))
       radii
@@ -1485,10 +1415,7 @@ object DedupOps {
         // the gram frame feeds both the corpus census and the df
         // aggregate — cut it so the md5 gram hashing runs once per
         // width (2 longs per posting)
-        val g = Materialize.LocalCheckpoint(Tables.documents(s, d)
-          .select(col("doc_id"), graft.functions.TextFunctions
-            .md5GramFps(col("text"), w).as("hs"))
-          .filter(size(col("hs")) > 0)
+        val g = Materialize.LocalCheckpoint(md5Grams(s, d, "doc_id", w)
           .select(col("doc_id"),
             explode(array_distinct(col("hs"))).as("g")))
         val docs = g.agg(countDistinct(col("doc_id")).as("n_docs"),
@@ -1552,6 +1479,97 @@ object DedupOps {
       .agg(graft.functions.SimHashFunctions.simhash(col("h"))
         .as("simhash"))
 
+  /** (doc_a, doc_b, hamming) for every pair sharing one of the 4
+    * 15-bit bands of its simhash — the banded candidate join under d05
+    * and d28's radius sweep. The join exchanges (band, bh, id) integers
+    * only. */
+  private def simhashCandidates(fp: DataFrame): DataFrame = {
+    val banded = fp.select(col("doc_id"), col("simhash"),
+      explode(array((0 until 4).map(j =>
+        struct(lit(j).as("band"),
+          shiftright(col("simhash"), j * 15)
+            .bitwiseAND(lit(0x7FFFL)).as("bh"))): _*)).as("e"))
+      .select(col("doc_id"), col("simhash"), col("e.band"), col("e.bh"))
+    banded.select(col("doc_id").as("doc_a"), col("simhash").as("sim_a"),
+        col("band"), col("bh"))
+      .join(banded.select(col("doc_id").as("doc_b"),
+        col("simhash").as("sim_b"), col("band"), col("bh")),
+        Seq("band", "bh"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
+      .distinct()
+  }
+
+  /** (key, hs): each document's portable 60-bit md5 `w`-gram hashes
+    * (the codegen'd Md5GramFps — bit-identical to the declarative
+    * conv(md5(...)) lambda), keeping documents with at least `w` words.
+    * The gram stream under d18/d19/d23/d27/d29 and [[winnowFps]]. */
+  private def md5Grams(s: SparkSession, d: String, key: String,
+      w: Int): DataFrame =
+    Tables.documents(s, d)
+      .select(col(key), graft.functions.TextFunctions
+        .md5GramFps(col("text"), w).as("hs"))
+      .filter(size(col("hs")) > 0)
+
+  /** d18/d23's cut gram-set frame (doc_id, gs = distinct 3-gram
+    * hashes): the signature, posting and size branches all read it, so
+    * the gram hashing runs once per query. Eager build. */
+  private def gramSets(s: SparkSession, d: String): DataFrame =
+    Materialize.LocalCheckpoint(md5Grams(s, d, "doc_id", 3)
+      .select(col("doc_id"), array_distinct(col("hs")).as("gs")))
+
+  private def gramSizes(g: DataFrame): DataFrame =
+    g.select(col("doc_id"), size(col("gs")).as("sz"))
+
+  /** (doc_a, doc_b, inter): exact shared-gram counts of every pair with
+    * at least one common gram — the gram-keyed posting self-join. */
+  private def gramInter(g: DataFrame): DataFrame = {
+    val posting = g.select(col("doc_id"), explode(col("gs")).as("fp"))
+    posting.select(col("doc_id").as("doc_a"), col("fp"))
+      .join(posting.select(col("doc_id").as("doc_b"), col("fp")), Seq("fp"))
+      .filter(col("doc_a") < col("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
+  }
+
+  /** (doc_id, sig): the portable 64-slot affine MinHash signature of
+    * each gram set (the codegen'd AffineMinHashSignature). */
+  private def affineSigs(g: DataFrame): DataFrame =
+    g.select(col("doc_id"), graft.functions.TextFunctions
+      .affineMinhashSignature(col("gs"), 64).as("sig"))
+
+  /** Band hash of band `j` with `r` rows of signature column `sig`:
+    * the base-131071 Horner fold mod 2^31-1. */
+  private def bandHash(j: Int, r: Int): String = (0 until r).map { k =>
+    s"(element_at(sig, ${j * r + k + 1}) * ${powMod(131071L, r - 1 - k)}L) % $P31"
+  }.mkString("(", " + ", s") % $P31")
+
+  /** DuckDB twin of [[bandHash]] (1-based list index). */
+  private def bandHashSql(j: Int, r: Int): String = (0 until r).map { k =>
+    s"(sig[${j * r + k + 1}] * ${powMod(131071L, r - 1 - k)}) % $P31"
+  }.mkString("(", " + ", s") % $P31")
+
+  /** One row per (doc, band struct) of `sig`: each struct in `structs`
+    * exploded and flattened into `fields`. */
+  private def affineBands(sig: DataFrame, structs: Seq[String],
+      fields: Seq[String]): DataFrame =
+    sig.select(col("doc_id"),
+        explode(expr(s"array(${structs.mkString(", ")})")).as("e"))
+      .select(col("doc_id") +: fields.map(f => col(s"e.$f").as(f)): _*)
+
+  /** Distinct band-colliding pairs (scope..., doc_a, doc_b) of
+    * [[affineBands]] rows, colliding within each `scope` value. */
+  private def bandCandidates(bands: DataFrame,
+      scope: Seq[String]): DataFrame = {
+    val keys = scope ++ Seq("band", "bh")
+    bands.select(keys.map(col) :+ col("doc_id").as("doc_a"): _*)
+      .join(bands.select(keys.map(col) :+ col("doc_id").as("doc_b"): _*),
+        keys)
+      .filter(col("doc_a") < col("doc_b"))
+      .select(scope.map(col) ++ Seq(col("doc_a"), col("doc_b")): _*)
+      .distinct()
+  }
+
   /** Winnowing fingerprint frame (d20/d21): per document, the distinct
     * window-minima of the 60-bit-md5 trigram hash stream over a w=4
     * sliding window (short docs keep position 1's truncated window so
@@ -1563,10 +1581,7 @@ object DedupOps {
     * nothing). Returns (doc_id, n_grams, fps array).
     */
   private def winnowFps(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .select(col("doc_id"), graft.functions.TextFunctions
-        .md5GramFps(col("text"), 3).as("hs"))
-      .filter(size(col("hs")) > 0)
+    md5Grams(s, d, "doc_id", 3)
       .select(col("doc_id"),
         size(col("hs")).cast("long").as("n_grams"),
         expr("array_distinct(transform(" +
@@ -1600,24 +1615,35 @@ object DedupOps {
       s"list_min(list_transform(xs, x -> (${affineA(i)} * x + ${affineB(i)}) % $P31))")
       .mkString(", ")
     val d18BandStructs = Seq(8, 16, 32).flatMap { b =>
-      val r = 64 / b
-      (0 until b).map { j =>
-        val terms = (0 until r).map { k =>
-          s"(sig[${j * r + k + 1}] * ${powMod(131071L, r - 1 - k)}) % $P31"
-        }.mkString(" + ")
-        s"{'bands': $b, 'band': $j, 'bh': ($terms) % $P31}"
-      }
+      (0 until b).map(j =>
+        s"{'bands': $b, 'band': $j, 'bh': ${bandHashSql(j, 64 / b)}}")
     }.mkString(", ")
-    val d18Sql =
-      s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS ws
-                     FROM documents),
+    // DuckDB twin of [[md5Grams]] (3-grams, doc_id): CTE `gr` (doc_id,
+    // fp) of each document's distinct gram hashes
+    val gramCtes =
+      s"""w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS ws
+                FROM documents),
          wf AS (SELECT doc_id, ws FROM w WHERE LEN(ws) >= 3),
          gr AS (SELECT DISTINCT doc_id,
                   ${md5Hash60Sql("array_to_string(ws[i:i+2], ' ')")} AS fp
-                FROM wf, UNNEST(GENERATE_SERIES(1, LEN(ws) - 2)) AS t(i)),
+                FROM wf, UNNEST(GENERATE_SERIES(1, LEN(ws) - 2)) AS t(i))"""
+    // DuckDB twin of [[affineSigs]] over [[gramCtes]]: CTE `sigs`
+    val sigCtes =
+      s"""$gramCtes,
          xl AS (SELECT doc_id, list(fp % $P31) AS xs FROM gr
                 GROUP BY doc_id),
-         sigs AS (SELECT doc_id, [$d18SigTerms] AS sig FROM xl),
+         sigs AS (SELECT doc_id, [$d18SigTerms] AS sig FROM xl)"""
+    // DuckDB twin of [[gramSizes]] and [[gramInter]]: CTEs `sizes` and
+    // `ints` (doc_a, doc_b, i)
+    val interCtes =
+      """sizes AS (SELECT doc_id, COUNT(1) AS sz FROM gr GROUP BY doc_id),
+         ints AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                    COUNT(1) AS i
+                  FROM gr a JOIN gr b ON a.fp = b.fp
+                    AND a.doc_id < b.doc_id
+                  GROUP BY 1, 2)"""
+    val d18Sql =
+      s"""WITH $sigCtes,
          bnd AS (SELECT doc_id, u.bands AS bands, u.band AS band,
                    u.bh AS bh
                  FROM (SELECT doc_id, UNNEST([$d18BandStructs]) AS u
@@ -1627,12 +1653,7 @@ object DedupOps {
                   FROM bnd a JOIN bnd b ON a.bands = b.bands
                     AND a.band = b.band AND a.bh = b.bh
                     AND a.doc_id < b.doc_id),
-         sizes AS (SELECT doc_id, COUNT(1) AS sz FROM gr GROUP BY doc_id),
-         ints AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                    COUNT(1) AS i
-                  FROM gr a JOIN gr b ON a.fp = b.fp
-                    AND a.doc_id < b.doc_id
-                  GROUP BY 1, 2),
+         $interCtes,
          truth AS (SELECT doc_a, doc_b FROM ints
                    JOIN sizes sa ON sa.doc_id = doc_a
                    JOIN sizes sb ON sb.doc_id = doc_b
@@ -1658,17 +1679,48 @@ object DedupOps {
          FROM spine s LEFT JOIN stats st ON s.bands = st.bands
          CROSS JOIN nt
          ORDER BY s.bands"""
-    val pairCtes =
+    // CTE `w` (doc_id, words): each document's whitespace words
+    val wordsCte =
       """w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS words
-              FROM documents),
+              FROM documents)"""
+    // distinct word 3-gram shingles `sh` (doc_id, sh) and set `sizes`
+    val shingleCtes =
+      s"""$wordsCte,
          sh AS (SELECT DISTINCT doc_id,
                   words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS sh
                 FROM w, UNNEST(GENERATE_SERIES(1, LEN(words) - 2)) AS t(i)),
-         sizes AS (SELECT doc_id, COUNT(1) AS sz FROM sh GROUP BY doc_id),
+         sizes AS (SELECT doc_id, COUNT(1) AS sz FROM sh GROUP BY doc_id)"""
+    // t17's 16-word chunks `ch` (doc_id, ci, chunk)
+    val chunkCtes =
+      s"""$wordsCte,
+         ch AS (SELECT doc_id, i AS ci,
+                  array_to_string(words[(i*16 + 1):(i*16 + 16)], ' ')
+                    AS chunk
+                FROM w, UNNEST(generate_series(0, (LEN(words) - 1) // 16))
+                  AS t(i))"""
+    // each document's distinct word 8-grams `g` (doc_id, g)
+    val gram8Ctes =
+      s"""$wordsCte,
+         g AS (SELECT DISTINCT doc_id, array_to_string(words[i:i+7], ' ')
+                 AS g
+               FROM w, UNNEST(generate_series(1,
+                 GREATEST(LEN(words) - 7, 0))) AS t(i))"""
+    val pairCtes =
+      s"""$shingleCtes,
          pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                           COUNT(1) AS inter
                    FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
                    GROUP BY 1, 2)"""
+    // d07's near-dup clusters: pairs at Jaccard >= 0.8 (`qual`), closed
+    // by [[componentCtes]] over every document into CTE `comp`
+    val clusterCtes =
+      s"""$pairCtes,
+         qual AS (SELECT doc_a, doc_b FROM pairs
+                  JOIN sizes sa ON sa.doc_id = doc_a
+                  JOIN sizes sb ON sb.doc_id = doc_b
+                  WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter)
+                        >= 0.8),
+         ${componentCtes("qual", "documents")}"""
     val jaccardSql =
       s"""WITH $pairCtes
          SELECT doc_a, doc_b, inter,
@@ -1686,23 +1738,14 @@ object DedupOps {
       "d02_fingerprint_md5" ->
         "SELECT doc_id, MD5(text) AS fp FROM documents ORDER BY doc_id",
       "d08_decontamination" ->
-        """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS words
-                      FROM documents),
-           g AS (SELECT doc_id, array_to_string(words[i:i+7], ' ') AS g
-                 FROM w, UNNEST(generate_series(1,
-                   GREATEST(LEN(words) - 7, 0))) AS t(i)),
+        s"""WITH $gram8Ctes,
            ev AS (SELECT DISTINCT g FROM g WHERE doc_id % 7 = 0),
            tr AS (SELECT doc_id, g FROM g WHERE doc_id % 7 <> 0)
            SELECT tr.doc_id, COUNT(DISTINCT tr.g) AS n_shared
            FROM tr JOIN ev USING (g)
            GROUP BY tr.doc_id ORDER BY doc_id""",
       "d10_contamination_attribution" ->
-        """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS words
-                      FROM documents),
-           g AS (SELECT DISTINCT doc_id, array_to_string(words[i:i+7], ' ')
-                   AS g
-                 FROM w, UNNEST(generate_series(1,
-                   GREATEST(LEN(words) - 7, 0))) AS t(i)),
+        s"""WITH $gram8Ctes,
            ev AS (SELECT doc_id AS eval_doc_id, g FROM g
                   WHERE doc_id % 7 = 0),
            tr AS (SELECT doc_id, g FROM g WHERE doc_id % 7 <> 0)
@@ -1712,13 +1755,7 @@ object DedupOps {
       // same 16-word chunking arithmetic as t17; membership by chunk
       // text == membership by md5 (the fingerprint identity contract)
       "d11_boilerplate_strip" ->
-        """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS words
-                      FROM documents),
-           ch AS (SELECT doc_id, i AS ci,
-                    array_to_string(words[(i*16 + 1):(i*16 + 16)], ' ')
-                      AS chunk
-                  FROM w, UNNEST(generate_series(0, (LEN(words) - 1) // 16))
-                    AS t(i)),
+        s"""WITH $chunkCtes,
            b AS (SELECT chunk FROM ch GROUP BY chunk
                  HAVING COUNT(DISTINCT doc_id) >= 2)
            SELECT ch.doc_id, COUNT(1) AS n_chunks,
@@ -1733,13 +1770,7 @@ object DedupOps {
       // Grouping by chunk text == grouping by md5 (fingerprint identity
       // contract; the Spark side raises on collision).
       "d12_passage_dedup_keep_first" ->
-        """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS words
-                      FROM documents),
-           ch AS (SELECT doc_id, i AS ci,
-                    array_to_string(words[(i*16 + 1):(i*16 + 16)], ' ')
-                      AS chunk
-                  FROM w, UNNEST(generate_series(0, (LEN(words) - 1) // 16))
-                    AS t(i)),
+        s"""WITH $chunkCtes,
            r AS (SELECT doc_id, ci, chunk,
                    ROW_NUMBER() OVER (PARTITION BY chunk
                      ORDER BY doc_id, ci) AS rn
@@ -1756,12 +1787,7 @@ object DedupOps {
       // DIRECTIONAL pairs (doc_a <> doc_b, not <): containment divides
       // by the contained side's size only
       "d14_containment_pairs" ->
-        """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS words
-                      FROM documents),
-           sh AS (SELECT DISTINCT doc_id,
-                    words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS sh
-                  FROM w, UNNEST(GENERATE_SERIES(1, LEN(words) - 2)) AS t(i)),
-           sizes AS (SELECT doc_id, COUNT(1) AS sz FROM sh GROUP BY doc_id),
+        s"""WITH $shingleCtes,
            pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                             COUNT(1) AS inter
                      FROM sh a JOIN sh b
@@ -1775,12 +1801,7 @@ object DedupOps {
       // exact cross-split Jaccard — d09's LSH+verify equals it (recall
       // argument in nearDupeAgainst's scaladoc, verified empirically)
       "d09_neardup_against" ->
-        """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS words
-                      FROM documents),
-           sh AS (SELECT DISTINCT doc_id,
-                    words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS sh
-                  FROM w, UNNEST(GENERATE_SERIES(1, LEN(words) - 2)) AS t(i)),
-           sizes AS (SELECT doc_id, COUNT(1) AS sz FROM sh GROUP BY doc_id),
+        s"""WITH $shingleCtes,
            pairs AS (SELECT b.doc_id AS batch_id, a.doc_id AS dup_of,
                             COUNT(1) AS inter
                      FROM sh a JOIN sh b ON a.sh = b.sh
@@ -1797,43 +1818,12 @@ object DedupOps {
       // components via transitive closure (recursive CTE) + min over the
       // reachable set — the declarative twin of label propagation
       "d07_neardup_components" ->
-        s"""WITH RECURSIVE $pairCtes,
-           qual AS (SELECT doc_a, doc_b FROM pairs
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b
-                    WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter)
-                          >= 0.8),
-           bidir AS (SELECT doc_a AS a, doc_b AS b FROM qual
-                     UNION SELECT doc_b, doc_a FROM qual),
-           reach(a, b) AS (SELECT a, b FROM bidir
-                           UNION
-                           SELECT r.a, e.b FROM reach r
-                           JOIN bidir e ON r.b = e.a),
-           rep AS (SELECT a AS doc_id, MIN(b) AS m FROM reach GROUP BY a)
-           SELECT d.doc_id,
-                  COALESCE(LEAST(d.doc_id, r.m), d.doc_id) AS cluster_rep
-           FROM documents d LEFT JOIN rep r ON r.doc_id = d.doc_id
-           ORDER BY d.doc_id""",
+        s"""WITH RECURSIVE $clusterCtes
+           SELECT doc_id, cluster_rep FROM comp ORDER BY doc_id""",
       // d07's component closure + token counts; canonical = longest
       // member, ties by min doc_id (rn = 1 under that order)
       "d13_canonical_keep_longest" ->
-        s"""WITH RECURSIVE $pairCtes,
-           qual AS (SELECT doc_a, doc_b FROM pairs
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b
-                    WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter)
-                          >= 0.8),
-           bidir AS (SELECT doc_a AS a, doc_b AS b FROM qual
-                     UNION SELECT doc_b, doc_a FROM qual),
-           reach(a, b) AS (SELECT a, b FROM bidir
-                           UNION
-                           SELECT r.a, e.b FROM reach r
-                           JOIN bidir e ON r.b = e.a),
-           rep AS (SELECT a AS doc_id, MIN(b) AS m FROM reach GROUP BY a),
-           comp AS (SELECT d.doc_id,
-                      COALESCE(LEAST(d.doc_id, r.m), d.doc_id)
-                        AS cluster_rep
-                    FROM documents d LEFT JOIN rep r ON r.doc_id = d.doc_id),
+        s"""WITH RECURSIVE $clusterCtes,
            toks AS (SELECT doc_id,
                       CAST(LEN(string_split(TRIM(text), ' ')) AS BIGINT)
                         AS n_tokens
@@ -1849,23 +1839,7 @@ object DedupOps {
            FROM j WHERE rn = 1 ORDER BY cluster_rep""",
       // d07's component closure grouped twice: label -> size -> histogram
       "d16_cluster_size_histogram" ->
-        s"""WITH RECURSIVE $pairCtes,
-           qual AS (SELECT doc_a, doc_b FROM pairs
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b
-                    WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter)
-                          >= 0.8),
-           bidir AS (SELECT doc_a AS a, doc_b AS b FROM qual
-                     UNION SELECT doc_b, doc_a FROM qual),
-           reach(a, b) AS (SELECT a, b FROM bidir
-                           UNION
-                           SELECT r.a, e.b FROM reach r
-                           JOIN bidir e ON r.b = e.a),
-           rep AS (SELECT a AS doc_id, MIN(b) AS m FROM reach GROUP BY a),
-           comp AS (SELECT d.doc_id,
-                      COALESCE(LEAST(d.doc_id, r.m), d.doc_id)
-                        AS cluster_rep
-                    FROM documents d LEFT JOIN rep r ON r.doc_id = d.doc_id),
+        s"""WITH RECURSIVE $clusterCtes,
            cs AS (SELECT cluster_rep, COUNT(*) AS cluster_size
                   FROM comp GROUP BY 1)
            SELECT cluster_size, COUNT(*) AS n_clusters,
@@ -1876,26 +1850,12 @@ object DedupOps {
       // d07's component closure + source attribution of every
       // intra-cluster pair (transitive closure, a < b)
       "d17_dup_source_matrix" ->
-        s"""WITH RECURSIVE $pairCtes,
-           qual AS (SELECT doc_a, doc_b FROM pairs
-                    JOIN sizes sa ON sa.doc_id = doc_a
-                    JOIN sizes sb ON sb.doc_id = doc_b
-                    WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter)
-                          >= 0.8),
-           bidir AS (SELECT doc_a AS a, doc_b AS b FROM qual
-                     UNION SELECT doc_b, doc_a FROM qual),
-           reach(a, b) AS (SELECT a, b FROM bidir
-                           UNION
-                           SELECT r.a, e.b FROM reach r
-                           JOIN bidir e ON r.b = e.a),
-           rep AS (SELECT a AS doc_id, MIN(b) AS m FROM reach GROUP BY a),
-           comp AS (SELECT d.doc_id, d.source,
-                      COALESCE(LEAST(d.doc_id, r.m), d.doc_id)
-                        AS cluster_rep
-                    FROM documents d LEFT JOIN rep r ON r.doc_id = d.doc_id),
+        s"""WITH RECURSIVE $clusterCtes,
+           cs AS (SELECT c.doc_id, d.source, c.cluster_rep
+                  FROM comp c JOIN documents d USING (doc_id)),
            pr AS (SELECT LEAST(x.source, y.source) AS src_a,
                          GREATEST(x.source, y.source) AS src_b
-                  FROM comp x JOIN comp y
+                  FROM cs x JOIN cs y
                     ON x.cluster_rep = y.cluster_rep
                    AND x.doc_id < y.doc_id)
            SELECT src_a, src_b, COUNT(*) AS n_dup_pairs
@@ -1904,34 +1864,16 @@ object DedupOps {
       "d18_minhash_band_tuning" -> d18Sql,
 
       "d23_minhash_error_profile" -> {
-        val d23Bands = (0 until 16).map { j =>
-          val terms = (0 until 4).map { k =>
-            s"(sig[${j * 4 + k + 1}] * ${powMod(131071L, 4 - 1 - k)}) % $P31"
-          }.mkString(" + ")
-          s"{'band': $j, 'bh': ($terms) % $P31}"
-        }.mkString(", ")
-        s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS ws
-                       FROM documents),
-           wf AS (SELECT doc_id, ws FROM w WHERE LEN(ws) >= 3),
-           gr AS (SELECT DISTINCT doc_id,
-                    ${md5Hash60Sql("array_to_string(ws[i:i+2], ' ')")} AS fp
-                  FROM wf, UNNEST(GENERATE_SERIES(1, LEN(ws) - 2)) AS t(i)),
-           xl AS (SELECT doc_id, list(fp % $P31) AS xs FROM gr
-                  GROUP BY doc_id),
-           sigs AS (SELECT doc_id, [$d18SigTerms] AS sig FROM xl),
+        val d23Bands = (0 until 16).map(j =>
+          s"{'band': $j, 'bh': ${bandHashSql(j, 4)}}").mkString(", ")
+        s"""WITH $sigCtes,
            bnd AS (SELECT doc_id, u.band AS band, u.bh AS bh
                    FROM (SELECT doc_id, UNNEST([$d23Bands]) AS u
                          FROM sigs)),
            cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
                     FROM bnd a JOIN bnd b ON a.band = b.band
                       AND a.bh = b.bh AND a.doc_id < b.doc_id),
-           sizes AS (SELECT doc_id, COUNT(1) AS sz FROM gr
-                     GROUP BY doc_id),
-           ints AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                      COUNT(1) AS i
-                    FROM gr a JOIN gr b ON a.fp = b.fp
-                      AND a.doc_id < b.doc_id
-                    GROUP BY 1, 2),
+           $interCtes,
            pr AS (SELECT c.doc_a, c.doc_b, COALESCE(ints.i, 0) AS inter,
                     x.sz AS sa, y.sz AS sb, p.sig AS siga, q.sig AS sigb
                   FROM cand c
@@ -1960,12 +1902,7 @@ object DedupOps {
       },
 
       "d19_shingle_df_profile" ->
-        s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS ws
-                       FROM documents),
-           wf AS (SELECT doc_id, ws FROM w WHERE LEN(ws) >= 3),
-           gr AS (SELECT DISTINCT doc_id,
-                    ${md5Hash60Sql("array_to_string(ws[i:i+2], ' ')")} AS fp
-                  FROM wf, UNNEST(GENERATE_SERIES(1, LEN(ws) - 2)) AS t(i)),
+        s"""WITH $gramCtes,
            df AS (SELECT fp, COUNT(1) AS df FROM gr GROUP BY fp),
            tot AS (SELECT CAST(SUM(df) AS BIGINT) AS total_postings
                    FROM df)
@@ -2035,12 +1972,7 @@ object DedupOps {
 
       // d10's distinct per-doc grams, left-joined so zero-hit docs stay
       "d25_contamination_score" ->
-        """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS words
-                      FROM documents),
-           g AS (SELECT DISTINCT doc_id, array_to_string(words[i:i+7], ' ')
-                   AS g
-                 FROM w, UNNEST(generate_series(1,
-                   GREATEST(LEN(words) - 7, 0))) AS t(i)),
+        s"""WITH $gram8Ctes,
            ev AS (SELECT DISTINCT g FROM g WHERE doc_id % 7 = 0),
            tr AS (SELECT doc_id, g FROM g WHERE doc_id % 7 <> 0),
            sc AS (SELECT tr.doc_id, COUNT(1) AS n_grams,

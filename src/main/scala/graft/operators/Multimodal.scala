@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: opaque `binary` payloads with typed
@@ -59,21 +60,27 @@ object Multimodal {
         md.digest(out).map("%02x".format(_)).mkString)
     }
 
-    /** "Frame sampling" stub: one frame of up to 32 bytes every 64-byte
-      * stride — the one-record-to-many-frames generator shape of video
-      * frame extraction (each frame independently fingerprinted). */
-    def frames(m: MediaIn): Iterator[Frame] = {
-      val stride = 64
-      val flen = 32
-      Iterator.range(0, math.max(m.payload.length, 1), stride).zipWithIndex
+    /** The frame slicing every per-frame stub shares: (frame_idx,
+      * start, end) of one frame of up to 32 bytes every 64-byte stride
+      * — the one-record-to-many-frames generator shape of video frame
+      * extraction. An empty payload yields one empty frame. */
+    private def slices(m: MediaIn): Iterator[(Int, Int, Int)] =
+      Iterator.range(0, math.max(m.payload.length, 1), 64).zipWithIndex
         .map { case (off, idx) =>
-          val end = math.min(off + flen, m.payload.length)
-          val frame = java.util.Arrays.copyOfRange(m.payload, off, end)
-          val md = java.security.MessageDigest.getInstance("MD5")
-          Frame(m.doc_id, idx, frame.length,
-            md.digest(frame).map("%02x".format(_)).mkString)
+          (idx, off, math.min(off + 32, m.payload.length))
         }
-    }
+
+    private def slice(m: MediaIn, off: Int, end: Int): Array[Byte] =
+      java.util.Arrays.copyOfRange(m.payload, off, end)
+
+    /** "Frame sampling" stub: each [[slices]] frame independently
+      * fingerprinted. */
+    def frames(m: MediaIn): Iterator[Frame] =
+      slices(m).map { case (idx, off, end) =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+        Frame(m.doc_id, idx, end - off,
+          md.digest(slice(m, off, end)).map("%02x".format(_)).mkString)
+      }
 
     /** "Container header" stub: parses the leading 7 payload bytes as a
       * fixed fake header — width/height as 16-bit big-endian pairs, a
@@ -124,36 +131,26 @@ object Multimodal {
       MediaAHash(m.doc_id, h)
     }
 
-    /** Per-frame perceptual hash: m04's frame slicing (32 bytes every
-      * 64) with [[ahash]] computed over each slice — the per-frame
-      * fingerprint a scene-cut detector compares along the timeline. */
-    def frameHashes(m: MediaIn): Iterator[FrameHash] = {
-      val stride = 64
-      val flen = 32
-      Iterator.range(0, math.max(m.payload.length, 1), stride).zipWithIndex
-        .map { case (off, idx) =>
-          val end = math.min(off + flen, m.payload.length)
-          val slice = java.util.Arrays.copyOfRange(m.payload, off, end)
-          FrameHash(m.doc_id, idx, ahash(MediaIn(m.doc_id, slice)).ahash)
-        }
-    }
+    /** Per-frame perceptual hash: [[ahash]] over each [[slices]] frame
+      * — the per-frame fingerprint a scene-cut detector compares along
+      * the timeline. */
+    def frameHashes(m: MediaIn): Iterator[FrameHash] =
+      slices(m).map { case (idx, off, end) =>
+        FrameHash(m.doc_id, idx,
+          ahash(MediaIn(m.doc_id, slice(m, off, end))).ahash)
+      }
 
-    /** Per-frame "energy" stub: m04's frame slicing with the byte sum
-      * per slice — the RMS-energy shape a voice-activity detector
-      * windows over an audio timeline (exact integers, so the
-      * adaptive threshold compares cross-multiplied with no doubles). */
-    def frameEnergies(m: MediaIn): Iterator[FrameEnergy] = {
-      val stride = 64
-      val flen = 32
-      Iterator.range(0, math.max(m.payload.length, 1), stride).zipWithIndex
-        .map { case (off, idx) =>
-          val end = math.min(off + flen, m.payload.length)
-          var e = 0L
-          var i = off
-          while (i < end) { e += (m.payload(i) & 0xff); i += 1 }
-          FrameEnergy(m.doc_id, idx, end - off, e)
-        }
-    }
+    /** Per-frame "energy" stub: the byte sum of each [[slices]] frame —
+      * the RMS-energy shape a voice-activity detector windows over an
+      * audio timeline (exact integers, so the adaptive threshold
+      * compares cross-multiplied with no doubles). */
+    def frameEnergies(m: MediaIn): Iterator[FrameEnergy] =
+      slices(m).map { case (idx, off, end) =>
+        var e = 0L
+        var i = off
+        while (i < end) { e += (m.payload(i) & 0xff); i += 1 }
+        FrameEnergy(m.doc_id, idx, end - off, e)
+      }
 
     /** "Feature extraction" stub: byte-level statistics (mean/max/
       * cardinality) — the shape of embedding/feature computation. */
@@ -171,9 +168,52 @@ object Multimodal {
     }
   }
 
-  /** m07's verified near-dup pair frame: aHash fingerprints (exact
-    * integer block-mean thresholding, see MultimodalStub.ahash) +
-    * banded LSH candidates (4 x 15-bit bands) + hamming <= 12
+  /** (doc_id, payload): every document's UTF-8 bytes as one opaque
+    * media payload — the input of every typed media stage below. */
+  private def payloads(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
+
+  /** [[payloads]] with at least one byte: the media every fingerprint
+    * and per-frame timeline stage reads. */
+  private def media(s: SparkSession, d: String): DataFrame =
+    payloads(s, d).where(length(col("payload")) > 0)
+
+  /** [[payloads]] long enough to carry the 7-byte container header. */
+  private def headerable(s: SparkSession, d: String): DataFrame =
+    payloads(s, d).where(length(col("payload")) >= 7)
+
+  /** The typed header probe ([[MultimodalStub.header]]) over a
+    * [[headerable]] frame (m05/m12/m13/m18). */
+  private def headers(base: DataFrame): DataFrame = {
+    import base.sparkSession.implicits._
+    base.as[MediaIn].mapPartitions(_.map(MultimodalStub.header)).toDF()
+  }
+
+  /** The codec of a header-parseable `text` column: the column form of
+    * [[MultimodalStub.header]]'s codec byte (ASCII corpus, so char 5 is
+    * payload byte 4). */
+  private def codecOf(text: Column): Column =
+    element_at(array(MultimodalStub.codecNames.map(lit): _*),
+      (ascii(substring(text, 5, 1)) % 4) + 1)
+
+  /** DuckDB twin of [[codecOf]]; DuckDB lists are 1-indexed. */
+  private def codecSql(text: String): String =
+    MultimodalStub.codecNames.map(n => s"'$n'").mkString("[", ", ", "]") +
+      s"[ORD(SUBSTR($text, 5, 1)) % 4 + 1]"
+
+  /** Per-media aHash fingerprints (doc_id, ahash) — shared by the LSH
+    * pair search (m07/m10/m17), its recall evaluation (m11) and the band
+    * tuning audit (m19), so every report measures exactly the
+    * fingerprints the index banded. */
+  private def ahashFrame(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    media(s, d).as[MediaIn].mapPartitions(_.map(MultimodalStub.ahash)).toDF()
+  }
+
+  /** m07's verified near-dup pair frame (doc_a, doc_b, hamming): aHash
+    * fingerprints (exact integer block-mean thresholding, see
+    * MultimodalStub.ahash) + banded LSH candidates + hamming <= 12
     * verification — the "find visually-near-identical images across a
     * crawl" step, next to m06's exact content-hash dedup. Scale shape:
     * the hash is one map pass over the payload; the only shuffles key
@@ -181,20 +221,10 @@ object Multimodal {
     * rows of 16 bytes, never a payload. Verification runs BEFORE the
     * pair distinct: hamming is a function of the pair, so the result
     * is identical, but the dedup exchange then carries only true
-    * near-dups, not every band collision. */
-  /** Per-media aHash fingerprints (doc_id, ahash) — shared by the LSH
-    * pair search (m07/m10) and its recall evaluation (m11), so the
-    * eval measures exactly the fingerprints the index banded. */
-  private def ahashFrame(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, d)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-      .where(length(col("payload")) > 0)
-      .as[MediaIn]
-      .mapPartitions(_.map(MultimodalStub.ahash))
-      .toDF()
-  }
-
+    * near-dups, not every band collision.
+    *
+    * Eager build: the fingerprint cut and its count run while the
+    * DataFrame is built (see [[phashPairsFrom]]). */
   private def phashPairs(s: SparkSession, d: String): DataFrame = {
     val fp = Materialize.LocalCheckpoint(ahashFrame(s, d))
     phashPairsFrom(s, fp, fp.count())
@@ -214,11 +244,14 @@ object Multimodal {
     * strategy is chosen HERE, deterministically, from the actual media
     * count `nMedia` of `fp`, which the caller takes — counting an
     * eagerly-checkpointed frame is a local block scan, and n_media is
-    * exactly the scalar the count-adaptive banding already keys on. Banding stays COUNT-ADAPTIVE (the ScaleCurve
-    * lesson): 4 bands x 15 bits carries a random-collision candidate
-    * term ~ 4n²/2^15 that turns super-linear past n ≈ 32768 media
-    * items; above that the banding widens to 3 bands x 20 bits — one
-    * fewer collision chance (recall, which m11 measures) for a
+    * exactly the scalar the count-adaptive banding already keys on.
+    * That count is a Spark job at DataFrame-construction time, so every
+    * caller (m07/m10/m11/m17) is an eager-build query, declared in
+    * `OperatorsSmokeSpec.eagerBuild`. Banding stays COUNT-ADAPTIVE (the
+    * ScaleCurve lesson): 4 bands x 15 bits carries a random-collision
+    * candidate term ~ 4n²/2^15 that turns super-linear past n ≈ 32768
+    * media items; above that the banding widens to 3 bands x 20 bits —
+    * one fewer collision chance (recall, which m11 measures) for a
     * collision term that stays ~linear. The same knee decides the join:
     * at n <= 32768 the banded probe side (n·nb rows of 16 bytes,
     * <= ~3 MB framed) is explicitly broadcast; past it the join falls
@@ -248,13 +281,62 @@ object Multimodal {
       .distinct()
   }
 
+  /** Media near-dup clusters (doc_id, cluster_rep) over the
+    * [[phashPairs]] graph, with `nodes` (doc_id) as the vertex set. */
+  private def mediaClusters(s: SparkSession, d: String,
+      nodes: DataFrame): DataFrame =
+    DedupOps.connectedComponents(nodes,
+        phashPairs(s, d).select(col("doc_a"), col("doc_b")))._1
+      .select(col("doc_id"), col("lbl").as("cluster_rep"))
+
+  private val frameOrder =
+    Window.partitionBy(col("doc_id")).orderBy(col("frame_idx"))
+
+  /** m14/m20's per-frame timeline (doc_id, frame_idx, ahash, prev):
+    * per-frame aHash ([[MultimodalStub.frameHashes]]) next to the
+    * previous frame's (null on a medium's first frame). Hashing is a
+    * pure map over payload partitions; the lag window partitions by
+    * doc_id, so only (doc_id, idx, 8-byte hash) rows ever shuffle. */
+  private def frameTimeline(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    media(s, d).as[MediaIn]
+      .mapPartitions(_.flatMap(MultimodalStub.frameHashes)).toDF()
+      .withColumn("prev", lag(col("ahash"), 1).over(frameOrder))
+  }
+
+  /** 1 where a [[frameTimeline]] frame starts a new scene (a hamming
+    * jump > 8 from the previous frame), else 0. */
+  private val sceneCut: Column = when(col("prev").isNotNull &&
+    expr("bit_count(prev ^ ahash)") > 8, 1L).otherwise(0L)
+
+  /** Shard byte budget of the media training-shard layout (m08/m16). */
+  private val ShardBytes = 65536L
+
+  /** m08's byte-budget shard manifest (doc_id, codec, n_bytes,
+    * cum_bytes, shard_idx), shared with m16's balance audit: each header-parseable
+    * record lands in the [[ShardBytes]] shard its bytes START in, per
+    * codec stream, via [[Packing.twoPhasePrefixSum]] (no codec stream
+    * funnels through one task). Reads [[Tables.documentsNarrow]]: the
+    * per-row work is one octet_length, and the spread exchange costs
+    * more than the parallelism buys (measured 4.6 s vs 1.0 s at sf0.1).
+    * Eager build: the prefix sum cuts its block frame. */
+  private def shardManifest(s: SparkSession, d: String): DataFrame = {
+    val frame = Tables.documentsNarrow(s, d)
+      .filter(length(col("text")) >= 7) // header-parseable media (m05)
+      .select(col("doc_id"), codecOf(col("text")).as("codec"),
+        octet_length(encode(col("text"), "UTF-8")).cast("int")
+          .as("n_bytes"))
+    Packing.twoPhasePrefixSum(frame, "codec", "n_bytes")
+      .withColumnRenamed("cum", "cum_bytes")
+      .withColumn("shard_idx",
+        expr(s"(cum_bytes - n_bytes) div $ShardBytes"))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Binary ingest -> typed partition-mapped decode -> metadata table.
     "m01_multimodal_decode" -> ((s, d) => {
       import s.implicits._
-      Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .as[MediaIn]
+      payloads(s, d).as[MediaIn]
         .mapPartitions(_.map(MultimodalStub.decode))
         .toDF()
         .orderBy(col("doc_id"))
@@ -263,9 +345,7 @@ object Multimodal {
     // Stride-downsample "resize" stage over binary payloads.
     "m02_multimodal_resize" -> ((s, d) => {
       import s.implicits._
-      Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .as[MediaIn]
+      payloads(s, d).as[MediaIn]
         .mapPartitions(_.map(MultimodalStub.resize))
         .toDF()
         .orderBy(col("doc_id"))
@@ -274,9 +354,7 @@ object Multimodal {
     // Byte-statistics "feature extraction" stage.
     "m03_multimodal_features" -> ((s, d) => {
       import s.implicits._
-      Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .as[MediaIn]
+      payloads(s, d).as[MediaIn]
         .mapPartitions(_.map(MultimodalStub.features))
         .toDF()
         .orderBy(col("doc_id"))
@@ -285,14 +363,7 @@ object Multimodal {
     // Typed metadata-struct decode (fake container header) + a rollup
     // by codec — the "probe then aggregate by format" pipeline stage.
     "m05_multimodal_header" -> ((s, d) => {
-      import s.implicits._
-      val meta = Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .where(length(col("payload")) >= 7)
-        .as[MediaIn]
-        .mapPartitions(_.map(MultimodalStub.header))
-        .toDF()
-      meta.groupBy(col("codec"))
+      headers(headerable(s, d)).groupBy(col("codec"))
         .agg(count(lit(1)).as("n"),
           (sum(col("width")).cast("double") / count(lit(1)))
             .as("avg_width"),
@@ -315,13 +386,8 @@ object Multimodal {
     // fractions over small-integer byte counts is bit-exact (q50's
     // argument).
     "m12_codec_size_profile" -> ((s, d) => {
-      import s.implicits._
-      val base = Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .where(length(col("payload")) >= 7)
-      val meta = base.as[MediaIn]
-        .mapPartitions(_.map(MultimodalStub.header)).toDF()
-        .select(col("doc_id"), col("codec"))
+      val base = headerable(s, d)
+      val meta = headers(base).select(col("doc_id"), col("codec"))
       val sz = base.select(col("doc_id"),
         length(col("payload")).cast("long").as("n_bytes"))
       meta.join(sz, Seq("doc_id"))
@@ -347,14 +413,7 @@ object Multimodal {
     // mode (the engine default) that would fail the query rather than
     // wrap.
     "m13_resolution_profile" -> ((s, d) => {
-      import s.implicits._
-      val meta = Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .where(length(col("payload")) >= 7)
-        .as[MediaIn]
-        .mapPartitions(_.map(MultimodalStub.header))
-        .toDF()
-      meta
+      headers(headerable(s, d))
         .withColumn("orientation",
           when(col("width") > col("height"), "landscape")
             .when(col("width") < col("height"), "portrait")
@@ -380,9 +439,7 @@ object Multimodal {
     // shuffle moves 32-hex fingerprints, not payloads.
     "m06_multimodal_dedup" -> ((s, d) => {
       import s.implicits._
-      Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .as[MediaIn]
+      payloads(s, d).as[MediaIn]
         .mapPartitions(_.map(MultimodalStub.decode))
         .toDF()
         .groupBy(col("fp"))
@@ -446,24 +503,14 @@ object Multimodal {
     // medium reports its cluster representative (min doc_id;
     // singletons point at themselves) — the frame a keep-canonical
     // filter or a m08 manifest consumes.
-    "m10_media_neardup_components" -> ((s, d) => {
-      import s.implicits._
-      val nodes = Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .where(length(col("payload")) > 0)
-        .select(col("doc_id"))
-      val pairs = phashPairs(s, d).select(col("doc_a"), col("doc_b"))
-      DedupOps.connectedComponents(nodes, pairs)._1
-        .select(col("doc_id"), col("lbl").as("cluster_rep"))
-        .orderBy(col("doc_id"))
-    }),
+    "m10_media_neardup_components" -> ((s, d) =>
+      mediaClusters(s, d, media(s, d).select(col("doc_id")))
+        .orderBy(col("doc_id"))),
 
     // One-record-to-many-frames sampling stage (generator shape).
     "m04_multimodal_frames" -> ((s, d) => {
       import s.implicits._
-      Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .as[MediaIn]
+      payloads(s, d).as[MediaIn]
         .mapPartitions(_.flatMap(MultimodalStub.frames))
         .toDF()
         .orderBy(col("doc_id"), col("frame_idx"))
@@ -478,9 +525,7 @@ object Multimodal {
     // carries 32-hex fingerprints, never frame bytes.
     "m09_repeated_frames" -> ((s, d) => {
       import s.implicits._
-      Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .as[MediaIn]
+      payloads(s, d).as[MediaIn]
         .mapPartitions(_.flatMap(MultimodalStub.frames))
         .toDF()
         .groupBy(col("frame_fp"))
@@ -500,27 +545,11 @@ object Multimodal {
     // funnels through one task. The manifest is what a downstream
     // shard writer consumes; shard boundaries are deterministic
     // functions of (codec, doc order).
-    "m08_media_shard_manifest" -> ((s, d) => {
-      val shardBytes = 65536L
-      val codecs = array(MultimodalStub.codecNames.map(lit): _*)
-      // documentsNarrow: the per-row work here is one octet_length —
-      // the spread exchange costs more than the parallelism buys
-      // (measured 4.6 s vs 1.0 s at sf0.1)
-      val frame = Tables.documentsNarrow(s, d)
-        .filter(length(col("text")) >= 7) // header-parseable media (m05)
-        .select(col("doc_id"),
-          element_at(codecs,
-            (ascii(substring(col("text"), 5, 1)) % 4) + 1).as("codec"),
-          octet_length(encode(col("text"), "UTF-8")).cast("int")
-            .as("n_bytes"))
-      Packing.twoPhasePrefixSum(frame, "codec", "n_bytes")
-        .withColumn("cum_bytes", col("cum"))
-        .withColumn("shard_idx",
-          expr(s"(cum_bytes - n_bytes) div $shardBytes"))
+    "m08_media_shard_manifest" -> ((s, d) =>
+      shardManifest(s, d)
         .select(col("doc_id"), col("codec"), col("n_bytes"),
           col("cum_bytes"), col("shard_idx"))
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
 
     // SCENE-CUT detection: per-frame perceptual hashes (m04's slicing +
     // m07's exact-integer aHash) compared along each medium's timeline;
@@ -534,21 +563,9 @@ object Multimodal {
     // medium. Nothing wider than (doc_id, idx, 8-byte hash) ever
     // shuffles — frames stay where they were decoded.
     "m14_scene_cuts" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("frame_idx"))
-      Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .where(length(col("payload")) > 0)
-        .as[MediaIn]
-        .mapPartitions(_.flatMap(MultimodalStub.frameHashes))
-        .toDF()
-        .withColumn("prev", lag(col("ahash"), 1).over(w))
+      frameTimeline(s, d)
         .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_frames"),
-          sum(when(col("prev").isNotNull &&
-              expr("bit_count(prev ^ ahash)") > 8, 1L)
-            .otherwise(0L)).as("n_cuts"))
+        .agg(count(lit(1)).as("n_frames"), sum(sceneCut).as("n_cuts"))
         .select(col("doc_id"), col("n_frames"), col("n_cuts"),
           (col("n_cuts") + 1L).as("n_scenes"),
           (col("n_frames").cast("double")
@@ -570,20 +587,10 @@ object Multimodal {
     // one (doc, scene) rollup, a 3-value in-row k-explode, two tiny
     // per-k aggregates joined broadcast.
     "m20_sampler_coverage" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("frame_idx"))
-      val fr = Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .where(length(col("payload")) > 0)
-        .as[MediaIn]
-        .mapPartitions(_.flatMap(MultimodalStub.frameHashes))
-        .toDF()
-        .withColumn("prev", lag(col("ahash"), 1).over(w))
-        .withColumn("cut", when(col("prev").isNotNull &&
-          expr("bit_count(prev ^ ahash)") > 8, 1L).otherwise(0L))
-        .withColumn("scene", sum(col("cut")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val fr = frameTimeline(s, d)
+        .withColumn("cut", sceneCut)
+        .withColumn("scene", sum(col("cut")).over(frameOrder
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       val scenes = fr.groupBy(col("doc_id"), col("scene"))
         .agg(min(col("frame_idx")).cast("long").as("s0"),
           max(col("frame_idx")).cast("long").as("e0"),
@@ -636,11 +643,7 @@ object Multimodal {
     // doc. Emits one row per segment.
     "m21_voice_activity_segments" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val fr = Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .where(length(col("payload")) > 0)
-        .as[MediaIn]
+      val fr = media(s, d).as[MediaIn]
         .mapPartitions(_.flatMap(MultimodalStub.frameEnergies))
         .toDF()
       val tot = fr.groupBy(col("doc_id"))
@@ -649,10 +652,9 @@ object Multimodal {
       val voiced = fr.join(tot, Seq("doc_id"))
         .filter(col("energy") * col("tot_len") >
           col("tot_e") * col("flen").cast("long"))
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("frame_idx"))
       voiced
         .withColumn("grp", col("frame_idx").cast("long") -
-          row_number().over(w).cast("long"))
+          row_number().over(frameOrder).cast("long"))
         .groupBy(col("doc_id"), col("grp"))
         .agg(min(col("frame_idx")).cast("long").as("seg_start"),
           max(col("frame_idx")).cast("long").as("seg_end"),
@@ -679,10 +681,7 @@ object Multimodal {
     // (pair, diagonal), and every exchange row is five integers.
     "m15_clip_reuse" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val f = Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .as[MediaIn]
+      val f = payloads(s, d).as[MediaIn]
         .mapPartitions(_.map(MultimodalStub.frames).flatten)
         .toDF()
         .select(col("doc_id"), col("frame_idx").cast("long").as("idx"),
@@ -714,19 +713,7 @@ object Multimodal {
     // codec stream funnels through one task), then two tiny rollups
     // keyed by (codec, shard) and codec.
     "m16_shard_balance" -> ((s, d) => {
-      val shardBytes = 65536L
-      val codecs = array(MultimodalStub.codecNames.map(lit): _*)
-      val frame = Tables.documents(s, d)
-        .filter(length(col("text")) >= 7)
-        .select(col("doc_id"),
-          element_at(codecs,
-            (ascii(substring(col("text"), 5, 1)) % 4) + 1).as("codec"),
-          octet_length(encode(col("text"), "UTF-8")).cast("int")
-            .as("n_bytes"))
-      val manifest = Packing.twoPhasePrefixSum(frame, "codec", "n_bytes")
-        .withColumn("shard_idx",
-          expr(s"(cum - n_bytes) div $shardBytes"))
-      manifest.groupBy(col("codec"), col("shard_idx"))
+      shardManifest(s, d).groupBy(col("codec"), col("shard_idx"))
         .agg(count(lit(1)).as("n_items"),
           sum(col("n_bytes").cast("long")).as("bytes"))
         .groupBy(col("codec"))
@@ -757,17 +744,11 @@ object Multimodal {
           octet_length(encode(col("text"), "UTF-8")).cast("long")
             .as("n_bytes"))
         .where(col("n_bytes") > 0)
-      val codecs = array(MultimodalStub.codecNames.map(lit): _*)
       val meta = payload.select(col("doc_id"), col("n_bytes"),
-        when(length(col("text")) >= 7,
-          element_at(codecs,
-            (ascii(substring(col("text"), 5, 1)) % 4) + 1))
+        when(length(col("text")) >= 7, codecOf(col("text")))
           .otherwise(lit("unknown")).as("codec"))
-      val pairs = phashPairs(s, d).select(col("doc_a"), col("doc_b"))
-      val comp = DedupOps.connectedComponents(
-          payload.select(col("doc_id")), pairs)._1
-        .select(col("doc_id"), col("lbl").as("cluster_rep"))
-      val clusters = comp.join(meta, Seq("doc_id"))
+      val clusters = mediaClusters(s, d, payload.select(col("doc_id")))
+        .join(meta, Seq("doc_id"))
         .groupBy(col("cluster_rep"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_bytes")).as("bytes_total"),
@@ -801,13 +782,7 @@ object Multimodal {
     // on n — per-batch doc assignment at scale rides
     // Packing.orderedRank per bucket.
     "m18_aspect_bucket_pack" -> ((s, d) => {
-      import s.implicits._
-      val meta = Tables.documents(s, d)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .where(length(col("payload")) >= 7)
-        .as[MediaIn]
-        .mapPartitions(_.map(MultimodalStub.header))
-        .toDF()
+      val meta = headers(headerable(s, d))
       val bucketDefs = Seq(("square", 1, 1), ("landscape_4_3", 4, 3),
         ("portrait_3_4", 3, 4), ("wide_16_9", 16, 9),
         ("tall_9_16", 9, 16))
@@ -898,6 +873,127 @@ object Multimodal {
     })
   )
 
+  /** DuckDB twin of [[media]]: CTE `s` (doc_id, text, n = byte
+    * length) over non-empty payloads. The corpus is ASCII, so
+    * ORD(SUBSTR(text, i, 1)) is payload byte i - 1. */
+  private val MediaCte =
+    """s AS (SELECT doc_id, text,
+         CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS INT) AS n
+         FROM documents WHERE OCTET_LENGTH(CAST(text AS BLOB)) > 0)"""
+
+  /** DuckDB twin of [[ahashFrame]]: [[MediaCte]], then the identical
+    * integer block-mean arithmetic as MultimodalStub.ahash (exact
+    * cross-multiplication, no float means) into CTE `fp` (doc_id,
+    * ahash). */
+  private val AhashCtes =
+    s"""$MediaCte,
+       ch AS (SELECT doc_id, n, i, ORD(SUBSTR(text, i, 1)) AS v,
+                ((i-1)*60)//n AS b
+              FROM s, UNNEST(GENERATE_SERIES(1, n)) AS t(i)),
+       tot AS (SELECT doc_id, n, SUM(v) AS total FROM ch
+               GROUP BY doc_id, n),
+       blk AS (SELECT doc_id, b, SUM(v) AS bsum, COUNT(1) AS blen
+               FROM ch GROUP BY doc_id, b),
+       fp AS (SELECT blk.doc_id,
+                CAST(SUM(CASE WHEN bsum*tot.n > tot.total*blen
+                         THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT)
+                  AS ahash
+              FROM blk JOIN tot ON blk.doc_id = tot.doc_id
+              GROUP BY blk.doc_id)"""
+
+  /** DuckDB twin of [[phashPairs]]: [[AhashCtes]], the same
+    * count-adaptive banding, and CTE `cand` (doc_a, doc_b, hamming) of
+    * the band-colliding pairs at hamming <= 12. */
+  private val PairCtes =
+    s"""$AhashCtes,
+       bw AS (SELECT CASE WHEN COUNT(*) <= $BandKnee THEN 4 ELSE 3 END
+                  AS nb,
+                CASE WHEN COUNT(*) <= $BandKnee THEN 15 ELSE 20 END AS w
+              FROM fp),
+       banded AS (SELECT doc_id, ahash,
+                    (ahash >> (j*w)) & ((1::BIGINT << w) - 1) AS bh,
+                    j AS band
+                  FROM fp, bw, UNNEST(GENERATE_SERIES(0, nb - 1))
+                    AS t2(j)),
+       cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                  CAST(bit_count(xor(a.ahash, b.ahash)) AS INT)
+                    AS hamming
+                FROM banded a JOIN banded b
+                  ON a.band = b.band AND a.bh = b.bh
+                 AND a.doc_id < b.doc_id
+                 AND bit_count(xor(a.ahash, b.ahash)) <= 12)"""
+
+  /** DuckDB twin of [[mediaClusters]] over the [[PairCtes]] graph with
+    * `s` as the vertex set: CTE `comp` (doc_id, cluster_rep). Needs
+    * WITH RECURSIVE. */
+  private val ClusterCtes =
+    s"$PairCtes,\n       ${DedupOps.componentCtes("cand", "s")}"
+
+  /** DuckDB twin of the stub's frame slicing over [[MediaCte]]: CTE
+    * `fr` (doc_id, f = 1-based frame number, off = 1-based start,
+    * flen). */
+  private val FrameCtes =
+    s"""$MediaCte,
+       fr AS (SELECT doc_id, f, (f-1)*64 + 1 AS off,
+                LEAST(32, n - ((f-1)*64 + 1) + 1) AS flen
+              FROM s, UNNEST(GENERATE_SERIES(1, ((n-1)//64) + 1))
+                AS t(f))"""
+
+  /** DuckDB twin of [[frameTimeline]]: [[FrameCtes]], m07's integer
+    * aHash per frame, and CTE `lg` (doc_id, f, ahash, prev). */
+  private val TimelineCtes =
+    s"""$FrameCtes,
+       ch AS (SELECT fr.doc_id, fr.f, fr.flen,
+                ORD(SUBSTR(s.text, fr.off + i - 1, 1)) AS v,
+                ((i-1)*60)//fr.flen AS b
+              FROM fr JOIN s USING (doc_id),
+                UNNEST(GENERATE_SERIES(1, fr.flen)) AS t(i)),
+       tot AS (SELECT doc_id, f, flen, SUM(v) AS total FROM ch
+               GROUP BY 1, 2, 3),
+       blk AS (SELECT doc_id, f, b, SUM(v) AS bsum, COUNT(1) AS blen
+               FROM ch GROUP BY 1, 2, 3),
+       fp AS (SELECT blk.doc_id, blk.f,
+                CAST(SUM(CASE WHEN bsum*tot.flen > tot.total*blen
+                         THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT)
+                  AS ahash
+              FROM blk JOIN tot ON blk.doc_id = tot.doc_id
+                AND blk.f = tot.f
+              GROUP BY 1, 2),
+       lg AS (SELECT doc_id, f, ahash,
+                lag(ahash) OVER (PARTITION BY doc_id ORDER BY f) AS prev
+              FROM fp)"""
+
+  /** DuckDB twin of [[sceneCut]] over `lg`. */
+  private val SceneCutSql =
+    """CASE WHEN prev IS NOT NULL AND bit_count(xor(ahash, prev)) > 8
+              THEN 1 ELSE 0 END"""
+
+  /** DuckDB twin of [[headers]]: CTE `h` (doc_id, text, width, height,
+    * codec, duration_ms) over header-parseable rows — the same byte
+    * arithmetic over ASCII chars. */
+  private val HeaderCte =
+    s"""h AS (SELECT doc_id, text,
+         ORD(SUBSTR(text, 1, 1)) * 256 + ORD(SUBSTR(text, 2, 1)) AS width,
+         ORD(SUBSTR(text, 3, 1)) * 256 + ORD(SUBSTR(text, 4, 1)) AS height,
+         ${codecSql("text")} AS codec,
+         ORD(SUBSTR(text, 6, 1)) * 256 + ORD(SUBSTR(text, 7, 1))
+           AS duration_ms
+         FROM documents WHERE LENGTH(text) >= 7)"""
+
+  /** DuckDB twin of [[shardManifest]]: CTE `manifest` (doc_id, codec,
+    * n_bytes, cum_bytes, shard_idx) — one running sum per codec. */
+  private val ManifestCtes =
+    s"""m AS (SELECT doc_id, ${codecSql("text")} AS codec,
+         CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS INT) AS n_bytes
+         FROM documents WHERE LENGTH(text) >= 7),
+       manifest AS (SELECT doc_id, codec, n_bytes,
+           CAST(SUM(n_bytes) OVER w AS BIGINT) AS cum_bytes,
+           CAST((SUM(n_bytes) OVER w - n_bytes) // $ShardBytes AS BIGINT)
+             AS shard_idx
+         FROM m
+         WINDOW w AS (PARTITION BY codec ORDER BY doc_id
+                      ROWS UNBOUNDED PRECEDING))"""
+
   def oracleSql: Map[String, String] = Map(
     "m01_multimodal_decode" ->
       """WITH s AS (SELECT doc_id, text,
@@ -935,46 +1031,32 @@ object Multimodal {
                 CAST(COUNT(DISTINCT v) AS INT) AS n_distinct_bytes
          FROM b GROUP BY doc_id ORDER BY doc_id""",
 
-    // same byte arithmetic over ASCII chars; DuckDB lists are 1-indexed
     "m05_multimodal_header" ->
-      """WITH h AS (SELECT doc_id,
-           ORD(SUBSTR(text, 1, 1)) * 256 + ORD(SUBSTR(text, 2, 1)) AS width,
-           ORD(SUBSTR(text, 3, 1)) * 256 + ORD(SUBSTR(text, 4, 1)) AS height,
-           ['h264', 'vp9', 'av1', 'hevc'][ORD(SUBSTR(text, 5, 1)) % 4 + 1]
-             AS codec,
-           ORD(SUBSTR(text, 6, 1)) * 256 + ORD(SUBSTR(text, 7, 1))
-             AS duration_ms
-           FROM documents WHERE LENGTH(text) >= 7)
+      s"""WITH $HeaderCte
          SELECT codec, COUNT(1) AS n,
                 CAST(SUM(width) AS DOUBLE) / COUNT(1) AS avg_width,
                 CAST(SUM(height) AS DOUBLE) / COUNT(1) AS avg_height,
                 CAST(MAX(duration_ms) AS INT) AS max_duration_ms
          FROM h GROUP BY codec ORDER BY codec""",
 
-    // same codec derivation as m05 + blob byte length; quantile_cont
-    // over small integers mirrors Spark's percentile interpolation
+    // m05's header frame + blob byte length; quantile_cont over small
+    // integers mirrors Spark's percentile interpolation
     "m12_codec_size_profile" ->
-      """WITH h AS (SELECT doc_id,
-           ['h264', 'vp9', 'av1', 'hevc'][ORD(SUBSTR(text, 5, 1)) % 4 + 1]
-             AS codec,
+      s"""WITH $HeaderCte,
+         hb AS (SELECT codec,
            CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS BIGINT) AS n_bytes
-           FROM documents WHERE LENGTH(text) >= 7)
+           FROM h)
          SELECT codec, COUNT(1) AS n,
                 CAST(SUM(n_bytes) AS BIGINT) AS total_bytes,
                 quantile_cont(n_bytes, 0.25) AS p25,
                 quantile_cont(n_bytes, 0.5) AS med,
                 quantile_cont(n_bytes, 0.75) AS p75,
                 MAX(n_bytes) AS max_bytes
-         FROM h GROUP BY codec ORDER BY codec""",
+         FROM hb GROUP BY codec ORDER BY codec""",
 
-    // same header byte arithmetic as m05; px widened before multiply
+    // m05's header frame; px widened before multiply
     "m13_resolution_profile" ->
-      """WITH h AS (SELECT
-           ORD(SUBSTR(text, 1, 1)) * 256 + ORD(SUBSTR(text, 2, 1)) AS width,
-           ORD(SUBSTR(text, 3, 1)) * 256 + ORD(SUBSTR(text, 4, 1)) AS height,
-           ORD(SUBSTR(text, 6, 1)) * 256 + ORD(SUBSTR(text, 7, 1))
-             AS duration_ms
-           FROM documents WHERE LENGTH(text) >= 7),
+      s"""WITH $HeaderCte,
          b AS (SELECT *,
            CASE WHEN width > height THEN 'landscape'
                 WHEN width < height THEN 'portrait'
@@ -994,86 +1076,15 @@ object Multimodal {
          COUNT(1) AS n_copies
          FROM documents GROUP BY MD5(text) ORDER BY doc_id""",
 
-    // identical integer block-mean arithmetic as MultimodalStub.ahash
-    // (exact cross-multiplication — no float means), then the d05-style
-    // band + hamming idiom; ASCII text makes ORD(SUBSTR) == payload byte
     // m07's pair CTEs + recursive reachability (d07's oracle pattern)
     "m10_media_neardup_components" ->
-      """WITH RECURSIVE s AS (SELECT doc_id, text,
-           CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS INT) AS n
-           FROM documents WHERE OCTET_LENGTH(CAST(text AS BLOB)) > 0),
-         ch AS (SELECT doc_id, n, i, ORD(SUBSTR(text, i, 1)) AS v,
-                  ((i-1)*60)//n AS b
-                FROM s, UNNEST(GENERATE_SERIES(1, n)) AS t(i)),
-         tot AS (SELECT doc_id, n, SUM(v) AS total FROM ch
-                 GROUP BY doc_id, n),
-         blk AS (SELECT doc_id, b, SUM(v) AS bsum, COUNT(1) AS blen
-                 FROM ch GROUP BY doc_id, b),
-         fp AS (SELECT blk.doc_id,
-                  CAST(SUM(CASE WHEN bsum*tot.n > tot.total*blen
-                           THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT)
-                    AS ahash
-                FROM blk JOIN tot ON blk.doc_id = tot.doc_id
-                GROUP BY blk.doc_id),
-         bw AS (SELECT CASE WHEN COUNT(*) <= 32768 THEN 4 ELSE 3 END
-                    AS nb,
-                  CASE WHEN COUNT(*) <= 32768 THEN 15 ELSE 20 END AS w
-                FROM fp),
-         banded AS (SELECT doc_id, ahash,
-                      (ahash >> (j*w)) & ((1::BIGINT << w) - 1) AS bh,
-                      j AS band
-                    FROM fp, bw, UNNEST(GENERATE_SERIES(0, nb - 1))
-                      AS t2(j)),
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                  FROM banded a JOIN banded b
-                    ON a.band = b.band AND a.bh = b.bh
-                   AND a.doc_id < b.doc_id
-                   AND bit_count(xor(a.ahash, b.ahash)) <= 12),
-         bidir AS (SELECT doc_a AS a, doc_b AS b FROM cand
-                   UNION SELECT doc_b, doc_a FROM cand),
-         reach(a, b) AS (SELECT a, b FROM bidir
-                         UNION
-                         SELECT r.a, e.b FROM reach r
-                         JOIN bidir e ON r.b = e.a),
-         rep AS (SELECT a AS doc_id, MIN(b) AS m FROM reach GROUP BY a)
-         SELECT s.doc_id,
-                COALESCE(LEAST(s.doc_id, r.m), s.doc_id) AS cluster_rep
-         FROM s LEFT JOIN rep r ON r.doc_id = s.doc_id
-         ORDER BY s.doc_id""",
+      s"""WITH RECURSIVE $ClusterCtes
+         SELECT doc_id, cluster_rep FROM comp ORDER BY doc_id""",
 
-    // same fp/banded/cand chain as m07 plus the exhaustive-truth side;
-    // n_found cast to BIGINT (DuckDB SUM(int) is HUGEINT — q21 rule)
+    // m07's pair CTEs plus the exhaustive-truth side; n_found cast to
+    // BIGINT (DuckDB SUM(int) is HUGEINT — q21 rule)
     "m11_phash_recall" ->
-      """WITH s AS (SELECT doc_id, text,
-           CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS INT) AS n
-           FROM documents WHERE OCTET_LENGTH(CAST(text AS BLOB)) > 0),
-         ch AS (SELECT doc_id, n, i, ORD(SUBSTR(text, i, 1)) AS v,
-                  ((i-1)*60)//n AS b
-                FROM s, UNNEST(GENERATE_SERIES(1, n)) AS t(i)),
-         tot AS (SELECT doc_id, n, SUM(v) AS total FROM ch
-                 GROUP BY doc_id, n),
-         blk AS (SELECT doc_id, b, SUM(v) AS bsum, COUNT(1) AS blen
-                 FROM ch GROUP BY doc_id, b),
-         fp AS (SELECT blk.doc_id,
-                  CAST(SUM(CASE WHEN bsum*tot.n > tot.total*blen
-                           THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT)
-                    AS ahash
-                FROM blk JOIN tot ON blk.doc_id = tot.doc_id
-                GROUP BY blk.doc_id),
-         bw AS (SELECT CASE WHEN COUNT(*) <= 32768 THEN 4 ELSE 3 END
-                    AS nb,
-                  CASE WHEN COUNT(*) <= 32768 THEN 15 ELSE 20 END AS w
-                FROM fp),
-         banded AS (SELECT doc_id, ahash,
-                      (ahash >> (j*w)) & ((1::BIGINT << w) - 1) AS bh,
-                      j AS band
-                    FROM fp, bw, UNNEST(GENERATE_SERIES(0, nb - 1))
-                      AS t2(j)),
-         found AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                   FROM banded a JOIN banded b
-                     ON a.band = b.band AND a.bh = b.bh
-                    AND a.doc_id < b.doc_id
-                    AND bit_count(xor(a.ahash, b.ahash)) <= 12),
+      s"""WITH $PairCtes,
          truth AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                      CAST(bit_count(xor(a.ahash, b.ahash)) AS INT)
                        AS hamming
@@ -1088,44 +1099,13 @@ object Multimodal {
                 CAST(CAST(SUM(CASE WHEN f.doc_a IS NOT NULL
                          THEN 1 ELSE 0 END) AS BIGINT) AS DOUBLE)
                   / COUNT(*) AS recall
-         FROM truth t LEFT JOIN found f
+         FROM truth t LEFT JOIN cand f
            ON t.doc_a = f.doc_a AND t.doc_b = f.doc_b
          GROUP BY 1 ORDER BY 1""",
 
     "m07_multimodal_phash_neardup" ->
-      """WITH s AS (SELECT doc_id, text,
-           CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS INT) AS n
-           FROM documents WHERE OCTET_LENGTH(CAST(text AS BLOB)) > 0),
-         ch AS (SELECT doc_id, n, i, ORD(SUBSTR(text, i, 1)) AS v,
-                  ((i-1)*60)//n AS b
-                FROM s, UNNEST(GENERATE_SERIES(1, n)) AS t(i)),
-         tot AS (SELECT doc_id, n, SUM(v) AS total FROM ch
-                 GROUP BY doc_id, n),
-         blk AS (SELECT doc_id, b, SUM(v) AS bsum, COUNT(1) AS blen
-                 FROM ch GROUP BY doc_id, b),
-         fp AS (SELECT blk.doc_id,
-                  CAST(SUM(CASE WHEN bsum*tot.n > tot.total*blen
-                           THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT)
-                    AS ahash
-                FROM blk JOIN tot ON blk.doc_id = tot.doc_id
-                GROUP BY blk.doc_id),
-         bw AS (SELECT CASE WHEN COUNT(*) <= 32768 THEN 4 ELSE 3 END
-                    AS nb,
-                  CASE WHEN COUNT(*) <= 32768 THEN 15 ELSE 20 END AS w
-                FROM fp),
-         banded AS (SELECT doc_id, ahash,
-                      (ahash >> (j*w)) & ((1::BIGINT << w) - 1) AS bh,
-                      j AS band
-                    FROM fp, bw, UNNEST(GENERATE_SERIES(0, nb - 1))
-                      AS t2(j)),
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                    CAST(bit_count(xor(a.ahash, b.ahash)) AS INT)
-                      AS hamming
-                  FROM banded a JOIN banded b
-                    ON a.band = b.band AND a.bh = b.bh
-                   AND a.doc_id < b.doc_id)
-         SELECT doc_a, doc_b, hamming FROM cand
-         WHERE hamming <= 12 ORDER BY doc_a, doc_b""",
+      s"""WITH $PairCtes
+         SELECT doc_a, doc_b, hamming FROM cand ORDER BY doc_a, doc_b""",
 
     // documents.text is ASCII, so char-based SUBSTR == byte slicing
     "m04_multimodal_frames" ->
@@ -1150,54 +1130,17 @@ object Multimodal {
          ORDER BY frame_fp""",
 
     "m08_media_shard_manifest" ->
-      """WITH m AS (SELECT doc_id,
-           ['h264', 'vp9', 'av1', 'hevc'][ORD(SUBSTR(text, 5, 1)) % 4 + 1]
-             AS codec,
-           CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS INT) AS n_bytes
-           FROM documents WHERE LENGTH(text) >= 7)
-         SELECT doc_id, codec, n_bytes,
-           CAST(SUM(n_bytes) OVER w AS BIGINT) AS cum_bytes,
-           CAST((SUM(n_bytes) OVER w - n_bytes) // 65536 AS BIGINT)
-             AS shard_idx
-         FROM m
-         WINDOW w AS (PARTITION BY codec ORDER BY doc_id
-                      ROWS UNBOUNDED PRECEDING)
-         ORDER BY doc_id""",
+      s"""WITH $ManifestCtes
+         SELECT doc_id, codec, n_bytes, cum_bytes, shard_idx
+         FROM manifest ORDER BY doc_id""",
 
     // m04's frame slicing + m07's integer aHash, per frame, then a lag
     // compare along the timeline (1-based chars; ASCII corpus so byte
     // and char offsets coincide, the m04 contract).
     "m14_scene_cuts" ->
-      """WITH s AS (SELECT doc_id, text,
-             CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS INT) AS n
-           FROM documents WHERE OCTET_LENGTH(CAST(text AS BLOB)) > 0),
-         fr AS (SELECT doc_id, f, (f-1)*64 + 1 AS off,
-                  LEAST(32, n - ((f-1)*64 + 1) + 1) AS flen
-                FROM s, UNNEST(GENERATE_SERIES(1, ((n-1)//64) + 1))
-                  AS t(f)),
-         ch AS (SELECT fr.doc_id, fr.f, fr.flen,
-                  ORD(SUBSTR(s.text, fr.off + i - 1, 1)) AS v,
-                  ((i-1)*60)//fr.flen AS b
-                FROM fr JOIN s USING (doc_id),
-                  UNNEST(GENERATE_SERIES(1, fr.flen)) AS t(i)),
-         tot AS (SELECT doc_id, f, flen, SUM(v) AS total FROM ch
-                 GROUP BY 1, 2, 3),
-         blk AS (SELECT doc_id, f, b, SUM(v) AS bsum, COUNT(1) AS blen
-                 FROM ch GROUP BY 1, 2, 3),
-         fp AS (SELECT blk.doc_id, blk.f,
-                  CAST(SUM(CASE WHEN bsum*tot.flen > tot.total*blen
-                           THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT)
-                    AS ahash
-                FROM blk JOIN tot ON blk.doc_id = tot.doc_id
-                  AND blk.f = tot.f
-                GROUP BY 1, 2),
-         lg AS (SELECT doc_id, ahash,
-                  lag(ahash) OVER (PARTITION BY doc_id ORDER BY f) AS prev
-                FROM fp),
+      s"""WITH $TimelineCtes,
          agg AS (SELECT doc_id, COUNT(1) AS n_frames,
-                   CAST(SUM(CASE WHEN prev IS NOT NULL
-                            AND bit_count(xor(ahash, prev)) > 8
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_cuts
+                   CAST(SUM($SceneCutSql) AS BIGINT) AS n_cuts
                  FROM lg GROUP BY 1)
          SELECT doc_id, n_frames, n_cuts, n_cuts + 1 AS n_scenes,
            CAST(n_frames AS DOUBLE) / CAST(n_cuts + 1 AS DOUBLE)
@@ -1207,36 +1150,8 @@ object Multimodal {
     // m14's frame/ahash CTE chain, then pure integer scene algebra:
     // a scene [s0, e0] is represented at rate k iff e0//k >= (s0+k-1)//k
     "m20_sampler_coverage" ->
-      """WITH s AS (SELECT doc_id, text,
-             CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS INT) AS n
-           FROM documents WHERE OCTET_LENGTH(CAST(text AS BLOB)) > 0),
-         fr AS (SELECT doc_id, f, (f-1)*64 + 1 AS off,
-                  LEAST(32, n - ((f-1)*64 + 1) + 1) AS flen
-                FROM s, UNNEST(GENERATE_SERIES(1, ((n-1)//64) + 1))
-                  AS t(f)),
-         ch AS (SELECT fr.doc_id, fr.f, fr.flen,
-                  ORD(SUBSTR(s.text, fr.off + i - 1, 1)) AS v,
-                  ((i-1)*60)//fr.flen AS b
-                FROM fr JOIN s USING (doc_id),
-                  UNNEST(GENERATE_SERIES(1, fr.flen)) AS t(i)),
-         tot AS (SELECT doc_id, f, flen, SUM(v) AS total FROM ch
-                 GROUP BY 1, 2, 3),
-         blk AS (SELECT doc_id, f, b, SUM(v) AS bsum, COUNT(1) AS blen
-                 FROM ch GROUP BY 1, 2, 3),
-         fp AS (SELECT blk.doc_id, blk.f,
-                  CAST(SUM(CASE WHEN bsum*tot.flen > tot.total*blen
-                           THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT)
-                    AS ahash
-                FROM blk JOIN tot ON blk.doc_id = tot.doc_id
-                  AND blk.f = tot.f
-                GROUP BY 1, 2),
-         lg AS (SELECT doc_id, f, ahash,
-                  lag(ahash) OVER (PARTITION BY doc_id ORDER BY f) AS prev
-                FROM fp),
-         ct AS (SELECT doc_id, f - 1 AS idx0,
-                  CASE WHEN prev IS NOT NULL
-                       AND bit_count(xor(ahash, prev)) > 8
-                       THEN 1 ELSE 0 END AS cut
+      s"""WITH $TimelineCtes,
+         ct AS (SELECT doc_id, f - 1 AS idx0, $SceneCutSql AS cut
                 FROM lg),
          sc AS (SELECT doc_id, idx0,
                   SUM(cut) OVER (PARTITION BY doc_id ORDER BY idx0)
@@ -1280,13 +1195,7 @@ object Multimodal {
     // idiom); the adaptive threshold is the same cross-multiplied
     // integer compare, so segment membership is exact
     "m21_voice_activity_segments" ->
-      """WITH s AS (SELECT doc_id, text,
-             CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS INT) AS n
-           FROM documents WHERE OCTET_LENGTH(CAST(text AS BLOB)) > 0),
-         fr AS (SELECT doc_id, f, (f-1)*64 + 1 AS off,
-                  LEAST(32, n - ((f-1)*64 + 1) + 1) AS flen
-                FROM s, UNNEST(GENERATE_SERIES(1, ((n-1)//64) + 1))
-                  AS t(f)),
+      s"""WITH $FrameCtes,
          en AS (SELECT fr.doc_id, fr.f, fr.flen,
                   CAST(SUM(ORD(SUBSTR(s.text, fr.off + i - 1, 1)))
                     AS BIGINT) AS e
@@ -1334,17 +1243,7 @@ object Multimodal {
          ORDER BY doc_a, doc_b, start_a, start_b""",
 
     "m16_shard_balance" ->
-      """WITH m AS (SELECT doc_id,
-           ['h264', 'vp9', 'av1', 'hevc'][ORD(SUBSTR(text, 5, 1)) % 4 + 1]
-             AS codec,
-           CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS INT) AS n_bytes
-           FROM documents WHERE LENGTH(text) >= 7),
-         manifest AS (SELECT doc_id, codec, n_bytes,
-             CAST((SUM(n_bytes) OVER w - n_bytes) // 65536 AS BIGINT)
-               AS shard_idx
-           FROM m
-           WINDOW w AS (PARTITION BY codec ORDER BY doc_id
-                        ROWS UNBOUNDED PRECEDING)),
+      s"""WITH $ManifestCtes,
          per_shard AS (SELECT codec, shard_idx, COUNT(1) AS n_items,
              CAST(SUM(CAST(n_bytes AS BIGINT)) AS BIGINT) AS bytes
            FROM manifest GROUP BY 1, 2)
@@ -1360,53 +1259,12 @@ object Multimodal {
     // m10's component CTE chain + smallest-(bytes, doc_id) keeper per
     // cluster; sums cast to BIGINT (DuckDB HUGEINT — q21 rule)
     "m17_dedup_savings" ->
-      """WITH RECURSIVE s AS (SELECT doc_id, text,
-           CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS INT) AS n
-           FROM documents WHERE OCTET_LENGTH(CAST(text AS BLOB)) > 0),
-         ch AS (SELECT doc_id, n, i, ORD(SUBSTR(text, i, 1)) AS v,
-                  ((i-1)*60)//n AS b
-                FROM s, UNNEST(GENERATE_SERIES(1, n)) AS t(i)),
-         tot AS (SELECT doc_id, n, SUM(v) AS total FROM ch
-                 GROUP BY doc_id, n),
-         blk AS (SELECT doc_id, b, SUM(v) AS bsum, COUNT(1) AS blen
-                 FROM ch GROUP BY doc_id, b),
-         fp AS (SELECT blk.doc_id,
-                  CAST(SUM(CASE WHEN bsum*tot.n > tot.total*blen
-                           THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT)
-                    AS ahash
-                FROM blk JOIN tot ON blk.doc_id = tot.doc_id
-                GROUP BY blk.doc_id),
-         bw AS (SELECT CASE WHEN COUNT(*) <= 32768 THEN 4 ELSE 3 END
-                    AS nb,
-                  CASE WHEN COUNT(*) <= 32768 THEN 15 ELSE 20 END AS w
-                FROM fp),
-         banded AS (SELECT doc_id, ahash,
-                      (ahash >> (j*w)) & ((1::BIGINT << w) - 1) AS bh,
-                      j AS band
-                    FROM fp, bw, UNNEST(GENERATE_SERIES(0, nb - 1))
-                      AS t2(j)),
-         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                  FROM banded a JOIN banded b
-                    ON a.band = b.band AND a.bh = b.bh
-                   AND a.doc_id < b.doc_id
-                   AND bit_count(xor(a.ahash, b.ahash)) <= 12),
-         bidir AS (SELECT doc_a AS a, doc_b AS b FROM cand
-                   UNION SELECT doc_b, doc_a FROM cand),
-         reach(a, b) AS (SELECT a, b FROM bidir
-                         UNION
-                         SELECT r.a, e.b FROM reach r
-                         JOIN bidir e ON r.b = e.a),
-         rep AS (SELECT a AS doc_id, MIN(b) AS m FROM reach GROUP BY a),
-         comp AS (SELECT s.doc_id,
-                    COALESCE(LEAST(s.doc_id, r.m), s.doc_id)
-                      AS cluster_rep
-                  FROM s LEFT JOIN rep r ON r.doc_id = s.doc_id),
+      s"""WITH RECURSIVE $ClusterCtes,
          meta AS (SELECT doc_id,
                     CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS BIGINT)
                       AS n_bytes,
                     CASE WHEN LENGTH(text) >= 7
-                      THEN ['h264', 'vp9', 'av1', 'hevc']
-                             [ORD(SUBSTR(text, 5, 1)) % 4 + 1]
+                      THEN ${codecSql("text")}
                       ELSE 'unknown' END AS codec
                   FROM documents
                   WHERE OCTET_LENGTH(CAST(text AS BLOB)) > 0),
@@ -1428,15 +1286,10 @@ object Multimodal {
          FROM cl JOIN keep k USING (cluster_rep)
          GROUP BY 1 ORDER BY 1""",
 
-    // m05's header derivation + exact-rational nearest-bucket argmin
+    // m05's header frame + exact-rational nearest-bucket argmin
     // (cost key |w·bh − h·bw| · 144/bh; ties by bucket name)
     "m18_aspect_bucket_pack" ->
-      """WITH h AS (SELECT doc_id,
-           ORD(SUBSTR(text, 1, 1)) * 256 + ORD(SUBSTR(text, 2, 1))
-             AS width,
-           ORD(SUBSTR(text, 3, 1)) * 256 + ORD(SUBSTR(text, 4, 1))
-             AS height
-           FROM documents WHERE LENGTH(text) >= 7),
+      s"""WITH $HeaderCte,
          bk(bucket, bw, bh, mult) AS (VALUES
            ('square', 1, 1, 144), ('landscape_4_3', 4, 3, 48),
            ('portrait_3_4', 3, 4, 36), ('wide_16_9', 16, 9, 16),
@@ -1487,22 +1340,7 @@ object Multimodal {
            FROM ${nm}_cost CROSS JOIN ${nm}_found"""
       }
       val cfgs = Seq((4, 15), (3, 20), (2, 30))
-      s"""WITH s AS (SELECT doc_id, text,
-           CAST(OCTET_LENGTH(CAST(text AS BLOB)) AS INT) AS n
-           FROM documents WHERE OCTET_LENGTH(CAST(text AS BLOB)) > 0),
-         ch AS (SELECT doc_id, n, i, ORD(SUBSTR(text, i, 1)) AS v,
-                  ((i-1)*60)//n AS b
-                FROM s, UNNEST(GENERATE_SERIES(1, n)) AS t(i)),
-         tot AS (SELECT doc_id, n, SUM(v) AS total FROM ch
-                 GROUP BY doc_id, n),
-         blk AS (SELECT doc_id, b, SUM(v) AS bsum, COUNT(1) AS blen
-                 FROM ch GROUP BY doc_id, b),
-         fp AS (SELECT blk.doc_id,
-                  CAST(SUM(CASE WHEN bsum*tot.n > tot.total*blen
-                           THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT)
-                    AS ahash
-                FROM blk JOIN tot ON blk.doc_id = tot.doc_id
-                GROUP BY blk.doc_id),
+      s"""WITH $AhashCtes,
          truth AS (SELECT CAST(COUNT(1) AS BIGINT) AS n_truth
            FROM fp a JOIN fp b ON a.doc_id < b.doc_id
            WHERE bit_count(xor(a.ahash, b.ahash)) <= 12),

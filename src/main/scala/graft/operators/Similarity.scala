@@ -122,13 +122,17 @@ object Similarity {
     * trade (FAISS sizes nlist once at index design time). */
   private[operators] val CellCap = 4096L
 
-  /** The shared coarse centroid table: deterministic capped sample
-    * (vec_id % 50 == 0, at most [[CellCap]] centroids). */
-  private def coarseCents(s: SparkSession, d: String): DataFrame =
-    vecs(s, d)
-      .filter(col("vec_id") % 50 === 0 && col("vec_id") < lit(50L * CellCap))
+  /** Deterministic capped centroid sample of [[vecs]] rows `v`:
+    * vec_id % m == 0, at most [[CellCap]] centroids, as (cent_id, cv,
+    * cn). */
+  private def centroidSample(v: DataFrame, m: Int): DataFrame =
+    v.filter(col("vec_id") % m === 0 && col("vec_id") < lit(m * CellCap))
       .select(col("vec_id").as("cent_id"), col("v").as("cv"),
         col("nrm").as("cn"))
+
+  /** The shared coarse centroid table: the m = 50 [[centroidSample]]. */
+  private def coarseCents(s: SparkSession, d: String): DataFrame =
+    centroidSample(vecs(s, d), 50)
 
   /** Collapse an (id, vec, aux) centroid frame to ONE row holding the
     * id-ascending centroid array — the broadcast side of every
@@ -425,17 +429,7 @@ object Similarity {
     // here, per cell, before the index ever serves a query. The
     // ground-truth side is the O(n²) scan — sampled query set in
     // production.
-    "e14_pq_recall" -> ((s, d) => {
-      pqTop1(s, d)
-        .join(truthTop1(s, d), Seq("vec_id"))
-        .groupBy(col("cell"))
-        .agg(count(lit(1)).as("n_queries"),
-          sum(when(col("neighbor_id") === col("true_nb"), 1L)
-            .otherwise(0L)).as("n_recalled"))
-        .withColumn("recall",
-          col("n_recalled").cast("double") / col("n_queries"))
-        .orderBy(col("cell"))
-    }),
+    "e14_pq_recall" -> ((s, d) => recallByCell(s, d, pqTop1(s, d))),
 
     // Lloyd (k-means) refinement of the IVF coarse quantizer: the
     // deterministic % 50 sample is a STARTING point, not a trained
@@ -511,10 +505,12 @@ object Similarity {
     // (cos >= 0.35, same tau as e10) of the STANDING corpus. Scale
     // shape: both sides assign to cells via the shared centroidRanked
     // window (one corpus-keyed exchange — the price the whole ANN
-    // family pays once for its index); the batch side is small and
-    // BROADCASTS, so candidate verification is map-local over the
-    // corpus, and the remaining exchange is the per-batch-vector min,
-    // bounded by |batch|. Returns (batch_id, dup_of = smallest
+    // family pays once for its index); the cell join carries no
+    // broadcast hint — the batch here is a fixed fifth of the corpus,
+    // so a hint would grow with it — and AQE broadcasts whichever side
+    // its runtime size allows (both gate SFs do); the remaining
+    // exchange is the per-batch-vector min, bounded by |batch|.
+    // Returns (batch_id, dup_of = smallest
     // near-dup corpus vec_id, cos of that pair).
     "e12_semantic_dedup_against" -> ((s, d) => {
       val ranked = Materialize.LocalCheckpoint(
@@ -525,7 +521,7 @@ object Similarity {
       val batch = ranked.filter(col("vec_id") % 5 === 1)
         .select(col("vec_id").as("batch_id"), col("v").as("bv"),
           col("nrm").as("bn"), col("cent_id").as("cell"))
-      corpus.join(broadcast(batch), Seq("cell"))
+      corpus.join(batch, Seq("cell"))
         .withColumn("cos", dot(col("cv"), col("bv")) / (col("cn") * col("bn")))
         .filter(col("cos") >= 0.35)
         .groupBy(col("batch_id"))
@@ -592,16 +588,7 @@ object Similarity {
     // O(n²) scan — this operator is how you'd evaluate on a SAMPLED
     // query set (here the whole sf corpus stands in for the sample);
     // the per-cell report is a tiny broadcast-sized rollup.
-    "e07_ann_recall" -> ((s, d) => {
-      ivfTop1(s, d).join(truthTop1(s, d), Seq("vec_id"))
-        .groupBy(col("cell"))
-        .agg(count(lit(1)).as("n_queries"),
-          sum(when(col("neighbor_id") === col("true_nb"), 1L)
-            .otherwise(0L)).as("n_recalled"))
-        .withColumn("recall",
-          col("n_recalled").cast("double") / col("n_queries"))
-        .orderBy(col("cell"))
-    }),
+    "e07_ann_recall" -> ((s, d) => recallByCell(s, d, ivfTop1(s, d))),
 
     // ANN tuning curve: recall@k (k = 3) of the IVF index under an
     // nprobe sweep {1, 2, 4} against the exhaustive top-k ground
@@ -733,26 +720,13 @@ object Similarity {
     "e24_ivf_k_sweep" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val v = vecs(s, d)
-      val a = v.select(col("vec_id"), col("v").as("va"), col("nrm").as("na"))
-      val b = v.select(col("vec_id").as("neighbor_id"), col("v").as("vb"),
-        col("nrm").as("nb"))
-      val wT = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cos").desc, col("neighbor_id"))
       // the exhaustive truth scan feeds the total AND all three config
       // joins — cut it so the O(n²) pass runs once, not four times
-      val truth = Materialize.LocalCheckpoint(
-        a.join(b, col("vec_id") =!= col("neighbor_id"))
-          .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-          .withColumn("rk", row_number().over(wT)).filter(col("rk") === 1)
-          .select(col("vec_id"), col("neighbor_id")))
+      val truth = Materialize.LocalCheckpoint(truthTop1(s, d)
+        .select(col("vec_id"), col("true_nb").as("neighbor_id")))
       val tot = truth.agg(count(lit(1)).as("n_truth"))
       def config(m: Int): DataFrame = {
-        val cents = v
-          .filter(col("vec_id") % m === 0 &&
-            col("vec_id") < lit(m * CellCap))
-          .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-            col("nrm").as("cn"))
-        val cr = centsRow(cents, "cent_id", "cv", col("cn"))
+        val cr = centsRow(centroidSample(v, m), "cent_id", "cv", col("cn"))
         // assignment feeds the balance stats and BOTH sides of the
         // within-cell self-join — one cut per config, three consumers
         val assigned = Materialize.LocalCheckpoint(v.crossJoin(broadcast(cr))
@@ -1130,11 +1104,9 @@ object Similarity {
           explode(expr(s"sequence(0, ${m - 1})")).as("j"), col("v"))
         .withColumn("vs", expr(s"slice(v, j*$sub + 1, $sub)"))
         .select(col("vec_id"), col("j"), col("vs"))
-      val cb0 = v
-        .filter(col("vec_id") % 50 === 0 &&
-          col("vec_id") < lit(50L * CellCap))
-        .select(col("vec_id").as("cb_id"),
-          explode(expr(s"sequence(0, ${m - 1})")).as("j"), col("v"))
+      val cb0 = coarseCents(s, d)
+        .select(col("cent_id").as("cb_id"),
+          explode(expr(s"sequence(0, ${m - 1})")).as("j"), col("cv").as("v"))
         .withColumn("cs", expr(s"slice(v, j*$sub + 1, $sub)"))
         .select(col("cb_id"), col("j"), col("cs"))
       // per-subspace codeword argmin runs map-only (TopCentroids L2
@@ -1421,6 +1393,21 @@ object Similarity {
       .select(col("vec_id"), col("true_nb"))
   }
 
+  /** Per-cell recall@1 of an index's top-1 frame `found` (vec_id, cell,
+    * neighbor_id) against [[truthTop1]] — the e07 (IVF) and e14 (IVF-PQ)
+    * accept/reject gate. recall is one IEEE division of two exact
+    * integers per cell, so even the double is oracle-checkable. */
+  private def recallByCell(s: SparkSession, d: String,
+      found: DataFrame): DataFrame =
+    found.join(truthTop1(s, d), Seq("vec_id"))
+      .groupBy(col("cell"))
+      .agg(count(lit(1)).as("n_queries"),
+        sum(when(col("neighbor_id") === col("true_nb"), 1L)
+          .otherwise(0L)).as("n_recalled"))
+      .withColumn("recall",
+        col("n_recalled").cast("double") / col("n_queries"))
+      .orderBy(col("cell"))
+
   /** e13's IVF-PQ top-1 pipeline, the quantized sibling of [[ivfTop1]]:
     * per-subspace codebooks (8x8 dims) from the deterministic sample,
     * argmin codeword per (vector, subspace) against the broadcast
@@ -1439,10 +1426,9 @@ object Similarity {
     val assigned = Materialize.LocalCheckpoint(
       centroidRanked(s, d).filter(col("crk") === 1)
         .select(col("vec_id"), col("v"), col("cent_id").as("cell")))
-    val csub = vecs(s, d)
-      .filter(col("vec_id") % 50 === 0 && col("vec_id") < lit(50L * CellCap))
-      .select(col("vec_id").as("cb_id"),
-        explode(expr(s"sequence(0, ${m - 1})")).as("j"), col("v"))
+    val csub = coarseCents(s, d)
+      .select(col("cent_id").as("cb_id"),
+        explode(expr(s"sequence(0, ${m - 1})")).as("j"), col("cv").as("v"))
       .withColumn("cs", expr(s"slice(v, j*$sub + 1, $sub)"))
       .select(col("cb_id"), col("j"), col("cs"))
     val vsub = assigned
@@ -1548,7 +1534,7 @@ object Similarity {
   private def driftMeanSql(m: Int): String =
     s"""SELECT cell, list(mx ORDER BY i) AS v FROM (
          SELECT cell, i, ${Parity.davgSql("x")} AS mx
-         FROM (SELECT cell, i, v[i] AS x
+         FROM (SELECT cell, i, CAST(embedding AS DOUBLE[])[i] AS x
                FROM assigned, UNNEST(generate_series(1, ${EmbDims}))
                  AS t(i)
                WHERE vec_id % 2 = $m) e
@@ -1566,22 +1552,44 @@ object Similarity {
         SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]),
                               CAST(b.embedding AS DOUBLE[]))))"""
 
+  /** DuckDB twin of [[centroidRanked]] over the m-[[centroidSample]]:
+    * CTEs `cents<sfx>` (cent_id, embedding), `ranked<sfx>` (vec_id,
+    * embedding, label, cell, ccos, crk — every vector against every
+    * centroid by cosine, ties by cent_id) and `assigned<sfx>` (its
+    * crk = 1 rows, each vector's own cell). */
+  private def ivfCtes(m: Int, sfx: String): String =
+    s"""cents$sfx AS (SELECT vec_id AS cent_id, embedding
+         FROM embeddings WHERE vec_id % $m = 0 AND vec_id < ${m * CellCap}),
+       ranked$sfx AS (
+         SELECT a.vec_id, a.embedding, a.label, b.cent_id AS cell,
+                $cosExpr AS ccos,
+                ROW_NUMBER() OVER (PARTITION BY a.vec_id
+                  ORDER BY $cosExpr DESC, b.cent_id) AS crk
+         FROM embeddings a CROSS JOIN cents$sfx b),
+       assigned$sfx AS (SELECT * FROM ranked$sfx WHERE crk = 1)"""
+
+  /** DuckDB twin of [[truthTop1]]: CTE `truth` (vec_id, true_nb). */
+  private lazy val TruthCte: String =
+    s"""truth AS (
+         SELECT vec_id, true_nb FROM (
+           SELECT a.vec_id, b.vec_id AS true_nb,
+                  ROW_NUMBER() OVER (PARTITION BY a.vec_id
+                    ORDER BY $cosExpr DESC, b.vec_id) AS rank
+           FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id) t
+         WHERE rank = 1)"""
+
+  /** The coarse quantizer's [[ivfCtes]] (the [[coarseCents]] sample):
+    * `cents`, `ranked`, `assigned`. */
+  private lazy val IvfCtes: String = ivfCtes(50, "")
+
   /** Shared DuckDB CTE chain for the PQ oracles (e13/e14): centroid
     * assignment, per-subspace codebooks, encode (argmin codeword per
     * subspace), reconstruction (codewords concatenated in j order),
     * and the ADC top-1 frame `pq(vec_id, neighbor_id, adist)`. */
   private lazy val pqCtes: String =
-    s"""cents AS (SELECT vec_id AS cent_id, embedding
-                  FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-       assigned AS (
-         SELECT vec_id, embedding, cell FROM (
-           SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-                  ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                    ORDER BY $cosExpr DESC, b.cent_id) AS crk
-           FROM embeddings a CROSS JOIN cents b) t
-         WHERE crk = 1),
-       cb AS (SELECT vec_id AS cb_id, CAST(embedding AS DOUBLE[]) AS cbv
-              FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
+    s"""$IvfCtes,
+       cb AS (SELECT cent_id AS cb_id, CAST(embedding AS DOUBLE[]) AS cbv
+              FROM cents),
        csub AS (SELECT cb_id, j, cbv[(j*8 + 1):(j*8 + 8)] AS cs
                 FROM cb, UNNEST(generate_series(0, 7)) AS t(j)),
        vsub AS (SELECT a.vec_id, a.cell, j,
@@ -1622,16 +1630,10 @@ object Similarity {
     // identical centroid ranking to e03's CTE; crk 1 = own cell,
     // crk 2 = nearest other; means via decimal sums (davgSql)
     "e17_cell_silhouette" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         rk AS (
-           SELECT a.vec_id, b.cent_id, 1 - ($cosExpr) AS dist,
-                  ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                    ORDER BY ($cosExpr) DESC, b.cent_id) AS crk
-           FROM embeddings a CROSS JOIN cents b),
-         own AS (SELECT vec_id, cent_id AS cell, dist AS a
-                 FROM rk WHERE crk = 1),
-         nxt AS (SELECT vec_id, dist AS b FROM rk WHERE crk = 2)
+      s"""WITH $IvfCtes,
+         own AS (SELECT vec_id, cell, 1 - ccos AS a
+                 FROM ranked WHERE crk = 1),
+         nxt AS (SELECT vec_id, 1 - ccos AS b FROM ranked WHERE crk = 2)
          SELECT cell, COUNT(*) AS n,
                 ${Parity.davgSql("a")} AS mean_intra,
                 ${Parity.davgSql("(b - a) / GREATEST(a, b)")} AS mean_sil
@@ -1641,15 +1643,7 @@ object Similarity {
     // same assignment CTE as e03; sizes are exact integers, the two
     // ratios are single divisions with matched parenthesization
     "e18_cell_balance" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         assigned AS (
-           SELECT vec_id, cell FROM (
-             SELECT a.vec_id, b.cent_id AS cell,
-                    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY $cosExpr DESC, b.cent_id) AS crk
-             FROM embeddings a CROSS JOIN cents b) t
-           WHERE crk = 1),
+      s"""WITH $IvfCtes,
          sizes AS (SELECT cell, COUNT(*) AS sz FROM assigned GROUP BY 1)
          SELECT COUNT(*) AS n_cells,
                 CAST(SUM(sz) AS BIGINT) AS n_vecs,
@@ -1693,13 +1687,7 @@ object Similarity {
          WHERE rank <= 3 ORDER BY vec_id, rank""",
 
     "e06_ann_ivf_nprobe" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         ranked AS (
-           SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-                  ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                    ORDER BY $cosExpr DESC, b.cent_id) AS crk
-           FROM embeddings a CROSS JOIN cents b)
+      s"""WITH $IvfCtes
          SELECT vec_id, neighbor_id, cos FROM (
            SELECT a.vec_id, b.vec_id AS neighbor_id, $cosExpr AS cos,
                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
@@ -1712,13 +1700,7 @@ object Similarity {
          WHERE rk = 1 ORDER BY vec_id""",
 
     "e22_range_search" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         ranked AS (
-           SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-                  ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                    ORDER BY $cosExpr DESC, b.cent_id) AS crk
-           FROM embeddings a CROSS JOIN cents b)
+      s"""WITH $IvfCtes
          SELECT a.vec_id, b.vec_id AS neighbor_id, $cosExpr AS cos
          FROM (SELECT vec_id, embedding, cell FROM ranked
                WHERE crk <= 2 AND vec_id % 97 = 0) a
@@ -1729,15 +1711,7 @@ object Similarity {
          ORDER BY a.vec_id, b.vec_id""",
 
     "e03_ann_ivf" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         assigned AS (
-           SELECT vec_id, embedding, cell FROM (
-             SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-                    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY $cosExpr DESC, b.cent_id) AS crk
-             FROM embeddings a CROSS JOIN cents b) t
-           WHERE crk = 1)
+      s"""WITH $IvfCtes
          SELECT vec_id, cell, neighbor_id, cos FROM (
            SELECT a.vec_id, a.cell, b.vec_id AS neighbor_id, $cosExpr AS cos,
                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
@@ -1748,15 +1722,7 @@ object Similarity {
 
     // e03's top-1 frame rolled up per cell; mean via decimal sums
     "e20_nn_distance_profile" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         assigned AS (
-           SELECT vec_id, embedding, cell FROM (
-             SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-                    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY $cosExpr DESC, b.cent_id) AS crk
-             FROM embeddings a CROSS JOIN cents b) t
-           WHERE crk = 1),
+      s"""WITH $IvfCtes,
          nn AS (SELECT vec_id, cell, cos FROM (
            SELECT a.vec_id, a.cell, $cosExpr AS cos,
                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
@@ -1795,13 +1761,7 @@ object Similarity {
 
     "e14_pq_recall" ->
       s"""WITH $pqCtes,
-         truth AS (
-           SELECT vec_id, true_nb FROM (
-             SELECT a.vec_id, b.vec_id AS true_nb,
-                    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY $cosExpr DESC, b.vec_id) AS rank
-             FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id) t
-           WHERE rank = 1)
+         $TruthCte
          SELECT s.cell, COUNT(1) AS n_queries,
            CAST(SUM(CASE WHEN pq.neighbor_id = truth.true_nb
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_recalled,
@@ -1814,16 +1774,7 @@ object Similarity {
     // same cosine cell assignment as the ANN family; per-side DECIMAL
     // means (identical to the Spark side), cosine of the mean vectors
     "e16_embedding_drift" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         assigned AS (
-           SELECT vec_id, v, cell FROM (
-             SELECT a.vec_id, CAST(a.embedding AS DOUBLE[]) AS v,
-                    b.cent_id AS cell,
-                    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY $cosExpr DESC, b.cent_id) AS crk
-             FROM embeddings a CROSS JOIN cents b) t
-           WHERE crk = 1),
+      s"""WITH $IvfCtes,
          ma AS (${driftMeanSql(0)}),
          mb AS (${driftMeanSql(1)}),
          na AS (SELECT cell, COUNT(1) AS n_a FROM assigned
@@ -1839,15 +1790,7 @@ object Similarity {
          ORDER BY cell""",
 
     "e12_semantic_dedup_against" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         assigned AS (
-           SELECT vec_id, embedding, cell FROM (
-             SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-                    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY $cosExpr DESC, b.cent_id) AS crk
-             FROM embeddings a CROSS JOIN cents b) t
-           WHERE crk = 1),
+      s"""WITH $IvfCtes,
          p AS (SELECT b.vec_id AS batch_id, a.vec_id AS dup_of,
                  $cosExpr AS cos
                FROM assigned a JOIN assigned b
@@ -1889,42 +1832,20 @@ object Similarity {
          GROUP BY e.label ORDER BY e.label""",
 
     "e10_semantic_dedup" ->
-      s"""WITH RECURSIVE cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         assigned AS (
-           SELECT vec_id, embedding, cell FROM (
-             SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-                    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY $cosExpr DESC, b.cent_id) AS crk
-             FROM embeddings a CROSS JOIN cents b) t
-           WHERE crk = 1),
-         p AS (SELECT a.vec_id AS va, b.vec_id AS vb
+      s"""WITH RECURSIVE $IvfCtes,
+         p AS (SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
                FROM assigned a JOIN assigned b
                  ON a.cell = b.cell AND a.vec_id < b.vec_id
                WHERE $cosExpr >= 0.35),
-         bidir AS (SELECT va AS a, vb AS b FROM p
-                   UNION SELECT vb, va FROM p),
-         reach(a, b) AS (SELECT a, b FROM bidir
-                         UNION
-                         SELECT r.a, e.b FROM reach r
-                         JOIN bidir e ON r.b = e.a),
-         rep AS (SELECT a AS vec_id, MIN(b) AS m FROM reach GROUP BY a)
-         SELECT s.vec_id, s.cell,
-           COALESCE(LEAST(s.vec_id, r.m), s.vec_id) AS rep_id,
-           COALESCE(LEAST(s.vec_id, r.m), s.vec_id) = s.vec_id AS is_kept
-         FROM assigned s LEFT JOIN rep r USING (vec_id)
+         ${DedupOps.componentCtes("p",
+           "(SELECT vec_id AS doc_id FROM assigned)")}
+         SELECT s.vec_id, s.cell, c.cluster_rep AS rep_id,
+           c.cluster_rep = s.vec_id AS is_kept
+         FROM assigned s JOIN comp c ON c.doc_id = s.vec_id
          ORDER BY s.vec_id""",
 
     "e07_ann_recall" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         assigned AS (
-           SELECT vec_id, embedding, cell FROM (
-             SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-                    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY $cosExpr DESC, b.cent_id) AS crk
-             FROM embeddings a CROSS JOIN cents b) t
-           WHERE crk = 1),
+      s"""WITH $IvfCtes,
          ivf AS (
            SELECT vec_id, cell, neighbor_id FROM (
              SELECT a.vec_id, a.cell, b.vec_id AS neighbor_id,
@@ -1933,13 +1854,7 @@ object Similarity {
              FROM assigned a JOIN assigned b
                ON a.cell = b.cell AND a.vec_id <> b.vec_id) t
            WHERE rk = 1),
-         truth AS (
-           SELECT vec_id, true_nb FROM (
-             SELECT a.vec_id, b.vec_id AS true_nb,
-                    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY $cosExpr DESC, b.vec_id) AS rank
-             FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id) t
-           WHERE rank = 1)
+         $TruthCte
          SELECT ivf.cell, COUNT(1) AS n_queries,
            CAST(SUM(CASE WHEN ivf.neighbor_id = truth.true_nb
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_recalled,
@@ -1949,13 +1864,7 @@ object Similarity {
          GROUP BY ivf.cell ORDER BY ivf.cell""",
 
     "e08_ann_recall_sweep" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         ranked AS (
-           SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-                  ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                    ORDER BY $cosExpr DESC, b.cent_id) AS crk
-           FROM embeddings a CROSS JOIN cents b),
+      s"""WITH $IvfCtes,
          cand AS (
            SELECT a.vec_id, b.vec_id AS neighbor_id, $cosExpr AS cos, a.crk
            FROM (SELECT vec_id, embedding, cell, crk FROM ranked
@@ -1989,15 +1898,7 @@ object Similarity {
          ORDER BY nprobe""",
 
     "e09_ann_ivf_sq8" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         assigned AS (
-           SELECT vec_id, embedding, cell FROM (
-             SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-                    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY $cosExpr DESC, b.cent_id) AS crk
-             FROM embeddings a CROSS JOIN cents b) t
-           WHERE crk = 1),
+      s"""WITH $IvfCtes,
          prep AS (
            SELECT vec_id, cell, embedding,
              list_max(list_transform(CAST(embedding AS DOUBLE[]),
@@ -2030,25 +1931,20 @@ object Similarity {
 
     "e24_ivf_k_sweep" -> {
       def cfg(m: Int): String =
-        s"""cents$m AS (SELECT vec_id AS cent_id, embedding
-             FROM embeddings WHERE vec_id % $m = 0 AND vec_id < $m*4096),
-           asg$m AS (SELECT vec_id, embedding, cell FROM (
-               SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-                 ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                   ORDER BY $cosExpr DESC, b.cent_id) AS crk
-               FROM embeddings a CROSS JOIN cents$m b) t WHERE crk = 1),
+        s"""${ivfCtes(m, m.toString)},
            st$m AS (SELECT COUNT(1) AS n_cells,
                CAST(SUM(sz) AS BIGINT) AS n_vecs, MAX(sz) AS max_sz
-             FROM (SELECT cell, COUNT(1) AS sz FROM asg$m GROUP BY 1) z),
+             FROM (SELECT cell, COUNT(1) AS sz FROM assigned$m GROUP BY 1) z),
            fnd$m AS (SELECT vec_id, neighbor_id FROM (
                SELECT a.vec_id, b.vec_id AS neighbor_id,
                  ROW_NUMBER() OVER (PARTITION BY a.vec_id
                    ORDER BY $cosExpr DESC, b.vec_id) AS rk
-               FROM asg$m a JOIN asg$m b
+               FROM assigned$m a JOIN assigned$m b
                  ON a.cell = b.cell AND a.vec_id <> b.vec_id) t
              WHERE rk = 1),
-           rec$m AS (SELECT COUNT(1) AS n_recalled FROM fnd$m
-                     JOIN truth USING (vec_id, neighbor_id))"""
+           rec$m AS (SELECT COUNT(1) AS n_recalled FROM fnd$m f
+                     JOIN truth t ON f.vec_id = t.vec_id
+                      AND f.neighbor_id = t.true_nb)"""
       def row(m: Int): String =
         s"""SELECT $m AS sample_mod, st.n_cells,
            CAST(st.max_sz AS DOUBLE) * CAST(st.n_cells AS DOUBLE)
@@ -2059,12 +1955,7 @@ object Similarity {
            CAST(rec.n_recalled AS DOUBLE) / CAST(tot.n_truth AS DOUBLE)
              AS recall_at_1
            FROM st$m st, rec$m rec, tot"""
-      s"""WITH truth AS (SELECT vec_id, neighbor_id FROM (
-             SELECT a.vec_id, b.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                 ORDER BY $cosExpr DESC, b.vec_id) AS rk
-             FROM embeddings a JOIN embeddings b
-               ON a.vec_id <> b.vec_id) t WHERE rk = 1),
+      s"""WITH $TruthCte,
          tot AS (SELECT COUNT(1) AS n_truth FROM truth),
          ${Seq(25, 50, 100).map(cfg).mkString(",\n")}
          ${Seq(25, 50, 100).map(row).mkString("\nUNION ALL\n")}
@@ -2072,15 +1963,7 @@ object Similarity {
     },
 
     "e25_cell_medoid" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         assigned AS (
-           SELECT vec_id, embedding, cell FROM (
-             SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-                    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY $cosExpr DESC, b.cent_id) AS crk
-             FROM embeddings a CROSS JOIN cents b) t
-           WHERE crk = 1),
+      s"""WITH $IvfCtes,
          sc AS (SELECT a.cell, a.vec_id, COUNT(1) AS n_others,
                   CAST(SUM(CAST(($cosExpr) AS DECIMAL(18,6))) AS DOUBLE)
                     AS sum_cos
@@ -2094,15 +1977,7 @@ object Similarity {
          FROM r WHERE rk = 1 ORDER BY cell""",
 
     "e26_filtered_ann" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         assigned AS (
-           SELECT vec_id, embedding, label, cell FROM (
-             SELECT a.vec_id, a.embedding, a.label, b.cent_id AS cell,
-                    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY $cosExpr DESC, b.cent_id) AS crk
-             FROM embeddings a CROSS JOIN cents b) t
-           WHERE crk = 1),
+      s"""WITH $IvfCtes,
          ivf AS (
            SELECT vec_id, neighbor_id FROM (
              SELECT a.vec_id, b.vec_id AS neighbor_id,
@@ -2145,15 +2020,7 @@ object Similarity {
          FROM agg ORDER BY dim""",
 
     "e28_ood_screen" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         assigned AS (
-           SELECT vec_id, cell, ccos FROM (
-             SELECT a.vec_id, b.cent_id AS cell, $cosExpr AS ccos,
-                    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY $cosExpr DESC, b.cent_id) AS crk
-             FROM embeddings a CROSS JOIN cents b) t
-           WHERE crk = 1),
+      s"""WITH $IvfCtes,
          cut AS (SELECT cell, COUNT(1) AS n_members,
              quantile_cont(ccos, 0.05) AS p05
            FROM assigned GROUP BY 1)
@@ -2163,13 +2030,7 @@ object Similarity {
          ORDER BY a.cell, a.vec_id""",
 
     "e29_probe_cost" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-                         FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
-         ranked AS (
-           SELECT a.vec_id, b.cent_id AS cell,
-                  ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                    ORDER BY $cosExpr DESC, b.cent_id) AS crk
-           FROM embeddings a CROSS JOIN cents b),
+      s"""WITH $IvfCtes,
          sizes AS (SELECT cell, COUNT(1) AS cell_size FROM ranked
            WHERE crk = 1 GROUP BY 1),
          per_q AS (SELECT p.nprobe, r.vec_id,
@@ -2312,14 +2173,9 @@ object Similarity {
     // prefix cosines repeat the identical slice/dot/parenthesization;
     // DuckDB list slices are 1-based inclusive like Spark's slice()
     "e33_matryoshka_recall" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-             FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
+      s"""WITH $IvfCtes,
          asg AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, cell
-           FROM (SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-               ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                 ORDER BY $cosExpr DESC, b.cent_id) AS crk
-             FROM embeddings a CROSS JOIN cents b) t
-           WHERE crk = 1),
+           FROM assigned),
          pairs AS (SELECT a.vec_id, b.vec_id AS neighbor_id,
              a.v AS va, b.v AS vb,
              list_dot_product(a.v, b.v) /
@@ -2360,14 +2216,9 @@ object Similarity {
     // HUGEINT sum cast back to BIGINT reproduces the two's-complement
     // top bit exactly as the engine's long addition does
     "e34_ann_binary_sign" ->
-      s"""WITH cents AS (SELECT vec_id AS cent_id, embedding
-             FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 204800),
+      s"""WITH $IvfCtes,
          asg AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, cell
-           FROM (SELECT a.vec_id, a.embedding, b.cent_id AS cell,
-               ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                 ORDER BY $cosExpr DESC, b.cent_id) AS crk
-             FROM embeddings a CROSS JOIN cents b) t
-           WHERE crk = 1),
+           FROM assigned),
          sg AS (SELECT asg.vec_id,
              CAST(SUM(CASE WHEN asg.v[i] <= 0.0 THEN 0
                WHEN i = 64 THEN (-9223372036854775807::BIGINT - 1)

@@ -1,17 +1,21 @@
 #!/usr/bin/env python3
-"""Report removable duplicate lines per Scala file, split into SQL and code.
+"""Report significant and removable duplicate lines per Scala file.
 
-A line is *removable* when it lies inside a window of 5 consecutive
-significant lines that already occurred earlier in the scan (earlier in
-the same file or in a file named before it).  Significant lines are what
-is left after dropping blank lines, comment lines and bracket-only
-lines, with indentation and stripMargin `|` margins stripped.  A line is
-SQL when it sits inside a triple-quoted string literal, code otherwise.
+Significant lines are what is left after dropping blank lines, comment
+lines and bracket-only lines, with indentation and stripMargin `|`
+margins stripped; the `lines` column counts them, so it is the code-size
+measure.  A significant line is *removable* when it lies inside a window
+of 5 consecutive significant lines that already occurred earlier in the
+scan (earlier in the same file or in a file named before it).  A line is
+SQL when it sits inside a triple-quoted string literal, code otherwise;
+removable lines are split into those two columns.
 
 Usage:
   python3 tools/dupscan.py [FILE ...]
-With no arguments it scans operators/Extended10.scala .. Extended18.scala.
+With no arguments it scans every src/main/scala/graft/operators/*.scala,
+in name order.
 """
+import glob
 import os
 import re
 import sys
@@ -19,7 +23,6 @@ import sys
 WINDOW = 5
 OPS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
                    "src", "main", "scala", "graft", "operators")
-DEFAULT = [os.path.join(OPS, f"Extended{i}.scala") for i in range(10, 19)]
 BRACKETS_ONLY = re.compile(r"^[\s()\[\]{},;]*$")
 
 
@@ -68,19 +71,18 @@ def scan(paths):
             seen.add(key)
         sql = sum(1 for (_, s), r in zip(lines, removable) if r and s)
         code = sum(1 for (_, s), r in zip(lines, removable) if r and not s)
-        report.append((os.path.basename(path), sql, code))
+        report.append((os.path.basename(path), len(lines), sql, code))
     return report
 
 
 def main(argv):
-    paths = argv[1:] or DEFAULT
+    paths = argv[1:] or sorted(glob.glob(os.path.join(OPS, "*.scala")))
     report = scan(paths)
-    print(f"{'file':<24}{'sql':>6}{'code':>6}{'total':>7}")
-    for name, sql, code in report:
-        print(f"{name:<24}{sql:>6}{code:>6}{sql + code:>7}")
-    ts = sum(r[1] for r in report)
-    tc = sum(r[2] for r in report)
-    print(f"{'TOTAL':<24}{ts:>6}{tc:>6}{ts + tc:>7}")
+    print(f"{'file':<24}{'lines':>7}{'sql':>6}{'code':>6}{'total':>7}")
+    for name, n, sql, code in report:
+        print(f"{name:<24}{n:>7}{sql:>6}{code:>6}{sql + code:>7}")
+    tn, ts, tc = (sum(r[i] for r in report) for i in (1, 2, 3))
+    print(f"{'TOTAL':<24}{tn:>7}{ts:>6}{tc:>6}{ts + tc:>7}")
 
 
 if __name__ == "__main__":
