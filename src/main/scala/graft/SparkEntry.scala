@@ -27,58 +27,19 @@ object SparkEntry {
     * for them and can fail on bad input at build time. That spec fails
     * whenever a query's build behaviour and the declared set disagree. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Relational.queries ++
-      operators.CustomAgg.queries ++
-      operators.StreamingOps.queries ++
-      operators.DedupOps.queries ++
-      operators.TextOps.queries ++
-      operators.Similarity.queries ++
-      operators.Multimodal.queries ++
-      operators.Extended.queries ++
-      operators.Extended3.queries ++
-      operators.Extended4.queries ++
-      operators.Extended5.queries ++
-      operators.Extended6.queries ++
-      operators.Extended7.queries ++
-      operators.Extended8.queries ++
-      operators.Extended9.queries ++
-      operators.Extended10.queries ++
-      operators.Extended11.queries ++
-      operators.Extended12.queries ++
-      operators.Extended13.queries ++
-      operators.Extended14.queries ++
-      operators.Extended15.queries ++
-      operators.Extended16.queries ++
-      operators.Extended17.queries ++
-      operators.Extended18.queries ++
-      operators.PiiOps.queries
+    families.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check. */
   def oracleSql: Map[String, String] =
-    operators.Relational.oracleSql ++
-      operators.CustomAgg.oracleSql ++
-      operators.StreamingOps.oracleSql ++
-      operators.DedupOps.oracleSql ++
-      operators.TextOps.oracleSql ++
-      operators.Similarity.oracleSql ++
-      operators.Multimodal.oracleSql ++
-      operators.Extended.oracleSql ++
-      operators.Extended3.oracleSql ++
-      operators.Extended4.oracleSql ++
-      operators.Extended5.oracleSql ++
-      operators.Extended6.oracleSql ++
-      operators.Extended7.oracleSql ++
-      operators.Extended8.oracleSql ++
-      operators.Extended9.oracleSql ++
-      operators.Extended10.oracleSql ++
-      operators.Extended11.oracleSql ++
-      operators.Extended12.oracleSql ++
-      operators.Extended13.oracleSql ++
-      operators.Extended14.oracleSql ++
-      operators.Extended15.oracleSql ++
-      operators.Extended16.oracleSql ++
-      operators.Extended17.oracleSql ++
-      operators.Extended18.oracleSql ++
-      operators.PiiOps.oracleSql
+    families.flatMap(_.oracleSql).toMap
+
+  /** The operator inventory, one module per family. Each query name is
+    * defined by exactly one family (`SparkEntrySpec` checks it). */
+  val families: Seq[operators.OperatorFamily] = {
+    import operators._
+    Seq(Relational, CustomAgg, StreamingOps, DedupOps, TextOps, Corpus,
+      PiiOps, Similarity, Multimodal, OrderRevenue, Warehouse, Behavioral,
+      Graph, Statistics, Forecasting)
+  }
 }

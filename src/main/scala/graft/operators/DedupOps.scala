@@ -22,7 +22,7 @@ import graft.functions.HashFunctions.md5Hash60Sql
   * would be salted/filtered by document frequency at real scale; the
   * pattern is the same.
   */
-object DedupOps {
+object DedupOps extends OperatorFamily {
 
   /** doc_id + distinct word-level 3-gram shingles, keyed by the
     * codegen'd [[graft.functions.WordGramHashes word_ngram_hashes]]
@@ -1463,6 +1463,58 @@ object DedupOps {
         .groupBy(col("t"))
         .agg(countDistinct(col("doc_id")).as("n_docs"))
       np.join(nd, Seq("t")).orderBy(col("t"))
+    }),
+
+    // Embedding-cosine near-dup: keep-first-by-id policy — a vector is a
+    // duplicate iff some LOWER-id vector is within the cosine threshold.
+    // Brute-force pair space here (ground truth); the scale path buckets
+    // candidates first exactly like e03's IVF cells / d04's LSH bands.
+    "d06_embedding_neardup" -> ((s, d) => {
+      val v = Similarity.vecs(s, d)
+      val a = v.select(col("vec_id"), col("v").as("va"), col("nrm").as("na"))
+      val b = v.select(col("vec_id").as("dup_of"), col("v").as("vb"),
+        col("nrm").as("nb"))
+      val dups = a.join(b, col("dup_of") < col("vec_id"))
+        .filter(graft.functions.VectorFunctions.dotProduct(col("va"), col("vb"))
+          / (col("na") * col("nb")) >= 0.4)
+        .select(col("vec_id")).distinct()
+      v.join(dups, Seq("vec_id"), "left_anti")
+        .select(col("vec_id"))
+        .orderBy(col("vec_id"))
+    }),
+
+    // REPEATED-PASSAGE span mining (the report behind d12's excision):
+    // every maximal run of word 8-grams that also occur in at least
+    // one OTHER document, per document, with 1-based token bounds —
+    // the "which passages are boilerplate/copied, and how widely"
+    // audit (Lee et al.'s dedup analysis shape) that decides excision
+    // thresholds before d12 commits to them. Shape: the gram frame is
+    // (doc_id, pos, hash) — the codegen'd per-position gram hashes,
+    // never gram text; cross-doc frequency is a g-keyed count-distinct
+    // over 8-byte keys (map-side partial agg collapses in-doc
+    // repeats); flagged positions rejoin on g and the island merge
+    // (pos - row_number) is a doc-local window. No text ever shuffles.
+    "d15_repeated_spans" -> ((s, d) => {
+      import org.apache.spark.sql.expressions.Window
+      val n = 8
+      val pos = Tables.documents(s, d)
+        .select(col("doc_id"), posexplode(
+          graft.functions.TextFunctions.wordGramHashes(col("text"), n)))
+        .toDF("doc_id", "pos", "g")
+      val dup = pos.groupBy(col("g"))
+        .agg(countDistinct(col("doc_id")).as("n_docs"))
+        .filter(col("n_docs") >= 2)
+      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+      pos.join(dup, "g")
+        .withColumn("grp", col("pos") - row_number().over(w))
+        .groupBy(col("doc_id"), col("grp"))
+        .agg((min(col("pos")) + 1).cast("long").as("span_start"),
+          (max(col("pos")) + n).cast("long").as("span_end"),
+          count(lit(1)).as("n_grams"),
+          max(col("n_docs")).as("max_doc_freq"))
+        .select(col("doc_id"), col("span_start"), col("span_end"),
+          col("n_grams"), col("max_doc_freq"))
+        .orderBy(col("doc_id"), col("span_start"))
     })
   )
 
@@ -2145,7 +2197,42 @@ object DedupOps {
                AS precision,
              CAST(n_true AS DOUBLE) / CAST(n_truth AS DOUBLE) AS recall
            FROM m CROSS JOIN tc ORDER BY method"""
-      }
+      },
+
+    "d06_embedding_neardup" ->
+      """SELECT a.vec_id FROM embeddings a
+         WHERE NOT EXISTS (
+           SELECT 1 FROM embeddings b
+           WHERE b.vec_id < a.vec_id
+             AND list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                                  CAST(b.embedding AS DOUBLE[])) /
+                 (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                                        CAST(a.embedding AS DOUBLE[]))) *
+                  SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]),
+                                        CAST(b.embedding AS DOUBLE[])))) >= 0.4)
+         ORDER BY vec_id""",
+
+    // string-gram equality stands in for the Spark side's gram-hash
+    // equality (d03/d08 precedent: collision-free at oracle scale)
+    "d15_repeated_spans" ->
+      """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS words
+                    FROM documents),
+         g AS (SELECT doc_id, i AS pos,
+                      array_to_string(words[i:i+7], ' ') AS gram
+               FROM w, UNNEST(generate_series(1, LEN(words) - 7)) AS t(i)),
+         dup AS (SELECT gram, COUNT(DISTINCT doc_id) AS n_docs
+                 FROM g GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 2),
+         f AS (SELECT g.doc_id, g.pos, dup.n_docs
+               FROM g JOIN dup USING (gram)),
+         isl AS (SELECT doc_id, pos, n_docs,
+                   pos - ROW_NUMBER() OVER (PARTITION BY doc_id
+                     ORDER BY pos) AS grp
+                 FROM f)
+         SELECT doc_id, CAST(MIN(pos) AS BIGINT) AS span_start,
+                CAST(MAX(pos) + 7 AS BIGINT) AS span_end,
+                COUNT(*) AS n_grams, MAX(n_docs) AS max_doc_freq
+         FROM isl GROUP BY doc_id, grp
+         ORDER BY doc_id, span_start"""
     )
   }
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * oracle-checked (byte lengths, header bytes, md5, strided checksum are
   * all recomputable in SQL).
   */
-object Multimodal {
+object Multimodal extends OperatorFamily {
 
   case class MediaIn(doc_id: Long, payload: Array[Byte])
   case class MediaMeta(doc_id: Long, n_bytes: Int, header: Int,

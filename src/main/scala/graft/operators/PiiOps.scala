@@ -24,7 +24,7 @@ import graft.Tables
   * the plan. At 100 TB this is the ideal embarrassingly-parallel
   * shape: no exchange carries anything wider than the final rollup.
   */
-object PiiOps {
+object PiiOps extends OperatorFamily {
 
   private val EmailRe = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
   private val PhoneRe = "\\d{3}-\\d{2}-\\d{4}"

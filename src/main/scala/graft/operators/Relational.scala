@@ -24,8 +24,24 @@ import graft.functions.HashFunctions.md5Hash60Sql
   * map-side partial agg, and top-k uses per-partition limits — nothing here
   * collects to the driver.
   */
-object Relational {
+object Relational extends OperatorFamily {
   import Parity._
+  /** Bucket count for q55 — fixed so plans are stable across SFs. */
+  private val NumBuckets = 8
+
+  /** Drop a managed table AND its warehouse directory. A previous
+    * SparkSession may have left the data directory behind (the in-memory
+    * catalog forgets the table on session exit but the files persist),
+    * in which case `mode(overwrite)` alone fails with
+    * LOCATION_ALREADY_EXISTS. */
+  private[operators] def dropManaged(s: SparkSession, name: String): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS $name")
+    val wh = s.conf.get("spark.sql.warehouse.dir")
+    val path = new org.apache.hadoop.fs.Path(wh, name)
+    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(path)) { fs.delete(path, true); () }
+  }
+
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- aggregation -----------------------------------------------------
@@ -483,6 +499,298 @@ object Relational {
           (col("qs")(0) / 100.0).as("approx_median_value"),
           col("n"))
         .orderBy(col("event_type"))
+    }),
+
+    // Array higher-order functions: transform / filter / aggregate /
+    // exists / array_sort / slice — all codegen'd per row, zero shuffle.
+    "q37_higher_order_fns" -> ((s, d) => {
+      Tables.part(s, d)
+        .withColumn("ws", split(col("p_name"), " "))
+        .select(col("p_partkey"),
+          size(col("ws")).as("n_words"),
+          expr("size(filter(ws, w -> length(w) > 5))").as("n_long"),
+          expr("aggregate(transform(ws, w -> length(w)), 0, (a, x) -> a + x)")
+            .as("total_len"),
+          expr("array_max(transform(ws, w -> length(w)))").as("max_len"),
+          expr("exists(ws, w -> w like '%ow%')").as("has_ow"),
+          array_join(expr("slice(array_sort(ws), 1, 3)"), "|").as("first3"))
+        .orderBy(col("p_partkey"))
+    }),
+
+    // Map functions over a JSON-decoded payload: from_json to
+    // map<string,string>, map_concat with a literal map, element_at,
+    // map_keys — the typed-payload-decode path of the envelope model.
+    "q38_map_fns" -> ((s, d) => {
+      Tables.events(s, d)
+        .withColumn("m", map_concat(
+          expr("from_json(props, 'map<string,string>')"),
+          map(lit("type"), col("event_type"))))
+        .select(col("event_id"),
+          element_at(col("m"), "k").cast("int").as("k_val"),
+          element_at(col("m"), "type").as("type_val"),
+          size(col("m")).as("n_keys"),
+          array_join(array_sort(map_keys(col("m"))), ",").as("keys_sorted"))
+        .orderBy(col("event_id"))
+    }),
+
+    // CSV encode/decode round-trip: to_csv of a struct, then from_csv
+    // back to typed fields (the delimited-payload analogue of q32's
+    // from_json decode).
+    "q39_csv_roundtrip" -> ((s, d) => {
+      Tables.orders(s, d)
+        .withColumn("line", expr(
+          "to_csv(named_struct('k', o_orderkey, 'c', o_custkey, 'p', o_orderpriority))"))
+        .withColumn("parsed", expr(
+          "from_csv(line, 'k BIGINT, c BIGINT, p STRING')"))
+        .select(col("o_orderkey"), col("line"),
+          col("parsed.k").as("k"), col("parsed.c").as("c"),
+          col("parsed.p").as("p"))
+        .orderBy(col("o_orderkey"))
+    }),
+
+    // Interval join: purchases within 1 hour after a click by the same
+    // user — the batch twin of the watermarked stream-stream join
+    // (EventTimeStreamingSpec drives the unbounded form). Equi key on
+    // user_id + range predicate: one shuffle on user_id, range filter
+    // applied post-match — no cross join at any scale.
+    "q47_interval_join" -> ((s, d) => {
+      val e = Tables.events(s, d)
+      val c = e.filter(col("event_type") === "click")
+        .select(col("user_id"), col("ts").as("cts"),
+          col("event_id").as("click_id"))
+      val p = e.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("pts"),
+          col("event_id").as("purchase_id"))
+      c.join(p, col("user_id") === col("p_user")
+          && col("pts") >= col("cts")
+          && col("pts") < col("cts") + expr("INTERVAL 1 HOUR"))
+        .select(col("click_id"), col("purchase_id"), col("user_id"),
+          ((expr("unix_micros(CAST(pts AS TIMESTAMP))")
+            - expr("unix_micros(CAST(cts AS TIMESTAMP))"))
+            / lit(60000000L)).cast("long").as("mins_after"))
+        .orderBy(col("click_id"), col("purchase_id"))
+    }),
+
+    // Multiset set operations (ALL variants): intersectAll / exceptAll /
+    // union keep duplicate multiplicity; surfaced as per-key counts.
+    "q48_set_ops_all" -> ((s, d) => {
+      val a = Tables.orders(s, d).select(col("o_custkey").as("key"))
+      val b = Tables.customer(s, d)
+        .filter(col("c_mktsegment") === "BUILDING")
+        .select(col("c_custkey").as("key"))
+      def counted(df: DataFrame, op: String): DataFrame =
+        df.groupBy(col("key")).agg(count(lit(1)).as("n"))
+          .withColumn("op", lit(op))
+      counted(a.intersectAll(b), "intersect_all")
+        .unionByName(counted(a.exceptAll(b), "except_all"))
+        .unionByName(counted(a.union(b), "union_all"))
+        .select(col("op"), col("key"), col("n"))
+        .orderBy(col("op"), col("key"))
+    }),
+
+    // Collect + arg-extreme aggregates: deterministic (sorted)
+    // collect_list surfaced as a joined string, max_by/min_by.
+    "q49_collect_aggregates" -> ((s, d) => {
+      Tables.supplier(s, d)
+        .groupBy(col("s_nationkey"))
+        .agg(
+          array_join(array_sort(collect_list(col("s_name"))), ",")
+            .as("suppliers"),
+          count(lit(1)).as("n"),
+          max_by(col("s_name"), col("s_acctbal")).as("richest"),
+          min_by(col("s_name"), col("s_acctbal")).as("poorest"))
+        .orderBy(col("s_nationkey"))
+    }),
+
+    // Exact interpolated percentiles (percentile / median). l_quantity
+    // holds small integers, so the interpolation arithmetic
+    // (lower + (upper-lower)*frac at frac in {.25,.5,.75}) is exact in
+    // both engines — bit-identical doubles.
+    "q50_exact_percentiles" -> ((s, d) => {
+      Tables.lineitem(s, d)
+        .groupBy(col("l_returnflag"))
+        .agg(
+          expr("percentile(l_quantity, 0.25)").as("p25"),
+          median(col("l_quantity")).as("med"),
+          expr("percentile(l_quantity, 0.75)").as("p75"),
+          count(lit(1)).as("n"))
+        .orderBy(col("l_returnflag"))
+    }),
+
+    // VARIANT decode: parse once, extract typed paths. A missing path is
+    // SQL NULL (not an error) — schema drift tolerance the strict
+    // from_json path lacks.
+    "q53_variant_shred" -> ((s, d) => {
+      Tables.events(s, d)
+        .withColumn("var", expr("parse_json(props)"))
+        .select(col("event_id"),
+          expr("variant_get(var, '$.k', 'int')").as("k_val"),
+          expr("variant_get(var, '$.k', 'double')").as("k_dbl"),
+          expr("variant_get(var, '$.nope', 'string')").as("missing"))
+        .orderBy(col("event_id"))
+    }),
+
+    // XML payload decode: encode a struct as markup, parse it back with
+    // from_xml — markup twin of the q39 CSV round-trip.
+    "q54_xml_decode" -> ((s, d) => {
+      Tables.orders(s, d)
+        .withColumn("x", concat(lit("<o><k>"), col("o_orderkey"),
+          lit("</k><p>"), col("o_orderpriority"), lit("</p></o>")))
+        .withColumn("parsed", expr("from_xml(x, 'k BIGINT, p STRING')"))
+        .select(col("o_orderkey"), col("x"),
+          col("parsed.k").as("k"), col("parsed.p").as("p"))
+        .orderBy(col("o_orderkey"))
+    }),
+
+    // Co-located join on bucketed tables: pay the shuffle once at write
+    // (bucketBy o_custkey / c_custkey), then every subsequent join on the
+    // bucket key is exchange-free (merge hint pins SMJ so the broadcast
+    // path doesn't mask the layout win at test SFs).
+    "q55_bucketed_colocated_join" -> ((s, d) => {
+      dropManaged(s, "graft_orders_bucketed")
+      dropManaged(s, "graft_customer_bucketed")
+      Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice")
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(NumBuckets, "o_custkey").sortBy("o_custkey")
+        .saveAsTable("graft_orders_bucketed")
+      Tables.customer(s, d).select("c_custkey", "c_mktsegment")
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(NumBuckets, "c_custkey").sortBy("c_custkey")
+        .saveAsTable("graft_customer_bucketed")
+      s.table("graft_orders_bucketed").hint("merge")
+        .join(s.table("graft_customer_bucketed"),
+          col("o_custkey") === col("c_custkey"))
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("n_orders"),
+          Parity.dsum(col("o_totalprice")).as("revenue"))
+        .orderBy(col("c_mktsegment"))
+    }),
+
+    // Trailing-1h event-time range frame per user: range frames bound by
+    // VALUE (micros), not row position — peers at the same timestamp are
+    // always in-frame together, so the result is tie-order independent.
+    "q56_time_range_window" -> ((s, d) => {
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("us"))
+        .rangeBetween(-3600000000L, 0L) // 1 hour in micros, inclusive
+      Tables.events(s, d)
+        .withColumn("us", expr("unix_micros(CAST(ts AS TIMESTAMP))"))
+        .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
+        .select(col("event_id"), col("user_id"),
+          count(lit(1)).over(w).as("n_1h"),
+          sum(col("k")).over(w).as("k_sum_1h"))
+        .orderBy(col("event_id"))
+    }),
+
+    // DPP: orders partitioned by o_orderpriority; the dim is a SEPARATE
+    // stored table whose urgency class is plain data (not derivable from
+    // the join key by constraint propagation), so the fact scan's
+    // partition filter can only come from the runtime DPP subquery over
+    // the broadcast dim — the exact "scan 2 of 5 partitions because the
+    // dim filter said so at runtime" shape of a warehouse star join.
+    "q57_dpp_partitioned_join" -> ((s, d) => {
+      dropManaged(s, "graft_orders_by_priority")
+      dropManaged(s, "graft_priority_dim")
+      Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
+        .write.mode("overwrite").format("parquet")
+        .partitionBy("o_orderpriority")
+        .saveAsTable("graft_orders_by_priority")
+      Tables.orders(s, d)
+        .select(col("o_orderpriority").as("p")).distinct()
+        .withColumn("cls", substring(col("p"), 1, 1).cast("int"))
+        .write.mode("overwrite").format("parquet")
+        .saveAsTable("graft_priority_dim")
+      val urgent = s.table("graft_priority_dim").filter(col("cls") <= 2)
+      s.table("graft_orders_by_priority")
+        .join(broadcast(urgent), col("o_orderpriority") === col("p"))
+        .groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("n_orders"),
+          Parity.dsum(col("o_totalprice")).as("revenue"))
+        .orderBy(col("o_orderpriority"))
+    }),
+
+    // Unpivot (melt): the inverse of q27's pivot — wide per-type count
+    // columns back to (bucket, event_type, n) long form, zero-filled
+    // cells included. Pivot/unpivot round-trip pins both directions of
+    // the reshape family; unpivot is a zero-shuffle per-row expansion.
+    "q59_unpivot" -> ((s, d) => {
+      val types = Seq("click", "error", "purchase", "signup", "view")
+      val p = Tables.events(s, d)
+        .withColumn("bucket", pmod(col("user_id"), lit(10)))
+        .groupBy(col("bucket"))
+        .pivot("event_type", types)
+        .count()
+      p.select(col("bucket") +: types.map(t =>
+          coalesce(col(t), lit(0L)).as(t)): _*)
+        .unpivot(Array(col("bucket")), types.map(col).toArray,
+          "event_type", "n")
+        .orderBy(col("bucket"), col("event_type"))
+    }),
+
+    // DISTRIBUTION windows — ntile / percent_rank / cume_dist, the
+    // last window family the inventory lacked (q16 covers the rank
+    // family; q86 builds deciles by hand). Each customer's order spend
+    // placed within their nation: spending quartile, percentile rank,
+    // cumulative share of customers at-or-below. The window ORDER BY
+    // carries the (cents, custkey) tie-break, so every row has a
+    // distinct sort key — ntile's tie-splitting, percent_rank's rank
+    // numerator and cume_dist's peer groups are all then deterministic
+    // and engine-independent (both implement the SQL-spec definitions
+    // over exact integers; the divisions are the only doubles).
+    // Scale shape: one exchange on o_custkey (partial-agg first), one
+    // on c_nationkey for the windows — both key on high-cardinality /
+    // bounded-group columns; nothing wide rides either.
+    "q110_distribution_windows" -> ((s, d) => {
+      val spend = Tables.orders(s, d)
+        .select(col("o_custkey"),
+          round(col("o_totalprice") * 100).cast("long").as("cents"))
+        .groupBy(col("o_custkey")).agg(sum(col("cents")).as("cents"))
+        .join(Tables.customer(s, d)
+          .select(col("c_custkey"), col("c_nationkey")),
+          col("o_custkey") === col("c_custkey"))
+        .join(broadcast(Tables.nation(s, d)
+          .select(col("n_nationkey"), col("n_name"))),
+          col("c_nationkey") === col("n_nationkey"))
+      val w = Window.partitionBy(col("n_name"))
+        .orderBy(col("cents"), col("o_custkey"))
+      spend
+        .select(col("n_name"), col("o_custkey").as("custkey"),
+          (col("cents").cast("double") / 100.0).as("spend"),
+          ntile(4).over(w).as("quartile"),
+          percent_rank().over(w).as("pct_rank"),
+          cume_dist().over(w).as("cume"))
+        .orderBy(col("n_name"), col("custkey"))
+    }),
+
+    // NATIVE as-of join — q26's scenario on the custom whole-operator
+    // extension ([[graft.plans.AsOfJoinNode]] + Strategy + Exec, the
+    // SURVEY §2.2 ladder rung the expression/aggregate/rule extensions
+    // don't reach): each purchase paired with the latest signup at or
+    // before it. Where q26 UNIONS both sides and LOCF-windows the
+    // merged frame, the native exec hash-co-partitions the sides on
+    // user_id, sorts each by (key, time), and streams ONE merge pass
+    // with O(1) state per partition — no union row inflation, no
+    // window buffers. Same oracle as q26 (ties: greatest signup id) —
+    // two independent formulations, one truth. Scale shape: two key
+    // exchanges and per-partition sorts, exactly a sort-merge join's
+    // cost envelope, and AQE splits skewed keys the same way.
+    "q123_native_asof" -> ((s, d) => {
+      graft.functions.GraftFunctions.register(s)
+      val e = Tables.events(s, d)
+      val purchases = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"),
+          col("event_id").as("purchase_id"))
+      val signups = e.filter(col("event_type") === "signup")
+        .select(col("user_id").as("s_user"), col("ts").as("s_ts"),
+          col("event_id").as("s_id"))
+      graft.plans.AsOfJoin.join(purchases, signups,
+          leftKey = "user_id", rightKey = "s_user", leftTime = "ts",
+          rightOrderCols = Seq("s_ts", "s_id"))
+        .select(col("purchase_id"), col("user_id"),
+          col("s_id").as("signup_id"))
+        .orderBy(col("purchase_id"))
     })
   )
 
@@ -808,6 +1116,149 @@ object Relational {
          FROM hll h
          JOIN med m ON m.event_type = h.event_type
          JOIN cnt c ON c.event_type = h.event_type
-         ORDER BY h.event_type"""
+         ORDER BY h.event_type""",
+
+    "q37_higher_order_fns" ->
+      """SELECT p_partkey,
+         CAST(LEN(ws) AS INT) AS n_words,
+         CAST(LEN(list_filter(ws, w -> LENGTH(w) > 5)) AS INT) AS n_long,
+         CAST(list_aggregate(list_transform(ws, w -> LENGTH(w)), 'sum') AS INT)
+           AS total_len,
+         CAST(list_aggregate(list_transform(ws, w -> LENGTH(w)), 'max') AS INT)
+           AS max_len,
+         LEN(list_filter(ws, w -> w LIKE '%ow%')) > 0 AS has_ow,
+         array_to_string(list_sort(ws)[1:3], '|') AS first3
+         FROM (SELECT p_partkey, string_split(p_name, ' ') AS ws FROM part)
+         ORDER BY p_partkey""",
+
+    "q38_map_fns" ->
+      """SELECT event_id,
+         CAST(json_extract_string(props, '$.k') AS INT) AS k_val,
+         event_type AS type_val,
+         CAST(2 AS INT) AS n_keys,
+         'k,type' AS keys_sorted
+         FROM events ORDER BY event_id""",
+
+    "q39_csv_roundtrip" ->
+      """SELECT o_orderkey,
+         o_orderkey || ',' || o_custkey || ',' || o_orderpriority AS line,
+         o_orderkey AS k, o_custkey AS c, o_orderpriority AS p
+         FROM orders ORDER BY o_orderkey""",
+
+    "q47_interval_join" ->
+      """SELECT c.event_id AS click_id, p.event_id AS purchase_id,
+         c.user_id,
+         (epoch_us(p.ts) - epoch_us(c.ts)) // 60000000 AS mins_after
+         FROM events c JOIN events p
+           ON c.user_id = p.user_id
+          AND c.event_type = 'click' AND p.event_type = 'purchase'
+          AND p.ts >= c.ts AND p.ts < c.ts + INTERVAL 1 HOUR
+         ORDER BY click_id, purchase_id""",
+
+    "q48_set_ops_all" ->
+      """WITH a AS (SELECT o_custkey AS key FROM orders),
+         b AS (SELECT c_custkey AS key FROM customer
+               WHERE c_mktsegment = 'BUILDING'),
+         ia AS (SELECT key FROM a INTERSECT ALL SELECT key FROM b),
+         ea AS (SELECT key FROM a EXCEPT ALL SELECT key FROM b),
+         ua AS (SELECT key FROM a UNION ALL SELECT key FROM b)
+         SELECT 'intersect_all' AS op, key, COUNT(1) AS n FROM ia GROUP BY key
+         UNION ALL
+         SELECT 'except_all' AS op, key, COUNT(1) AS n FROM ea GROUP BY key
+         UNION ALL
+         SELECT 'union_all' AS op, key, COUNT(1) AS n FROM ua GROUP BY key
+         ORDER BY op, key""",
+
+    "q49_collect_aggregates" ->
+      """SELECT s_nationkey,
+         string_agg(s_name, ',' ORDER BY s_name) AS suppliers,
+         COUNT(1) AS n,
+         arg_max(s_name, s_acctbal) AS richest,
+         arg_min(s_name, s_acctbal) AS poorest
+         FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""",
+
+    "q50_exact_percentiles" ->
+      """SELECT l_returnflag,
+         quantile_cont(l_quantity, 0.25) AS p25,
+         quantile_cont(l_quantity, 0.5) AS med,
+         quantile_cont(l_quantity, 0.75) AS p75,
+         COUNT(1) AS n
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
+
+    "q53_variant_shred" ->
+      """SELECT event_id,
+         CAST(json_extract_string(props, '$.k') AS INT) AS k_val,
+         CAST(json_extract_string(props, '$.k') AS DOUBLE) AS k_dbl,
+         json_extract_string(props, '$.nope') AS missing
+         FROM events ORDER BY event_id""",
+
+    "q54_xml_decode" ->
+      """SELECT o_orderkey,
+         '<o><k>' || o_orderkey || '</k><p>' || o_orderpriority
+           || '</p></o>' AS x,
+         o_orderkey AS k, o_orderpriority AS p
+         FROM orders ORDER BY o_orderkey""",
+
+    "q55_bucketed_colocated_join" ->
+      s"""SELECT c_mktsegment, COUNT(1) AS n_orders,
+         ${Parity.dsumSql("o_totalprice")} AS revenue
+         FROM orders JOIN customer ON o_custkey = c_custkey
+         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
+
+    "q56_time_range_window" ->
+      """SELECT event_id, user_id,
+         CAST(COUNT(1) OVER w AS BIGINT) AS n_1h,
+         CAST(SUM(CAST(json_extract_string(props, '$.k') AS INT)) OVER w
+           AS BIGINT) AS k_sum_1h
+         FROM events
+         WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
+           RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
+         ORDER BY event_id""",
+
+    "q57_dpp_partitioned_join" ->
+      s"""SELECT o_orderpriority, COUNT(1) AS n_orders,
+         ${Parity.dsumSql("o_totalprice")} AS revenue
+         FROM orders
+         WHERE CAST(substring(o_orderpriority, 1, 1) AS INT) <= 2
+         GROUP BY o_orderpriority ORDER BY o_orderpriority""",
+
+    "q59_unpivot" ->
+      """WITH b AS (SELECT DISTINCT user_id % 10 AS bucket FROM events),
+         t AS (SELECT UNNEST(['click','error','purchase','signup','view'])
+                 AS event_type),
+         c AS (SELECT user_id % 10 AS bucket, event_type, COUNT(1) AS n
+               FROM events GROUP BY 1, 2)
+         SELECT b.bucket, t.event_type, COALESCE(c.n, 0) AS n
+         FROM b CROSS JOIN t
+         LEFT JOIN c ON c.bucket = b.bucket AND c.event_type = t.event_type
+         ORDER BY b.bucket, t.event_type""",
+
+    "q110_distribution_windows" ->
+      """WITH spend AS (SELECT o_custkey,
+             CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
+               AS BIGINT) AS cents
+           FROM orders GROUP BY 1),
+         j AS (SELECT n_name, o_custkey AS custkey, cents
+           FROM spend
+           JOIN customer ON o_custkey = c_custkey
+           JOIN nation ON c_nationkey = n_nationkey)
+         SELECT n_name, custkey,
+           CAST(cents AS DOUBLE) / 100.0 AS spend,
+           CAST(ntile(4) OVER w AS INT) AS quartile,
+           percent_rank() OVER w AS pct_rank,
+           cume_dist() OVER w AS cume
+         FROM j WINDOW w AS (PARTITION BY n_name ORDER BY cents, custkey)
+         ORDER BY n_name, custkey""",
+
+    // identical truth to q26's oracle — the native exec and the
+    // union+window plan must both reproduce it
+    "q123_native_asof" ->
+      """SELECT p.event_id AS purchase_id, p.user_id,
+           (SELECT s.event_id FROM events s
+            WHERE s.event_type = 'signup' AND s.user_id = p.user_id
+              AND s.ts <= p.ts
+            ORDER BY s.ts DESC, s.event_id DESC LIMIT 1) AS signup_id
+         FROM events p WHERE p.event_type = 'purchase'
+         ORDER BY purchase_id"""
   )
 }

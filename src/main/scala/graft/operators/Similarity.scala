@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.{Parity, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
+import graft.{Parity, Tables}
 
 /** Similarity search over the `embeddings` table (Array[Float] column).
   *
@@ -17,7 +18,7 @@ import org.apache.spark.sql.functions._
   * runs only within a cell — the pair space shrinks by the cell count,
   * and each cell is an independent partition-local search.
   */
-object Similarity {
+object Similarity extends OperatorFamily {
 
   /** Embedding dimensionality of the `embeddings` table. */
   private val EmbDims = 64
@@ -49,7 +50,7 @@ object Similarity {
   }
 
   /** vec_id, v (double), norm — shared scan for the similarity queries
-    * (and [[Extended]]'s embedding near-dup). */
+    * (and d06's embedding near-dup in [[DedupOps]]). */
   private[operators] def vecs(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .select(col("vec_id"), dvec(col("embedding")).as("v"))
@@ -170,6 +171,62 @@ object Similarity {
         (col("pos") + 1).cast("int").as("crk"),
         col("col.score").as("ccos"))
   }
+  private def md5hex(x: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** e05 geometry: 16 hyperplanes in 4 bands of 4 bits over the 64-dim
+    * embeddings (TESTDATA.md). Sign(j)(i) = +1 iff the first hex digit
+    * of md5("hp-j-i") is < '8' — one unbiased portable bit per
+    * component, computed ONCE on the driver (the oracle derives the
+    * identical matrix with SQL md5; per-row md5 would be 1024 hashes a
+    * row at scale). */
+  private val NPlanes = 16
+
+  private val BandRows = 4
+
+  private val Dims = 64
+
+  private lazy val hyperplaneSigns: IndexedSeq[Seq[Double]] =
+    (0 until NPlanes).map(j =>
+      (0 until Dims).map(i =>
+        if (md5hex(s"hp-$j-$i").charAt(0) < '8') 1.0 else -1.0))
+
+  /** e05's full plan — banded sign-LSH candidates verified with the
+    * exact cosine at 0.4. Shared by e05 and the e21 recall gate so the
+    * gate measures exactly the pairs the scale path emits. */
+  private def lshVerifiedPairs(s: SparkSession, d: String): DataFrame = {
+    val dot = graft.functions.VectorFunctions.dotProduct _
+    val v = Similarity.vecs(s, d)
+    val withBits = (0 until NPlanes).foldLeft(v)((df, j) =>
+      df.withColumn(s"bit$j",
+        when(dot(col("v"), typedLit(hyperplaneSigns(j))) >= 0d, 1)
+          .otherwise(0)))
+    val bands: Column = array((0 until NPlanes / BandRows).map { b =>
+      struct(lit(b).as("band"),
+        (0 until BandRows)
+          .map(r => col(s"bit${b * BandRows + r}") * lit(1 << r))
+          .reduce(_ + _).as("bv"))
+    }: _*)
+    val buckets = withBits
+      .select(col("vec_id"), explode(bands).as("e"))
+      .select(col("vec_id"), col("e.band").as("band"), col("e.bv").as("bv"))
+    val cand = buckets
+      .select(col("vec_id").as("vec_a"), col("band"), col("bv"))
+      .join(buckets.select(col("vec_id").as("vec_b"), col("band"),
+        col("bv")), Seq("band", "bv"))
+      .filter(col("vec_a") < col("vec_b"))
+      .select(col("vec_a"), col("vec_b")).distinct()
+    val va = v.select(col("vec_id").as("vec_a"), col("v").as("va"),
+      col("nrm").as("na"))
+    val vb = v.select(col("vec_id").as("vec_b"), col("v").as("vb"),
+      col("nrm").as("nb"))
+    cand.join(va, "vec_a").join(vb, "vec_b")
+      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
+      .filter(col("cos") >= 0.4)
+      .select(col("vec_a"), col("vec_b"), col("cos"))
+  }
+
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // All pairs with cosine >= 0.4 (brute force, ground truth).
@@ -1340,6 +1397,76 @@ object Similarity {
         .select(col("cell"), col("n_queries"), col("n_match"),
           col("recall_at1"), col("mean_hamming"), col("mean_cos_chosen"))
         .orderBy(col("cell"))
+    }),
+
+    // Exact top-3 neighbors via the mergeable top-k aggregate: identical
+    // output to e02, but the O(n²) pair stream is reduced map-side — the
+    // exchange moves ≤ k entries per vector. Symmetry halves the float
+    // work: each unordered pair is joined ONCE (a < b), the cosine is
+    // computed once, and the pair then fans into both endpoints' top-k
+    // groups (cos(a,b) = cos(b,a)).
+    "e04_ann_topk_partial" -> ((s, d) => {
+      val v = Similarity.vecs(s, d)
+      val a = v.select(col("vec_id").as("ia"), col("v").as("va"),
+        col("nrm").as("na"))
+      val b = v.select(col("vec_id").as("ib"), col("v").as("vb"),
+        col("nrm").as("nb"))
+      a.join(b, col("ia") < col("ib"))
+        .withColumn("cos",
+          graft.functions.VectorFunctions.dotProduct(col("va"), col("vb"))
+            / (col("na") * col("nb")))
+        .select(explode(array(
+          struct(col("ia").as("vec_id"), col("ib").as("neighbor_id"),
+            col("cos")),
+          struct(col("ib").as("vec_id"), col("ia").as("neighbor_id"),
+            col("cos")))).as("e"))
+        .groupBy(col("e.vec_id").as("vec_id"))
+        .agg(graft.functions.TopKFunctions.topK(
+          col("e.cos"), col("e.neighbor_id"), 3).as("t"))
+        .select(col("vec_id"), posexplode(col("t")))
+        .select(col("vec_id"), (col("pos") + 1).cast("int").as("rank"),
+          col("col.id").as("neighbor_id"), col("col.value").as("cos"))
+        .orderBy(col("vec_id"), col("rank"))
+    }),
+
+    // LSH-bucketed cosine pairs: candidates share >= 1 of 4 sign-bands;
+    // survivors verified with the exact cosine at 0.4 (e01's threshold,
+    // so e01 is the recall ground truth for this scale path).
+    "e05_lsh_cosine_pairs" -> ((s, d) =>
+      lshVerifiedPairs(s, d).orderBy(col("vec_a"), col("vec_b"))),
+
+    // RH-LSH RECALL gate (m11's discipline applied to e05): the banded
+    // sign-LSH pairs measured against the exhaustive cosine >= 0.4
+    // ground truth (e01's frame), bucketed by similarity. Sign-band
+    // collision probability is (1 - θ/π)^r per band — it RISES with
+    // cosine, so any recall loss concentrates in the lowest bucket;
+    // this report is what says whether 4×4-bit bands are enough or the
+    // band count needs raising before e05 is trusted as the scale
+    // path. Truth side is the O(n²) scan — eval-twin contract
+    // (e02/e07/m11), per-bucket/sampled at corpus scale; the found
+    // side is e05's real plan.
+    "e21_lsh_recall" -> ((s, d) => {
+      val dot = graft.functions.VectorFunctions.dotProduct _
+      val v = Similarity.vecs(s, d)
+      val va = v.select(col("vec_id").as("vec_a"), col("v").as("va"),
+        col("nrm").as("na"))
+      val vb = v.select(col("vec_id").as("vec_b"), col("v").as("vb"),
+        col("nrm").as("nb"))
+      val truth = va.join(vb, col("vec_a") < col("vec_b"))
+        .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
+        .filter(col("cos") >= 0.4)
+        .select(col("vec_a"), col("vec_b"), col("cos"))
+      val found = lshVerifiedPairs(s, d)
+        .select(col("vec_a"), col("vec_b"), lit(1L).as("hit"))
+      truth.join(found, Seq("vec_a", "vec_b"), "left")
+        .groupBy(when(col("cos") < 0.6, "c04_06")
+          .when(col("cos") < 0.8, "c06_08")
+          .otherwise("c08_10").as("bucket"))
+        .agg(count(lit(1)).as("n_true"),
+          sum(coalesce(col("hit"), lit(0L))).as("n_found"))
+        .withColumn("recall",
+          col("n_found").cast("double") / col("n_true"))
+        .orderBy(col("bucket"))
     })
   )
 
@@ -2253,7 +2380,115 @@ object Similarity {
            ${Parity.davgSql("CAST(c.ham AS DOUBLE)")} AS mean_hamming,
            ${Parity.davgSql("c.cos_full")} AS mean_cos_chosen
          FROM chosen c JOIN full_top f USING (vec_id)
+         GROUP BY 1 ORDER BY 1""",
+
+    // same oracle as the brute-force ranking — the sketch path must be
+    // indistinguishable from it
+    "e04_ann_topk_partial" ->
+      """SELECT vec_id, CAST(rank AS INT) AS rank, neighbor_id, cos FROM (
+           SELECT a.vec_id, b.vec_id AS neighbor_id,
+                  list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                                   CAST(b.embedding AS DOUBLE[])) /
+                  (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                                         CAST(a.embedding AS DOUBLE[]))) *
+                   SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]),
+                                         CAST(b.embedding AS DOUBLE[]))))
+                    AS cos,
+                  ROW_NUMBER() OVER (PARTITION BY a.vec_id
+                    ORDER BY list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                                   CAST(b.embedding AS DOUBLE[])) /
+                  (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                                         CAST(a.embedding AS DOUBLE[]))) *
+                   SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]),
+                                         CAST(b.embedding AS DOUBLE[]))))
+                      DESC, b.vec_id) AS rank
+           FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id) t
+         WHERE rank <= 3 ORDER BY vec_id, rank""",
+
+    "e05_lsh_cosine_pairs" -> {
+      val cosExpr =
+        """list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                            CAST(b.embedding AS DOUBLE[])) /
+           (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                                  CAST(a.embedding AS DOUBLE[]))) *
+            SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]),
+                                  CAST(b.embedding AS DOUBLE[]))))"""
+      s"""WITH sgn AS (
+           SELECT j, list_transform(generate_series(0, ${Dims - 1}), i ->
+             CASE WHEN substring(md5('hp-' || j || '-' || i), 1, 1) < '8'
+                  THEN 1.0 ELSE -1.0 END) AS sv
+           FROM UNNEST(generate_series(0, ${NPlanes - 1})) AS tj(j)),
+         bits AS (
+           SELECT e.vec_id, s.j,
+             CASE WHEN list_dot_product(CAST(e.embedding AS DOUBLE[]), s.sv)
+                       >= 0 THEN 1 ELSE 0 END AS b
+           FROM embeddings e CROSS JOIN sgn s),
+         bands AS (
+           SELECT vec_id, j // $BandRows AS band,
+                  SUM(b * (1 << (j % $BandRows))) AS bv
+           FROM bits GROUP BY vec_id, j // $BandRows),
+         cand AS (
+           SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
+           FROM bands x JOIN bands y
+             ON x.band = y.band AND x.bv = y.bv AND x.vec_id < y.vec_id)
+         SELECT c.vec_a, c.vec_b, $cosExpr AS cos
+         FROM cand c
+         JOIN embeddings a ON a.vec_id = c.vec_a
+         JOIN embeddings b ON b.vec_id = c.vec_b
+         WHERE $cosExpr >= 0.4
+         ORDER BY vec_a, vec_b"""
+    },
+
+    // e05's sign/band/candidate chain as the found side, the exhaustive
+    // cosine scan as truth; n_found cast to BIGINT (SUM-int rule)
+    "e21_lsh_recall" -> {
+      val cosExpr =
+        """list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                            CAST(b.embedding AS DOUBLE[])) /
+           (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                                  CAST(a.embedding AS DOUBLE[]))) *
+            SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]),
+                                  CAST(b.embedding AS DOUBLE[]))))"""
+      s"""WITH sgn AS (
+           SELECT j, list_transform(generate_series(0, ${Dims - 1}), i ->
+             CASE WHEN substring(md5('hp-' || j || '-' || i), 1, 1) < '8'
+                  THEN 1.0 ELSE -1.0 END) AS sv
+           FROM UNNEST(generate_series(0, ${NPlanes - 1})) AS tj(j)),
+         bits AS (
+           SELECT e.vec_id, s.j,
+             CASE WHEN list_dot_product(CAST(e.embedding AS DOUBLE[]), s.sv)
+                       >= 0 THEN 1 ELSE 0 END AS b
+           FROM embeddings e CROSS JOIN sgn s),
+         bands AS (
+           SELECT vec_id, j // $BandRows AS band,
+                  SUM(b * (1 << (j % $BandRows))) AS bv
+           FROM bits GROUP BY vec_id, j // $BandRows),
+         cand AS (
+           SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
+           FROM bands x JOIN bands y
+             ON x.band = y.band AND x.bv = y.bv AND x.vec_id < y.vec_id),
+         found AS (
+           SELECT c.vec_a, c.vec_b
+           FROM cand c
+           JOIN embeddings a ON a.vec_id = c.vec_a
+           JOIN embeddings b ON b.vec_id = c.vec_b
+           WHERE $cosExpr >= 0.4),
+         truth AS (
+           SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, $cosExpr AS cos
+           FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+           WHERE $cosExpr >= 0.4)
+         SELECT CASE WHEN t.cos < 0.6 THEN 'c04_06'
+                     WHEN t.cos < 0.8 THEN 'c06_08'
+                     ELSE 'c08_10' END AS bucket,
+                COUNT(*) AS n_true,
+                CAST(SUM(CASE WHEN f.vec_a IS NOT NULL THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_found,
+                CAST(CAST(SUM(CASE WHEN f.vec_a IS NOT NULL THEN 1 ELSE 0
+                  END) AS BIGINT) AS DOUBLE) / COUNT(*) AS recall
+         FROM truth t LEFT JOIN found f
+           ON t.vec_a = f.vec_a AND t.vec_b = f.vec_b
          GROUP BY 1 ORDER BY 1"""
+    }
   )
 
   /** e31's per-subspace argmin-encode over CTE `vsub` against codebook

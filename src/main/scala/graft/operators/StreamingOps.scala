@@ -20,7 +20,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * (main/consumer/ConsumerWorker.scala:202-548) re-expressed as
   * `mapGroupsWithState`.
   */
-object StreamingOps {
+object StreamingOps extends OperatorFamily {
   import Parity._
 
   /** Typed row for the stateful sessionization (q44). */
@@ -550,7 +550,7 @@ object StreamingOps {
     * (c, brand) pair is dropped by the ownership check, so the counts
     * are exactly-once under at-least-once replay. Summing the deltas
     * reproduces the batch `nPer`/`co` frames exactly;
-    * [[Extended16.itemCfScoresFromCounts]] then scores them with the
+    * [[Graph.itemCfScoresFromCounts]] then scores them with the
     * identical integer expressions — batch == stream bit-for-bit
     * (pinned in StatefulStreamSpec). In-batch arrivals fold in sorted
     * brand order so emission is deterministic.
@@ -584,7 +584,7 @@ object StreamingOps {
     * "adj" delta (the z→n adjacency row) plus one "wedge" delta
     * (a, b, z) per existing neighbor (a < b); duplicates drop on the
     * neighbor-set check. The accumulated wedges + adjacency rows feed
-    * [[Extended16.linkPredictionFromWedges]] — degrees and the
+    * [[Graph.linkPredictionFromWedges]] — degrees and the
     * non-adjacency anti-join come from the SAME accumulated frames,
     * so RA uses final degrees exactly as the batch surface does
     * (batch == stream bit-for-bit, pinned in StatefulStreamSpec).
@@ -621,7 +621,7 @@ object StreamingOps {
     * UPDATED (yv = whole thousands of dollars, xv = order count) row;
     * per week both values are monotone, so max-per-week of the
     * emitted rows IS the batch weeklyPair frame in exact integers —
-    * [[Extended17.grangerFromWeekly]] then scores the streamed
+    * [[Forecasting.grangerFromWeekly]] then scores the streamed
     * carrier bit-for-bit equal to the batch q200
     * (StatefulStreamSpec).
     */

@@ -1,8 +1,10 @@
 package graft.operators
 
-import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
+import graft.{Parity, Tables}
 import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Text-analysis operators for training-data pipelines over `documents`:
@@ -11,7 +13,7 @@ import graft.functions.HashFunctions.md5Hash60Sql
   * column expressions (whole-stage codegen, no UDFs), each with a DuckDB
   * twin computing the identical arithmetic.
   */
-object TextOps {
+object TextOps extends OperatorFamily {
 
   private val stopEn = Seq("the", "and", "of", "to", "a", "in", "is")
   private val markers = Map(
@@ -101,6 +103,108 @@ object TextOps {
       .withColumn("flag_repetitive", col("dup_frac") > 0.2)
       .select(Seq(col("doc_id"), col("n_grams"), col("n_dup_pos"),
         col("dup_frac"), col("flag_repetitive")) ++ keep: _*)
+  /** Per-document continuous score + binary repetition label, in ONE
+    * documents scan: score = distinct-token ratio (t02's
+    * `distinct_ratio` surface), label = "no repeated trigram position"
+    * (q144's rater b, from [[TextOps.repetitionStats]]). Extra screen
+    * columns for q172/q173 ride the same projection via
+    * [[TextOps.repetitionStatsKeeping]]. */
+  private def scoredDocs(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+      .withColumn("words", split(trim(col("text")), " "))
+      .withColumn("s",
+        size(array_distinct(col("words"))).cast("double") /
+          size(col("words")))
+      .withColumn("a", TextOps.qualityOkCol(col("words")))
+      .withColumn("c_len",
+        size(col("words")) >= 30 && size(col("words")) <= 120)
+    TextOps.repetitionStatsKeeping(docs,
+        col("s"), col("a"), col("c_len"))
+      .select(col("doc_id"), col("s"), col("a"), col("c_len"),
+        (col("n_dup_pos") === 0).as("b"))
+  }
+
+  /** DuckDB twin of [[TextOps.repetitionStats]]' repeated-trigram
+    * count over a CTE `w(doc_id, words)`: CTEs `g`, `c`, `dup`
+    * (doc_id, n_dup) — docs without a repeat have no `dup` row. */
+  private[operators] val repetitionSql =
+    """g AS (SELECT doc_id,
+      |    UNNEST(list_transform(
+      |      generate_series(1, GREATEST(LEN(words) - 2, 0)),
+      |      i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))
+      |      AS gram
+      |  FROM w),
+      |  c AS (SELECT doc_id, gram, COUNT(1) AS cnt FROM g
+      |    GROUP BY doc_id, gram),
+      |  dup AS (SELECT doc_id,
+      |    CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT)
+      |      AS n_dup
+      |  FROM c GROUP BY doc_id)""".stripMargin
+
+  /** Shared oracle CTE prefix: per-doc score s, screens a/c_len, and
+    * the repetition label b, mirroring [[scoredDocs]]. */
+  private val docCte =
+    s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
+      |    AS words FROM documents),
+      |  sc AS (SELECT doc_id,
+      |    CAST(LEN(list_distinct(words)) AS DOUBLE) / LEN(words) AS s,
+      |    (LEN(words) >= 10 AND
+      |     CAST(LEN(list_distinct(words)) AS DOUBLE) / LEN(words)
+      |       >= 0.5 AND
+      |     CAST(LEN(list_filter(words, x -> x IN
+      |       ('the', 'and', 'of', 'to', 'a', 'in', 'is'))) AS DOUBLE)
+      |       / LEN(words) <= 0.4) AS a,
+      |    LEN(words) >= 30 AND LEN(words) <= 120 AS c_len
+      |  FROM w),
+      |  $repetitionSql,
+      |  lab AS (SELECT sc.doc_id, sc.s, sc.a, sc.c_len,
+      |    COALESCE(dup.n_dup, 0) = 0 AS b
+      |  FROM sc LEFT JOIN dup USING (doc_id))""".stripMargin
+
+  /** The 2×2 agreement table of two boolean raters `a`, `b`
+    * (n11, n10, n01, n00, n) — q144's kappa and q172's McNemar. */
+  private[operators] def agreementCells(rated: DataFrame): DataFrame =
+    rated
+      .agg(
+        sum(when(col("a") && col("b"), 1L).otherwise(0L)).as("n11"),
+        sum(when(col("a") && !col("b"), 1L).otherwise(0L)).as("n10"),
+        sum(when(!col("a") && col("b"), 1L).otherwise(0L)).as("n01"),
+        sum(when(!col("a") && !col("b"), 1L).otherwise(0L)).as("n00"))
+      .withColumn("n",
+        col("n11") + col("n10") + col("n01") + col("n00"))
+
+  /** DuckDB twin of [[agreementCells]] over the rows of `from`: CTE
+    * `cells`. */
+  private[operators] def agreementCellsSql(from: String): String =
+    s"""cells AS (SELECT
+       |    CAST(SUM(CASE WHEN a AND b THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS n11,
+       |    CAST(SUM(CASE WHEN a AND NOT b THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS n10,
+       |    CAST(SUM(CASE WHEN NOT a AND b THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS n01,
+       |    CAST(SUM(CASE WHEN NOT a AND NOT b THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS n00
+       |  FROM $from)""".stripMargin
+
+  /** Per-document (bin, train, rep) rows of the q180/q182 calibration
+    * screens: token-count bin (20-token steps, capped at 5), the even
+    * doc_id training split, and the repeated-trigram label. */
+  private def calibrationDocs(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+      .withColumn("words", split(trim(col("text")), " "))
+      .withColumn("n_tok", size(col("words")))
+      .withColumn("train", col("doc_id") % 2 === 0)
+    TextOps.repetitionStatsKeeping(docs, col("n_tok"), col("train"))
+      .select(col("n_tok"), col("train"),
+        (col("n_dup_pos") > 0).as("rep"))
+      .withColumn("bin",
+        least(expr("CAST(n_tok AS BIGINT) div 20"), lit(5L)))
+  }
+
+  private val bucketHashSql =
+    s"""${md5Hash60Sql("'shard|' || CAST(doc_id AS VARCHAR)")} % 16"""
+
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Whitespace + regex ("BPE-ish") token counting, distinct-token ratio.
@@ -1132,6 +1236,581 @@ object TextOps {
           (least(col("e.vocab_size"), col("n_types")).cast("double") /
             col("n_types").cast("double")).as("type_coverage"))
         .orderBy(col("vocab_size"))
+    }),
+
+    // COHEN'S KAPPA between two quality screens — chance-corrected
+    // agreement between t02's composite document score (rater A:
+    // quality == 'ok') and the trigram-repetition screen (rater B: no
+    // repeated word-3-gram, i.e. t11's n_dup_pos == 0), composed from
+    // those operators' own library surfaces rather than re-derived.
+    // The instructive outcome on this corpus is the UNMASKING: raw
+    // agreement p_o ≈ 0.48 looks like the screens back each other up,
+    // but kappa ≈ 0.07 says the overlap is almost entirely chance —
+    // the two filters measure different things (type diversity vs
+    // local repetition) and neither subsumes the other, which is
+    // exactly what a curator needs to know before dropping one. All
+    // four confusion cells are populated at every SF (q108 rule
+    // pre-verified). Kappa is computed as ONE division of exact longs
+    // — numerator n·(n11+n00) − Σ marginal products, denominator n² −
+    // Σ marginal products — so cross-engine equality needs no
+    // operation-sequence care beyond the two display ratios. Scale
+    // shape: both raters are doc-local map work; the join is keyed by
+    // doc_id; the confusion matrix partial-aggregates to one row.
+    "q144_cohens_kappa" -> ((s, d) => {
+      val a = TextOps.queries("t02_quality_score")(s, d)
+        .select(col("doc_id"), (col("quality") === "ok").as("a"))
+      val b = TextOps.repetitionStats(Tables.documents(s, d))
+        .select(col("doc_id"), (col("n_dup_pos") === 0).as("b"))
+      agreementCells(a.join(b, "doc_id"))
+        .withColumn("expsum",
+          (col("n11") + col("n10")) * (col("n11") + col("n01")) +
+            (col("n01") + col("n00")) * (col("n10") + col("n00")))
+        .select(col("n11"), col("n10"), col("n01"), col("n00"), col("n"),
+          ((col("n11") + col("n00")).cast("double") /
+            col("n").cast("double")).as("p_observed"),
+          (col("expsum").cast("double") / col("n").cast("double") /
+            col("n").cast("double")).as("p_expected"),
+          ((col("n") * (col("n11") + col("n00")) - col("expsum"))
+            .cast("double") /
+            (col("n") * col("n") - col("expsum")).cast("double"))
+            .as("kappa"))
+    }),
+
+    // ROC AUC — the threshold-free quality-score evaluation: how well
+    // does the continuous distinct-token ratio rank clean documents
+    // (no repeated trigram) above repetitive ones? AUC is computed
+    // from exact rank sums, NOT a pair join: group the scores into a
+    // value grid, one cumulative window for below-counts, carry
+    // 2·midrank = 2·below + ties + 1 as exact longs (the q134
+    // machinery), then AUC = (Σ2R₁ − n₁(n₁+1)) / (2·n₁·n₀) — a single
+    // division of exact longs, identical on both engines. AUC here is
+    // literally U/(n₁n₀): the probability a random clean doc outscores
+    // a random repetitive one (≈ 0.75–0.78 at every gate SF — the
+    // score works, pre-verified). rank_biserial = 2·AUC − 1 is the
+    // same rationals re-expressed as a correlation. Scale shape: one
+    // documents scan, one grid exchange keyed by score value, windows
+    // over the grid (bounded by distinct ratios, not rows), one row
+    // out. Never O(n²) — the pair interpretation is computed without
+    // materializing pairs.
+    "q171_roc_auc" -> ((s, d) => {
+      val grid = scoredDocs(s, d)
+        .groupBy(col("s"))
+        .agg(sum(when(col("b"), 1L).otherwise(0L)).as("c1"),
+          sum(when(!col("b"), 1L).otherwise(0L)).as("c0"))
+        .withColumn("t", col("c1") + col("c0"))
+      val wBelow = Window.orderBy(col("s"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      grid
+        .withColumn("below",
+          coalesce(sum(col("t")).over(wBelow), lit(0L)))
+        .withColumn("r2", lit(2L) * col("below") + col("t") + 1L)
+        .agg(sum(col("c1")).as("n_pos"), sum(col("c0")).as("n_neg"),
+          sum(col("c1") * col("r2")).as("ra2"))
+        .withColumn("auc",
+          (col("ra2") - col("n_pos") * (col("n_pos") + 1L))
+            .cast("double") /
+            (lit(2.0) * col("n_pos").cast("double") *
+              col("n_neg").cast("double")))
+        .withColumn("rank_biserial", lit(2.0) * col("auc") - 1.0)
+        .select(col("n_pos"), col("n_neg"), col("ra2"), col("auc"),
+          col("rank_biserial"))
+    }),
+
+    // McNEMAR'S TEST — are q144's two quality raters (t02 "ok" screen
+    // vs t11's zero-repeated-trigram screen) wrong about DIFFERENT
+    // documents, or does one systematically fail docs the other
+    // passes? Kappa (q144) measures agreement strength; McNemar tests
+    // the DIRECTION of the disagreement: only the discordant cells
+    // n10/n01 matter, and on this corpus they are wildly asymmetric
+    // (2 vs 256 at sf0.01 — the trigram screen passes hundreds of
+    // docs the stopword/distinct screen rejects; χ² ≈ 248,
+    // pre-verified at every gate SF). Continuity-corrected statistic
+    // (|n10 − n01| − 1)² / (n10 + n01): exact longs, ONE division.
+    // Scale shape: one documents scan, map-side partial aggregation to
+    // a single 4-cell row — no exchange carries more than the cells.
+    "q172_mcnemar_screens" -> ((s, d) => {
+      agreementCells(scoredDocs(s, d))
+        .withColumn("chi2_cc",
+          when(col("n10") + col("n01") === 0L, lit(null))
+            .otherwise(
+              ((abs(col("n10") - col("n01")) - 1L) *
+                (abs(col("n10") - col("n01")) - 1L)).cast("double") /
+                (col("n10") + col("n01")).cast("double")))
+        .withColumn("reject_95", col("chi2_cc") > 3.841458820694124)
+        .select(col("n11"), col("n10"), col("n01"), col("n00"),
+          col("n"), col("chi2_cc"), col("reject_95"))
+    }),
+
+    // COCHRAN'S Q — McNemar generalized to k = 3 paired screens: t02's
+    // "ok" rater, t11's zero-repeated-trigram rater, and the
+    // Gopher-style token-count window (30–120 words). Do the three
+    // screens pass the same fraction of documents? Q = (k−1)(k·ΣCⱼ² −
+    // T²)/(k·T − ΣRᵢ²) assembles entirely from exact longs (column
+    // totals Cⱼ, per-doc row sums Rᵢ ∈ {0..3}) — ONE division, df = 2.
+    // Pass rates 219/473/394 of 500 at sf0.01 → Q ≈ 261, rejecting at
+    // every gate SF (pre-verified): the screens measure genuinely
+    // different things, which is exactly why the pipeline composes
+    // them. Scale shape: one documents scan; the row-sum powers
+    // partial-aggregate map-side to one row.
+    "q173_cochran_q" -> ((s, d) => {
+      val ri = scoredDocs(s, d)
+        .select(col("a"), col("b"), col("c_len"),
+          (when(col("a"), 1L).otherwise(0L) +
+            when(col("b"), 1L).otherwise(0L) +
+            when(col("c_len"), 1L).otherwise(0L)).as("ri"))
+      ri.agg(
+          sum(when(col("a"), 1L).otherwise(0L)).as("c_quality"),
+          sum(when(col("b"), 1L).otherwise(0L)).as("c_norep"),
+          sum(when(col("c_len"), 1L).otherwise(0L)).as("c_length"),
+          count(lit(1)).as("n"),
+          sum(col("ri")).as("t_succ"),
+          sum(col("ri") * col("ri")).as("r2_sum"))
+        .withColumn("q_stat",
+          when(lit(3L) * col("t_succ") - col("r2_sum") === 0L,
+            lit(null))
+            .otherwise(
+              (lit(2L) * (lit(3L) *
+                (col("c_quality") * col("c_quality") +
+                  col("c_norep") * col("c_norep") +
+                  col("c_length") * col("c_length")) -
+                col("t_succ") * col("t_succ"))).cast("double") /
+                (lit(3L) * col("t_succ") - col("r2_sum"))
+                  .cast("double")))
+        .withColumn("reject_95", col("q_stat") > 5.991464547107979)
+        .select(col("c_quality"), col("c_norep"), col("c_length"),
+          col("n"), col("t_succ"), col("r2_sum"), col("q_stat"),
+          col("reject_95"))
+    }),
+
+    // OUT-OF-SAMPLE CALIBRATION (reliability diagram) — does a rate
+    // predictor TRAINED on one half of the corpus hold on the other?
+    // The predictor is the repetition base rate per 20-token length
+    // bin (repetition rises with length: ~0% under 20 tokens to ~16%
+    // past 80 — real structure, pre-verified); the split is the
+    // deterministic doc_id parity (leakage-safe by construction: a
+    // doc is in exactly one side). Per bin: train rate p̂, eval rate,
+    // and the calibration gap — each a single division of exact
+    // longs; no cross-bin float sum exists to sequence (the diagram
+    // IS the deliverable, per-bin rows). Empty-side bins surface as
+    // NULL rates, not silent drops. Scale shape: one documents scan,
+    // map-side partial aggregation to ≤6 bin rows.
+    "q180_calibration_oos" -> ((s, d) => {
+      calibrationDocs(s, d)
+        .groupBy(col("bin"))
+        .agg(
+          sum(when(col("train"), 1L).otherwise(0L)).as("n_train"),
+          sum(when(col("train") && col("rep"), 1L).otherwise(0L))
+            .as("c_train"),
+          sum(when(!col("train"), 1L).otherwise(0L)).as("n_eval"),
+          sum(when(!col("train") && col("rep"), 1L).otherwise(0L))
+            .as("c_eval"))
+        .withColumn("p_train",
+          when(col("n_train") === 0L, lit(null))
+            .otherwise(col("c_train").cast("double") /
+              col("n_train").cast("double")))
+        .withColumn("p_eval",
+          when(col("n_eval") === 0L, lit(null))
+            .otherwise(col("c_eval").cast("double") /
+              col("n_eval").cast("double")))
+        .withColumn("gap", col("p_eval") - col("p_train"))
+        .select(col("bin"), col("n_train"), col("c_train"),
+          col("p_train"), col("n_eval"), col("c_eval"), col("p_eval"),
+          col("gap"))
+        .orderBy(col("bin"))
+    }),
+
+    // ISOTONIC (PAV) CALIBRATION — the monotone repair of q180's raw
+    // rate predictor: repetition probability should not DECREASE with
+    // length, but the raw train rates do dip (bin 0 > bin 1 at
+    // sf0.01 — pre-verified, so the pooling genuinely fires). The fit
+    // is the exact pool-adjacent-violators solution via its minimax
+    // characterization f(i) = max_{j≤i} min_{k≥i} rate(j..k), with
+    // every interval rate a single division of exact count sums —
+    // identical doubles on both engines, and the max/min lattice
+    // needs no iteration. Scale shape: one documents scan collapses
+    // to ≤6 weighted bins; the interval enumeration and the (i, j, k)
+    // lattice are 6×21-bounded broadcast non-equi joins over those
+    // bins (PlanLint-allowlisted, the q136 class) — constant-size at
+    // ANY data scale.
+    "q181_isotonic_calibration" -> ((s, d) => {
+      val docs = Tables.documents(s, d)
+        .withColumn("words", split(trim(col("text")), " "))
+        .withColumn("n_tok", size(col("words")))
+        .filter(col("doc_id") % 2 === 0) // the q180 train split
+      // the 6-row bin frame feeds the interval enumeration 3x — cut
+      // it so the documents scan runs once (ScanAudit)
+      val bins = Materialize.LocalCheckpoint(
+        TextOps.repetitionStatsKeeping(docs, col("n_tok"))
+          .select(col("n_tok"), (col("n_dup_pos") > 0).as("rep"))
+          .withColumn("bin",
+            least(expr("CAST(n_tok AS BIGINT) div 20"), lit(5L)))
+          .groupBy(col("bin"))
+          .agg(count(lit(1)).as("n"),
+            sum(when(col("rep"), 1L).otherwise(0L)).as("c")))
+      val iv = bins.select(col("bin").as("j")).join(
+          bins.select(col("bin").as("k")), col("j") <= col("k"))
+        .join(bins.select(col("bin").as("m"), col("n"), col("c")),
+          col("m") >= col("j") && col("m") <= col("k"))
+        .groupBy(col("j"), col("k"))
+        .agg((sum(col("c")).cast("double") /
+          sum(col("n")).cast("double")).as("rate"))
+      bins.join(iv, col("j") <= col("bin") && col("k") >= col("bin"))
+        .groupBy(col("bin"), col("n"), col("c"), col("j"))
+        .agg(min(col("rate")).as("min_rate"))
+        .groupBy(col("bin"), col("n"), col("c"))
+        .agg(max(col("min_rate")).as("p_isotonic"))
+        .withColumn("p_raw",
+          col("c").cast("double") / col("n").cast("double"))
+        .select(col("bin"), col("n"), col("c"), col("p_raw"),
+          col("p_isotonic"))
+        .orderBy(col("bin"))
+    }),
+
+    // HOSMER–LEMESHOW TEST — the formal closure of the calibration
+    // arc: does q181's isotonic fit (trained on even doc_ids) survive
+    // the held-out odd half? HL = Σ_bins (c_ev − n_ev·p̂)² /
+    // (n_ev·p̂·(1−p̂)) with p̂ the isotonic rate (never 0 or 1 on this
+    // corpus — raw rates have a zero bin, which is exactly why the
+    // pooled fit is the testable one). Each bin term is a short
+    // identical-sequence double expression over exact longs; the
+    // cross-bin sum is an explicit LEFT FOLD over the bin-ordered
+    // term list (the q133/q174 idiom — ≤6 rationals-of-integers, not
+    // decimal-summable). df = bins − 2 by convention; the χ² critical
+    // value rides a hardcoded literal per df (the q156 stance).
+    // Scale shape: everything downstream of the ≤6-bin lattice is
+    // constant-size; ONE documents scan feeds both splits.
+    "q182_hosmer_lemeshow" -> ((s, d) => {
+      val bins = Materialize.LocalCheckpoint(
+        calibrationDocs(s, d)
+          .groupBy(col("bin"))
+          .agg(
+            sum(when(col("train"), 1L).otherwise(0L)).as("n"),
+            sum(when(col("train") && col("rep"), 1L).otherwise(0L))
+              .as("c"),
+            sum(when(!col("train"), 1L).otherwise(0L)).as("n_ev"),
+            sum(when(!col("train") && col("rep"), 1L).otherwise(0L))
+              .as("c_ev")))
+      // match q181 by construction: its bin frame is built from the
+      // train split only, so a bin holding ONLY eval docs (n = 0)
+      // does not exist there — drop such bins before the interval
+      // enumeration (they would otherwise inject 0/0 NaN rates into
+      // the min/max lattice) and from the fit itself
+      val tbins = bins.filter(col("n") > 0L)
+      val iv = tbins.select(col("bin").as("j")).join(
+          tbins.select(col("bin").as("k")), col("j") <= col("k"))
+        .join(tbins.select(col("bin").as("m"), col("n"), col("c")),
+          col("m") >= col("j") && col("m") <= col("k"))
+        .groupBy(col("j"), col("k"))
+        .agg((sum(col("c")).cast("double") /
+          sum(col("n")).cast("double")).as("rate"))
+      val fit = tbins
+        .join(iv, col("j") <= col("bin") && col("k") >= col("bin"))
+        .groupBy(col("bin"), col("n_ev"), col("c_ev"), col("j"))
+        .agg(min(col("rate")).as("min_rate"))
+        .groupBy(col("bin"), col("n_ev"), col("c_ev"))
+        .agg(max(col("min_rate")).as("p_iso"))
+        // HL is defined over informative bins: a fitted rate of
+        // exactly 0/1 (possible when a prefix block is all-clean, as
+        // at sf0.001) or an empty eval side contributes no
+        // information — those bins drop from the sum and the df,
+        // surfaced via n_bins (the merged-bin convention,
+        // deterministically)
+        .filter(col("p_iso") > 0.0 && col("p_iso") < 1.0 &&
+          col("n_ev") > 0L)
+        .withColumn("term",
+          (col("c_ev").cast("double") -
+            col("n_ev").cast("double") * col("p_iso")) *
+            (col("c_ev").cast("double") -
+              col("n_ev").cast("double") * col("p_iso")) /
+            (col("n_ev").cast("double") * col("p_iso") *
+              (lit(1.0) - col("p_iso"))))
+      val lst = fit.agg(sort_array(collect_list(
+        struct(col("bin"), col("term")))).as("lst"),
+        count(lit(1)).as("n_bins"))
+      lst.select(col("n_bins"),
+          expr("aggregate(transform(lst, s -> s.term), " +
+            "CAST(0.0 AS DOUBLE), (a, x) -> a + x)").as("hl_stat"))
+        .withColumn("df", col("n_bins") - 2L)
+        // chi2 .95 quantiles, df 1..8; NULL outside that range — a
+        // degenerate corpus can leave ≤2 informative bins (df ≤ 0),
+        // where element_at would throw (index 0) or index from the
+        // array end (negative), and >8 has no tabulated quantile
+        .withColumn("reject_95",
+          when(col("df") >= 1L && col("df") <= 8L,
+            col("hl_stat") > element_at(array(
+              lit(3.841458820694124), lit(5.991464547107979),
+              lit(7.814727903251179), lit(9.487729036781154),
+              lit(11.070497693516351), lit(12.591587243743977),
+              lit(14.067140449340169), lit(15.50731305586545)),
+              col("df").cast("int")))
+            .otherwise(lit(null).cast("boolean")))
+        .select(col("n_bins"), col("df"), col("hl_stat"),
+          col("reject_95"))
+    }),
+
+    // Character trigram corpus profile (language-ID style fingerprint):
+    // top-20 trigrams by frequency. The scan uses the codegen'd
+    // packed_trigrams expression — one long per trigram instead of one
+    // string allocation, so the partial aggregate runs on fixed-width
+    // keys; UTF-8 order == code-point order, so ordering by the packed
+    // long IS ordering by the trigram string, and only the final 20
+    // rows are decoded back.
+    "t05_char_ngram_profile" -> ((s, d) => {
+      val unpack = udf((l: Long) => graft.functions.PackedTrigrams.unpack(l))
+      Tables.documents(s, d)
+        .filter(length(col("text")) >= 3)
+        .select(explode(
+          graft.functions.TextFunctions.packedTrigrams(col("text")))
+          .as("tri_p"))
+        .groupBy(col("tri_p")).agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("tri_p"))
+        .limit(20)
+        .select(unpack(col("tri_p")).as("tri"), col("n"))
+        .orderBy(col("n").desc, col("tri"))
+    }),
+
+    // Deterministic corpus SHARDING: every document assigned to one of
+    // 16 training shards by portable 60-bit md5 bucket (t08's hash
+    // idiom) — the "global shuffle" that precedes shard writing in a
+    // training-data pipeline, done as a hash assignment so it is
+    // stable across runs/partitionings/engines AND embarrassingly
+    // parallel (no global sort; a sort-by-random-key reaches the same
+    // unbiasedness only through a full-corpus range exchange). The
+    // report is the per-shard balance audit a pipeline reads before
+    // writing: doc count, token count, byte count per shard. Scale:
+    // hash + token count are in-row map work; the aggregate is
+    // 16 rows; writing the shards themselves is then
+    // `.write.partitionBy(shard)` with no further exchange.
+    "t24_corpus_shards" -> ((s, d) => {
+      val h = conv(substring(
+        md5(encode(concat(lit("shard|"), col("doc_id").cast("string")),
+          "UTF-8")), 1, 15), 16, 10).cast("long")
+      Tables.documents(s, d)
+        .withColumn("shard", pmod(h, lit(16L)).cast("int"))
+        .withColumn("toks",
+          size(split(trim(col("text")), " ")).cast("long"))
+        .groupBy(col("shard"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("toks")).as("n_tokens"),
+          sum(col("n_chars")).as("n_chars"))
+        .orderBy(col("shard"))
+    }),
+
+    // LEXICAL DIVERSITY per document: type-token ratio, hapax ratio
+    // (share of within-doc vocabulary used exactly once), and mean
+    // token length — the vocabulary-richness screen next to t23's
+    // entropy (TTR catches low-diversity docs linearly; hapax ratio
+    // separates natural prose, rich in one-off words, from template
+    // text that reuses a fixed vocabulary). Scale: entirely doc-local —
+    // the (doc, term) aggregate's exchange is doc_id-prefixed, the
+    // per-doc rollup groups on doc_id, all counters are exact integers
+    // until the three final divisions.
+    "t25_lexical_diversity" -> ((s, d) => {
+      val tf = Tables.documents(s, d)
+        .select(col("doc_id"),
+          explode(split(trim(col("text")), " ")).as("term"))
+        .groupBy(col("doc_id"), col("term"))
+        .agg(count(lit(1)).as("freq"))
+        .withColumn("tlen", length(col("term")))
+      tf.groupBy(col("doc_id"))
+        .agg(sum(col("freq")).as("n_tokens"),
+          count(lit(1)).as("n_types"),
+          sum(when(col("freq") === 1, 1L).otherwise(0L)).as("n_hapax"),
+          sum(col("tlen") * col("freq")).as("char_sum"))
+        .select(col("doc_id"), col("n_tokens"), col("n_types"),
+          (col("n_types").cast("double") / col("n_tokens").cast("double"))
+            .as("ttr"),
+          (col("n_hapax").cast("double") / col("n_types").cast("double"))
+            .as("hapax_ratio"),
+          (col("char_sum").cast("double") / col("n_tokens").cast("double"))
+            .as("mean_token_len"))
+        .orderBy(col("doc_id"))
+    }),
+
+    // Corpus LENGTH-profile histogram: per (source, token-length
+    // bucket) doc and token counts plus each bucket's share of its
+    // source's token mass — the corpus-composition table read before
+    // setting t10's quality thresholds or t12's chunk width (a source
+    // whose mass sits in the shortest bucket needs different handling
+    // than one dominated by long docs). Scale: token counts are in-row
+    // map work; the aggregate is |sources| × 4 rows and the share
+    // window runs over that tiny frame, never the corpus.
+    "t26_length_histogram" -> ((s, d) => {
+      import org.apache.spark.sql.expressions.Window
+      val t = Tables.documents(s, d)
+        .select(col("source"),
+          size(split(trim(col("text")), " ")).cast("long").as("toks"))
+        .withColumn("len_bucket",
+          when(col("toks") <= 25, "b1_le25")
+            .when(col("toks") <= 50, "b2_le50")
+            .when(col("toks") <= 75, "b3_le75")
+            .otherwise("b4_gt75"))
+      val agg = t.groupBy(col("source"), col("len_bucket"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("n_tokens"))
+      agg.withColumn("token_share",
+          col("n_tokens").cast("double")
+            / sum(col("n_tokens")).over(Window.partitionBy(col("source")))
+              .cast("double"))
+        .orderBy(col("source"), col("len_bucket"))
+    }),
+
+    // FLESCH READABILITY profile per source: per-doc reading-ease from
+    // three regex counts (alphabetic-run words, [.!?]+ sentence ends
+    // with a floor of 1, vowel-group syllables — the standard cheap
+    // approximation), banded easy/standard/hard, plus a corpus-level
+    // score from the SUMMED integer counts (never an average of
+    // per-doc doubles — that would be order-dependent). Per-doc flesch
+    // is one shared-structure double expression over three exact ints,
+    // so both engines band identically. Scale shape: the three counts
+    // are codegen'd row-local regex scans (one pass each over the
+    // text), partial-agg to |sources| rows; nothing but 6 longs per
+    // source crosses the exchange.
+    "t34_readability" -> ((s, d) => {
+      val docs = Tables.documents(s, d)
+        .select(col("source"),
+          regexp_count(col("text"), lit("[A-Za-z]+")).as("w"),
+          greatest(lit(1),
+            regexp_count(col("text"), lit("[.!?]+"))).as("sen"),
+          regexp_count(lower(col("text")), lit("[aeiouy]+")).as("syl"))
+      val flesch = lit(206.835) -
+        lit(1.015) * (col("w").cast("double") / col("sen").cast("double")) -
+        lit(84.6) * (col("syl").cast("double") / col("w").cast("double"))
+      docs
+        .withColumn("f", when(col("w") > 0, flesch))
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(when(col("w") === 0, 1L).otherwise(0L)).as("n_empty"),
+          sum(when(col("f") >= 60.0, 1L).otherwise(0L)).as("n_easy"),
+          sum(when(col("f") >= 30.0 && col("f") < 60.0, 1L).otherwise(0L))
+            .as("n_standard"),
+          sum(when(col("f") < 30.0, 1L).otherwise(0L)).as("n_hard"),
+          sum(col("w").cast("long")).as("words"),
+          sum(col("sen").cast("long")).as("sentences"),
+          sum(col("syl").cast("long")).as("syllables"))
+        .withColumn("corpus_flesch",
+          lit(206.835) -
+            lit(1.015) * (col("words").cast("double") /
+              col("sentences").cast("double")) -
+            lit(84.6) * (col("syllables").cast("double") /
+              col("words").cast("double")))
+        .orderBy(col("source"))
+    }),
+
+    // DEDUP MIXTURE SHIFT — how exact dedup changes the TRAINING
+    // MIXTURE: per source, doc/token mass before vs after d01's
+    // keep-min-id exact dedup, each source's token share of the
+    // corpus on both sides, and the shift. d26 prices what dedup
+    // deletes; t14 weights the mixture — this is the bridge between
+    // them: a source that loses share here was inflating its presence
+    // with duplicates, and the post-dedup shares are what t14's
+    // target weights should be compared against. Integer carriers
+    // (doc/token counts) to the final share divisions; the totals
+    // ride a window over the |sources| frame. Scale shape: one
+    // fingerprint groupBy (16-byte keys — the d01 shape), one
+    // source-keyed rollup each side; text never shuffles.
+    "t35_dedup_mixture_shift" -> ((s, d) => {
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("source"),
+          size(split(trim(col("text")), " ")).cast("long").as("toks"),
+          md5(encode(col("text"), "UTF-8")).as("fp"))
+      val keep = docs.groupBy(col("fp"))
+        .agg(min(col("doc_id")).as("keep_id"))
+      val raw = docs.groupBy(col("source"))
+        .agg(count(lit(1)).as("n_raw"), sum(col("toks")).as("tok_raw"))
+      val kept = docs.join(keep,
+          docs("fp") === keep("fp") && docs("doc_id") === keep("keep_id"))
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_kept"), sum(col("toks")).as("tok_kept"))
+      val w = Window.partitionBy()
+      raw.join(kept, Seq("source"), "left")
+        .select(col("source"), col("n_raw"), col("tok_raw"),
+          coalesce(col("n_kept"), lit(0L)).as("n_kept"),
+          coalesce(col("tok_kept"), lit(0L)).as("tok_kept"))
+        .withColumn("trw", sum(col("tok_raw")).over(w))
+        .withColumn("tkp", sum(col("tok_kept")).over(w))
+        .select(col("source"), col("n_raw"), col("n_kept"),
+          col("tok_raw"), col("tok_kept"),
+          (col("tok_raw").cast("double") / col("trw").cast("double"))
+            .as("share_raw"),
+          (col("tok_kept").cast("double") / col("tkp").cast("double"))
+            .as("share_kept"),
+          (col("tok_kept").cast("double") / col("tkp").cast("double") -
+            col("tok_raw").cast("double") / col("trw").cast("double"))
+            .as("share_shift"))
+        .orderBy(col("source"))
+    }),
+
+    // PPS SYSTEMATIC SAMPLE — probability-proportional-to-size
+    // sampling for training-mixture construction: per language, k=20
+    // sample slots spread systematically over the cumulative
+    // token-count line, so a document's selection count is EXACTLY
+    // ⌊cum_i·k/W⌋ − ⌊cum_{i−1}·k/W⌋ (integer division both sides —
+    // no RNG, no libm, fully oracle-checked; the deterministic
+    // survey-statistics alternative to A-ExpJ reservoir sampling,
+    // whose u^(1/w) keys cannot cross engines exactly). Documents
+    // heavier than one step earn multiplicity > 1 (certainty items),
+    // and per-language hit totals are exactly k by construction
+    // (spec-pinned). Scale shape: token counts are scan-stage
+    // expressions; one lang-keyed cumulative window over the doc
+    // frame; cum·k holds in longs to ~4.6e17 tokens per language.
+    "t40_pps_sample" -> ((s, d) => {
+      val k = 20L
+      val wCum = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val wTot = Window.partitionBy(col("lang"))
+      Tables.documents(s, d)
+        .select(col("lang"), col("doc_id"),
+          size(split(trim(col("text")), " ")).cast("long").as("w"))
+        .withColumn("cum", sum(col("w")).over(wCum))
+        .withColumn("tot", sum(col("w")).over(wTot))
+        .withColumn("n_hits",
+          expr(s"(cum * $k) div tot - ((cum - w) * $k) div tot"))
+        .filter(col("n_hits") >= 1L)
+        .select(col("lang"), col("doc_id"), col("w"), col("n_hits"))
+        .orderBy(col("lang"), col("doc_id"))
+    }),
+
+    // PRECISION/RECALL/F1 THRESHOLD SWEEP — the operating-point view
+    // of q171's AUC: at each candidate cutoff θ of the distinct-token
+    // ratio, the confusion counts against the repetition label and the
+    // derived precision, recall, F1 — the table a pipeline owner reads
+    // to pick the actual filter threshold. All counts are exact longs;
+    // P/R/F1 are single divisions (F1 computed as 2·tp/(2·tp+fp+fn) —
+    // one division, no nested ratio-of-ratios). Scale shape: one
+    // documents scan, each doc fans out to the 9 thresholds
+    // (row-local explode), partial aggregation collapses map-side to
+    // 9 rows — the exchange carries 9×counts, nothing else.
+    "t41_pr_threshold_sweep" -> ((s, d) => {
+      val thr = array((50 to 90 by 5).map(v => lit(v / 100.0)): _*)
+      scoredDocs(s, d)
+        .select(col("s"), col("b"), explode(thr).as("thr"))
+        .groupBy(col("thr"))
+        .agg(
+          sum(when(col("b") && col("s") >= col("thr"), 1L)
+            .otherwise(0L)).as("tp"),
+          sum(when(!col("b") && col("s") >= col("thr"), 1L)
+            .otherwise(0L)).as("fp"),
+          sum(when(col("b") && col("s") < col("thr"), 1L)
+            .otherwise(0L)).as("fn"),
+          sum(when(!col("b") && col("s") < col("thr"), 1L)
+            .otherwise(0L)).as("tn"))
+        .withColumn("precision",
+          when(col("tp") + col("fp") === 0L, lit(null))
+            .otherwise(col("tp").cast("double") /
+              (col("tp") + col("fp")).cast("double")))
+        .withColumn("recall",
+          when(col("tp") + col("fn") === 0L, lit(null))
+            .otherwise(col("tp").cast("double") /
+              (col("tp") + col("fn")).cast("double")))
+        .withColumn("f1",
+          when(lit(2L) * col("tp") + col("fp") + col("fn") === 0L,
+            lit(null))
+            .otherwise((lit(2L) * col("tp")).cast("double") /
+              (lit(2L) * col("tp") + col("fp") + col("fn"))
+                .cast("double")))
+        .select(col("thr"), col("tp"), col("fp"), col("fn"),
+          col("tn"), col("precision"), col("recall"), col("f1"))
+        .orderBy(col("thr"))
     })
   )
 
@@ -1828,6 +2507,388 @@ object TextOps {
          ${Seq(1024L, 4096L, 16384L).map(row)
             .mkString("\n         UNION ALL\n         ")}
          ORDER BY vocab_size"""
-    }
+    },
+
+    "q144_cohens_kappa" ->
+      s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
+        |    AS words FROM documents),
+        |  ra AS (SELECT doc_id,
+        |    (LEN(words) >= 10 AND
+        |     CAST(LEN(list_distinct(words)) AS DOUBLE) / LEN(words)
+        |       >= 0.5 AND
+        |     CAST(LEN(list_filter(words, x -> x IN
+        |       ('the', 'and', 'of', 'to', 'a', 'in', 'is'))) AS DOUBLE)
+        |       / LEN(words) <= 0.4) AS a
+        |  FROM w),
+        |  ${repetitionSql},
+        |  rb AS (SELECT w.doc_id, COALESCE(dup.n_dup, 0) = 0 AS b
+        |  FROM w LEFT JOIN dup USING (doc_id)),
+        |  ${agreementCellsSql("ra JOIN rb USING (doc_id)")},
+        |  st AS (SELECT n11, n10, n01, n00,
+        |    n11 + n10 + n01 + n00 AS n,
+        |    (n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00)
+        |      AS expsum
+        |  FROM cells)
+        |SELECT n11, n10, n01, n00, n,
+        |  CAST(n11 + n00 AS DOUBLE) / CAST(n AS DOUBLE) AS p_observed,
+        |  CAST(expsum AS DOUBLE) / CAST(n AS DOUBLE) / CAST(n AS DOUBLE)
+        |    AS p_expected,
+        |  CAST(n * (n11 + n00) - expsum AS DOUBLE) /
+        |    CAST(n * n - expsum AS DOUBLE) AS kappa
+        |FROM st""".stripMargin,
+
+    "q171_roc_auc" ->
+      (docCte +
+        """,
+          |  grid AS (SELECT s,
+          |    CAST(SUM(CASE WHEN b THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+          |    CAST(SUM(CASE WHEN NOT b THEN 1 ELSE 0 END) AS BIGINT)
+          |      AS c0
+          |  FROM lab GROUP BY s),
+          |  rk AS (SELECT s, c1, c0, c1 + c0 AS t,
+          |    COALESCE(CAST(SUM(c1 + c0) OVER (ORDER BY s
+          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+          |      AS BIGINT), 0) AS below
+          |  FROM grid),
+          |  ag AS (SELECT CAST(SUM(c1) AS BIGINT) AS n_pos,
+          |    CAST(SUM(c0) AS BIGINT) AS n_neg,
+          |    CAST(SUM(c1 * (2 * below + t + 1)) AS BIGINT) AS ra2
+          |  FROM rk),
+          |  fin AS (SELECT n_pos, n_neg, ra2,
+          |    CAST(ra2 - n_pos * (n_pos + 1) AS DOUBLE) /
+          |      (2.0 * CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE))
+          |      AS auc
+          |  FROM ag)
+          |SELECT n_pos, n_neg, ra2, auc, 2.0 * auc - 1.0
+          |  AS rank_biserial
+          |FROM fin""".stripMargin),
+
+    "q172_mcnemar_screens" ->
+      (docCte +
+        s""",
+          |  ${agreementCellsSql("lab")},
+          |  st AS (SELECT n11, n10, n01, n00,
+          |    n11 + n10 + n01 + n00 AS n,
+          |    CASE WHEN n10 + n01 = 0 THEN NULL
+          |      ELSE CAST((ABS(n10 - n01) - 1) * (ABS(n10 - n01) - 1)
+          |        AS DOUBLE) / CAST(n10 + n01 AS DOUBLE)
+          |    END AS chi2_cc
+          |  FROM cells)
+          |SELECT n11, n10, n01, n00, n, chi2_cc,
+          |  chi2_cc > 3.841458820694124 AS reject_95
+          |FROM st""".stripMargin),
+
+    "q173_cochran_q" ->
+      (docCte +
+        """,
+          |  ri AS (SELECT a, b, c_len,
+          |    (CASE WHEN a THEN 1 ELSE 0 END) +
+          |    (CASE WHEN b THEN 1 ELSE 0 END) +
+          |    (CASE WHEN c_len THEN 1 ELSE 0 END) AS ri
+          |  FROM lab),
+          |  ag AS (SELECT
+          |    CAST(SUM(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT)
+          |      AS c_quality,
+          |    CAST(SUM(CASE WHEN b THEN 1 ELSE 0 END) AS BIGINT)
+          |      AS c_norep,
+          |    CAST(SUM(CASE WHEN c_len THEN 1 ELSE 0 END) AS BIGINT)
+          |      AS c_length,
+          |    CAST(COUNT(1) AS BIGINT) AS n,
+          |    CAST(SUM(ri) AS BIGINT) AS t_succ,
+          |    CAST(SUM(ri * ri) AS BIGINT) AS r2_sum
+          |  FROM ri),
+          |  st AS (SELECT c_quality, c_norep, c_length, n, t_succ,
+          |    r2_sum,
+          |    CASE WHEN 3 * t_succ - r2_sum = 0 THEN NULL
+          |      ELSE CAST(2 * (3 * (c_quality * c_quality +
+          |        c_norep * c_norep + c_length * c_length) -
+          |        t_succ * t_succ) AS DOUBLE) /
+          |        CAST(3 * t_succ - r2_sum AS DOUBLE)
+          |    END AS q_stat
+          |  FROM ag)
+          |SELECT c_quality, c_norep, c_length, n, t_succ, r2_sum,
+          |  q_stat, q_stat > 5.991464547107979 AS reject_95
+          |FROM st""".stripMargin),
+
+    "q180_calibration_oos" ->
+      s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
+        |    AS words FROM documents),
+        |  $repetitionSql,
+        |  lab AS (SELECT w.doc_id, LEN(words) AS n_tok,
+        |    w.doc_id % 2 = 0 AS train,
+        |    COALESCE(dup.n_dup, 0) > 0 AS rep
+        |  FROM w LEFT JOIN dup USING (doc_id)),
+        |  b AS (SELECT LEAST(CAST(n_tok AS BIGINT) // 20, 5) AS bin,
+        |    train, rep FROM lab),
+        |  ag AS (SELECT bin,
+        |    CAST(SUM(CASE WHEN train THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n_train,
+        |    CAST(SUM(CASE WHEN train AND rep THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS c_train,
+        |    CAST(SUM(CASE WHEN NOT train THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS n_eval,
+        |    CAST(SUM(CASE WHEN NOT train AND rep THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS c_eval
+        |  FROM b GROUP BY bin),
+        |  st AS (SELECT bin, n_train, c_train, n_eval, c_eval,
+        |    CASE WHEN n_train = 0 THEN NULL
+        |      ELSE CAST(c_train AS DOUBLE) / CAST(n_train AS DOUBLE)
+        |    END AS p_train,
+        |    CASE WHEN n_eval = 0 THEN NULL
+        |      ELSE CAST(c_eval AS DOUBLE) / CAST(n_eval AS DOUBLE)
+        |    END AS p_eval
+        |  FROM ag)
+        |SELECT bin, n_train, c_train, p_train, n_eval, c_eval,
+        |  p_eval, p_eval - p_train AS gap
+        |FROM st
+        |ORDER BY bin""".stripMargin,
+
+    "q181_isotonic_calibration" ->
+      s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
+        |    AS words FROM documents WHERE doc_id % 2 = 0),
+        |  $repetitionSql,
+        |  lab AS (SELECT LEAST(CAST(LEN(words) AS BIGINT) // 20, 5)
+        |      AS bin,
+        |    COALESCE(dup.n_dup, 0) > 0 AS rep
+        |  FROM w LEFT JOIN dup USING (doc_id)),
+        |  bins AS (SELECT bin, CAST(COUNT(1) AS BIGINT) AS n,
+        |    CAST(SUM(CASE WHEN rep THEN 1 ELSE 0 END) AS BIGINT) AS c
+        |  FROM lab GROUP BY bin),
+        |  iv AS (SELECT j.bin AS j, k.bin AS k,
+        |    CAST(SUM(m.c) AS DOUBLE) / CAST(SUM(m.n) AS DOUBLE)
+        |      AS rate
+        |  FROM bins j JOIN bins k ON j.bin <= k.bin
+        |  JOIN bins m ON m.bin >= j.bin AND m.bin <= k.bin
+        |  GROUP BY 1, 2),
+        |  mn AS (SELECT b.bin, b.n, b.c, iv.j,
+        |    MIN(iv.rate) AS min_rate
+        |  FROM bins b JOIN iv ON iv.j <= b.bin AND iv.k >= b.bin
+        |  GROUP BY 1, 2, 3, 4)
+        |SELECT bin, n, c,
+        |  CAST(c AS DOUBLE) / CAST(n AS DOUBLE) AS p_raw,
+        |  MAX(min_rate) AS p_isotonic
+        |FROM mn GROUP BY bin, n, c
+        |ORDER BY bin""".stripMargin,
+
+    "q182_hosmer_lemeshow" ->
+      s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
+        |    AS words FROM documents),
+        |  $repetitionSql,
+        |  lab AS (SELECT LEAST(CAST(LEN(words) AS BIGINT) // 20, 5)
+        |      AS bin,
+        |    w.doc_id % 2 = 0 AS train,
+        |    COALESCE(dup.n_dup, 0) > 0 AS rep
+        |  FROM w LEFT JOIN dup USING (doc_id)),
+        |  bins AS (SELECT bin,
+        |    CAST(SUM(CASE WHEN train THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n,
+        |    CAST(SUM(CASE WHEN train AND rep THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS c,
+        |    CAST(SUM(CASE WHEN NOT train THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS n_ev,
+        |    CAST(SUM(CASE WHEN NOT train AND rep THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS c_ev
+        |  FROM lab GROUP BY bin),
+        |  tbins AS (SELECT * FROM bins WHERE n > 0),
+        |  iv AS (SELECT j.bin AS j, k.bin AS k,
+        |    CAST(SUM(m.c) AS DOUBLE) / CAST(SUM(m.n) AS DOUBLE)
+        |      AS rate
+        |  FROM tbins j JOIN tbins k ON j.bin <= k.bin
+        |  JOIN tbins m ON m.bin >= j.bin AND m.bin <= k.bin
+        |  GROUP BY 1, 2),
+        |  mn AS (SELECT b.bin, b.n_ev, b.c_ev, iv.j,
+        |    MIN(iv.rate) AS min_rate
+        |  FROM tbins b JOIN iv ON iv.j <= b.bin AND iv.k >= b.bin
+        |  GROUP BY 1, 2, 3, 4),
+        |  fit AS (SELECT bin, n_ev, c_ev, MAX(min_rate) AS p_iso
+        |  FROM mn GROUP BY bin, n_ev, c_ev),
+        |  terms AS (SELECT bin,
+        |    (CAST(c_ev AS DOUBLE) - CAST(n_ev AS DOUBLE) * p_iso) *
+        |      (CAST(c_ev AS DOUBLE) - CAST(n_ev AS DOUBLE) * p_iso) /
+        |      (CAST(n_ev AS DOUBLE) * p_iso * (1.0 - p_iso)) AS term
+        |  FROM fit
+        |  WHERE p_iso > 0.0 AND p_iso < 1.0 AND n_ev > 0),
+        |  lst AS (SELECT list(struct_pack(bin := bin, term := term)
+        |      ORDER BY bin) AS l, CAST(COUNT(1) AS BIGINT) AS n_bins
+        |    FROM terms),
+        |  ag AS (SELECT n_bins, n_bins - 2 AS df,
+        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+        |      list_transform(l, s -> s.term)), (a, x) -> a + x)
+        |      AS hl_stat
+        |  FROM lst)
+        |SELECT n_bins, df, hl_stat,
+        |  CASE WHEN df >= 1 AND df <= 8 THEN
+        |    hl_stat > ([3.841458820694124, 5.991464547107979,
+        |      7.814727903251179, 9.487729036781154, 11.070497693516351,
+        |      12.591587243743977, 14.067140449340169,
+        |      15.50731305586545])[CAST(df AS INT)]
+        |  ELSE NULL END AS reject_95
+        |FROM ag""".stripMargin,
+
+    "t05_char_ngram_profile" ->
+      """SELECT tri, COUNT(1) AS n FROM (
+           SELECT substring(text, i, 3) AS tri
+           FROM documents, UNNEST(GENERATE_SERIES(1, LENGTH(text) - 2)) AS t(i)
+           WHERE LENGTH(text) >= 3) s
+         GROUP BY tri ORDER BY n DESC, tri LIMIT 20""",
+
+    "t24_corpus_shards" ->
+      s"""WITH sh AS (SELECT doc_id, n_chars,
+             CAST($bucketHashSql AS INT) AS shard,
+             CAST(LEN(string_split(TRIM(text), ' ')) AS BIGINT) AS toks
+           FROM documents)
+         SELECT shard, COUNT(*) AS n_docs,
+                CAST(SUM(toks) AS BIGINT) AS n_tokens,
+                CAST(SUM(n_chars) AS BIGINT) AS n_chars
+         FROM sh GROUP BY 1 ORDER BY 1""",
+
+    "t25_lexical_diversity" ->
+      """WITH terms AS (SELECT doc_id, UNNEST(string_split(TRIM(text), ' '))
+                          AS term FROM documents),
+         tf AS (SELECT doc_id, term, COUNT(*) AS freq,
+                       LEN(term) AS tlen
+                FROM terms GROUP BY 1, 2),
+         agg AS (SELECT doc_id,
+                   CAST(SUM(freq) AS BIGINT) AS n_tokens,
+                   COUNT(*) AS n_types,
+                   CAST(SUM(CASE WHEN freq = 1 THEN 1 ELSE 0 END)
+                     AS BIGINT) AS n_hapax,
+                   CAST(SUM(tlen * freq) AS BIGINT) AS char_sum
+                 FROM tf GROUP BY 1)
+         SELECT doc_id, n_tokens, n_types,
+                CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS ttr,
+                CAST(n_hapax AS DOUBLE) / CAST(n_types AS DOUBLE)
+                  AS hapax_ratio,
+                CAST(char_sum AS DOUBLE) / CAST(n_tokens AS DOUBLE)
+                  AS mean_token_len
+         FROM agg ORDER BY doc_id""",
+
+    "t26_length_histogram" ->
+      """WITH t AS (SELECT source,
+             CAST(LEN(string_split(TRIM(text), ' ')) AS BIGINT) AS toks
+           FROM documents),
+         b AS (SELECT source,
+                 CASE WHEN toks <= 25 THEN 'b1_le25'
+                      WHEN toks <= 50 THEN 'b2_le50'
+                      WHEN toks <= 75 THEN 'b3_le75'
+                      ELSE 'b4_gt75' END AS len_bucket, toks
+               FROM t),
+         agg AS (SELECT source, len_bucket, COUNT(*) AS n_docs,
+                   CAST(SUM(toks) AS BIGINT) AS n_tokens
+                 FROM b GROUP BY 1, 2)
+         SELECT source, len_bucket, n_docs, n_tokens,
+                CAST(n_tokens AS DOUBLE)
+                  / CAST(CAST(SUM(n_tokens) OVER (PARTITION BY source)
+                    AS BIGINT) AS DOUBLE) AS token_share
+         FROM agg ORDER BY source, len_bucket""",
+
+    "t34_readability" ->
+      """WITH docs AS (SELECT source,
+             len(regexp_extract_all(text, '[A-Za-z]+')) AS w,
+             greatest(1, len(regexp_extract_all(text, '[.!?]+')))
+               AS sen,
+             len(regexp_extract_all(lower(text), '[aeiouy]+')) AS syl
+           FROM documents),
+         scored AS (SELECT source, w, sen, syl,
+             CASE WHEN w > 0 THEN 206.835
+               - 1.015 * (CAST(w AS DOUBLE) / CAST(sen AS DOUBLE))
+               - 84.6 * (CAST(syl AS DOUBLE) / CAST(w AS DOUBLE))
+             END AS f
+           FROM docs)
+         SELECT source, COUNT(1) AS n_docs,
+           CAST(SUM(CASE WHEN w = 0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_empty,
+           CAST(SUM(CASE WHEN f >= 60.0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_easy,
+           CAST(SUM(CASE WHEN f >= 30.0 AND f < 60.0 THEN 1 ELSE 0 END)
+             AS BIGINT) AS n_standard,
+           CAST(SUM(CASE WHEN f < 30.0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_hard,
+           CAST(SUM(w) AS BIGINT) AS words,
+           CAST(SUM(sen) AS BIGINT) AS sentences,
+           CAST(SUM(syl) AS BIGINT) AS syllables,
+           206.835
+             - 1.015 * (CAST(CAST(SUM(w) AS BIGINT) AS DOUBLE)
+               / CAST(CAST(SUM(sen) AS BIGINT) AS DOUBLE))
+             - 84.6 * (CAST(CAST(SUM(syl) AS BIGINT) AS DOUBLE)
+               / CAST(CAST(SUM(w) AS BIGINT) AS DOUBLE))
+             AS corpus_flesch
+         FROM scored GROUP BY source ORDER BY source""",
+
+    "t35_dedup_mixture_shift" ->
+      """WITH docs AS (SELECT doc_id, source,
+             CAST(LEN(string_split(TRIM(text), ' ')) AS BIGINT) AS toks,
+             MD5(text) AS fp
+           FROM documents),
+         keep AS (SELECT fp, MIN(doc_id) AS keep_id FROM docs
+           GROUP BY 1),
+         raw AS (SELECT source, COUNT(1) AS n_raw,
+             CAST(SUM(toks) AS BIGINT) AS tok_raw
+           FROM docs GROUP BY 1),
+         kept AS (SELECT source, COUNT(1) AS n_kept,
+             CAST(SUM(toks) AS BIGINT) AS tok_kept
+           FROM docs JOIN keep
+             ON docs.fp = keep.fp AND docs.doc_id = keep.keep_id
+           GROUP BY 1),
+         j AS (SELECT raw.source, n_raw, tok_raw,
+             CAST(COALESCE(n_kept, 0) AS BIGINT) AS n_kept,
+             CAST(COALESCE(tok_kept, 0) AS BIGINT) AS tok_kept
+           FROM raw LEFT JOIN kept ON raw.source = kept.source),
+         t AS (SELECT *, CAST(SUM(tok_raw) OVER () AS BIGINT) AS trw,
+             CAST(SUM(tok_kept) OVER () AS BIGINT) AS tkp
+           FROM j)
+         SELECT source, n_raw, n_kept, tok_raw, tok_kept,
+           CAST(tok_raw AS DOUBLE) / CAST(trw AS DOUBLE) AS share_raw,
+           CAST(tok_kept AS DOUBLE) / CAST(tkp AS DOUBLE)
+             AS share_kept,
+           CAST(tok_kept AS DOUBLE) / CAST(tkp AS DOUBLE)
+             - CAST(tok_raw AS DOUBLE) / CAST(trw AS DOUBLE)
+             AS share_shift
+         FROM t ORDER BY source""",
+
+    "t40_pps_sample" ->
+      """WITH dw AS (SELECT lang, doc_id,
+        |    CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS w
+        |  FROM documents),
+        |  cm AS (SELECT lang, doc_id, w,
+        |    CAST(SUM(w) OVER (PARTITION BY lang ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS BIGINT) AS cum,
+        |    CAST(SUM(w) OVER (PARTITION BY lang) AS BIGINT) AS tot
+        |  FROM dw),
+        |  hit AS (SELECT lang, doc_id, w,
+        |    (cum * 20) // tot - ((cum - w) * 20) // tot AS n_hits
+        |  FROM cm)
+        |SELECT lang, doc_id, w, n_hits FROM hit
+        |WHERE n_hits >= 1 ORDER BY lang, doc_id""".stripMargin,
+
+    "t41_pr_threshold_sweep" ->
+      (docCte +
+        """,
+          |  th AS (SELECT UNNEST(CAST([0.50, 0.55, 0.60, 0.65, 0.70,
+          |    0.75, 0.80, 0.85, 0.90] AS DOUBLE[])) AS thr),
+          |  ct AS (SELECT thr,
+          |    CAST(SUM(CASE WHEN b AND s >= thr THEN 1 ELSE 0 END)
+          |      AS BIGINT) AS tp,
+          |    CAST(SUM(CASE WHEN NOT b AND s >= thr THEN 1 ELSE 0 END)
+          |      AS BIGINT) AS fp,
+          |    CAST(SUM(CASE WHEN b AND s < thr THEN 1 ELSE 0 END)
+          |      AS BIGINT) AS fn,
+          |    CAST(SUM(CASE WHEN NOT b AND s < thr THEN 1 ELSE 0 END)
+          |      AS BIGINT) AS tn
+          |  FROM lab CROSS JOIN th GROUP BY thr)
+          |SELECT thr, tp, fp, fn, tn,
+          |  CASE WHEN tp + fp = 0 THEN NULL
+          |    ELSE CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE)
+          |  END AS precision,
+          |  CASE WHEN tp + fn = 0 THEN NULL
+          |    ELSE CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE)
+          |  END AS recall,
+          |  CASE WHEN 2 * tp + fp + fn = 0 THEN NULL
+          |    ELSE CAST(2 * tp AS DOUBLE) /
+          |      CAST(2 * tp + fp + fn AS DOUBLE)
+          |  END AS f1
+          |FROM ct
+          |ORDER BY thr""".stripMargin)
   )
 }

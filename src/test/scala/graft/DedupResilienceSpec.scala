@@ -318,7 +318,7 @@ class DedupResilienceSpec extends SparkSpec {
     // d4, so u3's fate is right-censored, not churn.
     val ud = Seq((1L, day(1)), (2L, day(1)), (1L, day(2)), (3L, day(4)))
       .toDF("user_id", "day")
-    val got = graft.operators.Extended4.growthAccounting(ud)
+    val got = graft.operators.Behavioral.growthAccounting(ud)
       .orderBy("day")
       .collect()
       .map(r => (r.getAs[java.time.LocalDateTime](0).toLocalDate.toString,
@@ -364,7 +364,7 @@ class DedupResilienceSpec extends SparkSpec {
       Seq.fill(200)((rnd.nextInt(65536).toLong, rnd.nextInt(65536).toLong))
     val got = pairs.toDF("x", "y")
       .withColumn("z", org.apache.spark.sql.functions.expr(
-        graft.operators.Extended4.zInterleave("x", "y", 16, "div")))
+        graft.operators.Warehouse.zInterleave("x", "y", 16, "div")))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     got.foreach { case (x, y, z) =>

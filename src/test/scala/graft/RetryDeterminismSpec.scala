@@ -46,9 +46,9 @@ class RetryDeterminismSpec extends SparkSpec {
         expr("cents div 100").as("value"))
       .as[(String, Long)]
     val groups = Seq("narrow", "mid", "wide")
-    val clean = operators.Extended12
+    val clean = operators.Statistics
       .kruskalWallisH(base.toDF("grp", "value"), groups).collect()(0)
-    val retried = operators.Extended12
+    val retried = operators.Statistics
       .kruskalWallisH(flaky(base).toDF("grp", "value"), groups)
       .collect()(0)
     assert(retried == clean, s"$retried vs $clean")

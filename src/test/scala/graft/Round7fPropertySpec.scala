@@ -30,7 +30,7 @@ class Round7fPropertySpec extends SparkSpec {
     } yield (groups, rows)
     forAllSeeded(caseGen, 25) { case (groups, rows) =>
       val df = rows.toDF("grp", "value")
-      val r = operators.Extended12
+      val r = operators.Statistics
         .kruskalWallisH(df, groups).collect()(0)
       // brute-force: pooled midranks (2x carrier), rank sums per group
       val pooled = rows.map(_._2).sorted
@@ -77,7 +77,7 @@ class Round7fPropertySpec extends SparkSpec {
     } yield (yk, rows)
     forAllSeeded(caseGen, 25) { case (yk, rows) =>
       val df = rows.toDF("nation", "x", "y")
-      val got = operators.Extended12.kendallTauB(df, yk)
+      val got = operators.Statistics.kendallTauB(df, yk)
         .collect().map(r => r.getAs[String]("nation") ->
           (r.getAs[Long]("n"), r.getAs[Long]("c_pairs"),
             r.getAs[Long]("d_pairs"), r.getAs[Long]("ties_x"),

@@ -258,7 +258,7 @@ class Round7iOpsSpec extends SparkSpec {
       "brute-force fold over collected durations") {
     val rows = q("q175_nelson_aalen").collect()
       .sortBy(_.getAs[Long]("t_min"))
-    val per = graft.operators.Extended11.survivalDurations(spark, sf)
+    val per = graft.operators.Statistics.survivalDurations(spark, sf)
       .select(col("is_event"), col("dur")).collect()
       .map(r => (r.getBoolean(0), r.getLong(1)))
     val times = per.filter(_._1).map(_._2).distinct.sorted

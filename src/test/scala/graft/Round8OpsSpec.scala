@@ -446,7 +446,7 @@ class Round8OpsSpec extends SparkSpec {
       val n = 20 + rnd.nextInt(10)
       val edges = (for (i <- 0L until n; j <- (i + 1) until n
         if rnd.nextDouble() < 0.22) yield (i, j)).toSeq
-      val got = operators.Extended16.linkPredictionScores(
+      val got = operators.Graph.linkPredictionScores(
           edges.toDF("pa", "pb")).collect()
         .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b")) ->
           (r.getAs[Long]("cn"), r.getAs[Long]("deg_a"),
@@ -476,7 +476,7 @@ class Round8OpsSpec extends SparkSpec {
       val items = ('a' to 'h').map(_.toString)
       val rows = (for (c <- 0L until 18L; it <- items
         if rnd.nextDouble() < 0.4) yield (c, it)).toSeq
-      val got = operators.Extended16.itemCfScores(
+      val got = operators.Graph.itemCfScores(
           rows.toDF("c", "brand"),
           org.apache.spark.sql.functions.lit(true)).collect()
         .map(r => (r.getAs[Long]("c"), r.getAs[String]("cand")) ->

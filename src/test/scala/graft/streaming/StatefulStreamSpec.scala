@@ -876,11 +876,11 @@ class StatefulStreamSpec extends SparkSpec {
         .groupBy(col("bi"), col("bj")).agg(count(lit(1)).as("co"))
       val rMat = purchases.distinct.toDF("c", "brand")
       val target = col("c") % 2 === 0
-      val streamed = graft.operators.Extended16
+      val streamed = graft.operators.Graph
         .itemCfScoresFromCounts(rMat, nPer, co, target).collect()
         .map(r => (r.getLong(0), r.getString(1)) ->
           (r.getLong(2), r.getLong(3))).toMap
-      val batch = graft.operators.Extended16
+      val batch = graft.operators.Graph
         .itemCfScores(rMat, target).collect()
         .map(r => (r.getLong(0), r.getString(1)) ->
           (r.getLong(2), r.getLong(3))).toMap
@@ -930,9 +930,9 @@ class StatefulStreamSpec extends SparkSpec {
           (r.getAs[Long]("cn"), r.getAs[Long]("ra_fp"),
             r.getAs[Long]("deg_a"), r.getAs[Long]("deg_b"),
             r.getAs[Double]("jaccard"), r.getAs[Double]("ra"))
-      val streamed = graft.operators.Extended16
+      val streamed = graft.operators.Graph
         .linkPredictionFromWedges(wedges, e, deg).collect().map(key).toMap
-      val batch = graft.operators.Extended16
+      val batch = graft.operators.Graph
         .linkPredictionScores(edges.toDF("pa", "pb")).collect()
         .map(key).toMap
       assert(streamed === batch,
@@ -979,7 +979,7 @@ class StatefulStreamSpec extends SparkSpec {
       val weekly = spark.table("wk_rows").as[WkRow]
         .groupBy(col("w")).agg(max(col("yv")).as("yv"),
           max(col("xv")).as("xv"))
-      val streamed = graft.operators.Extended17
+      val streamed = graft.operators.Forecasting
         .grangerFromWeekly(weekly).collect()
       val batch = graft.SparkEntry
         .queries("q200_granger_causality")(spark, sf).collect()
