@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.functions.{conv, encode, md5, substring}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -71,6 +72,13 @@ object HashFunctions {
     * 16, 10).cast("long")`. */
   def md5Hash60(c: Column): Column =
     GraftBridge.column(Md5Hash60(GraftBridge.expression(c)))
+
+  /** The same hash as [[md5Hash60]] over the string form of `c`, spelled
+    * as the built-in expression chain; the queries whose plans read the
+    * chain use this. */
+  def md5Hash60Chain(c: Column): Column =
+    conv(substring(md5(encode(c.cast("string"), "UTF-8")), 1, 15), 16, 10)
+      .cast("long")
 
   /** DuckDB twin of [[md5Hash60]] for oracle SQL: the Horner parse of
     * md5's first 15 hex chars over the VARCHAR expression `s`. The

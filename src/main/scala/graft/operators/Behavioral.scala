@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{Parity, Tables}
-import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Behavioral analytics over the `events` timelines: funnels and
   * their timing, cohorts and retention, growth accounting, journeys and
@@ -26,7 +25,6 @@ object Behavioral extends OperatorFamily {
     * max(observed). The cap's global window runs over the per-day
     * rollup (calendar-bounded, thousands of rows), never the events. */
   private[graft] def growthAccounting(userDays: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
     val ud = userDays.withColumn("prev_day", lag(col("day"), 1).over(w))
     val daily = ud.groupBy(col("day"))
@@ -60,6 +58,96 @@ object Behavioral extends OperatorFamily {
         col("n_active"), col("n_new"), col("n_retained"),
         col("n_resurrected"), col("n_churned"))
   }
+
+  /** The attribution family's touch frame (q116/q122): the purchases
+    * (user_id, pid, pus, cents) and every (purchase, click) pair of one
+    * user whose click (cus, channel) falls in the 7-day lookback before
+    * the purchase. The touch join is an equi-join on user_id with the
+    * time range as join condition (the q47 contract). */
+  private def purchaseTouches(s: SparkSession,
+      d: String): (DataFrame, DataFrame) = {
+    val lookbackUs = 7L * 24 * 3600 * 1000000
+    val ev = Tables.events(s, d)
+      .select(col("user_id"), col("event_id"),
+        unix_micros(col("ts").cast("timestamp")).as("us"),
+        col("event_type"), col("value"), col("props"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id").as("pid"),
+        col("us").as("pus"),
+        round(col("value") * 100).cast("long").as("cents"))
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("us").as("cus"),
+        concat(lit("ch_"),
+          (get_json_object(col("props"), "$.k").cast("long") % 5)
+            .cast("string")).as("channel"))
+    val touched = purchases.join(clicks, Seq("user_id"))
+      .filter(col("cus") < col("pus") &&
+        col("pus") - col("cus") <= lookbackUs)
+    (purchases, touched)
+  }
+
+  /** The attribution books per channel: the credited micro-cents
+    * (pid, channel, k, micro) plus one "organic" row for each purchase
+    * with no pid in `touched`, summed as longs and divided to dollars
+    * once. */
+  private def creditBooks(credits: DataFrame, purchases: DataFrame,
+      touched: DataFrame): DataFrame = {
+    val organic = purchases.join(
+        touched.select(col("pid")).distinct(), Seq("pid"), "left_anti")
+      .select(col("pid"), lit("organic").as("channel"),
+        lit(1L).as("k"),
+        (col("cents") * lit(1000000L)).as("micro"))
+    credits.unionAll(organic)
+      .groupBy(col("channel"))
+      .agg(countDistinct(col("pid")).as("n_purchases"),
+        sum(col("k")).as("n_touches"),
+        (sum(col("micro")).cast("double") / 1.0e8)
+          .as("revenue_credited"))
+      .orderBy(col("channel"))
+  }
+
+  /** DuckDB twin of [[purchaseTouches]]' inputs: CTEs `ev`, `purchases`
+    * and `clicks`; each caller writes its own `touched` join. */
+  private val TouchCtes =
+    """ev AS (SELECT user_id, event_id, epoch_us(ts) AS us,
+             event_type, value, props FROM events),
+         purchases AS (SELECT user_id, event_id AS pid, us AS pus,
+             CAST(round(value * 100) AS BIGINT) AS cents
+           FROM ev WHERE event_type = 'purchase'),
+         clicks AS (SELECT user_id, us AS cus,
+             'ch_' || CAST(CAST(json_extract_string(props, '$.k')
+               AS BIGINT) % 5 AS VARCHAR) AS channel
+           FROM ev WHERE event_type = 'click')"""
+
+  /** DuckDB twin of [[creditBooks]] over CTEs `credits` and `purchases`;
+    * `touched` is the query selecting the touched purchase ids. */
+  private def booksSql(touched: String): String =
+    s"""organic AS (SELECT pid, 'organic' AS channel,
+             CAST(1 AS BIGINT) AS k,
+             cents * CAST(1000000 AS BIGINT) AS micro
+           FROM purchases
+           WHERE pid NOT IN ($touched)),
+         allc AS (SELECT * FROM credits UNION ALL SELECT * FROM organic)
+         SELECT channel, COUNT(DISTINCT pid) AS n_purchases,
+           CAST(SUM(k) AS BIGINT) AS n_touches,
+           CAST(CAST(SUM(micro) AS BIGINT) AS DOUBLE) / 1e8
+             AS revenue_credited
+         FROM allc GROUP BY channel ORDER BY channel"""
+
+  /** DuckDB twin of q61's funnel (q81 reads the same frame): CTEs `v`
+    * (each user's first view), `c` (the first click after it) and `p`
+    * (the first purchase after that click). */
+  private val FunnelCtes =
+    """v AS (SELECT user_id, MIN(ts) AS view_ts FROM events
+                    WHERE event_type = 'view' GROUP BY user_id),
+         c AS (SELECT e.user_id, v.view_ts, MIN(e.ts) AS click_ts
+               FROM events e JOIN v ON e.user_id = v.user_id
+               WHERE e.event_type = 'click' AND e.ts > v.view_ts
+               GROUP BY e.user_id, v.view_ts),
+         p AS (SELECT e.user_id, c.click_ts, MIN(e.ts) AS purchase_ts
+               FROM events e JOIN c ON e.user_id = c.user_id
+               WHERE e.event_type = 'purchase' AND e.ts > c.click_ts
+               GROUP BY e.user_id, c.click_ts)"""
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -152,7 +240,6 @@ object Behavioral extends OperatorFamily {
     // oracle-bit-equal. Scale shape: one window + one groupBy, both
     // keyed by user_id (high cardinality, no global stage).
     "q68_time_weighted_avg" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val seg = Tables.events(s, d)
@@ -218,7 +305,6 @@ object Behavioral extends OperatorFamily {
     // over that tiny frame; probabilities are integer-exact until one
     // IEEE division.
     "q71_transition_matrix" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val tr = Tables.events(s, d)
@@ -341,7 +427,6 @@ object Behavioral extends OperatorFamily {
     // bounded by |event types|^3 (partial agg collapses map-side),
     // and a TakeOrdered top-10 — no global sort, ties broken by path.
     "q82_top_paths" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val wTop = Window.orderBy(col("n").desc, col("path"))
@@ -372,7 +457,6 @@ object Behavioral extends OperatorFamily {
     // window partitions on user_id — high cardinality, no skew. Final
     // agg is |channels| rows.
     "q87_last_touch_attribution" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val e = Tables.events(s, d)
         .filter(col("event_type").isin("click", "purchase"))
         .select(col("user_id"), col("ts"), col("event_id"),
@@ -404,7 +488,6 @@ object Behavioral extends OperatorFamily {
     // interpolation at binary fractions {.25,.5,.75} is bit-exact in
     // both engines); the final aggregate is a single row.
     "q91_interpurchase" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val gaps = Tables.events(s, d)
@@ -427,7 +510,6 @@ object Behavioral extends OperatorFamily {
     // in-row, one grouped aggregate collapses events map-side to
     // ≤ 168 cells, and the share window runs over that tiny frame.
     "q95_activity_heatmap" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy()
       Tables.events(s, d)
         .select((dayofweek(col("ts")) - 1).cast("long").as("dow"),
@@ -454,7 +536,6 @@ object Behavioral extends OperatorFamily {
     // cumulative window and cohort-size broadcast join run over a
     // frame that stays tiny no matter how large orders grows.
     "q98_cohort_ltv" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val om = Tables.orders(s, d).select(col("o_custkey"),
         (year(col("o_orderdate")) * 12 + month(col("o_orderdate")) - 1)
           .cast("long").as("ym"),
@@ -495,7 +576,6 @@ object Behavioral extends OperatorFamily {
     // (unix_micros == DuckDB epoch_us, the q68 rule); the rollup
     // partial-aggregates to one row per user.
     "q101_debounce_compress" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       Tables.events(s, d)
@@ -560,23 +640,7 @@ object Behavioral extends OperatorFamily {
     // product join); everything after is partial-aggregated counts
     // keyed by purchase then channel.
     "q116_linear_attribution" -> ((s, d) => {
-      val lookbackUs = 7L * 24 * 3600 * 1000000
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts").cast("timestamp")).as("us"),
-          col("event_type"), col("value"), col("props"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("pid"),
-          col("us").as("pus"),
-          round(col("value") * 100).cast("long").as("cents"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("us").as("cus"),
-          concat(lit("ch_"),
-            (get_json_object(col("props"), "$.k").cast("long") % 5)
-              .cast("string")).as("channel"))
-      val touched = purchases.join(clicks, Seq("user_id"))
-        .filter(col("cus") < col("pus") &&
-          col("pus") - col("cus") <= lookbackUs)
+      val (purchases, touched) = purchaseTouches(s, d)
       val perChan = touched.groupBy(col("pid"), col("cents"),
           col("channel"))
         .agg(count(lit(1)).as("k"))
@@ -590,18 +654,7 @@ object Behavioral extends OperatorFamily {
         .withColumn("n", sum(col("k")).over(wP))
         .select(col("pid"), col("channel"), col("k"),
           expr("(cents * k * CAST(1000000 AS BIGINT)) div n").as("micro"))
-      val organic = purchases.join(
-          touched.select(col("pid")).distinct(), Seq("pid"), "left_anti")
-        .select(col("pid"), lit("organic").as("channel"),
-          lit(1L).as("k"),
-          (col("cents") * lit(1000000L)).as("micro"))
-      credits.unionAll(organic)
-        .groupBy(col("channel"))
-        .agg(countDistinct(col("pid")).as("n_purchases"),
-          sum(col("k")).as("n_touches"),
-          (sum(col("micro")).cast("double") / 1.0e8)
-            .as("revenue_credited"))
-        .orderBy(col("channel"))
+      creditBooks(credits, purchases, touched)
     }),
 
     // TIME-DECAY multi-touch attribution — the third member of the
@@ -628,24 +681,9 @@ object Behavioral extends OperatorFamily {
     // anti-join on purchase id, and the final rollup is |channels|+1
     // rows.
     "q122_time_decay_attribution" -> ((s, d) => {
-      val lookbackUs = 7L * 24 * 3600 * 1000000
       val dayUs = 24L * 3600 * 1000000
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts").cast("timestamp")).as("us"),
-          col("event_type"), col("value"), col("props"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("pid"),
-          col("us").as("pus"),
-          round(col("value") * 100).cast("long").as("cents"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("us").as("cus"),
-          concat(lit("ch_"),
-            (get_json_object(col("props"), "$.k").cast("long") % 5)
-              .cast("string")).as("channel"))
-      val touched = purchases.join(clicks, Seq("user_id"))
-        .filter(col("cus") < col("pus") &&
-          col("pus") - col("cus") <= lookbackUs)
+      val (purchases, pairs) = purchaseTouches(s, d)
+      val touched = pairs
         // age_days in [0, 7] ⇒ weight 64 >> age_days in {64,…,1,0};
         // the boundary touch at exactly 7 days gets shifted to 0 —
         // consistent in both engines (64 >> 7 = 0)
@@ -661,19 +699,7 @@ object Behavioral extends OperatorFamily {
         .select(col("pid"), col("channel"), col("k"),
           expr("(cents * chan64 * CAST(1000000 AS BIGINT)) div tot64")
             .as("micro"))
-      val organic = purchases.join(
-          touched.filter(col("w64") > 0L).select(col("pid")).distinct(),
-          Seq("pid"), "left_anti")
-        .select(col("pid"), lit("organic").as("channel"),
-          lit(1L).as("k"),
-          (col("cents") * lit(1000000L)).as("micro"))
-      credits.unionAll(organic)
-        .groupBy(col("channel"))
-        .agg(countDistinct(col("pid")).as("n_purchases"),
-          sum(col("k")).as("n_touches"),
-          (sum(col("micro")).cast("double") / 1.0e8)
-            .as("revenue_credited"))
-        .orderBy(col("channel"))
+      creditBooks(credits, purchases, touched.filter(col("w64") > 0L))
     }),
 
     // SEQUENTIAL PATTERN MATCHING over event timelines — the
@@ -720,16 +746,7 @@ object Behavioral extends OperatorFamily {
   def oracleSql: Map[String, String] = Map(
 
     "q61_funnel_steps" ->
-      """WITH v AS (SELECT user_id, MIN(ts) AS view_ts FROM events
-                    WHERE event_type = 'view' GROUP BY user_id),
-         c AS (SELECT e.user_id, v.view_ts, MIN(e.ts) AS click_ts
-               FROM events e JOIN v ON e.user_id = v.user_id
-               WHERE e.event_type = 'click' AND e.ts > v.view_ts
-               GROUP BY e.user_id, v.view_ts),
-         p AS (SELECT e.user_id, c.click_ts, MIN(e.ts) AS purchase_ts
-               FROM events e JOIN c ON e.user_id = c.user_id
-               WHERE e.event_type = 'purchase' AND e.ts > c.click_ts
-               GROUP BY e.user_id, c.click_ts)
+      s"""WITH $FunnelCtes
          SELECT v.user_id, v.view_ts, p.click_ts, p.purchase_ts,
                 (epoch_us(p.purchase_ts) - epoch_us(v.view_ts)) // 60000000
                   AS mins_view_to_purchase
@@ -854,16 +871,7 @@ object Behavioral extends OperatorFamily {
     // q61's chain + a 3-edge unpivot; quantile_cont mirrors Spark's
     // interpolating percentile() on the same integer-µs deltas
     "q81_funnel_timing" ->
-      """WITH v AS (SELECT user_id, MIN(ts) AS view_ts FROM events
-                    WHERE event_type = 'view' GROUP BY user_id),
-         c AS (SELECT e.user_id, v.view_ts, MIN(e.ts) AS click_ts
-               FROM events e JOIN v ON e.user_id = v.user_id
-               WHERE e.event_type = 'click' AND e.ts > v.view_ts
-               GROUP BY e.user_id, v.view_ts),
-         p AS (SELECT e.user_id, c.click_ts, MIN(e.ts) AS purchase_ts
-               FROM events e JOIN c ON e.user_id = c.user_id
-               WHERE e.event_type = 'purchase' AND e.ts > c.click_ts
-               GROUP BY e.user_id, c.click_ts),
+      s"""WITH $FunnelCtes,
          f AS (SELECT v.user_id, v.view_ts, p.click_ts, p.purchase_ts
                FROM v JOIN p ON p.user_id = v.user_id),
          edges AS (
@@ -999,15 +1007,7 @@ object Behavioral extends OperatorFamily {
          FROM b GROUP BY user_id ORDER BY user_id""",
 
     "q116_linear_attribution" ->
-      s"""WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS us,
-             event_type, value, props FROM events),
-         purchases AS (SELECT user_id, event_id AS pid, us AS pus,
-             CAST(round(value * 100) AS BIGINT) AS cents
-           FROM ev WHERE event_type = 'purchase'),
-         clicks AS (SELECT user_id, us AS cus,
-             'ch_' || CAST(CAST(json_extract_string(props, '$$.k')
-               AS BIGINT) % 5 AS VARCHAR) AS channel
-           FROM ev WHERE event_type = 'click'),
+      s"""WITH $TouchCtes,
          touched AS (SELECT p.pid, p.cents, c.channel
            FROM purchases p JOIN clicks c ON p.user_id = c.user_id
            WHERE c.cus < p.pus AND p.pus - c.cus <= 604800000000),
@@ -1018,31 +1018,13 @@ object Behavioral extends OperatorFamily {
                // CAST(SUM(k) OVER (PARTITION BY pid) AS BIGINT)
                AS micro
            FROM per_chan),
-         organic AS (SELECT pid, 'organic' AS channel,
-             CAST(1 AS BIGINT) AS k,
-             cents * CAST(1000000 AS BIGINT) AS micro
-           FROM purchases
-           WHERE pid NOT IN (SELECT pid FROM touched)),
-         allc AS (SELECT * FROM credits UNION ALL SELECT * FROM organic)
-         SELECT channel, COUNT(DISTINCT pid) AS n_purchases,
-           CAST(SUM(k) AS BIGINT) AS n_touches,
-           CAST(CAST(SUM(micro) AS BIGINT) AS DOUBLE) / 1e8
-             AS revenue_credited
-         FROM allc GROUP BY channel ORDER BY channel""",
+         ${booksSql("SELECT pid FROM touched")}""",
 
     // stepwise-halving weights: 64 >> age_days is exact integer
     // arithmetic in both engines; micro-cent floor allocation keeps the
     // books in BIGINT until one final division
     "q122_time_decay_attribution" ->
-      """WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS us,
-             event_type, value, props FROM events),
-         purchases AS (SELECT user_id, event_id AS pid, us AS pus,
-             CAST(round(value * 100) AS BIGINT) AS cents
-           FROM ev WHERE event_type = 'purchase'),
-         clicks AS (SELECT user_id, us AS cus,
-             'ch_' || CAST(CAST(json_extract_string(props, '$.k')
-               AS BIGINT) % 5 AS VARCHAR) AS channel
-           FROM ev WHERE event_type = 'click'),
+      s"""WITH $TouchCtes,
          touched AS (SELECT p.pid, p.cents, c.channel,
              CAST(64 AS BIGINT) >> CAST((p.pus - c.cus) // 86400000000
                AS INT) AS w64
@@ -1059,17 +1041,7 @@ object Behavioral extends OperatorFamily {
                  AS tot64
              FROM per_chan) t
            WHERE tot64 > 0),
-         organic AS (SELECT pid, 'organic' AS channel,
-             CAST(1 AS BIGINT) AS k,
-             cents * CAST(1000000 AS BIGINT) AS micro
-           FROM purchases
-           WHERE pid NOT IN (SELECT pid FROM touched WHERE w64 > 0)),
-         allc AS (SELECT * FROM credits UNION ALL SELECT * FROM organic)
-         SELECT channel, COUNT(DISTINCT pid) AS n_purchases,
-           CAST(SUM(k) AS BIGINT) AS n_touches,
-           CAST(CAST(SUM(micro) AS BIGINT) AS DOUBLE) / 1e8
-             AS revenue_credited
-         FROM allc GROUP BY channel ORDER BY channel""",
+         ${booksSql("SELECT pid FROM touched WHERE w64 > 0")}""",
 
     // same timeline strings (string_agg with the same (ts, event_id)
     // total order), same regexes — RE2 and java.regex agree on

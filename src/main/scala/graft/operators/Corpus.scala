@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.{Parity, Tables}
-import graft.functions.HashFunctions.md5Hash60Sql
+import graft.Tables
 
 /** Corpus language-model statistics over `documents`: term-frequency
   * shape (Zipf slope, term entropy, Yule's K), bigram models (Good–Turing
@@ -56,6 +55,73 @@ object Corpus extends OperatorFamily {
     (merges.reduce(_.unionAll(_)), syms)
   }
 
+  /** Word bigrams per document (doc_id, lang, w1, w2): each pair of
+    * consecutive non-empty words of the space-split text, exploded
+    * in-row. */
+  private def bigrams(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("doc_id"), col("lang"),
+        expr("filter(split(trim(text), ' '), x -> x <> '')").as("ws"))
+      .select(col("doc_id"), col("lang"), explode(expr(
+        "CASE WHEN size(ws) >= 2 THEN transform(sequence(0, size(ws) - 2), " +
+          "i -> struct(ws[i] AS w1, ws[i+1] AS w2)) ELSE " +
+          "array() END")).as("g"))
+      .select(col("doc_id"), col("lang"),
+        col("g.w1").as("w1"), col("g.w2").as("w2"))
+
+  /** The bigram models' (train, eval) split of [[bigrams]]: documents
+    * with doc_id % 10 == 7 are held out (t44, t49). */
+  private def heldOutBigrams(s: SparkSession,
+      d: String): (DataFrame, DataFrame) = {
+    val bg = bigrams(s, d)
+    (bg.filter(col("doc_id") % 10 =!= 7), bg.filter(col("doc_id") % 10 === 7))
+  }
+
+  /** DuckDB twin of [[bigrams]]: CTEs `w` (doc_id, lang, ws) and `bg`
+    * (doc_id, lang, w1, w2). */
+  private val BigramCtes =
+    """w AS (SELECT doc_id, lang,
+           list_filter(string_split(TRIM(text), ' '), x -> x <> '') AS ws
+           FROM documents),
+         bg AS (SELECT doc_id, lang, ws[i] AS w1, ws[i + 1] AS w2
+           FROM w, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
+           WHERE len(ws) >= 2)"""
+
+  /** DuckDB twin of [[bpeTrain]] (t37, t39): CTEs `w`, `wc` (word
+    * counts), `s0` (bracketed symbols) and, for each round i in 1..5,
+    * `r<i>p` (the weighted symbol pairs), `r<i>t` (the round's winner:
+    * round, pair, cnt, merged) and `s<i>` (the re-tokenized table). */
+  private val BpeCtes: String = {
+    def round(i: Int): String =
+      s"""r${i}p AS (SELECT UNNEST(CASE WHEN len(t) >= 2
+         |    THEN list_transform(generate_series(1, len(t) - 1),
+         |      i -> '[' || t[i] || '][' || t[i + 1] || ']')
+         |    ELSE CAST([] AS VARCHAR[]) END) AS pair, wcnt
+         |  FROM (SELECT string_split(substring(sym, 2,
+         |      length(sym) - 2), '][') AS t, wcnt FROM s${i - 1})),
+         |r${i}t AS (SELECT $i AS round, pair,
+         |    CAST(SUM(wcnt) AS BIGINT) AS cnt,
+         |    replace(pair, '][', '') AS merged
+         |  FROM r${i}p GROUP BY 2 ORDER BY cnt DESC, pair LIMIT 1),
+         |s$i AS (SELECT replace(sym, t.pair, t.merged) AS sym, wcnt
+         |  FROM s${i - 1} CROSS JOIN r${i}t t)""".stripMargin
+    s"""w AS (SELECT UNNEST(list_filter(string_split(trim(text),
+       |    ' '), x -> x <> '')) AS w FROM documents),
+       |  wc AS (SELECT w, COUNT(1) AS wcnt FROM w GROUP BY 1),
+       |  s0 AS (SELECT '[' || array_to_string(string_split(w, ''),
+       |      '][') || ']' AS sym, wcnt FROM wc),
+       |  ${(1 to 5).map(round).mkString(",\n")}""".stripMargin
+  }
+
+  /** Per-document term frequencies (doc_id, term, freq) over the
+    * space-split text (t23, t25). */
+  private def docTermFreqs(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("doc_id"),
+        explode(split(trim(col("text")), " ")).as("term"))
+      .groupBy(col("doc_id"), col("term"))
+      .agg(count(lit(1)).as("freq"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ZIPF slope per source: log-log OLS of term frequency against
@@ -70,7 +136,6 @@ object Corpus extends OperatorFamily {
     // moments — each moment a Parity.dsum (decimal, order-independent)
     // so the slope is cross-engine exact; the result is |sources| rows.
     "t22_zipf_slope" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val tf = Tables.documents(s, d)
         .select(col("source"),
           explode(split(trim(col("text")), " ")).as("term"))
@@ -114,11 +179,7 @@ object Corpus extends OperatorFamily {
     // 2..2000); any ulp noise in ln(p) is absorbed by dsum's decimal
     // rounding.
     "t23_term_entropy" -> ((s, d) => {
-      val tf = Tables.documents(s, d)
-        .select(col("doc_id"),
-          explode(split(trim(col("text")), " ")).as("term"))
-        .groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("freq"))
+      val tf = docTermFreqs(s, d)
       val tot = tf.groupBy(col("doc_id"))
         .agg(sum(col("freq")).as("total"), count(lit(1)).as("n_distinct"))
       tf.join(tot, "doc_id")
@@ -302,17 +363,7 @@ object Corpus extends OperatorFamily {
     // explode, three (lang-keyed) count exchanges with map-side
     // combine, broadcast |langs|-row totals, one eval join.
     "t49_kneser_ney_bigram" -> ((s, d) => {
-      val bg = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"),
-          expr("filter(split(trim(text), ' '), x -> x <> '')").as("ws"))
-        .select(col("doc_id"), col("lang"), explode(expr(
-          "CASE WHEN size(ws) >= 2 THEN transform(sequence(0, size(ws) - 2), " +
-            "i -> struct(ws[i] AS w1, ws[i+1] AS w2)) ELSE " +
-            "array() END")).as("g"))
-        .select(col("doc_id"), col("lang"),
-          col("g.w1").as("w1"), col("g.w2").as("w2"))
-      val train = bg.filter(col("doc_id") % 10 =!= 7)
-      val ev = bg.filter(col("doc_id") % 10 === 7)
+      val (train, ev) = heldOutBigrams(s, d)
       val c2 = train.groupBy(col("lang"), col("w1"), col("w2"))
         .agg(count(lit(1)).as("c2"))
       // per-history: token count c1 AND fan-out N1+(w1·) in one pass
@@ -368,14 +419,7 @@ object Corpus extends OperatorFamily {
     // shape: gram explode is in-row; c₂ and c₁ are (lang, gram)
     // counts with map-side combine; the final rollup is |langs| rows.
     "t50_entropy_rate" -> ((s, d) => {
-      val bg = Tables.documents(s, d)
-        .select(col("lang"),
-          expr("filter(split(trim(text), ' '), x -> x <> '')").as("ws"))
-        .select(col("lang"), explode(expr(
-          "CASE WHEN size(ws) >= 2 THEN transform(sequence(0, size(ws) - 2), " +
-            "i -> struct(ws[i] AS w1, ws[i+1] AS w2)) ELSE " +
-            "array() END")).as("g"))
-        .select(col("lang"), col("g.w1").as("w1"), col("g.w2").as("w2"))
+      val bg = bigrams(s, d)
       val c2 = bg.groupBy(col("lang"), col("w1"), col("w2"))
         .agg(count(lit(1)).as("c2"))
       val c1 = bg.groupBy(col("lang"), col("w1"))
@@ -396,6 +440,84 @@ object Corpus extends OperatorFamily {
         .select(col("lang"), col("n_bigrams"), col("n_contexts"),
           col("n_types"), col("nats_total"), col("entropy_rate_bits"))
         .orderBy(col("lang"))
+    }),
+
+    // HELD-OUT BIGRAM-LM CROSS-ENTROPY — the perplexity-style quality
+    // number per language: train an add-one-smoothed bigram model on
+    // 90% of docs (doc_id % 10 ≠ 7), score the held-out 10% as
+    // H = −Σ ln((c₂+1)/(c₁+V))/N nats per bigram (V = the language's
+    // train continuation vocabulary). Complements t16/t21's
+    // integer-exact frequency screens with the actual NLL, and the
+    // split makes it honest (t21 scores in-sample). CONTRACT: each
+    // NLL term is quantized to 1e-9 nats (DECIMAL(18,9)) BEFORE the
+    // order-insensitive sum — ln is the one libm call neither engine
+    // rounds correctly (measured: a handful of 1-ulp JVM-vs-libm
+    // term diffs at sf0.001 shifted a DECIMAL(38,15) sum's 15th
+    // digit), and the 1e-9 grid absorbs 1-ulp input drift with
+    // ~4e-7/term boundary risk (the q159 decimal-round-trip idiom,
+    // coarsened for a 10⁴-term sum). Scale shape: gram explode is
+    // in-row; the model tables key
+    // on (lang, gram) with map-side combine; the |langs|-row vocab
+    // table broadcasts; eval grams join on the same gram keys.
+    "t44_bigram_cross_entropy" -> ((s, d) => {
+      val (train, ev) = heldOutBigrams(s, d)
+      val c2 = train.groupBy(col("lang"), col("w1"), col("w2"))
+        .agg(count(lit(1)).as("c2"))
+      val c1 = train.groupBy(col("lang"), col("w1"))
+        .agg(count(lit(1)).as("c1"))
+      val vs = train.groupBy(col("lang"))
+        .agg(countDistinct(col("w2")).as("v"))
+      // vs joins LEFT: a language whose docs ALL landed in the eval
+      // split has no trained model — it still reports (n_eval rows,
+      // unseen_rate 1.0) with NULL cross-entropy instead of silently
+      // vanishing from the output
+      ev.join(c2, Seq("lang", "w1", "w2"), "left")
+        .join(c1, Seq("lang", "w1"), "left")
+        .join(broadcast(vs), Seq("lang"), "left")
+        .withColumn("c2n", coalesce(col("c2"), lit(0L)))
+        .withColumn("c1n", coalesce(col("c1"), lit(0L)))
+        .withColumn("lp", log((col("c2n") + lit(1L)).cast("double") /
+          (col("c1n") + col("v")).cast("double")))
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_eval_bigrams"),
+          sum(when(col("c2n") === 0L, 1L).otherwise(0L)).as("n_unseen"),
+          sum((-col("lp")).cast(org.apache.spark.sql.types
+            .DecimalType(18, 9))).cast("double").as("nll_sum"))
+        .withColumn("cross_entropy_nats",
+          col("nll_sum") / col("n_eval_bigrams").cast("double"))
+        .withColumn("unseen_rate",
+          col("n_unseen").cast("double") /
+            col("n_eval_bigrams").cast("double"))
+        .select(col("lang"), col("n_eval_bigrams"), col("n_unseen"),
+          col("nll_sum"), col("cross_entropy_nats"), col("unseen_rate"))
+        .orderBy(col("lang"))
+    }),
+
+    // LEXICAL DIVERSITY per document: type-token ratio, hapax ratio
+    // (share of within-doc vocabulary used exactly once), and mean
+    // token length — the vocabulary-richness screen next to t23's
+    // entropy (TTR catches low-diversity docs linearly; hapax ratio
+    // separates natural prose, rich in one-off words, from template
+    // text that reuses a fixed vocabulary). Scale: entirely doc-local —
+    // the (doc, term) aggregate's exchange is doc_id-prefixed, the
+    // per-doc rollup groups on doc_id, all counters are exact integers
+    // until the three final divisions.
+    "t25_lexical_diversity" -> ((s, d) => {
+      val tf = docTermFreqs(s, d)
+        .withColumn("tlen", length(col("term")))
+      tf.groupBy(col("doc_id"))
+        .agg(sum(col("freq")).as("n_tokens"),
+          count(lit(1)).as("n_types"),
+          sum(when(col("freq") === 1, 1L).otherwise(0L)).as("n_hapax"),
+          sum(col("tlen") * col("freq")).as("char_sum"))
+        .select(col("doc_id"), col("n_tokens"), col("n_types"),
+          (col("n_types").cast("double") / col("n_tokens").cast("double"))
+            .as("ttr"),
+          (col("n_hapax").cast("double") / col("n_types").cast("double"))
+            .as("hapax_ratio"),
+          (col("char_sum").cast("double") / col("n_tokens").cast("double"))
+            .as("mean_token_len"))
+        .orderBy(col("doc_id"))
     }))
 
   def oracleSql: Map[String, String] = Map(
@@ -445,32 +567,13 @@ object Corpus extends OperatorFamily {
                      ELSE 0.0 END AS norm_entropy
          FROM e ORDER BY doc_id""",
 
-    "t37_bpe_merges" -> {
-      def round(i: Int): String =
-        s"""r${i}p AS (SELECT UNNEST(CASE WHEN len(t) >= 2
-           |    THEN list_transform(generate_series(1, len(t) - 1),
-           |      i -> '[' || t[i] || '][' || t[i + 1] || ']')
-           |    ELSE CAST([] AS VARCHAR[]) END) AS pair, wcnt
-           |  FROM (SELECT string_split(substring(sym, 2,
-           |      length(sym) - 2), '][') AS t, wcnt FROM s${i - 1})),
-           |r${i}t AS (SELECT $i AS round, pair,
-           |    CAST(SUM(wcnt) AS BIGINT) AS cnt,
-           |    replace(pair, '][', '') AS merged
-           |  FROM r${i}p GROUP BY 2 ORDER BY cnt DESC, pair LIMIT 1),
-           |s$i AS (SELECT replace(sym, t.pair, t.merged) AS sym, wcnt
-           |  FROM s${i - 1} CROSS JOIN r${i}t t)""".stripMargin
-      s"""WITH w AS (SELECT UNNEST(list_filter(string_split(trim(text),
-         |    ' '), x -> x <> '')) AS w FROM documents),
-         |  wc AS (SELECT w, COUNT(1) AS wcnt FROM w GROUP BY 1),
-         |  s0 AS (SELECT '[' || array_to_string(string_split(w, ''),
-         |      '][') || ']' AS sym, wcnt FROM wc),
-         |  ${(1 to 5).map(round).mkString(",\n")}
+    "t37_bpe_merges" ->
+      s"""WITH $BpeCtes
          |SELECT round, pair AS merge_pair, cnt AS n_weighted
          |FROM (SELECT * FROM r1t UNION ALL SELECT * FROM r2t
          |  UNION ALL SELECT * FROM r3t UNION ALL SELECT * FROM r4t
          |  UNION ALL SELECT * FROM r5t)
-         |ORDER BY round""".stripMargin
-    },
+         |ORDER BY round""".stripMargin,
 
     "t38_good_turing" ->
       """WITH docs AS (SELECT string_split(TRIM(text), ' ') AS l
@@ -500,25 +603,8 @@ object Corpus extends OperatorFamily {
         |FROM h WHERE r <= 20
         |ORDER BY r""".stripMargin,
 
-    "t39_bpe_encode" -> {
-      def round(i: Int): String =
-        s"""r${i}p AS (SELECT UNNEST(CASE WHEN len(t) >= 2
-           |    THEN list_transform(generate_series(1, len(t) - 1),
-           |      i -> '[' || t[i] || '][' || t[i + 1] || ']')
-           |    ELSE CAST([] AS VARCHAR[]) END) AS pair, wcnt
-           |  FROM (SELECT string_split(substring(sym, 2,
-           |      length(sym) - 2), '][') AS t, wcnt FROM s${i - 1})),
-           |r${i}t AS (SELECT pair, CAST(SUM(wcnt) AS BIGINT) AS cnt,
-           |    replace(pair, '][', '') AS merged
-           |  FROM r${i}p GROUP BY 1 ORDER BY cnt DESC, pair LIMIT 1),
-           |s$i AS (SELECT replace(sym, t.pair, t.merged) AS sym, wcnt
-           |  FROM s${i - 1} CROSS JOIN r${i}t t)""".stripMargin
-      s"""WITH w AS (SELECT UNNEST(list_filter(string_split(trim(text),
-         |    ' '), x -> x <> '')) AS w FROM documents),
-         |  wc AS (SELECT w, COUNT(1) AS wcnt FROM w GROUP BY 1),
-         |  s0 AS (SELECT '[' || array_to_string(string_split(w, ''),
-         |      '][') || ']' AS sym, wcnt FROM wc),
-         |  ${(1 to 5).map(round).mkString(",\n")},
+    "t39_bpe_encode" ->
+      s"""WITH $BpeCtes,
          |  agg AS (SELECT CAST(COUNT(1) AS BIGINT) AS n_words,
          |    CAST(SUM(wcnt) AS BIGINT) AS n_occurrences,
          |    CAST(SUM(wcnt * length(replace(replace(sym, '[', ''),
@@ -531,8 +617,7 @@ object Corpus extends OperatorFamily {
          |    AS chars_per_token,
          |  1.0 - CAST(n_bpe_tokens AS DOUBLE) /
          |    CAST(n_char_tokens AS DOUBLE) AS token_reduction
-         |FROM agg""".stripMargin
-    },
+         |FROM agg""".stripMargin,
 
     "t42_yule_k" ->
       """WITH tf AS (SELECT lang, UNNEST(string_split(TRIM(text), ' '))
@@ -555,13 +640,7 @@ object Corpus extends OperatorFamily {
         |ORDER BY lang""".stripMargin,
 
     "t49_kneser_ney_bigram" ->
-      """WITH w AS (SELECT doc_id, lang,
-        |    list_filter(string_split(TRIM(text), ' '),
-        |      x -> x <> '') AS ws
-        |  FROM documents),
-        |  bg AS (SELECT doc_id, lang, ws[i] AS w1, ws[i + 1] AS w2
-        |  FROM w, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |  WHERE len(ws) >= 2),
+      s"""WITH $BigramCtes,
         |  train AS (SELECT * FROM bg WHERE doc_id % 10 <> 7),
         |  ev AS (SELECT * FROM bg WHERE doc_id % 10 = 7),
         |  c2 AS (SELECT lang, w1, w2, COUNT(1) AS c2
@@ -606,12 +685,7 @@ object Corpus extends OperatorFamily {
         |FROM p GROUP BY 1 ORDER BY lang""".stripMargin,
 
     "t50_entropy_rate" ->
-      """WITH w AS (SELECT lang,
-           list_filter(string_split(TRIM(text), ' '), x -> x <> '') AS ws
-           FROM documents),
-         bg AS (SELECT lang, ws[i] AS w1, ws[i + 1] AS w2
-           FROM w, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-           WHERE len(ws) >= 2),
+      s"""WITH $BigramCtes,
          c2 AS (SELECT lang, w1, w2, CAST(COUNT(1) AS BIGINT) AS c2
            FROM bg GROUP BY 1, 2, 3),
          c1 AS (SELECT lang, w1, CAST(COUNT(1) AS BIGINT) AS c1
@@ -632,5 +706,60 @@ object Corpus extends OperatorFamily {
            (nats_total / CAST(n_bigrams AS DOUBLE)) / 0.6931471805599453
              AS entropy_rate_bits
          FROM agg JOIN ctx ON agg.lang = ctx.lang
-         ORDER BY 1""")
+         ORDER BY 1""",
+
+    // add-one bigram LM; NLL terms quantized to DECIMAL(18,9) before
+    // the sum (ln is libm on both engines — see the Spark twin)
+    "t44_bigram_cross_entropy" ->
+      s"""WITH $BigramCtes,
+         tr AS (SELECT * FROM bg WHERE doc_id % 10 != 7),
+         ev AS (SELECT * FROM bg WHERE doc_id % 10 = 7),
+         c2 AS (SELECT lang, w1, w2, CAST(COUNT(1) AS BIGINT) AS c2
+           FROM tr GROUP BY 1, 2, 3),
+         c1 AS (SELECT lang, w1, CAST(COUNT(1) AS BIGINT) AS c1
+           FROM tr GROUP BY 1, 2),
+         vs AS (SELECT lang, CAST(COUNT(DISTINCT w2) AS BIGINT) AS v
+           FROM tr GROUP BY 1),
+         j AS (SELECT ev.lang, COALESCE(c2.c2, 0) AS c2n,
+             COALESCE(c1.c1, 0) AS c1n, vs.v
+           FROM ev LEFT JOIN c2 ON ev.lang = c2.lang
+             AND ev.w1 = c2.w1 AND ev.w2 = c2.w2
+           LEFT JOIN c1 ON ev.lang = c1.lang AND ev.w1 = c1.w1
+           LEFT JOIN vs ON ev.lang = vs.lang),
+         t AS (SELECT lang, c2n,
+             ln(CAST(c2n + 1 AS DOUBLE) / CAST(c1n + v AS DOUBLE)) AS lp
+           FROM j),
+         agg AS (SELECT lang,
+             CAST(COUNT(1) AS BIGINT) AS n_eval_bigrams,
+             CAST(SUM(CASE WHEN c2n = 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_unseen,
+             CAST(CAST(SUM(CAST(-lp AS DECIMAL(18, 9))) AS VARCHAR)
+               AS DOUBLE) AS nll_sum
+           FROM t GROUP BY 1)
+         SELECT lang, n_eval_bigrams, n_unseen, nll_sum,
+           nll_sum / CAST(n_eval_bigrams AS DOUBLE) AS cross_entropy_nats,
+           CAST(n_unseen AS DOUBLE) / CAST(n_eval_bigrams AS DOUBLE)
+             AS unseen_rate
+         FROM agg ORDER BY lang""",
+
+    "t25_lexical_diversity" ->
+      """WITH terms AS (SELECT doc_id, UNNEST(string_split(TRIM(text), ' '))
+                          AS term FROM documents),
+         tf AS (SELECT doc_id, term, COUNT(*) AS freq,
+                       LEN(term) AS tlen
+                FROM terms GROUP BY 1, 2),
+         agg AS (SELECT doc_id,
+                   CAST(SUM(freq) AS BIGINT) AS n_tokens,
+                   COUNT(*) AS n_types,
+                   CAST(SUM(CASE WHEN freq = 1 THEN 1 ELSE 0 END)
+                     AS BIGINT) AS n_hapax,
+                   CAST(SUM(tlen * freq) AS BIGINT) AS char_sum
+                 FROM tf GROUP BY 1)
+         SELECT doc_id, n_tokens, n_types,
+                CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS ttr,
+                CAST(n_hapax AS DOUBLE) / CAST(n_types AS DOUBLE)
+                  AS hapax_ratio,
+                CAST(char_sum AS DOUBLE) / CAST(n_tokens AS DOUBLE)
+                  AS mean_token_len
+         FROM agg ORDER BY doc_id""")
 }

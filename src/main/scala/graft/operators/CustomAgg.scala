@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
-import graft.{Parity, Tables}
+import graft.Tables
+import graft.functions.HashFunctions
 import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Custom aggregation / UDF / typed-decode surface (SURVEY.md §2.2 "custom
@@ -54,6 +54,33 @@ object CustomAgg extends OperatorFamily {
   private def phash(c: Column): Column =
     graft.functions.HashFunctions.md5Hash60(c.cast("string"))
 
+  /** Distinct (event_type, h) pairs, h the portable 60-bit hash of
+    * user_id: the KMV sketches' input (q51, q63). */
+  private def typeUserHashes(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .select(col("event_type"),
+        HashFunctions.md5Hash60Chain(col("user_id")).as("h"))
+      .distinct()
+
+  /** DuckDB twin of [[typeUserHashes]] with each type's hash rank:
+    * CTEs `h` (event_type, h) and `r` (event_type, h, rn). */
+  private val TypeRankCtes =
+    s"""h AS (SELECT DISTINCT event_type,
+           ${md5Hash60Sql("CAST(user_id AS VARCHAR)")} AS h
+           FROM events),
+         r AS (SELECT event_type, h,
+                 ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS rn
+               FROM h)"""
+
+  /** HLL register inputs over a hash column h: bucket (the low 6 bits),
+    * w (the rest) and rho (the leading-zero rank of w in 55 bits) —
+    * q114/q124, twin of [[hllRegistersSql]]'s `rho`. */
+  private def withRho(hashed: DataFrame): DataFrame =
+    hashed
+      .withColumn("bucket", col("h").bitwiseAND(lit(63L)))
+      .withColumn("w", shiftright(col("h"), 6))
+      .withColumn("rho", when(col("w") === 0L, lit(55))
+        .otherwise(lit(55) - length(bin(col("w")))))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Custom typed Aggregator through the untyped agg surface.
@@ -98,7 +125,6 @@ object CustomAgg extends OperatorFamily {
     // it unsalted); at 100 TB this is how a dominant key stops pinning
     // one reducer.
     "q33_salted_two_phase_agg" -> ((s, d) => {
-      import graft.Parity._
       val partial = Tables.events(s, d)
         .withColumn("salt", pmod(col("event_id"), lit(16)))
         .groupBy(col("event_type"), col("salt"))
@@ -205,14 +231,8 @@ object CustomAgg extends OperatorFamily {
     // space; a TypedImperativeAggregate variant would fold partitions
     // without the row_number pass (q34 demonstrates that machinery).
     "q51_kmv_distinct_sketch" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val k = 64
-      val h = Tables.events(s, d)
-        .select(col("event_type"),
-          conv(substring(
-            md5(encode(col("user_id").cast("string"), "UTF-8")), 1, 15),
-            16, 10).cast("long").as("h"))
-        .distinct()
+      val h = typeUserHashes(s, d)
       val w = Window.partitionBy(col("event_type")).orderBy(col("h"))
       h.withColumn("rn", row_number().over(w))
         .groupBy(col("event_type"))
@@ -238,14 +258,8 @@ object CustomAgg extends OperatorFamily {
     // corpus-side exchange is the distinct on (type, hash); everything
     // after runs on k·|types| rows.
     "q63_kmv_sketch_union" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val k = 64
-      val h = Tables.events(s, d)
-        .select(col("event_type"),
-          conv(substring(
-            md5(encode(col("user_id").cast("string"), "UTF-8")), 1, 15),
-            16, 10).cast("long").as("h"))
-        .distinct()
+      val h = typeUserHashes(s, d)
       val wType = Window.partitionBy(col("event_type")).orderBy(col("h"))
       val sketches = h.withColumn("rn", row_number().over(wType))
         .filter(col("rn") <= k)
@@ -285,16 +299,10 @@ object CustomAgg extends OperatorFamily {
     // files across days/shards is the same max, which is the whole
     // point of HLL.
     "q114_hll_distinct" -> ((s, d) => {
-      val h = conv(substring(
-        md5(encode(col("o_custkey").cast("string"), "UTF-8")), 1, 15),
-        16, 10).cast("long")
-      val regs = Tables.orders(s, d)
+      val h = HashFunctions.md5Hash60Chain(col("o_custkey"))
+      val regs = withRho(Tables.orders(s, d)
         .select(col("o_orderpriority").as("priority"), col("o_custkey"),
-          h.as("h"))
-        .withColumn("bucket", col("h").bitwiseAND(lit(63L)))
-        .withColumn("w", shiftright(col("h"), 6))
-        .withColumn("rho", when(col("w") === 0L, lit(55))
-          .otherwise(lit(55) - length(bin(col("w")))))
+          h.as("h")))
         .groupBy(col("priority"), col("bucket"))
         .agg(max(col("rho")).as("m"))
       val sketch = regs.groupBy(col("priority"))
@@ -331,18 +339,12 @@ object CustomAgg extends OperatorFamily {
     // to |priorities|×|weeks|×64 register rows; the merge exchanges
     // only those.
     "q124_hll_weekly_union" -> ((s, d) => {
-      val h = conv(substring(
-        md5(encode(col("o_custkey").cast("string"), "UTF-8")), 1, 15),
-        16, 10).cast("long")
-      val base = Tables.orders(s, d)
+      val h = HashFunctions.md5Hash60Chain(col("o_custkey"))
+      val base = withRho(Tables.orders(s, d)
         .select(col("o_orderpriority").as("priority"),
           expr("CAST(datediff(CAST(o_orderdate AS DATE), " +
             "DATE '1970-01-01') div 7 AS BIGINT)").as("wk"),
-          h.as("h"))
-        .withColumn("bucket", col("h").bitwiseAND(lit(63L)))
-        .withColumn("w", shiftright(col("h"), 6))
-        .withColumn("rho", when(col("w") === 0L, lit(55))
-          .otherwise(lit(55) - length(bin(col("w")))))
+          h.as("h")))
       val weekly = base.groupBy(col("priority"), col("wk"), col("bucket"))
         .agg(max(col("rho")).as("m"))
       val merged = weekly.groupBy(col("priority"), col("bucket"))
@@ -381,9 +383,7 @@ object CustomAgg extends OperatorFamily {
     // the tightest possible distinct-sketch shuffle.
     "q126_hll_agg" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
-      val h = conv(substring(
-        md5(encode(col("o_custkey").cast("string"), "UTF-8")), 1, 15),
-        16, 10).cast("long")
+      val h = HashFunctions.md5Hash60Chain(col("o_custkey"))
       Tables.orders(s, d)
         .select(col("o_orderpriority").as("priority"), h.as("h"))
         .groupBy(col("priority"))
@@ -694,12 +694,7 @@ object CustomAgg extends OperatorFamily {
          FROM e WHERE k IS NOT NULL GROUP BY k % 7 ORDER BY k_mod7""",
 
     "q51_kmv_distinct_sketch" ->
-      s"""WITH h AS (SELECT DISTINCT event_type,
-           ${md5Hash60Sql("CAST(user_id AS VARCHAR)")} AS h
-           FROM events),
-         r AS (SELECT event_type, h,
-                 ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS rn
-               FROM h)
+      s"""WITH $TypeRankCtes
          SELECT event_type, COUNT(1) AS ndv_exact,
            CASE WHEN COUNT(1) < 64 THEN CAST(COUNT(1) AS DOUBLE)
                 ELSE 63.0 * 1152921504606846976
@@ -708,12 +703,7 @@ object CustomAgg extends OperatorFamily {
          FROM r GROUP BY event_type ORDER BY event_type""",
 
     "q63_kmv_sketch_union" ->
-      s"""WITH h AS (SELECT DISTINCT event_type,
-           ${md5Hash60Sql("CAST(user_id AS VARCHAR)")} AS h
-           FROM events),
-         r AS (SELECT event_type, h,
-                 ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS rn
-               FROM h),
+      s"""WITH $TypeRankCtes,
          sk AS (SELECT DISTINCT h FROM r WHERE rn <= 64),
          m AS (SELECT h, ROW_NUMBER() OVER (ORDER BY h) AS rn FROM sk),
          est AS (SELECT COUNT(1) AS sketch_size,

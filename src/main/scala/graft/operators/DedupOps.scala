@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Parity, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.HashFunctions.md5Hash60Sql
 
@@ -65,7 +66,6 @@ object DedupOps extends OperatorFamily {
     * by the consumers; intersection counts are unaffected.
     */
   private def withDocFreq(sh: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     sh.select(col("sh"),
       count(lit(1)).over(Window.partitionBy(col("sh"))).as("df"),
       col("doc_id"))
@@ -882,7 +882,6 @@ object DedupOps extends OperatorFamily {
     // by construction (near-dup groups), so no partition outgrows a
     // task.
     "d13_canonical_keep_longest" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
       val toks = docs.select(col("doc_id"),
         size(split(trim(col("text")), " ")).cast("long").as("n_tokens"))
@@ -1209,7 +1208,6 @@ object DedupOps extends OperatorFamily {
     // broadcast eval grams); each stage materializes once and reduces
     // to a 1-row aggregate; the drop-rate window runs over 4 rows.
     "d24_pipeline_funnel" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docsAll = Tables.documents(s, d)
       val s0 = Materialize.LocalCheckpoint(
         docsAll.filter(col("doc_id") % 7 =!= 0))
@@ -1495,7 +1493,6 @@ object DedupOps extends OperatorFamily {
     // repeats); flagged positions rejoin on g and the island merge
     // (pos - row_number) is a doc-local window. No text ever shuffles.
     "d15_repeated_spans" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val n = 8
       val pos = Tables.documents(s, d)
         .select(col("doc_id"), posexplode(

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{Parity, Tables}
-import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Time series, regression and their diagnostics: trends (OLS,
   * Theil–Sen, Siegel, Mann–Kendall), smoothing and forecasting (EWMA,
@@ -163,6 +162,37 @@ object Forecasting extends OperatorFamily {
       s"""CASE WHEN $c = 0 THEN NULL ELSE
          (${vd(a)} - ${vd(b)} * ${vd(b)} / ${vd(c)}) / ${vd(n)} END"""
 
+  /** Daily order revenue (day, x): day = days since 1970-01-01 and x
+    * the exact cents of the orders placed that day (q127, q202). */
+  private def dailyRevenue(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .select(datediff(col("o_orderdate").cast("date"),
+        to_date(lit("1970-01-01"))).as("day"),
+        round(col("o_totalprice") * 100).cast("long").as("cents"))
+      .groupBy(col("day")).agg(sum(col("cents")).as("x"))
+
+  /** DuckDB twin of [[dailyRevenue]]: CTE `daily` (day, x). */
+  private val DailyRevenueCte =
+    """daily AS (SELECT datediff('day', DATE '1970-01-01',
+             CAST(o_orderdate AS DATE)) AS day,
+             CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
+               AS BIGINT) AS x
+           FROM orders GROUP BY 1)"""
+
+  /** The dense daily revenue series of q189/q191 as CTEs: `daily` (day,
+    * cents), `b` (first and last day), `grid` (every calendar day) and
+    * `ser` (day, cents with 0 on days without orders). */
+  private val DenseDailyCtes =
+    """daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
+        |    CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |      AS cents
+        |  FROM orders GROUP BY 1),
+        |  b AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
+        |  grid AS (SELECT CAST(UNNEST(generate_series(lo, hi,
+        |      INTERVAL 1 DAY)) AS DATE) AS day FROM b),
+        |  ser AS (SELECT g.day, COALESCE(d.cents, 0) AS cents
+        |    FROM grid g LEFT JOIN daily d USING (day))""".stripMargin
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Closed-form per-group OLS (y = l_extendedprice on x = l_quantity):
@@ -212,7 +242,6 @@ object Forecasting extends OperatorFamily {
     // windowed the exploded grid — 2 extra exchanges of the biggest
     // frame; this form benched ~2x faster at sf0.1 (2.44 s -> 1.26 s).
     "q60_gapfill_locf" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val e = Tables.events(s, d)
         .withColumn("hr", date_trunc("hour", col("ts")))
       // the hourly rollup carries the last event's TYPE via max_by, so
@@ -246,7 +275,6 @@ object Forecasting extends OperatorFamily {
     // the tiny rollup. Week emitted as timestamp_ntz (q66 rule:
     // date32 breaks the driver hash on the pandas side).
     "q88_wow_trend" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val wk = Tables.orders(s, d)
         .groupBy(col("o_orderpriority"),
           date_trunc("week", col("o_orderdate")).cast("timestamp_ntz")
@@ -465,11 +493,7 @@ object Forecasting extends OperatorFamily {
     // through sf10; a 100 TB deployment shifts the carrier to
     // DECIMAL(38,0) (the Parity path) before the long saturates.
     "q127_cusum_drift" -> ((s, d) => {
-      val daily = Tables.orders(s, d)
-        .select(datediff(col("o_orderdate").cast("date"),
-          to_date(lit("1970-01-01"))).as("day"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .groupBy(col("day")).agg(sum(col("cents")).as("x"))
+      val daily = dailyRevenue(s, d)
       val tot = daily.agg(count(lit(1)).as("n"), sum(col("x")).as("t"))
       val wP = Window.orderBy(col("day"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1358,7 +1382,6 @@ object Forecasting extends OperatorFamily {
     // aggregate; the MA window runs over the calendar grid (q115's
     // bounded class); everything after is a 7-row frame.
     "q191_seasonal_strength" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val daily = Tables.orders(s, d)
         .groupBy(to_date(col("o_orderdate")).as("day"))
@@ -1885,11 +1908,7 @@ object Forecasting extends OperatorFamily {
     // calibration window has sagged/run above μ0 + δ by more than
     // λ = 10·μ0 of accumulated deficit.
     "q202_page_hinkley" -> ((s, d) => {
-      val daily = Tables.orders(s, d)
-        .select(datediff(col("o_orderdate").cast("date"),
-          to_date(lit("1970-01-01"))).as("day"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .groupBy(col("day")).agg(sum(col("cents")).as("x"))
+      val daily = dailyRevenue(s, d)
       val wSeq = Window.orderBy(col("day"))
       val wPre = wSeq.rowsBetween(Window.unboundedPreceding,
         Window.currentRow)
@@ -2078,11 +2097,7 @@ object Forecasting extends OperatorFamily {
     // the same prefix-sum-minus-running-min identity, exact BIGINT
     // arithmetic scaled by 10n so the mean's division never happens
     "q127_cusum_drift" ->
-      """WITH daily AS (SELECT datediff('day', DATE '1970-01-01',
-             CAST(o_orderdate AS DATE)) AS day,
-             CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS x
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyRevenueCte,
          tot AS (SELECT COUNT(1) AS n, CAST(SUM(x) AS BIGINT) AS t
            FROM daily),
          dev AS (SELECT day, x, n, t, 10 * n * x - 11 * t AS y
@@ -2562,15 +2577,7 @@ object Forecasting extends OperatorFamily {
     // operation, as a recursive CTE; list_transform's lambda index is
     // 1-based (Spark's transform index is 0-based, hence j - 1)
     "q189_holt_winters" ->
-      """WITH RECURSIVE daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |      AS cents
-        |  FROM orders GROUP BY 1),
-        |  b AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
-        |  grid AS (SELECT CAST(UNNEST(generate_series(lo, hi,
-        |      INTERVAL 1 DAY)) AS DATE) AS day FROM b),
-        |  ser AS (SELECT g.day, COALESCE(d.cents, 0) AS cents
-        |    FROM grid g LEFT JOIN daily d USING (day)),
+      s"""WITH RECURSIVE $DenseDailyCtes,
         |  arr AS (SELECT LIST(CAST(cents AS DOUBLE) ORDER BY day) AS a,
         |    CAST(COUNT(1) AS INT) AS n FROM ser),
         |  ini AS (SELECT a, n,
@@ -2654,15 +2661,7 @@ object Forecasting extends OperatorFamily {
     // (q150's DuckDB int128 double-rounding workaround); the 7-term
     // sum_b parenthesization matches Spark exactly
     "q191_seasonal_strength" ->
-      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |      AS cents
-        |  FROM orders GROUP BY 1),
-        |  b AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
-        |  grid AS (SELECT CAST(UNNEST(generate_series(lo, hi,
-        |      INTERVAL 1 DAY)) AS DATE) AS day FROM b),
-        |  ser AS (SELECT g.day, COALESCE(d.cents, 0) AS cents
-        |    FROM grid g LEFT JOIN daily d USING (day)),
+      s"""WITH $DenseDailyCtes,
         |  w AS (SELECT day, cents,
         |    SUM(cents) OVER (ORDER BY day
         |      ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS wsum,
@@ -3081,11 +3080,7 @@ object Forecasting extends OperatorFamily {
         |FROM s2t""".stripMargin,
 
     "q202_page_hinkley" ->
-      """WITH daily AS (SELECT datediff('day', DATE '1970-01-01',
-             CAST(o_orderdate AS DATE)) AS day,
-             CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-               AS BIGINT) AS x
-           FROM orders GROUP BY 1),
+      s"""WITH $DailyRevenueCte,
          ord AS (SELECT day, x,
              CAST(ROW_NUMBER() OVER (ORDER BY day) AS HUGEINT) AS t,
              CAST(SUM(CAST(x AS HUGEINT)) OVER (ORDER BY day

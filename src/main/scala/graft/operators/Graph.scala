@@ -3,9 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
-import graft.{Parity, Tables}
-import graft.functions.HashFunctions.md5Hash60Sql
+import graft.Tables
 
 /** Graph analytics over the part co-purchase graph and the
   * customer-brand bipartite graph: PageRank, triangles and clustering,

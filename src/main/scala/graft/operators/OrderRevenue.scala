@@ -139,6 +139,17 @@ private[graft] object OrderRevenue extends OperatorFamily {
       .withColumn("cum", sum(col("c")).over(wCum))
       .withColumn("n", sum(col("c")).over(wTot))
   }
+  /** DuckDB twin of [[nationValueCum]]: [[nationValueGridSql]]'s CTEs
+    * plus `cm` (nation, v, c, cum, n). */
+  val nationValueCumSql: String = nationValueGridSql +
+    """,
+      |  cm AS (SELECT nation, v, c,
+      |    CAST(SUM(c) OVER (PARTITION BY nation ORDER BY v
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      |      AS BIGINT) AS cum,
+      |    CAST(SUM(c) OVER (PARTITION BY nation) AS BIGINT) AS n
+      |  FROM grid)""".stripMargin
+
 
   /** The blocked design of q148 Friedman and q168 Page: the three size
     * buckets ranked by mean order revenue inside each nation (ties
@@ -527,6 +538,28 @@ private[graft] object OrderRevenue extends OperatorFamily {
        |  tg AS (SELECT nation, y, CAST(COUNT(1) AS BIGINT) AS c
        |    FROM wk GROUP BY 1, 2)""".stripMargin
 
+  // ---- period split ----------------------------------------------------
+
+  /** The calendar midpoint of the order-date range as a 1-row frame
+    * (mid, in days since 1970-01-01): q112/q121 split their two periods
+    * at it. */
+  def midDay(s: SparkSession, d: String): DataFrame = {
+    val epoch = to_date(lit("1970-01-01"))
+    Tables.orders(s, d)
+      .agg(min(datediff(col("o_orderdate").cast("date"), epoch))
+        .as("lo"),
+        max(datediff(col("o_orderdate").cast("date"), epoch)).as("hi"))
+      .select(expr("CAST((lo + hi + 1) div 2 AS INT)").as("mid"))
+  }
+
+  /** DuckDB twin of [[midDay]]: CTE `bounds` (mid). */
+  val MidDayCte: String =
+    """bounds AS (SELECT CAST((MIN(datediff('day',
+               DATE '1970-01-01', CAST(o_orderdate AS DATE)))
+             + MAX(datediff('day', DATE '1970-01-01',
+               CAST(o_orderdate AS DATE))) + 1) // 2 AS INT) AS mid
+           FROM orders)"""
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // MARKET-BASKET association rules (support / confidence / lift)
@@ -608,7 +641,6 @@ private[graft] object OrderRevenue extends OperatorFamily {
     // window runs over the numShufflePartitions-row offset table.
     // The final agg is 10 rows.
     "q86_decile_gain" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       // spend carried as integer cents end-to-end (q68 rule: double
       // sums are order-dependent across engines; integer sums are
       // exact and make the ntile order unambiguous)
@@ -752,7 +784,6 @@ private[graft] object OrderRevenue extends OperatorFamily {
     // map-side; the histogram frame is ≤ max-basket-size rows and the
     // share window runs over it, never the facts. Integer cents.
     "q94_order_size_histogram" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val per = Tables.lineitem(s, d)
         .groupBy(col("l_orderkey"))
         .agg(count(lit(1)).as("n_lines"),
@@ -942,11 +973,7 @@ private[graft] object OrderRevenue extends OperatorFamily {
     // window runs over 5 rows.
     "q112_price_volume_mix" -> ((s, d) => {
       val epoch = to_date(lit("1970-01-01"))
-      val bounds = Tables.orders(s, d)
-        .agg(min(datediff(col("o_orderdate").cast("date"), epoch))
-          .as("lo"),
-          max(datediff(col("o_orderdate").cast("date"), epoch)).as("hi"))
-        .select(expr("CAST((lo + hi + 1) div 2 AS INT)").as("mid"))
+      val bounds = midDay(s, d)
       val base = Tables.lineitem(s, d)
         .select(col("l_orderkey"),
           round(col("l_quantity")).cast("long").as("q"),
@@ -1113,11 +1140,7 @@ private[graft] object OrderRevenue extends OperatorFamily {
     // two tiny classed frames.
     "q121_abc_migration" -> ((s, d) => {
       val epoch = to_date(lit("1970-01-01"))
-      val bounds = Tables.orders(s, d)
-        .agg(min(datediff(col("o_orderdate").cast("date"), epoch))
-          .as("lo"),
-          max(datediff(col("o_orderdate").cast("date"), epoch)).as("hi"))
-        .select(expr("CAST((lo + hi + 1) div 2 AS INT)").as("mid"))
+      val bounds = midDay(s, d)
       val rev = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey"),
           round(col("l_extendedprice") * (lit(1d) - col("l_discount"))
@@ -1412,11 +1435,7 @@ private[graft] object OrderRevenue extends OperatorFamily {
          ORDER BY r_name, n_name""",
 
     "q112_price_volume_mix" ->
-      """WITH bounds AS (SELECT CAST((MIN(datediff('day',
-               DATE '1970-01-01', CAST(o_orderdate AS DATE)))
-             + MAX(datediff('day', DATE '1970-01-01',
-               CAST(o_orderdate AS DATE))) + 1) // 2 AS INT) AS mid
-           FROM orders),
+      s"""WITH $MidDayCte,
          base AS (SELECT c_mktsegment AS segment,
              CASE WHEN datediff('day', DATE '1970-01-01',
                CAST(o_orderdate AS DATE)) < mid THEN 1 ELSE 2 END
@@ -1526,11 +1545,7 @@ private[graft] object OrderRevenue extends OperatorFamily {
          GROUP BY 1 ORDER BY wk""",
 
     "q121_abc_migration" ->
-      """WITH bounds AS (SELECT CAST((MIN(datediff('day',
-               DATE '1970-01-01', CAST(o_orderdate AS DATE)))
-             + MAX(datediff('day', DATE '1970-01-01',
-               CAST(o_orderdate AS DATE))) + 1) // 2 AS INT) AS mid
-           FROM orders),
+      s"""WITH $MidDayCte,
          rev AS (SELECT
              CASE WHEN datediff('day', DATE '1970-01-01',
                CAST(o_orderdate AS DATE)) < mid THEN 1 ELSE 2 END

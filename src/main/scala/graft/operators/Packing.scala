@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Two-phase distributed prefix sum — the 100 TB running-sum shape
@@ -29,7 +30,6 @@ object Packing {
   def twoPhasePrefixSum(frame: DataFrame, partCol: String,
       weightCol: String, blkSize: Long = 4096L,
       materialize: Materialize = Materialize.LocalCheckpoint): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val base =
       materialize(frame.withColumn("blk", expr(s"doc_id div $blkSize")))
     // phase 1: bounded local prefix sums, one group per (part, blk)
@@ -74,7 +74,6 @@ object Packing {
   def orderedPrefixSum(frame: DataFrame, sortCols: Seq[Column],
       weightCol: String, numParts: Int = 0,
       materialize: Materialize = Materialize.LocalCheckpoint): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val n =
       if (numParts > 0) numParts
       else frame.sparkSession.sessionState.conf.numShufflePartitions

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.HashFunctions
 
 /** End-to-end training-data preparation: the operators composed the way
   * a real pipeline runs them, as one declarative plan per stage.
@@ -130,9 +131,7 @@ object Pipeline {
     require(cuts.nonEmpty && cuts.last._2 == 100 &&
       cuts.map(_._2) == cuts.map(_._2).sorted,
       s"cuts must be ascending cumulative percentages ending at 100: $cuts")
-    val h = conv(substring(
-      md5(encode(col("rep").cast("string"), "UTF-8")), 1, 15),
-      16, 10).cast("long")
+    val h = HashFunctions.md5Hash60Chain(col("rep"))
     val bucketed = docs.join(reps, Seq("doc_id"))
       .withColumn("bucket", pmod(h, lit(100L)).cast("int"))
     val split = cuts.init.foldRight(lit(cuts.last._1): Column) {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.functions.HashFunctions
 import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Relational operator surface (SURVEY.md §2.2): projection/filter, every
@@ -42,6 +43,33 @@ object Relational extends OperatorFamily {
     if (fs.exists(path)) { fs.delete(path, true); () }
   }
 
+
+  private val EventTypes = Seq("click", "error", "purchase", "signup", "view")
+
+  /** Event counts per (user_id mod 10 bucket, event type), one
+    * zero-filled column per type in [[EventTypes]] (q27; q59 melts it
+    * back). */
+  private def eventTypePivot(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .withColumn("bucket", pmod(col("user_id"), lit(10)))
+      .groupBy(col("bucket"))
+      .pivot("event_type", EventTypes)
+      .count()
+      .select(col("bucket") +: EventTypes.map(t =>
+        coalesce(col(t), lit(0L)).as(t)): _*)
+
+  /** The as-of truth of q26 and q123. NB: not DuckDB's ASOF JOIN — ASOF
+    * breaks exact-timestamp ties arbitrarily, while the Spark plans
+    * deterministically pick the largest signup_id; the correlated
+    * subquery pins the same tiebreak. */
+  private val AsofSql =
+    """SELECT p.event_id AS purchase_id, p.user_id,
+           (SELECT s.event_id FROM events s
+            WHERE s.event_type = 'signup' AND s.user_id = p.user_id
+              AND s.ts <= p.ts
+            ORDER BY s.ts DESC, s.event_id DESC LIMIT 1) AS signup_id
+         FROM events p WHERE p.event_type = 'purchase'
+         ORDER BY purchase_id"""
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- aggregation -----------------------------------------------------
@@ -399,17 +427,8 @@ object Relational extends OperatorFamily {
     }),
 
     // Pivot (explicit value list keeps the output schema deterministic).
-    "q27_pivot" -> ((s, d) => {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val p = Tables.events(s, d)
-        .withColumn("bucket", pmod(col("user_id"), lit(10)))
-        .groupBy(col("bucket"))
-        .pivot("event_type", types)
-        .count()
-      p.select(col("bucket") +: types.map(t =>
-          coalesce(col(t), lit(0L)).as(t)): _*)
-        .orderBy(col("bucket"))
-    }),
+    "q27_pivot" -> ((s, d) =>
+      eventTypePivot(s, d).orderBy(col("bucket"))),
 
     // Explode / word count (UDTF surface): lateral view of split tokens.
     "q28_explode_wordcount" -> ((s, d) => {
@@ -476,14 +495,11 @@ object Relational extends OperatorFamily {
     // 64-byte register file + ≤128 (hash, cents) pairs per group on
     // the exchange, both map-side combinable.
     "q29_approx_aggregates" -> ((s, d) => {
-      val hash60 = (c: Column) => conv(substring(
-        md5(encode(c.cast("string"), "UTF-8")), 1, 15), 16, 10)
-        .cast("long")
       Tables.events(s, d)
         .select(col("event_type"),
-          hash60(col("user_id")).as("hu"),
+          HashFunctions.md5Hash60Chain(col("user_id")).as("hu"),
           round(col("value") * 100, 0).cast("long").as("v"))
-        .withColumn("hv", hash60(col("v")))
+        .withColumn("hv", HashFunctions.md5Hash60Chain(col("v")))
         .groupBy(col("event_type"))
         .agg(graft.functions.HllFunctions.hllRegisters(col("hu"))
           .as("regs"),
@@ -670,7 +686,6 @@ object Relational extends OperatorFamily {
     // VALUE (micros), not row position — peers at the same timestamp are
     // always in-frame together, so the result is tie-order independent.
     "q56_time_range_window" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("us"))
         .rangeBetween(-3600000000L, 0L) // 1 hour in micros, inclusive
@@ -715,19 +730,11 @@ object Relational extends OperatorFamily {
     // columns back to (bucket, event_type, n) long form, zero-filled
     // cells included. Pivot/unpivot round-trip pins both directions of
     // the reshape family; unpivot is a zero-shuffle per-row expansion.
-    "q59_unpivot" -> ((s, d) => {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val p = Tables.events(s, d)
-        .withColumn("bucket", pmod(col("user_id"), lit(10)))
-        .groupBy(col("bucket"))
-        .pivot("event_type", types)
-        .count()
-      p.select(col("bucket") +: types.map(t =>
-          coalesce(col(t), lit(0L)).as(t)): _*)
-        .unpivot(Array(col("bucket")), types.map(col).toArray,
+    "q59_unpivot" -> ((s, d) =>
+      eventTypePivot(s, d)
+        .unpivot(Array(col("bucket")), EventTypes.map(col).toArray,
           "event_type", "n")
-        .orderBy(col("bucket"), col("event_type"))
-    }),
+        .orderBy(col("bucket"), col("event_type"))),
 
     // DISTRIBUTION windows — ntile / percent_rank / cume_dist, the
     // last window family the inventory lacked (q16 covers the rank
@@ -1004,17 +1011,7 @@ object Relational extends OperatorFamily {
            ON p_retailprice >= lo AND p_retailprice < hi
          GROUP BY band ORDER BY band""",
 
-    // NB: not DuckDB's ASOF JOIN — ASOF breaks exact-timestamp ties
-    // arbitrarily, while the Spark plan deterministically picks the
-    // largest signup_id; the correlated subquery pins the same tiebreak.
-    "q26_asof_join" ->
-      """SELECT p.event_id AS purchase_id, p.user_id,
-           (SELECT s.event_id FROM events s
-            WHERE s.event_type = 'signup' AND s.user_id = p.user_id
-              AND s.ts <= p.ts
-            ORDER BY s.ts DESC, s.event_id DESC LIMIT 1) AS signup_id
-         FROM events p WHERE p.event_type = 'purchase'
-         ORDER BY purchase_id""",
+    "q26_asof_join" -> AsofSql,
 
     "q27_pivot" ->
       """SELECT user_id % 10 AS bucket,
@@ -1252,13 +1249,6 @@ object Relational extends OperatorFamily {
 
     // identical truth to q26's oracle — the native exec and the
     // union+window plan must both reproduce it
-    "q123_native_asof" ->
-      """SELECT p.event_id AS purchase_id, p.user_id,
-           (SELECT s.event_id FROM events s
-            WHERE s.event_type = 'signup' AND s.user_id = p.user_id
-              AND s.ts <= p.ts
-            ORDER BY s.ts DESC, s.event_id DESC LIMIT 1) AS signup_id
-         FROM events p WHERE p.event_type = 'purchase'
-         ORDER BY purchase_id"""
+    "q123_native_asof" -> AsofSql
   )
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.{Parity, Tables}
 
 /** Similarity search over the `embeddings` table (Array[Float] column).
@@ -61,7 +61,6 @@ object Similarity extends OperatorFamily {
     * of query vectors (sample × corpus, never the full n² cartesian).
     */
   private[graft] def e30TruthFrame(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val v = vecs(s, d)
       .withColumn("n2", dot(col("v"), col("v")))
       .withColumn("p", array((0 until JlK).map(j =>
@@ -245,7 +244,6 @@ object Similarity extends OperatorFamily {
 
     // Brute-force cosine top-3 neighbors per vector (ties by neighbor id).
     "e02_ann_topk_bruteforce" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val v = vecs(s, d)
       val a = v.select(col("vec_id"), col("v").as("va"), col("nrm").as("na"))
       val b = v.select(col("vec_id").as("neighbor_id"), col("v").as("vb"),
@@ -349,7 +347,6 @@ object Similarity extends OperatorFamily {
     // nprobe and the plan shape is identical to e03: broadcast
     // centroid assignment, equi join on cell, top-1 by exact cosine.
     "e06_ann_ivf_nprobe" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       // ranked feeds the assigned corpus side AND the probe side
       val ranked = Materialize.LocalCheckpoint(centroidRanked(s, d))
       val assigned = ranked.filter(col("crk") === 1)
@@ -599,7 +596,6 @@ object Similarity extends OperatorFamily {
     // run on a SAMPLED eval set in production; votes/rollup are
     // key-only exchanges.
     "e11_knn_label_accuracy" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val v = vecs(s, d)
       val lab = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
       val a = v.select(col("vec_id"), col("v").as("va"), col("nrm").as("na"))
@@ -662,7 +658,6 @@ object Similarity extends OperatorFamily {
     // the ground-truth side is the O(n²) scan, run on a SAMPLED query
     // set in production (the sf corpus stands in here).
     "e08_ann_recall_sweep" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val k = 3
       val v = vecs(s, d)
       val ranked = Materialize.LocalCheckpoint(centroidRanked(s, d))
@@ -722,7 +717,6 @@ object Similarity extends OperatorFamily {
     // (broadcast centroids, equi-join on cell); the quantized rank and
     // the exact re-rank ride the same window pass family.
     "e09_ann_ivf_sq8" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       // LocalCheckpoint: the assignment + int8 encode runs ONCE and
       // both join sides read the cut (the analyzer would otherwise
       // expand the subtree twice — double scan, double assignment)
@@ -775,7 +769,6 @@ object Similarity extends OperatorFamily {
     // unioned to 3 rows; the exhaustive truth side is the declared
     // oracle-ground-truth exception (e07's contract).
     "e24_ivf_k_sweep" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val v = vecs(s, d)
       // the exhaustive truth scan feeds the total AND all three config
       // joins — cut it so the O(n²) pass runs once, not four times
@@ -841,7 +834,6 @@ object Similarity extends OperatorFamily {
     // arithmetic bit-for-bit, ties broken by candidate id.
     "e23_mmr_rerank" -> ((s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       val v = vecs(s, d)
       val q = v.filter(col("vec_id") % 50 === 1)
         .select(col("vec_id").as("q_id"), col("v").as("qv"),
@@ -919,7 +911,6 @@ object Similarity extends OperatorFamily {
     // definition and drop with the empty pair frame (documented
     // contract; the oracle agrees).
     "e25_cell_medoid" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val asg = centroidRanked(s, d).filter(col("crk") === 1)
         .select(col("vec_id"), col("v"), col("nrm"),
           col("cent_id").as("cell"))
@@ -959,7 +950,6 @@ object Similarity extends OperatorFamily {
     // label groups; the within-label truth is O(Σ label²) by declared
     // contract (sampled query set in production).
     "e26_filtered_ann" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val lbl = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"))
       val asg = centroidRanked(s, d).filter(col("crk") === 1)
@@ -1152,7 +1142,6 @@ object Similarity extends OperatorFamily {
     // Determinism: e15's contract — DECIMAL means, identically
     // parenthesized L2, argmin ties by cb_id.
     "e31_pq_codebook_refine" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val m = 8
       val sub = 8
       val v = vecs(s, d)
@@ -1272,7 +1261,6 @@ object Similarity extends OperatorFamily {
     // the cosine division shares e03's exact parenthesization, ties
     // by neighbor id.
     "e33_matryoshka_recall" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val widths = Seq(8, 16, 32, 64)
       // assignment cut (two self-join sides) + a SLIM pair cut: all
       // prefix cosines compute in the one pair pass, so the cut holds
@@ -1349,7 +1337,6 @@ object Similarity extends OperatorFamily {
     // ONE within-cell pair join; the hamming rank needs only the
     // 8-byte signatures on the wire.
     "e34_ann_binary_sign" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       // assignment + slim pair cut (the e33 round-12 shape): both
       // ranking windows read one materialized (ids, cos, ham) frame
       // instead of re-running the cell join and the dot products
@@ -1480,7 +1467,6 @@ object Similarity extends OperatorFamily {
     * cell, exact top-1 cosine within the cell. Shared by e03 and the
     * e07 recall evaluation so both measure the identical index. */
   private def ivfTop1(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // both sides of the within-cell self-join derive from the same
     // assignment — cut it so the scan + broadcast ranking run once
     val assigned = Materialize.LocalCheckpoint(centroidRanked(s, d)
@@ -1506,7 +1492,6 @@ object Similarity extends OperatorFamily {
     * measure different ground truths. O(n²) by contract (sampled
     * query set in production). */
   private def truthTop1(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val v = vecs(s, d)
     val a = v.select(col("vec_id"), col("v").as("va"), col("nrm").as("na"))
     val b = v.select(col("vec_id").as("true_nb"), col("v").as("vb"),
@@ -1545,7 +1530,6 @@ object Similarity extends OperatorFamily {
     * centroid assignment runs ONCE, not once per caller). */
   private def pqAssignedRecon(s: SparkSession,
       d: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     val m = 8
     val sub = 8
     // the assignment feeds the subspace explode, the search probe side,
@@ -1585,7 +1569,6 @@ object Similarity extends OperatorFamily {
   }
 
   private def pqTop1(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (assigned, recon) = pqAssignedRecon(s, d)
     val wAdc = Window.partitionBy(col("vec_id"))
       .orderBy(col("adist"), col("neighbor_id"))
@@ -1678,6 +1661,39 @@ object Similarity extends OperatorFamily {
                               CAST(a.embedding AS DOUBLE[]))) *
         SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]),
                               CAST(b.embedding AS DOUBLE[]))))"""
+
+  /** Exhaustive top-3 cosine neighbours per vector: the oracle of e02
+    * and of e04, whose sketch path must be indistinguishable from it. */
+  private lazy val Top3Sql: String =
+    s"""SELECT vec_id, CAST(rank AS INT) AS rank, neighbor_id, cos FROM (
+           SELECT a.vec_id, b.vec_id AS neighbor_id, $cosExpr AS cos,
+                  ROW_NUMBER() OVER (PARTITION BY a.vec_id
+                    ORDER BY $cosExpr DESC, b.vec_id) AS rank
+           FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id) t
+         WHERE rank <= 3 ORDER BY vec_id, rank"""
+
+  /** DuckDB twin of [[lshVerifiedPairs]]' candidate side: CTEs `sgn`
+    * (the [[hyperplaneSigns]] matrix, from SQL md5), `bits`, `bands` and
+    * `cand` (vec_a < vec_b sharing at least one band). */
+  private lazy val LshCandCtes: String =
+    s"""sgn AS (
+           SELECT j, list_transform(generate_series(0, ${Dims - 1}), i ->
+             CASE WHEN substring(md5('hp-' || j || '-' || i), 1, 1) < '8'
+                  THEN 1.0 ELSE -1.0 END) AS sv
+           FROM UNNEST(generate_series(0, ${NPlanes - 1})) AS tj(j)),
+         bits AS (
+           SELECT e.vec_id, s.j,
+             CASE WHEN list_dot_product(CAST(e.embedding AS DOUBLE[]), s.sv)
+                       >= 0 THEN 1 ELSE 0 END AS b
+           FROM embeddings e CROSS JOIN sgn s),
+         bands AS (
+           SELECT vec_id, j // $BandRows AS band,
+                  SUM(b * (1 << (j % $BandRows))) AS bv
+           FROM bits GROUP BY vec_id, j // $BandRows),
+         cand AS (
+           SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
+           FROM bands x JOIN bands y
+             ON x.band = y.band AND x.bv = y.bv AND x.vec_id < y.vec_id)"""
 
   /** DuckDB twin of [[centroidRanked]] over the m-[[centroidSample]]:
     * CTEs `cents<sfx>` (cent_id, embedding), `ranked<sfx>` (vec_id,
@@ -1805,13 +1821,7 @@ object Similarity extends OperatorFamily {
          WHERE $cosExpr >= 0.4
          ORDER BY vec_a, vec_b""",
 
-    "e02_ann_topk_bruteforce" ->
-      s"""SELECT vec_id, CAST(rank AS INT) AS rank, neighbor_id, cos FROM (
-           SELECT a.vec_id, b.vec_id AS neighbor_id, $cosExpr AS cos,
-                  ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                    ORDER BY $cosExpr DESC, b.vec_id) AS rank
-           FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id) t
-         WHERE rank <= 3 ORDER BY vec_id, rank""",
+    "e02_ann_topk_bruteforce" -> Top3Sql,
 
     "e06_ann_ivf_nprobe" ->
       s"""WITH $IvfCtes
@@ -2384,89 +2394,21 @@ object Similarity extends OperatorFamily {
 
     // same oracle as the brute-force ranking — the sketch path must be
     // indistinguishable from it
-    "e04_ann_topk_partial" ->
-      """SELECT vec_id, CAST(rank AS INT) AS rank, neighbor_id, cos FROM (
-           SELECT a.vec_id, b.vec_id AS neighbor_id,
-                  list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                   CAST(b.embedding AS DOUBLE[])) /
-                  (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                         CAST(a.embedding AS DOUBLE[]))) *
-                   SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                                         CAST(b.embedding AS DOUBLE[]))))
-                    AS cos,
-                  ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                    ORDER BY list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                   CAST(b.embedding AS DOUBLE[])) /
-                  (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                         CAST(a.embedding AS DOUBLE[]))) *
-                   SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                                         CAST(b.embedding AS DOUBLE[]))))
-                      DESC, b.vec_id) AS rank
-           FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id) t
-         WHERE rank <= 3 ORDER BY vec_id, rank""",
+    "e04_ann_topk_partial" -> Top3Sql,
 
-    "e05_lsh_cosine_pairs" -> {
-      val cosExpr =
-        """list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                            CAST(b.embedding AS DOUBLE[])) /
-           (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                  CAST(a.embedding AS DOUBLE[]))) *
-            SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                                  CAST(b.embedding AS DOUBLE[]))))"""
-      s"""WITH sgn AS (
-           SELECT j, list_transform(generate_series(0, ${Dims - 1}), i ->
-             CASE WHEN substring(md5('hp-' || j || '-' || i), 1, 1) < '8'
-                  THEN 1.0 ELSE -1.0 END) AS sv
-           FROM UNNEST(generate_series(0, ${NPlanes - 1})) AS tj(j)),
-         bits AS (
-           SELECT e.vec_id, s.j,
-             CASE WHEN list_dot_product(CAST(e.embedding AS DOUBLE[]), s.sv)
-                       >= 0 THEN 1 ELSE 0 END AS b
-           FROM embeddings e CROSS JOIN sgn s),
-         bands AS (
-           SELECT vec_id, j // $BandRows AS band,
-                  SUM(b * (1 << (j % $BandRows))) AS bv
-           FROM bits GROUP BY vec_id, j // $BandRows),
-         cand AS (
-           SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-           FROM bands x JOIN bands y
-             ON x.band = y.band AND x.bv = y.bv AND x.vec_id < y.vec_id)
+    "e05_lsh_cosine_pairs" ->
+      s"""WITH $LshCandCtes
          SELECT c.vec_a, c.vec_b, $cosExpr AS cos
          FROM cand c
          JOIN embeddings a ON a.vec_id = c.vec_a
          JOIN embeddings b ON b.vec_id = c.vec_b
          WHERE $cosExpr >= 0.4
-         ORDER BY vec_a, vec_b"""
-    },
+         ORDER BY vec_a, vec_b""",
 
     // e05's sign/band/candidate chain as the found side, the exhaustive
     // cosine scan as truth; n_found cast to BIGINT (SUM-int rule)
-    "e21_lsh_recall" -> {
-      val cosExpr =
-        """list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                            CAST(b.embedding AS DOUBLE[])) /
-           (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                  CAST(a.embedding AS DOUBLE[]))) *
-            SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                                  CAST(b.embedding AS DOUBLE[]))))"""
-      s"""WITH sgn AS (
-           SELECT j, list_transform(generate_series(0, ${Dims - 1}), i ->
-             CASE WHEN substring(md5('hp-' || j || '-' || i), 1, 1) < '8'
-                  THEN 1.0 ELSE -1.0 END) AS sv
-           FROM UNNEST(generate_series(0, ${NPlanes - 1})) AS tj(j)),
-         bits AS (
-           SELECT e.vec_id, s.j,
-             CASE WHEN list_dot_product(CAST(e.embedding AS DOUBLE[]), s.sv)
-                       >= 0 THEN 1 ELSE 0 END AS b
-           FROM embeddings e CROSS JOIN sgn s),
-         bands AS (
-           SELECT vec_id, j // $BandRows AS band,
-                  SUM(b * (1 << (j % $BandRows))) AS bv
-           FROM bits GROUP BY vec_id, j // $BandRows),
-         cand AS (
-           SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-           FROM bands x JOIN bands y
-             ON x.band = y.band AND x.bv = y.bv AND x.vec_id < y.vec_id),
+    "e21_lsh_recall" ->
+      s"""WITH $LshCandCtes,
          found AS (
            SELECT c.vec_a, c.vec_b
            FROM cand c
@@ -2488,7 +2430,6 @@ object Similarity extends OperatorFamily {
          FROM truth t LEFT JOIN found f
            ON t.vec_a = f.vec_a AND t.vec_b = f.vec_b
          GROUP BY 1 ORDER BY 1"""
-    }
   )
 
   /** e31's per-subspace argmin-encode over CTE `vsub` against codebook

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{Parity, Tables}
-import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Hypothesis tests and robust statistics: contingency and proportion
   * tests, rank tests (two-sample, k-sample, blocked and ordered
@@ -132,7 +131,7 @@ object Statistics extends OperatorFamily {
           .as("tau_b"))
   }
 
-  /** The survival-carrier oracle CTEs shared by q174/q175 (mirrors
+  /** The survival-carrier oracle CTEs shared by q133/q174/q175 (mirrors
     * [[survivalDurations]]). */
   private val survCte =
     """per AS (SELECT user_id, MIN(ts) AS ft,
@@ -148,6 +147,45 @@ object Statistics extends OperatorFamily {
       |    END AS dur
       |  FROM per)""".stripMargin
 
+  /** [[survCte]] plus the Kaplan–Meier / Nelson–Aalen risk sets (q133,
+    * q175; twin of [[eventsAtRisk]]): `evts` (t, d events at each
+    * event time) and `ar` (dur, n_risk at risk), over `dc` (dur,
+    * c_all). */
+  private val riskCtes = survCte +
+    """,
+      |  evts AS (SELECT dur AS t, COUNT(1) AS d FROM durs
+      |    WHERE is_event GROUP BY 1),
+      |  dc AS (SELECT dur, COUNT(1) AS c_all FROM durs GROUP BY 1),
+      |  ar AS (SELECT dur, CAST(SUM(c_all) OVER (ORDER BY dur DESC
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      |      AS BIGINT) AS n_risk
+      |    FROM dc)""".stripMargin
+
+  /** The event counts (t, d) and at-risk sets (dur, n_risk) of a
+    * [[survivalDurations]] carrier (q133, q175). */
+  private def eventsAtRisk(per: DataFrame): (DataFrame, DataFrame) = {
+    val evts = per.filter(col("is_event"))
+      .groupBy(col("dur").as("t")).agg(count(lit(1)).as("d"))
+    val wDesc = Window.orderBy(col("dur").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val atRisk = per.groupBy(col("dur")).agg(count(lit(1)).as("c_all"))
+      .withColumn("n_risk", sum(col("c_all")).over(wDesc))
+      .select(col("dur"), col("n_risk"))
+    (evts, atRisk)
+  }
+
+  /** Adds the distribution-free median CI order-statistic ranks
+    * k_lo = ⌊(n − 1.96√n)/2⌋ and k_hi = ⌈1 + (n + 1.96√n)/2⌉ (and
+    * nd = n as double) to a frame with count column n (q151, q170). */
+  private def withMedianCiRanks(df: DataFrame): DataFrame =
+    df.withColumn("nd", col("n").cast("double"))
+      .withColumn("k_lo",
+        floor((col("nd") - lit(1.96) * sqrt(col("nd"))) / lit(2.0))
+          .cast("long"))
+      .withColumn("k_hi",
+        ceil(lit(1.0) + (col("nd") + lit(1.96) * sqrt(col("nd"))) /
+          lit(2.0)).cast("long"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Exact WEIGHTED median — q50's percentile family extended with a
@@ -160,7 +198,6 @@ object Statistics extends OperatorFamily {
     // distinct values; one group-keyed exchange serves both the
     // cumulative and total window sums.
     "q73_weighted_median" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val g = Tables.lineitem(s, d)
         .select(col("l_returnflag"),
           Parity.cents2(col("l_extendedprice")).as("vc"),
@@ -188,7 +225,6 @@ object Statistics extends OperatorFamily {
     // Scale shape: (group, value) partial-aggregated count, then a
     // per-group window pick — both exchanges key-only.
     "q74_grouped_mode" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("event_type"))
         .orderBy(col("cnt").desc, col("k"))
       Tables.events(s, d)
@@ -393,14 +429,7 @@ object Statistics extends OperatorFamily {
     // counts; the at-risk tail sum is a window over distinct durations
     // (calendar-bounded, the t28/q115 stance).
     "q133_survival_km" -> ((s, d) => {
-      val per = survivalDurations(s, d)
-      val evts = per.filter(col("is_event"))
-        .groupBy(col("dur").as("t")).agg(count(lit(1)).as("d"))
-      val wDesc = Window.orderBy(col("dur").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val atRisk = per.groupBy(col("dur")).agg(count(lit(1)).as("c_all"))
-        .withColumn("n_risk", sum(col("c_all")).over(wDesc))
-        .select(col("dur"), col("n_risk"))
+      val (evts, atRisk) = eventsAtRisk(survivalDurations(s, d))
       val km = evts.join(atRisk, col("t") === col("dur"))
         .select(col("t"), col("d"), col("n_risk"))
         .withColumn("factor",
@@ -1033,14 +1062,7 @@ object Statistics extends OperatorFamily {
     // cumulative window, conditional-min lookups in the same grouped
     // aggregate — |nations| rows out.
     "q151_median_ci" -> ((s, d) => {
-      OrderRevenue.nationValueCum(s, d)
-        .withColumn("nd", col("n").cast("double"))
-        .withColumn("k_lo",
-          floor((col("nd") - lit(1.96) * sqrt(col("nd"))) / lit(2.0))
-            .cast("long"))
-        .withColumn("k_hi",
-          ceil(lit(1.0) + (col("nd") + lit(1.96) * sqrt(col("nd"))) /
-            lit(2.0)).cast("long"))
+      withMedianCiRanks(OrderRevenue.nationValueCum(s, d))
         .groupBy(col("nation"))
         .agg(max(col("n")).as("n"),
           max(col("k_lo")).as("k_lo"), max(col("k_hi")).as("k_hi"),
@@ -1581,14 +1603,7 @@ object Statistics extends OperatorFamily {
         (1 to b).map(g =>
           min(when(lit(2L) * col(s"cum_w$g") >= col(s"tot_w$g"),
             col("v"))).as(s"med$g"))
-      win
-        .withColumn("nd", col("n").cast("double"))
-        .withColumn("k_lo",
-          floor((col("nd") - lit(1.96) * sqrt(col("nd"))) / lit(2.0))
-            .cast("long"))
-        .withColumn("k_hi",
-          ceil(lit(1.0) + (col("nd") + lit(1.96) * sqrt(col("nd"))) /
-            lit(2.0)).cast("long"))
+      withMedianCiRanks(win)
         .agg(aggCols.head, aggCols.tail: _*)
         .withColumn("meds",
           sort_array(array((1 to b).map(g => col(s"med$g")): _*)))
@@ -1679,15 +1694,7 @@ object Statistics extends OperatorFamily {
     // times, and the scaladoc contract is the same as q133's
     // (collect-to-broadcast is sized by the time grid, not by users).
     "q175_nelson_aalen" -> ((s, d) => {
-      val per = survivalDurations(s, d)
-      val evts = per.filter(col("is_event"))
-        .groupBy(col("dur").as("t")).agg(count(lit(1)).as("d"))
-      val wDesc = Window.orderBy(col("dur").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val atRisk = per.groupBy(col("dur"))
-        .agg(count(lit(1)).as("c_all"))
-        .withColumn("n_risk", sum(col("c_all")).over(wDesc))
-        .select(col("dur"), col("n_risk"))
+      val (evts, atRisk) = eventsAtRisk(survivalDurations(s, d))
       val na = evts.join(atRisk, col("t") === col("dur"))
         .select(col("t"), col("d"), col("n_risk"))
         .withColumn("hz",
@@ -2039,24 +2046,7 @@ object Statistics extends OperatorFamily {
          FROM sc ORDER BY suppkey""",
 
     "q133_survival_km" ->
-      """WITH per AS (SELECT user_id, MIN(ts) AS ft,
-        |    MIN(CASE WHEN event_type = 'purchase' AND value > 150
-        |      THEN ts END) AS ev,
-        |    MAX(ts) AS lt
-        |  FROM events GROUP BY 1),
-        |  durs AS (SELECT ev IS NOT NULL AS is_event,
-        |    CASE WHEN ev IS NOT NULL
-        |      THEN (epoch_us(ev) - epoch_us(ft)) // 60000000
-        |      ELSE (epoch_us(lt) - epoch_us(ft)) // 60000000
-        |    END AS dur
-        |  FROM per),
-        |  evts AS (SELECT dur AS t, COUNT(1) AS d FROM durs
-        |    WHERE is_event GROUP BY 1),
-        |  dc AS (SELECT dur, COUNT(1) AS c_all FROM durs GROUP BY 1),
-        |  ar AS (SELECT dur, CAST(SUM(c_all) OVER (ORDER BY dur DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS n_risk
-        |    FROM dc),
+      s"""WITH $riskCtes,
         |  km AS (SELECT t, d, n_risk,
         |      CAST(n_risk - d AS DOUBLE) / CAST(n_risk AS DOUBLE)
         |        AS factor,
@@ -2559,13 +2549,7 @@ object Statistics extends OperatorFamily {
         |ORDER BY nation""".stripMargin,
 
     "q151_median_ci" ->
-      s"""WITH ${OrderRevenue.nationValueGridSql},
-        |  cm AS (SELECT nation, v, c,
-        |    CAST(SUM(c) OVER (PARTITION BY nation ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum,
-        |    CAST(SUM(c) OVER (PARTITION BY nation) AS BIGINT) AS n
-        |  FROM grid),
+      s"""WITH ${OrderRevenue.nationValueCumSql},
         |  rk AS (SELECT nation, v, cum, n,
         |    CAST(floor((CAST(n AS DOUBLE) - 1.96 * sqrt(CAST(n AS
         |      DOUBLE))) / 2.0) AS BIGINT) AS k_lo,
@@ -2606,13 +2590,7 @@ object Statistics extends OperatorFamily {
         |ORDER BY nation""".stripMargin,
 
     "q153_bowley_skew" ->
-      s"""WITH ${OrderRevenue.nationValueGridSql},
-        |  cm AS (SELECT nation, v,
-        |    CAST(SUM(c) OVER (PARTITION BY nation ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum,
-        |    CAST(SUM(c) OVER (PARTITION BY nation) AS BIGINT) AS n
-        |  FROM grid)
+      s"""WITH ${OrderRevenue.nationValueCumSql}
         |SELECT nation, MAX(n) AS n,
         |  MIN(CASE WHEN 4 * cum >= n THEN v END) AS q1,
         |  MIN(CASE WHEN 4 * cum >= 2 * n THEN v END) AS median,
@@ -2628,17 +2606,11 @@ object Statistics extends OperatorFamily {
         |ORDER BY nation""".stripMargin,
 
     "q154_mad_profile" ->
-      s"""WITH ${OrderRevenue.nationValueGridSql},
-        |  wm AS (SELECT nation, v, c,
-        |    CAST(SUM(c) OVER (PARTITION BY nation ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum,
-        |    CAST(SUM(c) OVER (PARTITION BY nation) AS BIGINT) AS n
-        |  FROM grid),
+      s"""WITH ${OrderRevenue.nationValueCumSql},
         |  md AS (SELECT nation, v, c, n,
         |    MIN(CASE WHEN 2 * cum >= n THEN v END)
         |      OVER (PARTITION BY nation) AS med
-        |  FROM wm),
+        |  FROM cm),
         |  dgrid AS (SELECT nation, abs(v - med) AS dev,
         |    CAST(SUM(c) AS BIGINT) AS c, MAX(n) AS n, MAX(med) AS med
         |  FROM md GROUP BY 1, 2),
@@ -2975,15 +2947,7 @@ object Statistics extends OperatorFamily {
           |FROM st""".stripMargin),
 
     "q175_nelson_aalen" ->
-      ("WITH " + survCte +
-        """,
-          |  evts AS (SELECT dur AS t, COUNT(1) AS d FROM durs
-          |    WHERE is_event GROUP BY 1),
-          |  dc AS (SELECT dur, COUNT(1) AS c_all FROM durs GROUP BY 1),
-          |  ar AS (SELECT dur, CAST(SUM(c_all) OVER (ORDER BY dur DESC
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          |      AS BIGINT) AS n_risk
-          |    FROM dc),
+      (s"""WITH $riskCtes,
           |  na AS (SELECT t, d, n_risk,
           |      CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE) AS hz,
           |      CAST(d AS DOUBLE) / (CAST(n_risk AS DOUBLE) *

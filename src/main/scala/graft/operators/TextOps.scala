@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
-import graft.{Parity, Tables}
+import graft.Tables
+import graft.functions.HashFunctions
 import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Text-analysis operators for training-data pipelines over `documents`:
@@ -124,10 +124,10 @@ object TextOps extends OperatorFamily {
         (col("n_dup_pos") === 0).as("b"))
   }
 
-  /** DuckDB twin of [[TextOps.repetitionStats]]' repeated-trigram
-    * count over a CTE `w(doc_id, words)`: CTEs `g`, `c`, `dup`
-    * (doc_id, n_dup) — docs without a repeat have no `dup` row. */
-  private[operators] val repetitionSql =
+  /** DuckDB twin of [[repetitionStats]]' trigram counts over a CTE
+    * `w(doc_id, words)`: CTEs `g` (doc_id, gram) and `c` (doc_id, gram,
+    * cnt). */
+  private val trigramCountSql =
     """g AS (SELECT doc_id,
       |    UNNEST(list_transform(
       |      generate_series(1, GREATEST(LEN(words) - 2, 0)),
@@ -135,7 +135,13 @@ object TextOps extends OperatorFamily {
       |      AS gram
       |  FROM w),
       |  c AS (SELECT doc_id, gram, COUNT(1) AS cnt FROM g
-      |    GROUP BY doc_id, gram),
+      |    GROUP BY doc_id, gram)""".stripMargin
+
+  /** DuckDB twin of [[TextOps.repetitionStats]]' repeated-trigram
+    * count over a CTE `w(doc_id, words)`: CTEs `g`, `c`, `dup`
+    * (doc_id, n_dup) — docs without a repeat have no `dup` row. */
+  private[operators] val repetitionSql = trigramCountSql +
+    """,
       |  dup AS (SELECT doc_id,
       |    CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT)
       |      AS n_dup
@@ -206,6 +212,26 @@ object TextOps extends OperatorFamily {
     s"""${md5Hash60Sql("'shard|' || CAST(doc_id AS VARCHAR)")} % 16"""
 
 
+  /** The training-mix target share per language (t14, t33). */
+  private val targetShare: Column =
+    when(col("lang") === "en", 0.45)
+      .when(col("lang") === "es", 0.20)
+      .when(col("lang") === "de", 0.20)
+      .when(col("lang") === "fr", 0.10)
+      .otherwise(0.05)
+
+  /** DuckDB twin of [[langScored]]'s marker counts (t03, t32): CTEs `w`
+    * (doc_id, lang, words) and `sc` (doc_id, lang, s_en … s_fr). */
+  private val LangScoreCtes =
+    """w AS (SELECT doc_id, lang,
+           string_split(TRIM(text), ' ') AS words FROM documents),
+         sc AS (SELECT doc_id, lang,
+           CAST(LEN(list_filter(words, w -> w IN ('the','and','of','to'))) AS INT) AS s_en,
+           CAST(LEN(list_filter(words, w -> w IN ('el','la','los','de'))) AS INT) AS s_es,
+           CAST(LEN(list_filter(words, w -> w IN ('der','die','das','und'))) AS INT) AS s_de,
+           CAST(LEN(list_filter(words, w -> w IN ('le','les','des','et'))) AS INT) AS s_fr
+           FROM w)"""
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Whitespace + regex ("BPE-ish") token counting, distinct-token ratio.
     "t01_token_stats" -> ((s, d) => {
@@ -265,7 +291,6 @@ object TextOps extends OperatorFamily {
     // |langs|² cells, and the row-share window runs over that tiny
     // frame.
     "t32_langid_confusion" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       langScored(s, d)
         .groupBy(col("lang"), col("pred_lang"))
         .agg(count(lit(1)).as("n_docs"))
@@ -282,7 +307,6 @@ object TextOps extends OperatorFamily {
     // where libm rounding differs). Inverted-index shape: one shuffle
     // on term for df, one on doc for the top-k window.
     "t06_tfidf_top_terms" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val words = Tables.documents(s, d)
         .select(col("doc_id"), explode(split(trim(col("text")), " ")).as("w"))
         .filter(col("w") =!= "")
@@ -321,9 +345,7 @@ object TextOps extends OperatorFamily {
     // Hash-based (not rand()-based) so the sample is stable across runs,
     // partitionings, and engines; a doc's fate depends only on its id.
     "t08_stratified_sample" -> ((s, d) => {
-      val h = conv(substring(
-        md5(encode(col("doc_id").cast("string"), "UTF-8")), 1, 15),
-        16, 10).cast("long")
+      val h = HashFunctions.md5Hash60Chain(col("doc_id"))
       Tables.documents(s, d)
         .withColumn("bucket", pmod(h, lit(100L)).cast("int"))
         .withColumn("keep_pct",
@@ -441,7 +463,6 @@ object TextOps extends OperatorFamily {
     // a single-partition window is the correct plan, not a bottleneck.
     // cum_share is one IEEE division of two exact integers per row.
     "t13_vocab_coverage" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val counts = Tables.documents(s, d)
         .select(explode(split(trim(col("text")), " ")).as("term"))
         .filter(col("term") =!= "")
@@ -471,7 +492,6 @@ object TextOps extends OperatorFamily {
     // per-language aggregate partial-aggregates map-side; the windows
     // run over 5 rows.
     "t14_mixture_weights" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val wAll = Window.partitionBy()
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
       Tables.documents(s, d)
@@ -479,12 +499,7 @@ object TextOps extends OperatorFamily {
         .groupBy(col("lang")).agg(sum(col("nt")).as("lang_tokens"))
         .withColumn("actual_share",
           col("lang_tokens").cast("double") / sum(col("lang_tokens")).over(wAll))
-        .withColumn("target_share",
-          when(col("lang") === "en", 0.45)
-            .when(col("lang") === "es", 0.20)
-            .when(col("lang") === "de", 0.20)
-            .when(col("lang") === "fr", 0.10)
-            .otherwise(0.05))
+        .withColumn("target_share", targetShare)
         .withColumn("ratio", col("target_share") / col("actual_share"))
         .withColumn("sample_rate", col("ratio") / max(col("ratio")).over(wAll))
         .select(col("lang"), col("lang_tokens"), col("actual_share"),
@@ -506,7 +521,6 @@ object TextOps extends OperatorFamily {
     // decision is a row-local hash compare; both rollups
     // partial-aggregate to |langs| rows.
     "t33_mixture_resample" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val wAll = Window.partitionBy()
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
       val docs = Tables.documents(s, d)
@@ -516,19 +530,12 @@ object TextOps extends OperatorFamily {
         .agg(count(lit(1)).as("n_before"), sum(col("nt")).as("tok_before"))
         .withColumn("actual_share", col("tok_before").cast("double")
           / sum(col("tok_before")).over(wAll).cast("double"))
-        .withColumn("target_share",
-          when(col("lang") === "en", 0.45)
-            .when(col("lang") === "es", 0.20)
-            .when(col("lang") === "de", 0.20)
-            .when(col("lang") === "fr", 0.10)
-            .otherwise(0.05))
+        .withColumn("target_share", targetShare)
         .withColumn("ratio", col("target_share") / col("actual_share"))
         .withColumn("thr",
           round((col("ratio") / max(col("ratio")).over(wAll))
             * lit(1000000)).cast("long"))
-      val h = conv(substring(
-        md5(encode(col("doc_id").cast("string"), "UTF-8")), 1, 15),
-        16, 10).cast("long")
+      val h = HashFunctions.md5Hash60Chain(col("doc_id"))
       val kept = docs
         .join(broadcast(rates.select(col("lang"), col("thr"))), "lang")
         .filter(pmod(h, lit(1000000L)) < col("thr"))
@@ -560,9 +567,7 @@ object TextOps extends OperatorFamily {
         .withColumn("fp", md5(encode(col("text"), "UTF-8")))
       val reps = docs.groupBy(col("fp"))
         .agg(min(col("doc_id")).as("rep"))
-      val h = conv(substring(
-        md5(encode(col("rep").cast("string"), "UTF-8")), 1, 15),
-        16, 10).cast("long")
+      val h = HashFunctions.md5Hash60Chain(col("rep"))
       docs.join(reps, Seq("fp"))
         .withColumn("bucket", pmod(h, lit(100L)).cast("int"))
         .withColumn("split",
@@ -673,7 +678,6 @@ object TextOps extends OperatorFamily {
     // aggregates map-side. A 60-bit collision would fold two grams
     // (~1e-7 at 1M distinct grams) identically in both engines.
     "t19_source_novelty" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val grams = sourceGramFps(Tables.documents(s, d))
       grams
         .withColumn("first_src",
@@ -875,7 +879,6 @@ object TextOps extends OperatorFamily {
     // 16 rows and the cumulative window runs over those 16 — nothing
     // corpus-sized past the fp exchanges.
     "t29_coverage_curve" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val shard = pmod(graft.functions.HashFunctions.md5Hash60(
         concat(lit("shard|"), col("doc_id").cast("string"))), lit(16L))
         .cast("int")
@@ -924,7 +927,6 @@ object TextOps extends OperatorFamily {
     // Headroom: cum·N products cap at N² — shift to DECIMAL(38,0)
     // past ~3e9 docs (the q127 note).
     "t36_ks_drift" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       // every downstream frame (distinct values, per-source totals,
       // grand total, per-value totals) is derivable from the
       // (source, n_chars) count grid — cut that grid once so the
@@ -978,7 +980,6 @@ object TextOps extends OperatorFamily {
     // minus broadcast per-source offsets; thresholds are integer
     // arithmetic; the report is |sources| x 3 rows.
     "t43_stratified_split" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           size(split(trim(col("text")), " ")).cast("long").as("toks"))
@@ -1004,67 +1005,6 @@ object TextOps extends OperatorFamily {
           min(col("r_in_src")).as("r_lo"),
           max(col("r_in_src")).as("r_hi"))
         .orderBy(col("source"), col("split"))
-    }),
-
-    // HELD-OUT BIGRAM-LM CROSS-ENTROPY — the perplexity-style quality
-    // number per language: train an add-one-smoothed bigram model on
-    // 90% of docs (doc_id % 10 ≠ 7), score the held-out 10% as
-    // H = −Σ ln((c₂+1)/(c₁+V))/N nats per bigram (V = the language's
-    // train continuation vocabulary). Complements t16/t21's
-    // integer-exact frequency screens with the actual NLL, and the
-    // split makes it honest (t21 scores in-sample). CONTRACT: each
-    // NLL term is quantized to 1e-9 nats (DECIMAL(18,9)) BEFORE the
-    // order-insensitive sum — ln is the one libm call neither engine
-    // rounds correctly (measured: a handful of 1-ulp JVM-vs-libm
-    // term diffs at sf0.001 shifted a DECIMAL(38,15) sum's 15th
-    // digit), and the 1e-9 grid absorbs 1-ulp input drift with
-    // ~4e-7/term boundary risk (the q159 decimal-round-trip idiom,
-    // coarsened for a 10⁴-term sum). Scale shape: gram explode is
-    // in-row; the model tables key
-    // on (lang, gram) with map-side combine; the |langs|-row vocab
-    // table broadcasts; eval grams join on the same gram keys.
-    "t44_bigram_cross_entropy" -> ((s, d) => {
-      val bg = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"),
-          expr("filter(split(trim(text), ' '), x -> x <> '')").as("ws"))
-        .select(col("doc_id"), col("lang"), explode(expr(
-          "CASE WHEN size(ws) >= 2 THEN transform(sequence(0, size(ws) - 2), " +
-            "i -> struct(ws[i] AS w1, ws[i+1] AS w2)) ELSE " +
-            "array() END")).as("g"))
-        .select(col("doc_id"), col("lang"),
-          col("g.w1").as("w1"), col("g.w2").as("w2"))
-      val train = bg.filter(col("doc_id") % 10 =!= 7)
-      val ev = bg.filter(col("doc_id") % 10 === 7)
-      val c2 = train.groupBy(col("lang"), col("w1"), col("w2"))
-        .agg(count(lit(1)).as("c2"))
-      val c1 = train.groupBy(col("lang"), col("w1"))
-        .agg(count(lit(1)).as("c1"))
-      val vs = train.groupBy(col("lang"))
-        .agg(countDistinct(col("w2")).as("v"))
-      // vs joins LEFT: a language whose docs ALL landed in the eval
-      // split has no trained model — it still reports (n_eval rows,
-      // unseen_rate 1.0) with NULL cross-entropy instead of silently
-      // vanishing from the output
-      ev.join(c2, Seq("lang", "w1", "w2"), "left")
-        .join(c1, Seq("lang", "w1"), "left")
-        .join(broadcast(vs), Seq("lang"), "left")
-        .withColumn("c2n", coalesce(col("c2"), lit(0L)))
-        .withColumn("c1n", coalesce(col("c1"), lit(0L)))
-        .withColumn("lp", log((col("c2n") + lit(1L)).cast("double") /
-          (col("c1n") + col("v")).cast("double")))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_eval_bigrams"),
-          sum(when(col("c2n") === 0L, 1L).otherwise(0L)).as("n_unseen"),
-          sum((-col("lp")).cast(org.apache.spark.sql.types
-            .DecimalType(18, 9))).cast("double").as("nll_sum"))
-        .withColumn("cross_entropy_nats",
-          col("nll_sum") / col("n_eval_bigrams").cast("double"))
-        .withColumn("unseen_rate",
-          col("n_unseen").cast("double") /
-            col("n_eval_bigrams").cast("double"))
-        .select(col("lang"), col("n_eval_bigrams"), col("n_unseen"),
-          col("nll_sum"), col("cross_entropy_nats"), col("unseen_rate"))
-        .orderBy(col("lang"))
     }),
 
     // CHAO1 UNSEEN-VOCABULARY ESTIMATE — how many bigram TYPES has
@@ -1210,7 +1150,6 @@ object TextOps extends OperatorFamily {
     // floor). Scale shape: word rollup with map-side combine, window
     // over types, 3 conditional sums.
     "t48_vocab_sweep" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val sizes = Seq(1024L, 4096L, 16384L)
       val wRank = Window.orderBy(col("cnt").desc, col("w"))
       val types = Tables.documents(s, d)
@@ -1596,37 +1535,6 @@ object TextOps extends OperatorFamily {
         .orderBy(col("shard"))
     }),
 
-    // LEXICAL DIVERSITY per document: type-token ratio, hapax ratio
-    // (share of within-doc vocabulary used exactly once), and mean
-    // token length — the vocabulary-richness screen next to t23's
-    // entropy (TTR catches low-diversity docs linearly; hapax ratio
-    // separates natural prose, rich in one-off words, from template
-    // text that reuses a fixed vocabulary). Scale: entirely doc-local —
-    // the (doc, term) aggregate's exchange is doc_id-prefixed, the
-    // per-doc rollup groups on doc_id, all counters are exact integers
-    // until the three final divisions.
-    "t25_lexical_diversity" -> ((s, d) => {
-      val tf = Tables.documents(s, d)
-        .select(col("doc_id"),
-          explode(split(trim(col("text")), " ")).as("term"))
-        .groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("freq"))
-        .withColumn("tlen", length(col("term")))
-      tf.groupBy(col("doc_id"))
-        .agg(sum(col("freq")).as("n_tokens"),
-          count(lit(1)).as("n_types"),
-          sum(when(col("freq") === 1, 1L).otherwise(0L)).as("n_hapax"),
-          sum(col("tlen") * col("freq")).as("char_sum"))
-        .select(col("doc_id"), col("n_tokens"), col("n_types"),
-          (col("n_types").cast("double") / col("n_tokens").cast("double"))
-            .as("ttr"),
-          (col("n_hapax").cast("double") / col("n_types").cast("double"))
-            .as("hapax_ratio"),
-          (col("char_sum").cast("double") / col("n_tokens").cast("double"))
-            .as("mean_token_len"))
-        .orderBy(col("doc_id"))
-    }),
-
     // Corpus LENGTH-profile histogram: per (source, token-length
     // bucket) doc and token counts plus each bucket's share of its
     // source's token mass — the corpus-composition table read before
@@ -1636,7 +1544,6 @@ object TextOps extends OperatorFamily {
     // map work; the aggregate is |sources| × 4 rows and the share
     // window runs over that tiny frame, never the corpus.
     "t26_length_histogram" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val t = Tables.documents(s, d)
         .select(col("source"),
           size(split(trim(col("text")), " ")).cast("long").as("toks"))
@@ -1874,14 +1781,7 @@ object TextOps extends OperatorFamily {
          FROM m ORDER BY doc_id""",
 
     "t03_langid" ->
-      """WITH w AS (SELECT doc_id, lang,
-           string_split(TRIM(text), ' ') AS words FROM documents),
-         sc AS (SELECT doc_id, lang,
-           CAST(LEN(list_filter(words, w -> w IN ('the','and','of','to'))) AS INT) AS s_en,
-           CAST(LEN(list_filter(words, w -> w IN ('el','la','los','de'))) AS INT) AS s_es,
-           CAST(LEN(list_filter(words, w -> w IN ('der','die','das','und'))) AS INT) AS s_de,
-           CAST(LEN(list_filter(words, w -> w IN ('le','les','des','et'))) AS INT) AS s_fr
-           FROM w)
+      s"""WITH $LangScoreCtes
          SELECT doc_id, s_en, s_es, s_de, s_fr,
            CASE WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
                 WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
@@ -1894,14 +1794,7 @@ object TextOps extends OperatorFamily {
          FROM sc ORDER BY doc_id""",
 
     "t32_langid_confusion" ->
-      """WITH w AS (SELECT doc_id, lang,
-           string_split(TRIM(text), ' ') AS words FROM documents),
-         sc AS (SELECT doc_id, lang,
-           CAST(LEN(list_filter(words, w -> w IN ('the','and','of','to'))) AS INT) AS s_en,
-           CAST(LEN(list_filter(words, w -> w IN ('el','la','los','de'))) AS INT) AS s_es,
-           CAST(LEN(list_filter(words, w -> w IN ('der','die','das','und'))) AS INT) AS s_de,
-           CAST(LEN(list_filter(words, w -> w IN ('le','les','des','et'))) AS INT) AS s_fr
-           FROM w),
+      s"""WITH $LangScoreCtes,
          p AS (SELECT lang,
            CASE WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
                 WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
@@ -2016,16 +1909,9 @@ object TextOps extends OperatorFamily {
          ORDER BY st.doc_id""",
 
     "t11_repetition_filter" ->
-      """WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS words
+      s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ') AS words
                     FROM documents),
-         g AS (SELECT doc_id,
-                 UNNEST(list_transform(
-                   generate_series(1, GREATEST(LEN(words) - 2, 0)),
-                   i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]))
-                 AS gram
-               FROM w),
-         c AS (SELECT doc_id, gram, COUNT(1) AS cnt FROM g
-               GROUP BY doc_id, gram),
+         $trigramCountSql,
          a AS (SELECT doc_id, CAST(SUM(cnt) AS INT) AS n_grams,
                  CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS INT)
                    AS n_dup_pos
@@ -2344,45 +2230,6 @@ object TextOps extends OperatorFamily {
            CAST(MAX(r_in_src) AS BIGINT) AS r_hi
          FROM a GROUP BY 1, 2 ORDER BY 1, 2""",
 
-    // add-one bigram LM; NLL terms quantized to DECIMAL(18,9) before
-    // the sum (ln is libm on both engines — see the Spark twin)
-    "t44_bigram_cross_entropy" ->
-      """WITH w AS (SELECT doc_id, lang,
-           list_filter(string_split(TRIM(text), ' '), x -> x <> '') AS ws
-           FROM documents),
-         bg AS (SELECT doc_id, lang, ws[i] AS w1, ws[i + 1] AS w2
-           FROM w, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-           WHERE len(ws) >= 2),
-         tr AS (SELECT * FROM bg WHERE doc_id % 10 != 7),
-         ev AS (SELECT * FROM bg WHERE doc_id % 10 = 7),
-         c2 AS (SELECT lang, w1, w2, CAST(COUNT(1) AS BIGINT) AS c2
-           FROM tr GROUP BY 1, 2, 3),
-         c1 AS (SELECT lang, w1, CAST(COUNT(1) AS BIGINT) AS c1
-           FROM tr GROUP BY 1, 2),
-         vs AS (SELECT lang, CAST(COUNT(DISTINCT w2) AS BIGINT) AS v
-           FROM tr GROUP BY 1),
-         j AS (SELECT ev.lang, COALESCE(c2.c2, 0) AS c2n,
-             COALESCE(c1.c1, 0) AS c1n, vs.v
-           FROM ev LEFT JOIN c2 ON ev.lang = c2.lang
-             AND ev.w1 = c2.w1 AND ev.w2 = c2.w2
-           LEFT JOIN c1 ON ev.lang = c1.lang AND ev.w1 = c1.w1
-           LEFT JOIN vs ON ev.lang = vs.lang),
-         t AS (SELECT lang, c2n,
-             ln(CAST(c2n + 1 AS DOUBLE) / CAST(c1n + v AS DOUBLE)) AS lp
-           FROM j),
-         agg AS (SELECT lang,
-             CAST(COUNT(1) AS BIGINT) AS n_eval_bigrams,
-             CAST(SUM(CASE WHEN c2n = 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_unseen,
-             CAST(CAST(SUM(CAST(-lp AS DECIMAL(18, 9))) AS VARCHAR)
-               AS DOUBLE) AS nll_sum
-           FROM t GROUP BY 1)
-         SELECT lang, n_eval_bigrams, n_unseen, nll_sum,
-           nll_sum / CAST(n_eval_bigrams AS DOUBLE) AS cross_entropy_nats,
-           CAST(n_unseen AS DOUBLE) / CAST(n_eval_bigrams AS DOUBLE)
-             AS unseen_rate
-         FROM agg ORDER BY lang""",
-
     "t45_chao1_vocab" ->
       """WITH w AS (SELECT doc_id, lang,
            list_filter(string_split(TRIM(text), ' '), x -> x <> '') AS ws
@@ -2510,20 +2357,8 @@ object TextOps extends OperatorFamily {
     },
 
     "q144_cohens_kappa" ->
-      s"""WITH w AS (SELECT doc_id, string_split(TRIM(text), ' ')
-        |    AS words FROM documents),
-        |  ra AS (SELECT doc_id,
-        |    (LEN(words) >= 10 AND
-        |     CAST(LEN(list_distinct(words)) AS DOUBLE) / LEN(words)
-        |       >= 0.5 AND
-        |     CAST(LEN(list_filter(words, x -> x IN
-        |       ('the', 'and', 'of', 'to', 'a', 'in', 'is'))) AS DOUBLE)
-        |       / LEN(words) <= 0.4) AS a
-        |  FROM w),
-        |  ${repetitionSql},
-        |  rb AS (SELECT w.doc_id, COALESCE(dup.n_dup, 0) = 0 AS b
-        |  FROM w LEFT JOIN dup USING (doc_id)),
-        |  ${agreementCellsSql("ra JOIN rb USING (doc_id)")},
+      s"""$docCte,
+        |  ${agreementCellsSql("lab")},
         |  st AS (SELECT n11, n10, n01, n00,
         |    n11 + n10 + n01 + n00 AS n,
         |    (n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00)
@@ -2741,27 +2576,6 @@ object TextOps extends OperatorFamily {
                 CAST(SUM(toks) AS BIGINT) AS n_tokens,
                 CAST(SUM(n_chars) AS BIGINT) AS n_chars
          FROM sh GROUP BY 1 ORDER BY 1""",
-
-    "t25_lexical_diversity" ->
-      """WITH terms AS (SELECT doc_id, UNNEST(string_split(TRIM(text), ' '))
-                          AS term FROM documents),
-         tf AS (SELECT doc_id, term, COUNT(*) AS freq,
-                       LEN(term) AS tlen
-                FROM terms GROUP BY 1, 2),
-         agg AS (SELECT doc_id,
-                   CAST(SUM(freq) AS BIGINT) AS n_tokens,
-                   COUNT(*) AS n_types,
-                   CAST(SUM(CASE WHEN freq = 1 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS n_hapax,
-                   CAST(SUM(tlen * freq) AS BIGINT) AS char_sum
-                 FROM tf GROUP BY 1)
-         SELECT doc_id, n_tokens, n_types,
-                CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS ttr,
-                CAST(n_hapax AS DOUBLE) / CAST(n_types AS DOUBLE)
-                  AS hapax_ratio,
-                CAST(char_sum AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-                  AS mean_token_len
-         FROM agg ORDER BY doc_id""",
 
     "t26_length_histogram" ->
       """WITH t AS (SELECT source,

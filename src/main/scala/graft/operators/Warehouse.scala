@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{Parity, Tables}
-import graft.functions.HashFunctions.md5Hash60Sql
 
 /** Warehouse maintenance and data quality: change-data capture and
   * incremental maintenance, slowly-changing history and point-in-time
@@ -36,6 +35,25 @@ object Warehouse extends OperatorFamily {
     0.3010299956639812, 0.17609125905568124, 0.12493873660829992,
     0.09691001300805642, 0.07918124604762482, 0.06694678963061322,
     0.05799194697768673, 0.05115252244738129, 0.04575749056067514)
+
+  /** DuckDB twin of q79's change-run frame (q83 reads it too): CTEs `c`
+    * (chg = 1 where a user's event type changes), `r` (the running run
+    * number) and `g` (one row per run: event_type, valid_from,
+    * n_events). */
+  private val RunCtes =
+    """c AS (SELECT user_id, ts, event_id, event_type,
+             CASE WHEN LAG(event_type) OVER w IS NULL
+                    OR LAG(event_type) OVER w <> event_type
+                  THEN 1 ELSE 0 END AS chg
+           FROM events
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+         r AS (SELECT user_id, ts, event_id, event_type,
+                 CAST(SUM(chg) OVER (PARTITION BY user_id
+                   ORDER BY ts, event_id) AS BIGINT) AS run
+               FROM c),
+         g AS (SELECT user_id, run, MIN(event_type) AS event_type,
+                 MIN(ts) AS valid_from, COUNT(1) AS n_events
+               FROM r GROUP BY user_id, run)"""
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -75,7 +93,6 @@ object Warehouse extends OperatorFamily {
     // not be) — the oracle IS the full recompute, so the correctness
     // of incremental maintenance itself is what's checked.
     "q64_incremental_agg" -> ((s, d) => {
-      import org.apache.spark.sql.types.DecimalType
       val ev = Tables.events(s, d)
       def part(pred: Column): DataFrame = ev.filter(pred)
         .groupBy(col("user_id"))
@@ -135,7 +152,6 @@ object Warehouse extends OperatorFamily {
     // partition partial top-k, no global sort), and a 1-row broadcast
     // for the corpus scalars; the rank/cum windows run over 10 rows.
     "q76_key_skew_profile" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val counts = Tables.events(s, d)
         .groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
       val scalars = counts.agg(sum(col("cnt")).as("total"),
@@ -223,7 +239,6 @@ object Warehouse extends OperatorFamily {
     // (valid_to = lead of the next run's start) re-shuffles is runs,
     // not events — already collapsed, orders of magnitude smaller.
     "q79_scd2_history" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val prev = lag(col("event_type"), 1).over(w)
@@ -359,7 +374,6 @@ object Warehouse extends OperatorFamily {
     // integer cents; the aggregate partial-combines map-side to 9
     // rows; the total rides a tiny window over those 9.
     "q99_benford_profile" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val exp9 = array(Benford.map(lit): _*)
       val digits = Tables.orders(s, d)
         .select(substring(
@@ -549,19 +563,7 @@ object Warehouse extends OperatorFamily {
 
     // run is a windowed SUM -> HUGEINT in DuckDB; cast to BIGINT
     "q79_scd2_history" ->
-      """WITH c AS (SELECT user_id, ts, event_id, event_type,
-             CASE WHEN LAG(event_type) OVER w IS NULL
-                    OR LAG(event_type) OVER w <> event_type
-                  THEN 1 ELSE 0 END AS chg
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         r AS (SELECT user_id, ts, event_id, event_type,
-                 CAST(SUM(chg) OVER (PARTITION BY user_id
-                   ORDER BY ts, event_id) AS BIGINT) AS run
-               FROM c),
-         g AS (SELECT user_id, run, MIN(event_type) AS event_type,
-                 MIN(ts) AS valid_from, COUNT(1) AS n_events
-               FROM r GROUP BY user_id, run)
+      s"""WITH $RunCtes
          SELECT user_id, run, event_type, valid_from,
            LEAD(valid_from) OVER (PARTITION BY user_id
              ORDER BY valid_from) AS valid_to,
@@ -597,19 +599,7 @@ object Warehouse extends OperatorFamily {
     // q79's interval CTEs + a month-start probe grid; strict upper
     // bound keeps adjacent intervals non-overlapping at the boundary
     "q83_point_in_time_state" ->
-      """WITH c AS (SELECT user_id, ts, event_id, event_type,
-             CASE WHEN LAG(event_type) OVER w IS NULL
-                    OR LAG(event_type) OVER w <> event_type
-                  THEN 1 ELSE 0 END AS chg
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         r AS (SELECT user_id, ts, event_id, event_type,
-                 CAST(SUM(chg) OVER (PARTITION BY user_id
-                   ORDER BY ts, event_id) AS BIGINT) AS run
-               FROM c),
-         g AS (SELECT user_id, run, MIN(event_type) AS event_type,
-                 MIN(ts) AS valid_from
-               FROM r GROUP BY user_id, run),
+      s"""WITH $RunCtes,
          iv AS (SELECT user_id, event_type, valid_from,
                   LEAD(valid_from) OVER (PARTITION BY user_id
                     ORDER BY valid_from) AS valid_to

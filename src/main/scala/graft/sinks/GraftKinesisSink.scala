@@ -70,21 +70,14 @@ final class GraftSinkWriter(
     keyColumn: String = "partitionKey",
     dataColumn: String = "data") extends ForeachWriter[Row] {
 
-  @transient private var client: AsyncRecordClient = _
-  @transient private var window: Semaphore = _
-  @transient private var firstError: AtomicReference[Throwable] = _
-  @transient private var rateLimiter: ShardRateLimiters = _
+  @transient private var task: ProducerTask = _
 
   override def open(partitionId: Long, epochId: Long): Boolean = {
-    client = factory.create()
-    window = new Semaphore(conf.maxOutstandingRequests)
-    firstError = new AtomicReference[Throwable]()
-    rateLimiter = conf.rateLimitPerShard.map(new ShardRateLimiters(_)).orNull
+    task = new ProducerTask(factory, conf)
     true
   }
 
   override def process(row: Row): Unit = {
-    failIfErrored()
     // dedup ids must be non-null strings: a null would give every null-id
     // record the same dedup key (silent data loss at the transport), so
     // fail fast instead (same contract as the DSv2 path)
@@ -99,32 +92,67 @@ final class GraftSinkWriter(
             other.getClass.getName)
       }
     }
-    val ev = ProducerEvent(row.getAs[String](keyColumn),
-      row.getAs[Array[Byte]](dataColumn), dedup)
-    // KPL-style admission: rate cap (or fail-if-throttled), in-flight
-    // window, record-TTL on the accumulated wait
-    ProducerAdmission.admit(conf, rateLimiter, window,
-      client.targetShard(ev.partitionKey))
-    client.put(ev) { result =>
-      result.foreach(t => firstError.compareAndSet(null, t))
-      window.release()
-    }
+    task.send(ProducerEvent(row.getAs[String](keyColumn),
+      row.getAs[Array[Byte]](dataColumn), dedup))
   }
 
-  override def close(errorOrNull: Throwable): Unit = {
-    // flushSync: wait until every in-flight record is acked. A
-    // collection-buffering transport must ship its buffer (and fire
-    // the acks) first, or the drain waits on acks only close() sends.
-    if (window != null && errorOrNull == null) {
-      client.flushPending()
-      if (!window.tryAcquire(conf.maxOutstandingRequests,
-          conf.drainTimeout.toMillis, TimeUnit.MILLISECONDS))
-        throw new IllegalStateException(
-          "sink close timed out waiting for outstanding acks")
+  override def close(errorOrNull: Throwable): Unit =
+    if (task != null) {
+      if (errorOrNull == null) task.commit() else task.abort()
     }
-    if (client != null) client.close()
+}
+
+/** One writer task's producer core, shared by the ForeachWriter
+  * ([[GraftSinkWriter]]) and DSv2
+  * ([[GraftKinesisWriteSupport.GraftDataWriter]]) paths:
+  *
+  *  - `send` runs the KPL-style admission (rate cap or fail-if-throttled,
+  *    in-flight window, record TTL) and submits asynchronously; the
+  *    first failed ack fails the next call (fail-fast)
+  *  - `commit` ships buffered records, drains every outstanding ack,
+  *    closes the client (flushSync) and fails if any write failed
+  *  - `abort` DISCARDS: it must not close the client, because close
+  *    flushes buffered aggregation records, and a failed attempt's
+  *    buffered-but-unsent records are re-sent by the task retry.
+  *    Flushing them here would land them twice, under a different
+  *    composite dedup key than the retry's, even with an idempotency
+  *    column. A real transport would destroy() without flushSync here.
+  *
+  * Per record, `send` allocates nothing beyond the event: the ack
+  * callback is one function per task.
+  */
+private[sinks] final class ProducerTask(factory: AsyncRecordClientFactory,
+    conf: ProducerConf) {
+  private val client = factory.create()
+  private val window = new Semaphore(conf.maxOutstandingRequests)
+  private val firstError = new AtomicReference[Throwable]()
+  private val rateLimiter =
+    conf.rateLimitPerShard.map(new ShardRateLimiters(_)).orNull
+  private val onAck: Option[Throwable] => Unit = { result =>
+    result.foreach(t => firstError.compareAndSet(null, t))
+    window.release()
+  }
+
+  def send(ev: ProducerEvent): Unit = {
+    failIfErrored()
+    ProducerAdmission.admit(conf, rateLimiter, window,
+      client.targetShard(ev.partitionKey))
+    client.put(ev)(onAck)
+  }
+
+  def commit(): Unit = {
+    // a collection-buffering transport must ship its buffer (and fire
+    // the acks) before the window drain below can complete
+    client.flushPending()
+    if (!window.tryAcquire(conf.maxOutstandingRequests,
+        conf.drainTimeout.toMillis, TimeUnit.MILLISECONDS))
+      throw new IllegalStateException(
+        "sink commit timed out waiting for outstanding acks")
+    client.close()
     failIfErrored()
   }
+
+  def abort(): Unit = ()
 
   private def failIfErrored(): Unit = {
     val t = firstError.get()

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.util.concurrent.{Semaphore, TimeUnit}
-import java.util.concurrent.atomic.AtomicReference
 import graft.config.ProducerConf
 import graft.models.ProducerEvent
 import graft.sources.ShardServiceRegistry
@@ -19,9 +17,9 @@ import org.apache.spark.sql.types.StructType
   * Rows must carry `partitionKey` (string) and `data` (binary); extra
   * columns are ignored, and an optional dedup-id column (producer conf
   * `idempotency-column`) feeds the opt-in idempotent transport. Each
-  * task writer is one bounded-in-flight async client window — identical
-  * semantics to [[GraftSinkWriter]] (S9–S11): semaphore backpressure,
-  * fail-fast on the first failed ack, drain-before-commit.
+  * task writer runs the [[ProducerTask]] core it shares with
+  * [[GraftSinkWriter]] (S9–S11): semaphore backpressure, fail-fast on
+  * the first failed ack, drain-before-commit, discard on abort.
   *
   * Commit protocol: `DataWriter.commit()` drains outstanding acks, so a
   * task only reports success once everything it sent is acked (the
@@ -129,8 +127,8 @@ object GraftKinesisWriteSupport {
 
   private case object Committed extends WriterCommitMessage
 
-  /** One task's bounded-async writer (the GraftSinkWriter semantics on
-    * the InternalRow path). */
+  /** One task's writer on the InternalRow path: reads the producer
+    * record by ordinal and hands it to the shared [[ProducerTask]]. */
   final class GraftDataWriter(factory: AsyncRecordClientFactory,
       conf: ProducerConf, schema: StructType)
       extends DataWriter[InternalRow] {
@@ -138,16 +136,10 @@ object GraftKinesisWriteSupport {
     private val keyOrd = schema.fieldIndex("partitionKey")
     private val dataOrd = schema.fieldIndex("data")
     private val dedupOrd = conf.idempotencyColumn.map(schema.fieldIndex)
+    private val task = new ProducerTask(factory, conf)
 
-    private val client = factory.create()
-    private val window = new Semaphore(conf.maxOutstandingRequests)
-    private val firstError = new AtomicReference[Throwable]()
-    private val rateLimiter =
-      conf.rateLimitPerShard.map(new ShardRateLimiters(_)).orNull
-
-    override def write(row: InternalRow): Unit = {
-      failIfErrored()
-      val ev = ProducerEvent(
+    override def write(row: InternalRow): Unit =
+      task.send(ProducerEvent(
         row.getUTF8String(keyOrd).toString,
         row.getBinary(dataOrd),
         dedupOrd.map { i =>
@@ -155,44 +147,15 @@ object GraftKinesisWriteSupport {
             s"idempotency column '${conf.idempotencyColumn.get}' is null; " +
               "idempotent produce requires a non-null string id per record")
           row.getUTF8String(i).toString
-        })
-      // KPL-style admission: rate cap (or fail-if-throttled), in-flight
-      // window, record-TTL on the accumulated wait
-      ProducerAdmission.admit(conf, rateLimiter, window,
-        client.targetShard(ev.partitionKey))
-      client.put(ev) { result =>
-        result.foreach(t => firstError.compareAndSet(null, t))
-        window.release()
-      }
-    }
+        }))
 
+    // the task succeeds only once every send is acked
     override def commit(): WriterCommitMessage = {
-      // a collection-buffering transport must ship its buffer (and
-      // fire the acks) before the window drain below can complete
-      client.flushPending()
-      // drain: the task succeeds only once every send is acked
-      if (!window.tryAcquire(conf.maxOutstandingRequests,
-          conf.drainTimeout.toMillis, TimeUnit.MILLISECONDS))
-        throw new IllegalStateException(
-          "write commit timed out waiting for outstanding acks")
-      client.close()
-      failIfErrored()
+      task.commit()
       Committed
     }
 
-    // abort must NOT close(): close flushes buffered aggregation records,
-    // and an aborted task's buffered-but-unsent records must be DISCARDED
-    // (the retry re-sends them; flushing here would double-send even with
-    // task retry working correctly). A real transport would destroy()
-    // without flushSync on this path.
-    override def abort(): Unit = ()
+    override def abort(): Unit = task.abort()
     override def close(): Unit = ()
-
-    private def failIfErrored(): Unit = {
-      val t = firstError.get()
-      if (t != null && conf.failFast)
-        throw new IllegalStateException(
-          s"record write failed: ${t.getMessage}", t)
-    }
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Invariants of the Extended11 batch: the Count-Min matrix algebra
+/** Invariants of the sketch, graph and robust-trend queries (CustomAgg,
+  * Graph, Statistics, Forecasting): the Count-Min matrix algebra
   * (partition independence, one-sided error), Bellman–Ford vs a
   * driver-side relaxation model, Theil–Sen vs a driver-side median of
   * pairwise slopes, and the KMV intersection estimator's internal

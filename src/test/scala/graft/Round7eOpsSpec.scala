@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Invariants of the Extended12 batch: Kruskal–Wallis H and one-way
-  * ANOVA F vs driver-side models computed bit-for-bit with the same
+/** Invariants of the k-sample tests (Statistics): Kruskal–Wallis H and
+  * one-way ANOVA F vs driver-side models computed bit-for-bit with the same
   * exact-integer carriers, plus the cross-test agreement a
   * practitioner would check (both tests reject on the order-size
   * contrast, and H stays within its algebraic bounds). Value-level

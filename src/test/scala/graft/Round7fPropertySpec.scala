@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** Property checks for the Extended12 grid algebra on ARBITRARY data —
+/** Property checks for the Statistics grid algebra on ARBITRARY data —
   * the corpus specs (Round7eOpsSpec) pin the statistics on one
   * dataset; these pin the value-grid carriers (2× midranks, dominance
   * counters, tie cubics) against brute-force models under random group

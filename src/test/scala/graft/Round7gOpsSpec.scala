@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Invariants of the Extended13 batch (robust statistics and series
-  * diagnostics): each query is checked against a driver-side model
+/** Invariants of the robust statistics and series diagnostics
+  * (Statistics, Forecasting): each query is checked against a driver-side model
   * computed with the same exact carriers, plus the statistical
   * properties a practitioner relies on (MAD ≤ spread bounds, the
   * Theil–Sen/OLS agreement in sign, ACF bounds, the Benford rejection

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Extended14 (classifier evaluation + survival comparison):
+/** Classifier evaluation + survival comparison (TextOps, Statistics):
   * brute-force cross-checks at sf0.001 for the rank-sum AUC, the
   * paired-screen tests, and the Nelson–Aalen fold, plus a planted
   * differential-hazard fixture for the log-rank test — the gate

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Extended15 (forecast evaluation + Siegel robust slope):
+/** Forecast evaluation + Siegel robust slope (Forecasting):
   * brute-force cross-checks at sf0.001 against plain-Scala
   * recomputation from the collected weekly series, the documented
   * model ordering (mean4 beats naive beats drift on the oscillating

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Extended16 (regression diagnostics): brute-force cross-checks at
-  * sf0.001 against plain-Scala recomputation from the collected weekly
+/** Regression diagnostics (Forecasting, Graph): brute-force
+  * cross-checks at sf0.001 against plain-Scala recomputation from the collected weekly
   * series / per-order triples, plus the structural identities each
   * statistic must satisfy (leverages sum to the model dimension, the
   * naive-sequence partial-correlation formula, DW ≈ 2(1−ρ)).

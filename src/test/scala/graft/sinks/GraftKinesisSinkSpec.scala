@@ -250,6 +250,36 @@ class GraftKinesisSinkSpec extends SparkSpec {
     assert(payloads.sorted == Seq("p1", "p2", "p3"), payloads.toString)
   }
 
+  test("a failed writer attempt discards its buffered aggregation " +
+      "records: the retry lands every idempotent id exactly once") {
+    import graft.sources.{InMemoryShardService, ShardServiceRegistry}
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    import org.apache.spark.sql.types._
+    val svc = new InMemoryShardService("retry-discard", Seq("s0"))
+    val id = ShardServiceRegistry.register(svc)
+    val conf = ProducerConf("out", aggregationMaxCount = 10,
+      idempotencyColumn = Some("record_id"))
+    val factory = ShardServiceAsyncClient.factoryFor(conf, id)
+    val schema = StructType(Seq(StructField("partitionKey", StringType),
+      StructField("data", BinaryType), StructField("record_id", StringType)))
+    def row(i: Int) = new GenericRowWithSchema(
+      Array[Any]("k", s"id-$i".getBytes("UTF-8"), s"id-$i"), schema)
+    // first attempt: 3 rows sit in the aggregation buffer when it fails
+    val failed = new GraftSinkWriter(factory, conf)
+    failed.open(0, 0)
+    (1 to 3).foreach(i => failed.process(row(i)))
+    failed.close(new RuntimeException("task attempt failed"))
+    // the retry replays the whole partition and succeeds
+    val retry = new GraftSinkWriter(factory, conf)
+    retry.open(0, 0)
+    (1 to 10).foreach(i => retry.process(row(i)))
+    retry.close(null)
+    val ids = svc.read("s0", graft.sources.ShardPos.Beginning,
+      svc.latestPosition("s0"))
+      .flatMap(_.subRecords.map(r => new String(r.data, "UTF-8"))).toSeq
+    assert(ids.sorted == (1 to 10).map(i => s"id-$i").sorted, ids.toString)
+  }
+
   test("per-shard rate cap: two hot keys routed to ONE shard are jointly " +
       "capped at the shard rate while another shard's traffic proceeds " +
       "from its own bucket (KPL per-shard RateLimit, reference.conf:283-301)") {
