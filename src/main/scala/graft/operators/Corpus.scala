@@ -23,7 +23,7 @@ object Corpus extends OperatorFamily {
     * frames are localCheckpointed per round, so the whole training
     * loop reads the documents table once.
     */
-  private[operators] def bpeTrain(s: SparkSession, d: String)
+  private def bpeTrain(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val words = Tables.documents(s, d)
       .select(explode(expr(

@@ -26,7 +26,7 @@ object Graph extends OperatorFamily {
     * self-join of a distinct frame emits exactly one (u, v) row per
     * co-containing order), so every downstream count/distinct matches
     * bit-for-bit. Shared by q105/q107/q125/q130/q197. */
-  private[operators] def copurchasePairs(
+  private def copurchasePairs(
       s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .groupBy(col("l_orderkey"))

@@ -35,7 +35,7 @@ object Relational extends OperatorFamily {
     * catalog forgets the table on session exit but the files persist),
     * in which case `mode(overwrite)` alone fails with
     * LOCATION_ALREADY_EXISTS. */
-  private[operators] def dropManaged(s: SparkSession, name: String): Unit = {
+  private def dropManaged(s: SparkSession, name: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $name")
     val wh = s.conf.get("spark.sql.warehouse.dir")
     val path = new org.apache.hadoop.fs.Path(wh, name)

@@ -30,7 +30,7 @@ object TextOps extends OperatorFamily {
     * <= 0.4 — the exact boolean q144's oracle mirrors. Lets composed
     * screens (q172 McNemar, q173 Cochran's Q) ride ONE documents scan
     * instead of joining a second read of t02's output. */
-  private[operators] def qualityOkCol(words: Column): Column = {
+  private def qualityOkCol(words: Column): Column = {
     val distinctRatio =
       size(array_distinct(words)).cast("double") / size(words)
     val stopRatio =
@@ -140,7 +140,7 @@ object TextOps extends OperatorFamily {
   /** DuckDB twin of [[TextOps.repetitionStats]]' repeated-trigram
     * count over a CTE `w(doc_id, words)`: CTEs `g`, `c`, `dup`
     * (doc_id, n_dup) — docs without a repeat have no `dup` row. */
-  private[operators] val repetitionSql = trigramCountSql +
+  private val repetitionSql = trigramCountSql +
     """,
       |  dup AS (SELECT doc_id,
       |    CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT)
@@ -169,7 +169,7 @@ object TextOps extends OperatorFamily {
 
   /** The 2×2 agreement table of two boolean raters `a`, `b`
     * (n11, n10, n01, n00, n) — q144's kappa and q172's McNemar. */
-  private[operators] def agreementCells(rated: DataFrame): DataFrame =
+  private def agreementCells(rated: DataFrame): DataFrame =
     rated
       .agg(
         sum(when(col("a") && col("b"), 1L).otherwise(0L)).as("n11"),
@@ -181,7 +181,7 @@ object TextOps extends OperatorFamily {
 
   /** DuckDB twin of [[agreementCells]] over the rows of `from`: CTE
     * `cells`. */
-  private[operators] def agreementCellsSql(from: String): String =
+  private def agreementCellsSql(from: String): String =
     s"""cells AS (SELECT
        |    CAST(SUM(CASE WHEN a AND b THEN 1 ELSE 0 END)
        |      AS BIGINT) AS n11,
