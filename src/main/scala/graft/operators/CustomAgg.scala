@@ -1,9 +1,9 @@
 package graft.operators
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
-import graft.Tables
 import graft.functions.HashFunctions
 import graft.functions.HashFunctions.md5Hash60Sql
 

@@ -154,12 +154,14 @@ object Forecasting extends OperatorFamily {
     }
   }
 
-  // q150 rule: HUGEINT combos surface to DOUBLE through VARCHAR so
-  // the cast rounds once (DuckDB's HUGEINT→DOUBLE double-rounds
-  // through its 64-bit halves)
+  /** q150 rule for the oracles: HUGEINT combos surface to DOUBLE
+    * through VARCHAR so the cast rounds once (DuckDB's HUGEINT→DOUBLE
+    * double-rounds through its 64-bit halves). */
   private def vd(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
+
+  /** DuckDB twin of [[rssCol]]. */
   private def rss(n: String, a: String, b: String, c: String) =
-      s"""CASE WHEN $c = 0 THEN NULL ELSE
+    s"""CASE WHEN $c = 0 THEN NULL ELSE
          (${vd(a)} - ${vd(b)} * ${vd(b)} / ${vd(c)}) / ${vd(n)} END"""
 
   /** Daily order revenue (day, x): day = days since 1970-01-01 and x

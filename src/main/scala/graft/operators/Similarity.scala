@@ -1,9 +1,9 @@
 package graft.operators
 
+import graft.{Parity, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Parity, Tables}
 
 /** Similarity search over the `embeddings` table (Array[Float] column).
   *
