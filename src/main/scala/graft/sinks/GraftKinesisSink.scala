@@ -118,8 +118,7 @@ final class GraftSinkWriter(
   *    composite dedup key than the retry's, even with an idempotency
   *    column. A real transport would destroy() without flushSync here.
   *
-  * Per record, `send` allocates nothing beyond the event: the ack
-  * callback is one function per task.
+  * The ack callback is one function per task, not one per record.
   */
 private[sinks] final class ProducerTask(factory: AsyncRecordClientFactory,
     conf: ProducerConf) {
