@@ -224,8 +224,8 @@ object Behavioral extends OperatorFamily {
           "left_semi")
         .groupBy(col("day"))
         .agg(countDistinct(col("user_id")).as("users_7d"))
-        // timestamp_ntz, not date: parquet date32 reaches the driver's
-        // pandas compare as dtype=object and breaks its typed hash
+        // timestamp_ntz, not date: parquet date32 reaches a pandas
+        // result compare as dtype=object and breaks its typed hash
         // (the q21 parity rule)
         .select(col("day").cast("timestamp_ntz").as("day"), col("users_7d"))
         .orderBy(col("day"))

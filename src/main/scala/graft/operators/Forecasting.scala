@@ -275,7 +275,7 @@ object Forecasting extends OperatorFamily {
     // aggregate (the only full-data exchange, partial-agg collapsed
     // to |priorities| x |weeks| rows map-side), then a window over
     // the tiny rollup. Week emitted as timestamp_ntz (q66 rule:
-    // date32 breaks the driver hash on the pandas side).
+    // date32 breaks the result hash on the pandas side).
     "q88_wow_trend" -> ((s, d) => {
       val wk = Tables.orders(s, d)
         .groupBy(col("o_orderpriority"),

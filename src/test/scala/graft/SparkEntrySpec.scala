@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The driver contract's registry: `SparkEntry` folds one list of family
+/** The query registry: `SparkEntry` folds one list of family
   * modules, so a query name defined twice would silently keep only the
   * later module's entry. */
 class SparkEntrySpec extends AnyFunSuite {
