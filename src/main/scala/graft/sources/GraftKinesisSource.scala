@@ -25,7 +25,11 @@ import scala.jdk.CollectionConverters._
   * Architecture mapping:
   *  - shard leases / one record-processor per shard  →
   *    `planInputPartitions`: one [[InputPartition]] per shard range; the
-  *    driver coordinates, no DynamoDB lease table
+  *    driver coordinates, no DynamoDB lease table. The driver's own
+  *    per-shard calls (end offsets, LATEST / AT_TIMESTAMP positions) run
+  *    concurrently too, one task per shard ([[ShardCalls]]), so a
+  *    trigger over the wire pays about one shard's round trips, not the
+  *    sum over all shards
   *  - per-shard ordered delivery → each partition reader emits its
   *    shard's records in `(seqNo, subSeqNo)` order
   *  - DynamoDB checkpoints (S5) → offset WAL at the query's
@@ -194,17 +198,20 @@ final class GraftKinesisScan(options: Map[String, String],
       // `shard-filter` option (static assignment) composes with pushdown
       val optFilter: Option[Set[String]] = options.get("shard-filter")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      service.listShards().sorted
+      val shards = service.listShards().sorted
         .filter(s => allowedShards.forall(_.contains(s)) &&
           optFilter.forall(_.contains(s)) &&
           keyShards.forall(_.contains(s)))
-        .flatMap { s =>
-          val to = service.latestPosition(s)
-          if (ShardPos.ordering.lt(ShardPos.Beginning, to))
-            Some(GraftShardInputPartition(serviceId, service.streamName, s,
-              ShardPos.Beginning, to))
-          else None
-        }.toArray
+      // a snapshot plans once: the pool lives for this pass only
+      val calls = new ShardCalls("graft-kinesis-scan")
+      val ends = try calls(shards)(service.latestPosition)
+        finally calls.close()
+      ends.flatMap { case (s, to) =>
+        if (ShardPos.ordering.lt(ShardPos.Beginning, to))
+          Some(GraftShardInputPartition(serviceId, service.streamName, s,
+            ShardPos.Beginning, to))
+        else None
+      }.toArray
     }
     override def createReaderFactory(): PartitionReaderFactory =
       new GraftShardReaderFactory(required.fieldNames)
@@ -256,6 +263,71 @@ object GraftShardOffsets {
   }
 }
 
+/** Runs the per-shard [[ShardService]] calls of one driver pass
+  * concurrently — the shard-parallel shape of the consumer, applied to
+  * offset resolution: on the wire every call is a round trip, so a
+  * serial pass would cost O(shards x RTT) per trigger.
+  *
+  * The pool is created on first use, holds at most one thread per shard
+  * of the largest pass, lets idle threads lapse and is shut down by
+  * `close()`. It adds no concurrency bound of its own: in-flight wire
+  * requests stay capped by the service's connection window
+  * (`max-connections` in [[graft.transport.HttpShardService]]). A pass
+  * over one shard runs on the calling thread.
+  *
+  * Failure and interrupt semantics match a serial `shards.map(f)`: the
+  * first failure is rethrown as thrown (not wrapped) and the remaining
+  * calls are cancelled; an interrupt of the calling thread (a query
+  * stop) cancels the pass and does not wait for it.
+  */
+private[sources] final class ShardCalls(name: String) {
+  import java.util.concurrent.{ExecutionException, ExecutorCompletionService,
+    LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+
+  private var pool: ThreadPoolExecutor = _
+
+  private def poolFor(n: Int): ThreadPoolExecutor = synchronized {
+    if (pool == null) {
+      val threads = new java.util.concurrent.atomic.AtomicInteger(0)
+      pool = new ThreadPoolExecutor(n, n, 30L, TimeUnit.SECONDS,
+        new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+          val t = new Thread(r, s"$name-${threads.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        })
+      pool.allowCoreThreadTimeOut(true)
+    } else if (pool.getMaximumPoolSize < n) {
+      // a reshard grew the listing: widen max before core (core > max
+      // is rejected)
+      pool.setMaximumPoolSize(n)
+      pool.setCorePoolSize(n)
+    }
+    pool
+  }
+
+  /** `f` applied to every shard, paired with its shard, in shard order. */
+  def apply[A](shards: Seq[String])(f: String => A): Seq[(String, A)] =
+    if (shards.size <= 1) shards.map(s => s -> f(s))
+    else {
+      val done = new ExecutorCompletionService[A](poolFor(shards.size))
+      val calls = shards.map(s => done.submit(() => f(s)))
+      try {
+        // completion order: the first failure surfaces without waiting
+        // for slower shards
+        shards.foreach { _ =>
+          try done.take().get()
+          catch { case e: ExecutionException => throw e.getCause }
+        }
+        shards.zip(calls.map(_.get()))
+      } finally calls.foreach(_.cancel(true))
+    }
+
+  def close(): Unit = synchronized {
+    if (pool != null) pool.shutdownNow()
+    pool = null
+  }
+}
+
 final class GraftKinesisMicroBatchStream(options: Map[String, String],
     required: StructType = Envelope.schema)
     extends MicroBatchStream with SupportsAdmissionControl
@@ -266,15 +338,17 @@ final class GraftKinesisMicroBatchStream(options: Map[String, String],
   @volatile private var availableNowEnd: Option[Map[String, ShardPos]] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(listAssigned()
-      .map(s => s -> service.latestPosition(s)).toMap)
+    availableNowEnd = Some(latestPositions())
 
   override def reportLatestOffset(): Offset =
-    GraftShardOffsets(listAssigned()
-      .map(s => s -> service.latestPosition(s)).toMap)
+    GraftShardOffsets(latestPositions())
+
+  private def latestPositions(): Map[String, ShardPos] =
+    shardCalls(listAssigned())(service.latestPosition).toMap
 
   private val serviceId = ShardServiceRegistry.resolveId(options)
   @transient private lazy val service = ShardServiceRegistry.get(serviceId)
+  private val shardCalls = new ShardCalls("graft-kinesis-offsets")
   private val maxRecordsPerShard =
     options.getOrElse("max-records-per-shard", "10000").toInt
   private val initialPosition = InitialPosition.parse(
@@ -355,18 +429,15 @@ final class GraftKinesisMicroBatchStream(options: Map[String, String],
   private def listAssigned(): Seq[String] =
     topology().shards.filter(admitted)
 
-  override def initialOffset(): Offset = {
-    val shards = listAssigned()
-    GraftShardOffsets(shards.map { s =>
-      val pos = initialPositions.getOrElse(s, initialPosition match {
+  override def initialOffset(): Offset =
+    GraftShardOffsets(shardCalls(listAssigned()) { s =>
+      initialPositions.getOrElse(s, initialPosition match {
         case InitialPosition.TrimHorizon => ShardPos.Beginning
         case InitialPosition.Latest => service.latestPosition(s)
         case InitialPosition.AtTimestamp(ms) =>
           service.positionAtTimestamp(s, ms * 1000L)
       })
-      s -> pos
     }.toMap)
-  }
 
   override def getDefaultReadLimit: ReadLimit =
     ReadLimit.maxRows(
@@ -415,25 +486,23 @@ final class GraftKinesisMicroBatchStream(options: Map[String, String],
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[GraftShardOffsets].positions
-    // ONE topology snapshot per trigger (or per sync interval): shard
-    // discovery, the data-loss check, lineage gating and closed markers
-    // all read the same consistent view
-    var topo = topology()
     def lostIn(t: Topology): Set[String] =
       (from.keySet -- t.byId.keySet)
         .filter(v => from(v) != ShardPos.ShardEnd)
+    // ONE topology snapshot per trigger (or per sync interval): shard
+    // discovery, the data-loss check, lineage gating and closed markers
+    // all read the same consistent view. A CACHED listing must never
+    // produce the data-loss verdict: re-sync once and re-check first.
+    val topo = {
+      val t = topology()
+      if (lostIn(t).nonEmpty && shardSyncIntervalMs > 0) syncTopology() else t
+    }
     // retention expiry: a shard the WAL tracks but the listing no longer
     // contains. Only a SHARD_END entry (drained before it aged out) may
     // drop silently; anything else is unread data that no longer exists —
     // fail loudly (Kafka-source failOnDataLoss semantics; opt out with
-    // fail-on-data-loss=false for conscious lossy catch-up). A CACHED
-    // listing must never produce this verdict: re-sync once and
-    // re-check before concluding loss.
-    var lost = lostIn(topo)
-    if (lost.nonEmpty && shardSyncIntervalMs > 0) {
-      topo = syncTopology()
-      lost = lostIn(topo)
-    }
+    // fail-on-data-loss=false for conscious lossy catch-up).
+    val lost = lostIn(topo)
     if (lost.nonEmpty) {
       val msg = s"shards ${lost.toSeq.sorted.mkString(", ")} disappeared " +
         "from the stream listing with unconsumed WAL positions — records " +
@@ -446,51 +515,53 @@ final class GraftKinesisMicroBatchStream(options: Map[String, String],
     // a shard outside this query's assignment is not lost, just foreign
     val shards = topo.shards.filter(admitted)
     val cap = perShardCap(limit, shards.size)
-    var reachedEnd = false
-    val out = GraftShardOffsets(shards.map { s =>
-      val f = from.getOrElse(s, ShardPos.Beginning)
-      // parent-before-child: a child advances only when every parent was
-      // already drained in the START offset. Gating on the start (not
-      // this trigger's end) matters — partitions within one micro-batch
-      // run in parallel with no cross-partition ordering, so the child
-      // may begin at the earliest one batch after its parents finish.
-      val gated = topo.info(s).parentIds
-        .exists(p => admitted(p) && !parentDrained(from, topo, p))
-      if (gated || f == ShardPos.ShardEnd) s -> f else {
-        // under AvailableNow, never read past the frozen end positions; a
-        // shard discovered after the freeze has no frozen end and is
-        // skipped entirely (AvailableNow: only data available at start)
-        val next = availableNowEnd match {
-          case Some(frozen) => frozen.get(s) match {
-            case Some(end) =>
-              val n = cap match {
-                case Some(c) => service.positionAfter(s, f, c)
-                case None => service.latestPosition(s)
-              }
-              if (ShardPos.ordering.gt(n, end)) end else n
-            case None => f
-          }
-          case None => cap match {
-            case Some(c) => service.positionAfter(s, f, c)
-            case None => service.latestPosition(s)
-          }
-        }
-        // a CLOSED shard admitted through its final record checkpoints as
-        // SHARD_END (KCL lease semantics): closed shards reject writes, so
-        // latestPosition is its final end — the token that later lets the
-        // WAL entry drop cleanly once the shard ages out of the listing
-        val drained = topo.info(s).closed &&
-          ShardPos.ordering.gteq(next, service.latestPosition(s))
-        if (drained && f != ShardPos.ShardEnd) reachedEnd = true
-        s -> (if (drained) ShardPos.ShardEnd else next)
-      }
-    }.toMap)
+    val ends = shardCalls(shards)(s => endOf(s, from, topo, cap))
     // a shard just drained to SHARD_END: its children must be
     // discovered promptly (KCL creates child leases at parent
     // SHARD_END), so the cached topology dies early instead of waiting
     // out the sync interval
-    if (reachedEnd) invalidateTopology()
-    out
+    if (ends.exists { case (_, (_, drained)) => drained }) invalidateTopology()
+    GraftShardOffsets(ends.map { case (s, (end, _)) => s -> end }.toMap)
+  }
+
+  /** One shard's end offset for this trigger, and whether it has just
+    * drained to SHARD_END. Reads only the start offset `from` and the
+    * pass's topology, so shards resolve independently of each other. */
+  private def endOf(s: String, from: Map[String, ShardPos], topo: Topology,
+      cap: Option[Int]): (ShardPos, Boolean) = {
+    val f = from.getOrElse(s, ShardPos.Beginning)
+    // parent-before-child: a child advances only when every parent was
+    // already drained in the START offset. Gating on the start (not
+    // this trigger's end) matters — partitions within one micro-batch
+    // run in parallel with no cross-partition ordering, so the child
+    // may begin at the earliest one batch after its parents finish.
+    val gated = topo.info(s).parentIds
+      .exists(p => admitted(p) && !parentDrained(from, topo, p))
+    if (gated || f == ShardPos.ShardEnd) (f, false) else {
+      def ahead: ShardPos = cap match {
+        case Some(c) => service.positionAfter(s, f, c)
+        case None => service.latestPosition(s)
+      }
+      // under AvailableNow, never read past the frozen end positions; a
+      // shard discovered after the freeze has no frozen end and is
+      // skipped entirely (AvailableNow: only data available at start)
+      val next = availableNowEnd match {
+        case Some(frozen) => frozen.get(s) match {
+          case Some(end) =>
+            val n = ahead
+            if (ShardPos.ordering.gt(n, end)) end else n
+          case None => f
+        }
+        case None => ahead
+      }
+      // a CLOSED shard admitted through its final record checkpoints as
+      // SHARD_END (KCL lease semantics): closed shards reject writes, so
+      // latestPosition is its final end — the token that later lets the
+      // WAL entry drop cleanly once the shard ages out of the listing
+      val drained = topo.info(s).closed &&
+        ShardPos.ordering.gteq(next, service.latestPosition(s))
+      (if (drained) ShardPos.ShardEnd else next, drained)
+    }
   }
 
   override def deserializeOffset(json: String): Offset =
@@ -513,7 +584,7 @@ final class GraftKinesisMicroBatchStream(options: Map[String, String],
     new GraftShardReaderFactory(required.fieldNames)
 
   override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+  override def stop(): Unit = shardCalls.close()
 }
 
 final case class GraftShardInputPartition(

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.config.ConsumerConf
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, when}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import scala.util.control.NonFatal
 
@@ -63,35 +64,40 @@ object CommitHarness {
     implicit val tupleEnc: Encoder[(T, Boolean)] =
       Encoders.tuple(implicitly[Encoder[T]], Encoders.scalaBoolean)
 
-    val total = batch.count()
+    var total = 0L
     var pending = batch
     var toFree: List[Dataset[(T, Boolean)]] = Nil
-    var pendingCount = total
+    var pendingCount = 0L
     var attemptsMade = 0
     val maxAttempts = conf.failedMessageRetries + 1
-    while (pendingCount > 0 && attemptsMade < maxAttempts) {
+    // the first round always runs: its tally is also the batch size, so
+    // the source is read once for both
+    while (attemptsMade == 0 ||
+        (pendingCount > 0 && attemptsMade < maxAttempts)) {
       // localCheckpoint severs lineage: the (side-effecting) processor is
       // invoked exactly once per record per round — a later action on the
       // dead-letter Dataset must not re-run user code (the reference's
       // ack bookkeeping is similarly write-once,
       // main/consumer/ConsumerWorker.scala:368-383)
       val results = pending.map(t => (t, safe(t))).localCheckpoint(true)
-      val failed = results.filter(!_._2).map(_._1)
-      pendingCount = failed.count()
+      val tally = results.agg(count(lit(1)), count(when(!col("_2"), 1))).head()
+      if (attemptsMade == 0) total = tally.getLong(0)
+      pendingCount = tally.getLong(1)
       // previous round's checkpoint blocks are no longer referenced once
-      // this round's failed-set is materialized — free them now; the last
+      // this round's results are checkpointed — free them now; the last
       // round backs the returned dead-letter Dataset and is freed by
       // freeDeadLetters (runStream does this after the dead-letter write)
       toFree.foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
       toFree = List(results)
-      pending = failed
+      pending = results.filter(!_._2).map(_._1)
       attemptsMade += 1
     }
     val allowed = conf.allowedFailures(total)
     if (pendingCount > allowed)
       throw new BatchFailedException(pendingCount, allowed, total)
+    // an empty batch attempted nothing
     (pending, BatchStats(total, total - pendingCount, pendingCount,
-      attemptsMade))
+      if (total == 0) 0 else attemptsMade))
   }
 
   /** Release the checkpoint storage behind the dead-letter Dataset

@@ -254,42 +254,51 @@ final class HttpShardService(
       r.put("SubSequenceNumber", from.subSeqNo)
     })._1
 
-  /** One GetRecords page: (wire records, nextIterator or None at
-    * SHARD_END). */
+  /** One GetRecords page, undecoded: (wire records, nextIterator or
+    * None at SHARD_END). Decoding is the caller's choice — the driver's
+    * pre-read needs only the last record of a page. */
   private def getRecordsPage(shardId: String, iterator: String,
-      limit: Int): (Vector[RawShardRecord], Option[String]) = {
+      limit: Int): (IndexedSeq[JsonNode], Option[String]) = {
     val req = obj()
     req.put("ShardIterator", iterator)
     req.put("Limit", limit)
     val resp = call("GetRecords", req)
-    var bytes = 0L
-    val recs = resp.get("Records").elements().asScala.map { r =>
-      val key = r.get("PartitionKey").asText()
-      val data = b64d.decode(r.get("Data").asText())
-      bytes += data.length
-      RawShardRecord(key, BigInt(r.get("SequenceNumber").asText()),
-        r.get("ApproximateArrivalTimestamp").asLong(),
-        decodeData(key, data))
-    }.toVector
+    val recs = resp.get("Records").elements().asScala.toVector
     // consumer-side counters (KCL ProcessTask re-expression): wire
     // records + payload bytes per shard, plus the request count the
     // per-shard dimension can't carry
     metrics.record("GetRecordsRequests", shardId, 1L)
     if (recs.nonEmpty) {
       metrics.record("RecordsFetched", shardId, recs.size.toLong)
-      metrics.record("BytesFetched", shardId, bytes)
+      metrics.record("BytesFetched", shardId,
+        recs.iterator.map(r => decodedLength(r.get("Data").asText())).sum)
     }
     (recs, Option(resp.get("NextShardIterator")).map(_.asText()))
   }
+
+  private def decodeRecord(r: JsonNode): RawShardRecord = {
+    val key = r.get("PartitionKey").asText()
+    RawShardRecord(key, BigInt(r.get("SequenceNumber").asText()),
+      r.get("ApproximateArrivalTimestamp").asLong(),
+      decodeData(key, b64d.decode(r.get("Data").asText())))
+  }
+
+  private def posOf(r: RawShardRecord): ShardPos =
+    ShardPos(r.seqNo, (r.subRecords.size - 1).toLong)
 
   /** NOTE (scale): the Kinesis wire protocol has no data-free "skip N
     * records" call, so an admission cap (`max-records-per-shard`)
     * makes the DRIVER page real records through GetRecords here just
     * to locate the end offset — the executors then read the same
-    * range again. On an endpoint-backed stream prefer uncapped
-    * triggers (end offset = one LATEST iterator call, zero data on
-    * the driver); the per-GetRecords page is bounded at 10000 wire
-    * records either way. The in-memory/test services compute this
+    * range again. The source resolves all shards of a trigger
+    * concurrently, so a trigger waits about as long as its slowest
+    * shard's round trips, not their sum, and each page is decoded only
+    * as far as the end offset needs: the record count from the JSON and
+    * the last record's sub-record count (no base64 or KPL decode of the
+    * rest). On an endpoint-backed stream, uncapped triggers avoid the
+    * pre-read altogether (end offset = one LATEST iterator call, zero
+    * data on the driver); the per-GetRecords page is bounded at 10000
+    * wire records either way. The in-memory/test services compute this
     * positionally at O(1), which is why the tax only exists on the
     * wire path. */
   override def positionAfter(shardId: String, from: ShardPos,
@@ -300,24 +309,27 @@ final class HttpShardService(
     while (remaining > 0 && it.isDefined) {
       val (recs, next) = getRecordsPage(shardId, it.get, math.min(remaining, 10000))
       if (recs.isEmpty) return pos
-      pos = ShardPos(recs.last.seqNo, (recs.last.subRecords.size - 1).toLong)
+      pos = posOf(decodeRecord(recs.last))
       remaining -= recs.size
       it = next
     }
     pos
   }
 
+  /** Ordered records in (from, to]. Stops paging once a page reaches
+    * `to`: the page after it could only hold records past the range. */
   override def read(shardId: String, from: ShardPos,
       to: ShardPos): Iterator[RawShardRecord] = {
     val out = Vector.newBuilder[RawShardRecord]
     var it = Option(iteratorAfter(shardId, from))
     var done = false
     while (!done && it.isDefined) {
-      val (recs, next) = getRecordsPage(shardId, it.get, 10000)
-      val inRange = recs.takeWhile(r => ShardPos.ordering.lteq(
-        ShardPos(r.seqNo, (r.subRecords.size - 1).toLong), to))
+      val (page, next) = getRecordsPage(shardId, it.get, 10000)
+      val recs = page.map(decodeRecord)
+      val inRange = recs.takeWhile(r => ShardPos.ordering.lteq(posOf(r), to))
       out ++= inRange
-      done = recs.isEmpty || inRange.size < recs.size
+      done = recs.isEmpty || inRange.size < recs.size ||
+        ShardPos.ordering.gteq(posOf(inRange.last), to)
       it = next
     }
     out.result().iterator

@@ -510,6 +510,94 @@ class GraftKinesisSourceSpec extends SparkSpec {
     val seqs = got.select("seq").collect().map(_.getLong(0)).toSeq
     assert(seqs == seqs.sorted, "per-shard order must be preserved")
   }
+
+  /** A service over `inner` whose `positionAfter` runs `hook` first. */
+  private def hooked(inner: ShardService)(hook: String => Unit): ShardService =
+    new ShardService {
+      override def streamName: String = inner.streamName
+      override def listShards(): Seq[String] = inner.listShards()
+      override def latestPosition(s: String): ShardPos = inner.latestPosition(s)
+      override def positionAtTimestamp(s: String, t: Long): ShardPos =
+        inner.positionAtTimestamp(s, t)
+      override def positionAfter(s: String, f: ShardPos, m: Int): ShardPos = {
+        hook(s); inner.positionAfter(s, f, m)
+      }
+      override def read(s: String, f: ShardPos, t: ShardPos) =
+        inner.read(s, f, t)
+    }
+
+  test("one trigger resolves its shards concurrently: two shards are " +
+      "inside positionAfter at the same time, offsets unchanged") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val inner = mkService(6, shards = 4)
+    val inside = new CountDownLatch(2)
+    val svc = hooked(inner) { s =>
+      inside.countDown()
+      if (!inside.await(2, TimeUnit.SECONDS))
+        throw new IllegalStateException(s"positionAfter($s) ran alone")
+    }
+    val stream = new GraftKinesisMicroBatchStream(
+      Map("service.id" -> ShardServiceRegistry.register(svc)))
+    try {
+      val end = stream.latestOffset(stream.initialOffset(), ReadLimit.maxRows(16))
+        .asInstanceOf[GraftShardOffsets]
+      assert(end.positions == (0 until 4).map(i =>
+        s"shard-$i" -> ShardPos(BigInt(4), 0L)).toMap)
+    } finally stream.stop()
+  }
+
+  test("a failing shard fails the pass with its own exception, unwrapped, " +
+      "without waiting for the other shards, which are cancelled") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val cancelled = new CountDownLatch(1)
+    val svc = hooked(mkService(3, shards = 2)) {
+      case "shard-0" =>
+        try Thread.sleep(10000) catch {
+          case e: InterruptedException => cancelled.countDown(); throw e
+        }
+      case s => throw new graft.transport.KinesisApiException(
+        "ResourceNotFoundException", s"$s not found", 400)
+    }
+    val stream = new GraftKinesisMicroBatchStream(
+      Map("service.id" -> ShardServiceRegistry.register(svc)))
+    try {
+      val t0 = System.nanoTime()
+      val e = intercept[graft.transport.KinesisApiException] {
+        stream.latestOffset(stream.initialOffset(), ReadLimit.maxRows(4))
+      }
+      assert(e.getMessage == "ResourceNotFoundException (HTTP 400): " +
+        "shard-1 not found")
+      assert(System.nanoTime() - t0 < 5000000000L,
+        "the failure must not wait for the slow shard")
+      assert(cancelled.await(2, TimeUnit.SECONDS),
+        "the slow shard's call must be interrupted")
+    } finally stream.stop()
+  }
+
+  test("an interrupt of the stream thread cancels the pass at once") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val entered = new CountDownLatch(2)
+    val svc = hooked(mkService(3, shards = 2)) { _ =>
+      entered.countDown(); Thread.sleep(10000)
+    }
+    val stream = new GraftKinesisMicroBatchStream(
+      Map("service.id" -> ShardServiceRegistry.register(svc)))
+    val outcome = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val caller = new Thread(() =>
+      try stream.latestOffset(stream.initialOffset(), ReadLimit.maxRows(4))
+      catch { case t: Throwable => outcome.set(t) })
+    try {
+      caller.start()
+      assert(entered.await(2, TimeUnit.SECONDS), "both shards in flight")
+      caller.interrupt()
+      caller.join(2000)
+      assert(!caller.isAlive, "the pass must not wait for its calls")
+      assert(outcome.get.isInstanceOf[InterruptedException], outcome.get)
+    } finally stream.stop()
+  }
 }
 
 object GraftKinesisSourceSpec {

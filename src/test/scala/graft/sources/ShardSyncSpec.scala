@@ -52,6 +52,44 @@ class ShardSyncSpec extends SparkSpec {
     } finally stub.stop()
   }
 
+  test("round trips of one drained micro-batch over 8 wire shards: " +
+      "offsets, report, executor reads and the next empty trigger") {
+    val shards = (0 until 8).map(i => s"shard-$i")
+    val store = new InMemoryShardService("wire", shards)
+    for (s <- shards; n <- 1 to 3) store.appendAssigned(s,
+      (1 to 4).map(k => SubRecord(s"k$k", s"$s/$n/$k".getBytes(UTF_8))))
+    val stub = new KinesisWireStub(store, listShardsPageSize = 10)
+    try {
+      val svc = new HttpShardService(stub.endpoint, "wire",
+        RetryPolicy(sleeper = _ => ()))
+      val ms = new GraftKinesisMicroBatchStream(Map(
+        "service.id" -> ShardServiceRegistry.register(svc)))
+      try {
+        val start = ms.initialOffset()
+        val end = ms.latestOffset(start, ms.getDefaultReadLimit)
+        ms.reportLatestOffset()
+        val factory = ms.createReaderFactory()
+        val rows = ms.planInputPartitions(start, end).map { p =>
+          val r = factory.createReader(p)
+          var n = 0
+          while (r.next()) n += 1
+          n
+        }.sum
+        assert(rows === 8 * 3 * 4)
+        assert(offsets(ms.latestOffset(end, ms.getDefaultReadLimit)) ===
+          offsets(end), "the next trigger finds nothing new")
+      } finally ms.stop()
+      // listings: initialOffset, getDefaultReadLimit x2, both latestOffset
+      // passes and reportLatestOffset. Per shard: the capped pre-read
+      // (iterator + data page + empty page), a LATEST iterator for the
+      // report, the executor read (iterator + one page, which reaches the
+      // range end) and the empty trigger (iterator + empty page).
+      assert(stub.requests("ListShards").size === 6)
+      assert(stub.requests("GetShardIterator").size === 8 * 4)
+      assert(stub.requests("GetRecords").size === 8 * 4)
+    } finally stub.stop()
+  }
+
   test("resharding is detected within one sync interval: the next " +
       "sync sees the closed parent, drains it to SHARD_END, and the " +
       "children advance in the same pass") {

@@ -44,6 +44,25 @@ class CommitHarnessSpec extends SparkSpec {
     assert((1 to 100).forall(i => attemptsOf("ok", s"payload$i") == 1))
   }
 
+  test("the source is evaluated once per record: the first round's " +
+      "tally is also the batch size") {
+    import spark.implicits._
+    val evaluated = spark.sparkContext.longAccumulator("source evaluations")
+    val batch = (1 to 100).map(i => s"once$i").toDS()
+      .map { s => evaluated.add(1); s }
+    val (_, stats) = processBatch(batch, mkAttempt("once"), conf(1, 0.25))
+    assert(stats == BatchStats(100, 100, 0, 1))
+    assert(evaluated.value == 100, "n evaluations, not one more scan")
+  }
+
+  test("an empty batch attempts nothing") {
+    import spark.implicits._
+    val (dead, stats) = processBatch(Seq.empty[String].toDS(),
+      mkAttempt("empty"), conf(1, 0.25))
+    assert(stats == BatchStats(0, 0, 0, 0))
+    assert(dead.count() == 0)
+  }
+
   test("retry only unacked records (ConsumerWorkerSpec retry semantics)") {
     import spark.implicits._
     val batch = (Seq("flaky1", "flaky2") ++ (1 to 8).map(i => s"p$i")).toDS()

@@ -414,6 +414,53 @@ class TransportSpec extends SparkSpec {
     }
   }
 
+  test("a read whose range ends at the shard's last record stops on that " +
+      "page: exactly one GetRecords") {
+    withStub(shards = 1) { (stub, svc) =>
+      (1 to 5).foreach(n => stub.store.appendAssigned("shard-0",
+        Seq(SubRecord("k", s"v$n".getBytes(UTF_8)))))
+      val end = svc.latestPosition("shard-0")
+      val recs = svc.read("shard-0", ShardPos.Beginning, end).toVector
+      assert(recs.size === 5)
+      assert(stub.requests("GetRecords").size === 1)
+    }
+  }
+
+  test("the driver pre-read counts requests, records and payload bytes " +
+      "as the full read does, and ends after an aggregated record's last " +
+      "sub-record") {
+    // payload sizes 1..6 bytes cover every base64 padding case
+    val singles = (1 to 6).map(n => Seq(SubRecord("k", Array.fill(n)('x'.toByte))))
+    val aggregated = (1 to 3).map(k => SubRecord(s"k$k", s"agg$k".getBytes(UTF_8)))
+    val store = new InMemoryShardService("bytes", Seq("shard-0"))
+    (singles :+ aggregated).foreach(store.appendAssigned("shard-0", _))
+    val stub = new KinesisWireStub(store)
+    try {
+      val svc = new HttpShardService(stub.endpoint, "bytes",
+        RetryPolicy(sleeper = _ => ()), metrics = graft.metrics.MetricsRecorder
+          .forLevel(graft.metrics.MetricsLevel.Detailed, "bytes"))
+      def counters(): Map[String, Long] = {
+        val m = graft.metrics.GraftMetrics.snapshot()
+        Seq("GetRecordsRequests", "RecordsFetched", "BytesFetched")
+          .map(k => k -> m.getOrElse(s"$k[stream=bytes]", 0L)).toMap
+      }
+      def delta(f: => Unit): Map[String, Long] = {
+        val before = counters(); f
+        counters().map { case (k, v) => k -> (v - before(k)) }
+      }
+      var end: ShardPos = null
+      val preRead = delta {
+        end = svc.positionAfter("shard-0", ShardPos.Beginning, 7)
+      }
+      assert(end === ShardPos(svc.latestPosition("shard-0").seqNo, 2L))
+      val read = delta { svc.read("shard-0", ShardPos.Beginning, end) }
+      val wireBytes = (1 to 6).sum + KinesisWire.aggregate(aggregated).length
+      assert(preRead === Map("GetRecordsRequests" -> 1L,
+        "RecordsFetched" -> 7L, "BytesFetched" -> wireBytes.toLong))
+      assert(read === preRead)
+    } finally stub.stop()
+  }
+
   test("retry-get-records-seconds reaches the endpoint-built client: " +
       "the self-describing id carries the backoff base (round-9 advice)") {
     val id = ShardServiceRegistry.resolveId(Map(
