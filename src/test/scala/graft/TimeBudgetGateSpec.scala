@@ -2,15 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Calibration proof for the per-query wall-time gate (round-9 verdict
-  * item 1): the driver's round-9 bench went red on q111 overshooting a
-  * 1.5x budget by 12% on a 0.6 s query — JIT/GC jitter, not a
-  * regression. The recalibrated budget `max(1.5x promoted,
-  * promoted + 0.5 s)` must (a) still catch a deliberate >= 2x slowdown
-  * on any >= 2 s query, and (b) tolerate sub-second absolute jitter on
-  * small entries. TIME_BUDGET.json is regenerated from the clean
-  * promoted BENCH_DETAIL.json by tools/budgets.py with the same
-  * formula ([[Bench.budgetFor]]).
+/** Calibration proof for the bench's budget formula `max(1.5x base,
+  * base + 0.5 s)` ([[Bench.budgetFor]]), which cuts both the gated
+  * CPU_BUDGET.json and the report-only TIME_BUDGET.json
+  * (tools/budgets.py). It must (a) still catch a deliberate >= 2x
+  * slowdown on any >= 2 s entry, and (b) tolerate sub-second absolute
+  * jitter on small entries — the round-9 bench went red on q111
+  * overshooting a plain 1.5x budget by 12% on a 0.6 s query.
   */
 class TimeBudgetGateSpec extends AnyFunSuite {
 
@@ -46,171 +44,77 @@ class TimeBudgetGateSpec extends AnyFunSuite {
     assert(Bench.overBudget(results, budget).keySet === Set("b"))
   }
 
-  test("span attribution math: a dipped probe marks exactly the spans " +
-      "it brackets; steady probes mark none; degenerate inputs are safe") {
-    // 4 spans, probe boundary 2 dipped to half rate: spans 1 and 2
-    // (the two it brackets) are contended, spans 0 and 3 are not
-    val rates = IndexedSeq(4.0e9, 4.0e9, 2.0e9, 4.0e9, 4.0e9)
-    assert(Bench.contendedSpans(rates) === Set(1, 2))
-    assert(Bench.spanRate(1, rates) === 2.0e9)
-    assert(Bench.spanRate(0, rates) === 4.0e9)
-    // jitter under the 25% threshold never marks a span
-    assert(Bench.contendedSpans(
-      IndexedSeq(4.0e9, 3.7e9, 4.1e9, 3.9e9)) === Set.empty)
-    // a sustained-slow tail marks every span it covers
-    assert(Bench.contendedSpans(
-      IndexedSeq(4.0e9, 4.0e9, 1.0e9, 1.0e9)) === Set(1, 2))
-    assert(Bench.contendedSpans(IndexedSeq(4.0e9)) === Set.empty)
-    assert(Bench.contendedSpans(IndexedSeq.empty[Double]) === Set.empty)
-  }
-
-  test("the CPU probe is a usable thermometer: warmed samples on this " +
-      "host agree within the 25% attribution threshold") {
-    Bench.CpuProbe.run(); Bench.CpuProbe.run() // JIT warm
-    val a = Bench.CpuProbe.run(); val b = Bench.CpuProbe.run()
-    assert(a > 0 && b > 0)
-    assert(math.min(a, b) / math.max(a, b) > 0.75,
-      f"probe self-agreement too weak for span attribution: $a%.3g vs $b%.3g")
-  }
-
-  test("the committed TIME_BUDGET.json stays within the calibration " +
-      "band of the committed promoted run (anti-staleness both " +
-      "directions: never tighter than the formula on the promoted " +
+  test("the committed CPU_BUDGET.json stays within the calibration " +
+      "band of the runs it was cut from (anti-staleness both " +
+      "directions: never tighter than the formula on the base " +
       "values, never loose enough to miss a genuine slowdown)") {
-    def flat(path: String): Map[String, Double] = {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-    // the __subfloor__ rows are the aggregate gate's member list, not
-    // per-query budgets — the aggregate has its own calibration test
-    val budget = flat("TIME_BUDGET.json").filterNot(_._1.startsWith("__"))
-    // promoted queries live in BENCH_DETAIL.json under "queries": the
-    // flat regex also captures shuffle_mb/spill_mb entries, but those
-    // repeat the same keys with different values; parse just the
-    // queries object instead.
-    val detailTxt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("BENCH_DETAIL.json")),
+    def read(path: String): String = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
       java.nio.charset.StandardCharsets.UTF_8)
-    val queriesObj = detailTxt.split("\"queries\":\\{")(1).split("\\}")(0)
-    val promoted = """"([^"]+)":([0-9.eE+-]+)""".r.findAllMatchIn(queriesObj)
+    val budgetTxt = read("CPU_BUDGET.json")
+    val budget = """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(budgetTxt)
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    assert(promoted.nonEmpty && budget.nonEmpty)
-    // every budgeted entry sits inside the calibration band around the
-    // promoted run. Budgets are cut from the element-wise MAX of the
-    // clean runs (tools/budgets.py) — so against the single promoted
-    // run they may sit ABOVE its formula (per-query variance headroom,
-    // e.g. e10's documented storage-position swing) but never below
-    // it (too tight = the q111 false positive), and never above the
-    // loose bound that would let a genuine 2.5x slowdown through.
-    budget.foreach { case (q, b) =>
-      val p = promoted.getOrElse(q, fail(s"budgeted $q not in promoted run"))
+    // the base runs' per-entry layer columns ({"layers":{"q":{...},...}),
+    // max-pooled across runs as tools/budgets.py does
+    val dir = java.nio.file.Files.list(
+      java.nio.file.Paths.get(TimeBudgetGateSpec.CpuBaseDir))
+    val baseTxts = try dir.toArray.map(p => read(p.toString)).toSeq
+      finally dir.close()
+    assert(baseTxts.nonEmpty)
+    val base = baseTxts.flatMap { txt =>
+      val layersObj = txt.split("\"layers\":\\{")(1)
+        .split("\"shuffle_budget_violations\"")(0)
+      """"([^"]+)":\{([^}]*)\}""".r.findAllMatchIn(layersObj).flatMap { m =>
+        Seq("task_cpu_s", "critical_cpu_s").map { c =>
+          val v = s""""$c":([0-9.eE+-]+)""".r.findFirstMatchIn(m.group(2))
+            .getOrElse(fail(s"${m.group(1)} lacks $c")).group(1).toDouble
+          s"${m.group(1)}.$c" -> v
+        }
+      }
+    }.groupMapReduce(_._1)(_._2)(math.max)
+    assert(base.nonEmpty && budget.nonEmpty)
+    baseTxts.foreach { txt =>
+      val cpus = """"cpus":([0-9]+)""".r.findFirstMatchIn(txt).get.group(1)
+      assert(budget.get("_cpus").contains(cpus.toDouble),
+        "CPU_BUDGET.json must record the cores of its base runs")
+    }
+    // never tighter than the formula on the pooled base, never above the
+    // loose bound that would let a genuine 2.5x slowdown through
+    budget.filterNot(_._1.startsWith("_")).foreach { case (k, b) =>
+      val p = base.getOrElse(k, fail(s"budgeted $k not in the base runs"))
       assert(b >= Bench.budgetFor(p) - 0.002,
-        s"$q: budget $b tighter than formula ${Bench.budgetFor(p)}")
-      // cap = 3x the current promoted value: wide enough for the
-      // widest measured clean-run swing on the board (e10 ranges
-      // 2.0-3.8 s across uncontended runs, so its max-pool budget is
-      // up to ~2.8x one lucky promoted sample), still tight enough
-      // that a budget surviving a 3x-faster rebase is flagged stale
+        s"$k: budget $b tighter than formula ${Bench.budgetFor(p)}")
       val loose = math.max(3.0 * p, p + 1.5)
       assert(b <= loose + 0.002,
-        s"$q: budget $b looser than the $loose cap (stale base?)")
+        s"$k: budget $b looser than the $loose cap (stale base?)")
     }
-    // and every eligible promoted entry is budgeted (gate can't silently
-    // lose coverage): >= 0.5 s, not a rate/flag pseudo-entry
-    promoted.foreach { case (q, p) =>
-      val eligible = p >= 0.5 && !q.startsWith("rate_") &&
-        !q.startsWith("ingest_integrity")
-      if (eligible) assert(budget.contains(q), s"eligible $q unbudgeted")
-    }
+    // and every counter of every base entry is budgeted: the gate has
+    // no eligibility floor, so it cannot silently lose coverage
+    base.keysIterator.foreach(k => assert(budget.contains(k), s"$k unbudgeted"))
   }
 
-  test("sub-floor aggregate gate: a seeded 10x slowdown on one " +
-      "sub-floor entry trips the aggregate budget; the clean sums " +
-      "pass; partial (subset-run) coverage never gates") {
-    // 140 synthetic sub-floor entries at 0.2 s each (the promoted
-    // shape: ~146 entries, none individually budgeted)
-    val members = (1 to 140).map(i => f"m$i%03d")
-    val base = members.map(_ -> 0.2).toMap
-    val pooledSum = base.values.sum // 28.0 s
-    val budget = members.map(q => s"__subfloor__$q" -> 0.2).toMap +
-      ("__subfloor_total__" ->
-        math.max(1.1 * pooledSum, pooledSum + 1.0)) // 30.8 s
-    // clean run: at base
-    assert(Bench.subfloorViolation(base, budget).isEmpty)
-    // per-entry jitter (+10% across the board = +2.8 s) stays inside
-    // the 10% slack
-    assert(Bench.subfloorViolation(
-      base.map { case (k, v) => k -> v * 1.099 }, budget).isEmpty)
-    // seeded dry run: ONE 0.45 s-class entry regresses 10x — the
-    // per-query gate is blind to it (no budget), the aggregate trips
-    val seeded = base + ("m007" -> 4.5)
-    val v = Bench.subfloorViolation(seeded, budget)
-    assert(v.exists { case (s, b) => s > b },
-      s"10x on one floor entry must trip: $v")
-    // subset run (one member missing): vacuous pass, never spurious
-    assert(Bench.subfloorViolation(seeded - "m001", budget).isEmpty)
-    // no aggregate budget in the file: gate inert
-    assert(Bench.subfloorViolation(seeded,
-      budget - "__subfloor_total__").isEmpty)
+  test("the summary line stays under 1,800 chars for the full headline " +
+      "roster plus the replay entries") {
+    val replays = Seq("ingest_replay_5m", "rate_ingest_5m_eps",
+      "rate_ingest_per_shard_eps", "ingest_integrity_ok",
+      "ingest_wire_replay_1m", "rate_wire_ingest_eps",
+      "rate_wire_ingest_per_shard_eps", "ingest_integrity_wire_ok",
+      "ingest_events_replay", "rate_events_replay_eps",
+      "harness_replay_1m", "rate_harness_1m_eps")
+    val results = scala.collection.mutable.LinkedHashMap(
+      (Bench.headline ++ replays).map(_ -> 1234.567891): _*)
+    val layers = scala.collection.mutable.LinkedHashMap(
+      Bench.headline.map(_ -> Bench.Layer(1.0, 2.0, 10, 20, 300, 4.0,
+        3.0, 1.5, 32)): _*)
+    val line = Bench.summaryLine(results, layers, 123456.789, 98765.4,
+      shuffleOk = true, cpuOk = false, "testdata/sf0.1")
+    assert(line.length < 1800, s"${line.length} chars: $line")
+    assert(line.contains("\"cpu_budget_ok\":0"))
+    assert(line.contains("\"shuffle_budget_ok\":1"))
   }
+}
 
-  test("the committed __subfloor_total__ budget covers the committed " +
-      "promoted run's sub-floor sum with the 10%+1s slack formula") {
-    def flat(path: String): Map[String, Double] = {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-    val budget = flat("TIME_BUDGET.json")
-    val total = budget.getOrElse("__subfloor_total__",
-      fail("TIME_BUDGET.json must carry the aggregate sub-floor budget"))
-    val members = budget.keySet.filter(_.startsWith("__subfloor__"))
-      .filterNot(_ == "__subfloor_total__").map(_.stripPrefix("__subfloor__"))
-    assert(members.nonEmpty, "sub-floor member list must be present")
-    val detailTxt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("BENCH_DETAIL.json")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val queriesObj = detailTxt.split("\"queries\":\\{")(1).split("\\}")(0)
-    val promoted = """"([^"]+)":([0-9.eE+-]+)""".r.findAllMatchIn(queriesObj)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    // every promoted sub-floor-eligible entry is a member and the
-    // promoted sum sits under the budget with bounded slack
-    val promotedFloor = promoted.filter { case (q, p) =>
-      p < 0.5 && !q.startsWith("rate_") && !q.startsWith("ingest_integrity")
-    }
-    // a promoted-sub-floor entry whose POOLED max crossed 0.5 s gets a
-    // regular per-query budget instead (stronger gating) — coverage
-    // means every floor entry is caught by ONE of the two gates
-    promotedFloor.keysIterator.foreach(q =>
-      assert(members.contains(q) || budget.contains(q),
-        s"sub-floor $q covered by neither the aggregate nor a budget"))
-    val promotedSum = members.toSeq.flatMap(promoted.get).sum
-    assert(total >= promotedSum,
-      "aggregate budget tighter than the promoted run it was cut from")
-    assert(total <= math.max(1.5 * promotedSum, promotedSum + 5.0),
-      s"aggregate budget $total too loose vs promoted sum $promotedSum " +
-        "(stale base?)")
-  }
-
-  test("absolute probe floor: a uniformly-contended run (every probe " +
-      "depressed the same amount) marks every span once the committed " +
-      "clean rate anchors the comparison; without the anchor it marks " +
-      "none") {
-    val depressed = IndexedSeq(2.0e9, 2.1e9, 1.9e9, 2.0e9)
-    // self-baselined: uniform depression is invisible (the round-11
-    // advice gap)
-    assert(Bench.contendedSpans(depressed) === Set.empty)
-    // anchored to the committed clean best (4e9): every span marked
-    assert(Bench.contendedSpans(depressed, committedBest = 4.0e9) ===
-      Set(0, 1, 2))
-    // a clean run against the same anchor marks none
-    assert(Bench.contendedSpans(
-      IndexedSeq(4.0e9, 3.9e9, 4.1e9, 4.0e9), committedBest = 4.0e9) ===
-      Set.empty)
-  }
+object TimeBudgetGateSpec {
+  /** The bench detail runs CPU_BUDGET.json was cut from. */
+  val CpuBaseDir = "bench_evidence/cpu_base"
 }

@@ -1,85 +1,83 @@
 #!/usr/bin/env python3
-"""Regenerate the bench regression budgets from clean promoted runs.
+"""Regenerate the bench budgets from bench detail runs.
 
 Usage: python3 tools/budgets.py [BENCH_DETAIL.json ...]
 
-Writes TIME_BUDGET.json and SHUFFLE_BUDGET.json next to the FIRST
-input. With several inputs the per-query base is the ELEMENT-WISE MAX
-across runs (round-10 lesson: single-run bases under-represent real
-per-query variance — e10's documented storage-position sensitivity
-swings 2.1-3.8 s across clean uncontended runs, and a budget cut from
-one lucky run cries wolf on the next).  Only feed CLEAN runs
-(contended: 0, host_canary_ratio >= 0.75 where present).
+Writes CPU_BUDGET.json, TIME_BUDGET.json and SHUFFLE_BUDGET.json next to
+the FIRST input. With several inputs the per-entry base is the
+ELEMENT-WISE MAX across runs (a single-run base under-represents real
+per-entry variance). Cut CPU_BUDGET.json at the SPARK_GRAFT_CPUS the
+gate will run at: the core count sets the partition count, and with it
+the per-task counters.
 
 Formulas (keep in sync with graft.Bench.budgetFor and NOTES.md):
 
-  time budget    = max(1.5 * base_sec, base_sec + 0.5)
-                   entries with base_sec < 0.5 are skipped
-                   (noise-dominated; the additive floor covers the rest)
-  subfloor gate  = the skipped (<0.5 s) entries are listed as
-                   __subfloor__<name> rows and their SUM carries one
-                   aggregate budget __subfloor_total__ =
-                   max(1.1 * pooled_sum, pooled_sum + 1.0), where
-                   pooled_sum is the max across runs of each run's
-                   sum over the sub-floor set — an individual
-                   0.2 s -> 5 s regression is invisible to the
-                   per-query gate but moves this sum past its slack
-  shuffle budget = max(2 * base_mb, 1.0)
+  cpu budget     = max(1.5 * base_s, base_s + 0.5) for <entry>.task_cpu_s
+                   and <entry>.critical_cpu_s of EVERY entry (the
+                   "layers" columns) — gated; "_cpus" and "_host"
+                   record where the base ran
+  time budget    = max(1.5 * base_sec, base_sec + 0.5), entries with
+                   base_sec >= 0.5 — wall time, reported, not gated
+  shuffle budget = max(2 * base_mb, 1.0) — gated
 
-rate_/flag pseudo-entries are excluded (they are rates, not seconds);
-the replay wall times stay gated.
+rate_/flag pseudo-entries are excluded (they are rates, not seconds).
 """
 import json
 import os
 import sys
 
 EXCLUDE_PREFIXES = ("rate_", "ingest_integrity")
+CPU_COUNTERS = ("task_cpu_s", "critical_cpu_s")
+
+
+def budget_for(base: float) -> float:
+    return max(1.5 * base, base + 0.5)
 
 
 def main() -> None:
     srcs = sys.argv[1:] if len(sys.argv) > 1 else ["BENCH_DETAIL.json"]
-    times_base: dict = {}
-    shuffles_base: dict = {}
-    run_queries = []
+    details = []
     for src in srcs:
         with open(src) as f:
-            detail = json.load(f)
-        if detail.get("contended"):
-            raise SystemExit(f"{src} is a contended run — not a budget base")
-        run_queries.append(detail["queries"])
-        for q, sec in detail["queries"].items():
-            if not q.startswith(EXCLUDE_PREFIXES):
-                times_base[q] = max(times_base.get(q, 0.0), sec)
-        for q, mb in detail["shuffle_mb"].items():
-            if not q.startswith(EXCLUDE_PREFIXES):
-                shuffles_base[q] = max(shuffles_base.get(q, 0.0), mb)
+            details.append(json.load(f))
+
+    def pooled(get) -> dict:
+        base: dict = {}
+        for d in details:
+            for k, v in get(d).items():
+                if not k.startswith(EXCLUDE_PREFIXES):
+                    base[k] = max(base.get(k, 0.0), v)
+        return base
+
+    times = {q: budget_for(s) for q, s in pooled(lambda d: d["queries"]).items()
+             if s >= 0.5}
+    shuffles = {q: max(2.0 * mb, 1.0)
+                for q, mb in pooled(lambda d: d["shuffle_mb"]).items()}
     out_dir = os.path.dirname(os.path.abspath(srcs[0]))
 
-    times = {
-        q: max(1.5 * sec, sec + 0.5)
-        for q, sec in times_base.items()
-        if sec >= 0.5
-    }
-    # aggregate safety net under the per-query eligibility floor
-    subfloor = sorted(q for q, sec in times_base.items() if sec < 0.5)
-    if subfloor:
-        pooled_sum = max(
-            sum(qs.get(q, 0.0) for q in subfloor) for qs in run_queries
-        )
-        for q in subfloor:
-            times[f"__subfloor__{q}"] = times_base[q]
-        times["__subfloor_total__"] = max(1.1 * pooled_sum, pooled_sum + 1.0)
-    shuffles = {q: max(2.0 * mb, 1.0) for q, mb in shuffles_base.items()}
-
-    def dump(path: str, entries: dict) -> None:
+    def dump(name: str, entries: dict, head: str = "") -> None:
+        path = os.path.join(out_dir, name)
         with open(path, "w") as f:
-            f.write("{\n")
+            f.write("{\n" + head)
             f.write(",\n".join(f'"{k}":{v:.3f}' for k, v in sorted(entries.items())))
             f.write("\n}\n")
         print(f"wrote {path}: {len(entries)} entries")
 
-    dump(os.path.join(out_dir, "TIME_BUDGET.json"), times)
-    dump(os.path.join(out_dir, "SHUFFLE_BUDGET.json"), shuffles)
+    if all("layers" in d for d in details):
+        cpus = {d["cpus"] for d in details}
+        if len(cpus) != 1:
+            raise SystemExit(f"runs at different cpus {sorted(cpus)}: not one CPU base")
+        cpu = {k: budget_for(v)
+               for k, v in pooled(lambda d: {f"{q}.{c}": l[c]
+                                             for q, l in d["layers"].items()
+                                             for c in CPU_COUNTERS}).items()}
+        hosts = ",".join(sorted({d["host"] for d in details}))
+        dump("CPU_BUDGET.json", cpu,
+             f'"_host":{json.dumps(hosts)},\n"_cpus":{cpus.pop()},\n')
+    else:
+        print("inputs without layer columns: CPU_BUDGET.json not written")
+    dump("TIME_BUDGET.json", times)
+    dump("SHUFFLE_BUDGET.json", shuffles)
 
 
 if __name__ == "__main__":
