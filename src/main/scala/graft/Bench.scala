@@ -202,8 +202,6 @@ object Bench {
       jobs: Long, stages: Long, tasks: Long, taskRunS: Double,
       taskCpuS: Double, criticalCpuS: Double, cores: Int) {
     def idleS: Double = buildS + execS - taskRunS / cores
-    def minCpu(o: Layer): Layer = copy(taskCpuS = math.min(taskCpuS, o.taskCpuS),
-      criticalCpuS = math.min(criticalCpuS, o.criticalCpuS))
     def columns: Seq[(String, Double)] = Seq("build_s" -> buildS,
       "exec_s" -> execS, "jobs" -> jobs.toDouble, "stages" -> stages.toDouble,
       "tasks" -> tasks.toDouble, "task_run_s" -> taskRunS,
@@ -226,12 +224,23 @@ object Bench {
   private[graft] def budgetFor(promotedSec: Double): Double =
     math.max(1.5 * promotedSec, promotedSec + 0.5)
 
-  /** The gated CPU counters of each entry, keyed as in CPU_BUDGET.json. */
+  /** The gated counters of each entry, keyed as in CPU_BUDGET.json:
+    * task CPU, critical-path CPU, and the job count, which catches work
+    * moved to the driver as extra jobs (an eager collect per group). */
   private[graft] def cpuCounters(
       layers: scala.collection.Map[String, Layer]): Map[String, Double] =
     layers.iterator.flatMap { case (q, l) =>
-      Seq(s"$q.task_cpu_s" -> l.taskCpuS, s"$q.critical_cpu_s" -> l.criticalCpuS)
+      Seq(s"$q.task_cpu_s" -> l.taskCpuS, s"$q.critical_cpu_s" -> l.criticalCpuS,
+        s"$q.jobs" -> l.jobs.toDouble)
     }.toMap
+
+  /** The CPU gate: counters over budget, plus `_cpus` when the run's
+    * cores differ from the budget's — the core count sets the partition
+    * count, so counters of unlike runs are not compared. */
+  private[graft] def cpuViolations(layers: scala.collection.Map[String, Layer],
+      budget: Map[String, Double], cpus: Int): Map[String, Double] =
+    overBudget(cpuCounters(layers), budget).toMap ++
+      budget.get("_cpus").filter(_ != cpus.toDouble).map(_ => "_cpus" -> cpus.toDouble)
 
   /** A flat {"name": number, ...} budget file (no JSON library on the
     * classpath); a missing or unreadable file gates nothing. */
@@ -283,6 +292,8 @@ object Bench {
       s""""spill_mb_total":${j3(spillMbTotal)},""" +
       s""""shuffle_budget_ok":${if (shuffleOk) 1 else 0},""" +
       s""""cpu_budget_ok":${if (cpuOk) 1 else 0},""" +
+      s""""ingest_integrity_ok":${j3(results.collect {
+        case (k, v) if k.startsWith("ingest_integrity") => v }.minOption.getOrElse(1.0))},""" +
       s""""sf":"$sfDir"}"""
 
   def main(args: Array[String]): Unit = {
@@ -346,15 +357,10 @@ object Bench {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       run() // warm run (IO cache, codegen)
       release()
-      // wall and CPU are each the min of two measured runs: JIT/GC noise
-      // can inflate a single sample several-fold (64-agg minhash wall;
-      // e21's task CPU measured 4.1 s then 1.7 s in one process); the
-      // other columns describe run 2
-      settle()
-      listener.reset()
+      // wall is the min of two measured runs: JIT/GC noise can inflate a
+      // single sample several-fold (64-agg minhash); the counters are
+      // run 2's
       val (_, t1) = time(run())
-      settle()
-      val run1 = listener.layer(0.0, t1, cpus.toInt)
       release()
       settle()
       listener.reset()
@@ -365,23 +371,18 @@ object Bench {
       shuffleMb(name) =
         (listener.shuffleRead.get + listener.shuffleWrite.get) / 1048576.0
       spillMb(name) = listener.spilled.get / 1048576.0
-      layers(name) = listener.layer(build, exec, cpus.toInt).minCpu(run1)
+      layers(name) = listener.layer(build, exec, cpus.toInt)
       release()
     }
-    // replays: two runs each, entries from the faster, CPU the min of
-    // both; counters keyed by the wall entry, and setup outside the
+    // replays: counters keyed by the wall entry; setup outside the
     // replay's own timer (seeding) counts as build
     def replay(entries: => Seq[(String, Double)]): Unit = {
-      val runs = Seq.fill(2) {
-        settle()
-        listener.reset()
-        val (es, wall) = time(entries)
-        settle()
-        (es, listener.layer(wall - es.head._2, es.head._2, cpus.toInt))
-      }
-      val (es, l) = runs.minBy(_._1.head._2)
+      settle()
+      listener.reset()
+      val (es, wall) = time(entries)
+      settle()
       results ++= es
-      layers(es.head._1) = runs.map(_._2).foldLeft(l)(_.minCpu(_))
+      layers(es.head._1) = listener.layer(wall - es.head._2, es.head._2, cpus.toInt)
     }
     replay(ingestReplay(spark))
     replay(wireIngestReplay(spark))
@@ -396,16 +397,13 @@ object Bench {
     val shuffleViolations = overBudget(shuffleMb, budget)
     report("SHUFFLE BUDGET EXCEEDED (MB)", shuffleViolations, budget)
 
-    // CPU regression gate: every headline entry and replay, task CPU
-    // and critical-path CPU against budgetFor(base) as cut by
-    // tools/budgets.py. Counters depend on the core count (it sets the
-    // partition count), so a budget cut at other cores is flagged.
+    // CPU regression gate: every headline entry and replay, task CPU,
+    // critical-path CPU and jobs against budgetFor(base) as cut by
+    // tools/budgets.py
     val cpuBudget = readBudget(sys.env.getOrElse("SPARK_GRAFT_CPU_BUDGET",
       "CPU_BUDGET.json"))
-    cpuBudget.get("_cpus").filter(_ != cpus.toDouble).foreach(c => System.err.println(
-      f"[bench] WARNING: CPU budget was cut at ${c}%.0f cpus, this run uses $cpus"))
-    val cpuViolations = overBudget(cpuCounters(layers), cpuBudget)
-    report("CPU BUDGET EXCEEDED (s)", cpuViolations, cpuBudget)
+    val cpuOver = cpuViolations(layers, cpuBudget, cpus.toInt)
+    report("CPU BUDGET EXCEEDED", cpuOver, cpuBudget)
 
     // Wall time is reported against TIME_BUDGET.json but never gates:
     // it moves with host contention, which the CPU counters do not.
@@ -426,10 +424,10 @@ object Bench {
         s""""$q":${jmap(l.columns, 6)}"""
       }.mkString("{", ",", "}")},""" +
       s""""shuffle_budget_violations":${jmap(shuffleViolations, 3)},""" +
-      s""""cpu_budget_violations":${jmap(cpuViolations, 3)},""" +
+      s""""cpu_budget_violations":${jmap(cpuOver, 3)},""" +
       s""""wall_over_time_budget":${jmap(wallOver, 3)},""" +
       s""""cpus":$cpus,"host":"$host",""" +
-      s""""note":"task/critical CPU are the min of the 2 measured runs, other counters and shuffle/spill are from the 2nd",""" +
+      s""""note":"queries are the min of 2 measured runs; layers, shuffle and spill are from the 2nd",""" +
       s""""sf":"$sfDir"}"""
     println(detail)
     val runId = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNID",
@@ -445,7 +443,7 @@ object Bench {
     } catch { case e: Exception =>
       System.err.println(s"[bench] detail write: $e") }
     println(summaryLine(results, layers, shuffleMb.values.sum,
-      spillMb.values.sum, shuffleViolations.isEmpty, cpuViolations.isEmpty, sfDir))
+      spillMb.values.sum, shuffleViolations.isEmpty, cpuOver.isEmpty, sfDir))
     spark.stop()
   }
 

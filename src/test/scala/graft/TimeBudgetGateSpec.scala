@@ -54,31 +54,23 @@ class TimeBudgetGateSpec extends AnyFunSuite {
     val budgetTxt = read("CPU_BUDGET.json")
     val budget = """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(budgetTxt)
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    // the base runs' per-entry layer columns ({"layers":{"q":{...},...}),
-    // max-pooled across runs as tools/budgets.py does
-    val dir = java.nio.file.Files.list(
-      java.nio.file.Paths.get(TimeBudgetGateSpec.CpuBaseDir))
-    val baseTxts = try dir.toArray.map(p => read(p.toString)).toSeq
-      finally dir.close()
-    assert(baseTxts.nonEmpty)
-    val base = baseTxts.flatMap { txt =>
-      val layersObj = txt.split("\"layers\":\\{")(1)
-        .split("\"shuffle_budget_violations\"")(0)
-      """"([^"]+)":\{([^}]*)\}""".r.findAllMatchIn(layersObj).flatMap { m =>
-        Seq("task_cpu_s", "critical_cpu_s").map { c =>
-          val v = s""""$c":([0-9.eE+-]+)""".r.findFirstMatchIn(m.group(2))
-            .getOrElse(fail(s"${m.group(1)} lacks $c")).group(1).toDouble
-          s"${m.group(1)}.$c" -> v
-        }
+    // the base run's per-entry layer columns: {"layers":{"q":{...},...}
+    val baseTxt = read(TimeBudgetGateSpec.CpuBase)
+    val layersObj = baseTxt.split("\"layers\":\\{")(1)
+      .split("\"shuffle_budget_violations\"")(0)
+    val base = """"([^"]+)":\{([^}]*)\}""".r.findAllMatchIn(layersObj).flatMap { m =>
+      Seq("task_cpu_s", "critical_cpu_s", "jobs").map { c =>
+        val v = s""""$c":([0-9.eE+-]+)""".r.findFirstMatchIn(m.group(2))
+          .getOrElse(fail(s"${m.group(1)} lacks $c")).group(1).toDouble
+        s"${m.group(1)}.$c" -> v
       }
-    }.groupMapReduce(_._1)(_._2)(math.max)
+    }.toMap
     assert(base.nonEmpty && budget.nonEmpty)
-    baseTxts.foreach { txt =>
-      val cpus = """"cpus":([0-9]+)""".r.findFirstMatchIn(txt).get.group(1)
-      assert(budget.get("_cpus").contains(cpus.toDouble),
-        "CPU_BUDGET.json must record the cores of its base runs")
-    }
-    // never tighter than the formula on the pooled base, never above the
+    val cpus = """"cpus":([0-9]+)""".r.findFirstMatchIn(baseTxt).get.group(1)
+    assert(budget.get("_cpus").contains(cpus.toDouble),
+      "CPU_BUDGET.json must record the cores of its base run")
+    assert(cpus == "32", "cut at Bench's default SPARK_GRAFT_CPUS")
+    // never tighter than the formula on the base, never above the
     // loose bound that would let a genuine 2.5x slowdown through
     budget.filterNot(_._1.startsWith("_")).foreach { case (k, b) =>
       val p = base.getOrElse(k, fail(s"budgeted $k not in the base runs"))
@@ -112,9 +104,34 @@ class TimeBudgetGateSpec extends AnyFunSuite {
     assert(line.contains("\"cpu_budget_ok\":0"))
     assert(line.contains("\"shuffle_budget_ok\":1"))
   }
+
+  test("the CPU gate fails a run at other cores than its budget's " +
+      "whatever the counters, and gates the job count") {
+    val layers = Map("q" -> Bench.Layer(0.1, 0.2, 2, 2, 8, 0.4, 0.3, 0.1, 4))
+    val budget = Map("_cpus" -> 32.0, "q.task_cpu_s" -> 9.0,
+      "q.critical_cpu_s" -> 9.0, "q.jobs" -> 9.0)
+    assert(Bench.cpuViolations(layers, budget, 32).isEmpty)
+    assert(Bench.cpuViolations(layers, budget, 4) === Map("_cpus" -> 4.0))
+    assert(Bench.cpuViolations(layers, budget - "q.jobs" + ("q.jobs" -> 1.0), 32)
+      === Map("q.jobs" -> 2.0))
+  }
+
+  test("a failed replay integrity check stays visible in the summary " +
+      "line") {
+    val flags = Seq("ingest_integrity_ok", "ingest_integrity_wire_ok")
+    def line(failed: Set[String]) = Bench.summaryLine(
+      scala.collection.mutable.LinkedHashMap("ingest_replay_5m" -> 3.0) ++
+        flags.map(f => f -> (if (failed(f)) 0.0 else 1.0)),
+      Map.empty[String, Bench.Layer], 0.0, 0.0, shuffleOk = true,
+      cpuOk = true, "sf")
+    assert(line(Set.empty).contains("\"ingest_integrity_ok\":1.000"))
+    flags.foreach { f =>
+      assert(line(Set(f)).contains("\"ingest_integrity_ok\":0.000"), f)
+    }
+  }
 }
 
 object TimeBudgetGateSpec {
-  /** The bench detail runs CPU_BUDGET.json was cut from. */
-  val CpuBaseDir = "bench_evidence/cpu_base"
+  /** The bench detail run CPU_BUDGET.json was cut from. */
+  val CpuBase = "bench_evidence/cpu_base/BENCH_DETAIL.cpu32-base.json"
 }

@@ -5,17 +5,17 @@ Usage: python3 tools/budgets.py [BENCH_DETAIL.json ...]
 
 Writes CPU_BUDGET.json, TIME_BUDGET.json and SHUFFLE_BUDGET.json next to
 the FIRST input. With several inputs the per-entry base is the
-ELEMENT-WISE MAX across runs (a single-run base under-represents real
-per-entry variance). Cut CPU_BUDGET.json at the SPARK_GRAFT_CPUS the
-gate will run at: the core count sets the partition count, and with it
-the per-task counters.
+ELEMENT-WISE MAX across runs. Cut CPU_BUDGET.json at the SPARK_GRAFT_CPUS
+the gate will run at (graft.Bench defaults to 32): the core count sets
+the partition count, and with it the per-task counters, so Bench fails
+the CPU gate when its cores differ from the recorded "_cpus".
 
 Formulas (keep in sync with graft.Bench.budgetFor and NOTES.md):
 
-  cpu budget     = max(1.5 * base_s, base_s + 0.5) for <entry>.task_cpu_s
-                   and <entry>.critical_cpu_s of EVERY entry (the
-                   "layers" columns) — gated; "_cpus" and "_host"
-                   record where the base ran
+  cpu budget     = max(1.5 * base, base + 0.5) for <entry>.task_cpu_s,
+                   <entry>.critical_cpu_s and <entry>.jobs of EVERY
+                   entry (the "layers" columns) — gated; "_cpus" and
+                   "_host" record where the base ran
   time budget    = max(1.5 * base_sec, base_sec + 0.5), entries with
                    base_sec >= 0.5 — wall time, reported, not gated
   shuffle budget = max(2 * base_mb, 1.0) — gated
@@ -27,7 +27,7 @@ import os
 import sys
 
 EXCLUDE_PREFIXES = ("rate_", "ingest_integrity")
-CPU_COUNTERS = ("task_cpu_s", "critical_cpu_s")
+CPU_COUNTERS = ("task_cpu_s", "critical_cpu_s", "jobs")
 
 
 def budget_for(base: float) -> float:
