@@ -79,12 +79,15 @@ final class DimensionRecorder(streamName: String,
 
 /** JVM-local counter registry. Metric names follow the public KPL/KCL
   * CloudWatch vocabulary where a direct analogue exists:
-  * UserRecordsPut / UserRecordsDataPut / RetriesPerRecord /
-  * ErrorsByCode.<code> (KPL); RecordsFetched / BytesFetched re-express
-  * KCL's per-shard ProcessTask counters for the pull-based scan;
-  * PutRecordsRequests / GetRecordsRequests count wire calls (the
-  * collection-efficiency signal KPL surfaces as "User Records per
-  * Kinesis Record").
+  * UserRecordsPut / UserRecordsDataPut / RetriesPerRecord count user
+  * records (and their payload bytes), KinesisRecordsPut counts the wire
+  * entries that carried them (one per KPL aggregate), and
+  * ErrorsByCode.<code> counts failed entries (KPL); RecordsFetched /
+  * BytesFetched re-express KCL's per-shard ProcessTask counters for the
+  * pull-based scan; PutRecordsRequests / GetRecordsRequests count wire
+  * calls. UserRecordsPut / KinesisRecordsPut is KPL's "User Records per
+  * Kinesis Record" (aggregation efficiency); KinesisRecordsPut /
+  * PutRecordsRequests is the collection efficiency.
   */
 object GraftMetrics {
   private val counters =

@@ -14,11 +14,12 @@ import scala.collection.concurrent.TrieMap
 trait AsyncRecordClient extends Serializable {
   def put(event: ProducerEvent)(onComplete: Option[Throwable] => Unit): Unit
   def close(): Unit
-  /** Ship anything buffered and fire its completions. A COLLECTION-
-    * buffering transport (PutRecords batching) defers callbacks until
-    * a request ships; the writer's commit() calls this before draining
-    * its ack window, or the drain would wait on acks only close()
-    * could produce. Transports that ack at put() keep the no-op. */
+  /** Ship anything buffered and fire its completions. A buffering
+    * transport (PutRecords aggregation and collection) defers callbacks
+    * until a request ships; the writer calls this before it blocks on a
+    * full in-flight window and before commit() drains that window, or
+    * either wait would be on acks only close() could produce.
+    * Transports that ack at put() keep the no-op. */
   def flushPending(): Unit = ()
   /** Target shard this key routes to, when the transport knows its
     * routing (the in-process [[ShardServiceAsyncClient]] does; a raw
@@ -108,7 +109,9 @@ final class GraftSinkWriter(
   *
   *  - `send` runs the KPL-style admission (rate cap or fail-if-throttled,
   *    in-flight window, record TTL) and submits asynchronously; the
-  *    first failed ack fails the next call (fail-fast)
+  *    first failed ack fails the next call (fail-fast). With the window
+  *    full it first ships the transport's buffers, whose records hold
+  *    permits only a flush releases
   *  - `commit` ships buffered records, drains every outstanding ack,
   *    closes the client (flushSync) and fails if any write failed
   *  - `abort` DISCARDS: it must not close the client, because close
@@ -134,6 +137,9 @@ private[sinks] final class ProducerTask(factory: AsyncRecordClientFactory,
 
   def send(ev: ProducerEvent): Unit = {
     failIfErrored()
+    // a full window only drains as acks arrive, and a buffering
+    // transport acks only what it ships: ship before blocking on it
+    if (window.availablePermits() == 0) client.flushPending()
     ProducerAdmission.admit(conf, rateLimiter, window,
       client.targetShard(ev.partitionKey))
     client.put(ev)(onAck)

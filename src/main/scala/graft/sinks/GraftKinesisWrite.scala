@@ -70,8 +70,10 @@ object GraftKinesisWriteSupport {
       : AsyncRecordClientFactory = {
     // `endpoint` (without service.id) selects the wire transport: each
     // partition writer builds an HttpRecordClient honoring the KPL
-    // collection config — the cluster deployment shape, no JVM-local
-    // registry involved
+    // aggregation and collection config — the cluster deployment shape,
+    // no JVM-local registry involved. This runs on the driver, so with
+    // aggregation on, the open-shard snapshot every task routes by costs
+    // one ListShards listing per write (per epoch when streaming)
     options.get("service.id") match {
       case Some(serviceId) =>
         ShardServiceAsyncClient.factoryFor(confFromOptions(options),

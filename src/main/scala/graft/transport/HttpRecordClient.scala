@@ -3,6 +3,7 @@ package graft.transport
 import graft.models.ProducerEvent
 import graft.sinks.{AsyncRecordClient, AsyncRecordClientFactory,
   ProducerThrottledException, RecordExpiredException}
+import graft.sources.{KeyRouting, ShardServiceRegistry, SubRecord}
 import scala.collection.mutable
 
 /** PutRecords transport over the Kinesis-shaped wire — the producer
@@ -10,26 +11,34 @@ import scala.collection.mutable
   * transport existed (PARITY.md `collectionMaxCount`/`collectionMaxSize`;
   * reference main/resources/reference.conf:101,114):
   *
+  *  - '''aggregation''' (KPL `AggregationEnabled`/`AggregationMaxCount`/
+  *    `AggregationMaxSize`, reference.conf:57-92): records buffer per
+  *    TARGET SHARD, routed by [[graft.sources.KeyRouting]] over the
+  *    `shards` snapshot, until `aggregationMaxCount` records or a record
+  *    that would push the buffer past `aggregationMaxSize` bytes. A
+  *    sealed buffer becomes ONE collection entry through
+  *    [[KinesisWire.encodeData]] (one record ships raw, several as a KPL
+  *    container) keyed by its first sub-record's partition key, so every
+  *    sub-record lands on the shard its own key routes to and per-key
+  *    order holds. With no snapshot (or a max count of 1) every record
+  *    is its own entry.
   *  - '''collection''' (KPL `CollectionMaxCount`/`CollectionMaxSize`):
-  *    records buffer until `collectionMaxCount` entries or a record
+  *    entries buffer until `collectionMaxCount` entries or an entry
   *    that would push the request past `collectionMaxSize` bytes, then
   *    ship as ONE PutRecords request
-  *  - '''aggregation''' (KPL `AggregationEnabled`, reference.conf:57-92):
-  *    per-key-routing-irrelevant sub-record packing happens ABOVE this
-  *    layer (ShardServiceAsyncClient's buffers); this client ships each
-  *    event as one PutRecords entry — compose them by feeding aggregated
-  *    blobs as events
   *  - '''partial-failure retry''' (the KPL retry loop): a PutRecords
   *    response carrying per-entry `ErrorCode`s re-sends ONLY the failed
-  *    entries, with the transport's exponential backoff, until each
-  *    record's age exceeds `recordTtl` (KPL `RecordTtl` →
-  *    [[RecordExpiredException]]). With `failIfThrottled` (KPL
-  *    `FailIfThrottled`) a throttled entry fails immediately via
+  *    entries, with the transport's exponential backoff, until an
+  *    entry's age (its oldest record's) exceeds `recordTtl` (KPL
+  *    `RecordTtl` → [[RecordExpiredException]]). With `failIfThrottled`
+  *    (KPL `FailIfThrottled`) a throttled entry fails immediately via
   *    [[ProducerThrottledException]] instead of retrying.
   *
   * Per-record completion callbacks fire at flush with the outcome of
   * the entry that carried the record — the sink's ack-counting drain
-  * (S11) works unchanged over the wire.
+  * (S11) works unchanged over the wire. `flushPending` seals every
+  * aggregate and ships the collection; the sink calls it before it
+  * would block on a full in-flight window, and at commit.
   */
 final class HttpRecordClient(
     service: HttpShardService,
@@ -40,33 +49,76 @@ final class HttpRecordClient(
     maxFlushRetries: Int = 8,
     backoffBaseMs: Long = 10L,
     sleeper: Long => Unit = Thread.sleep,
-    clock: () => Long = System.currentTimeMillis) extends AsyncRecordClient {
+    clock: () => Long = System.currentTimeMillis,
+    aggregationMaxCount: Int = 1,
+    aggregationMaxSize: Int = 51200,
+    shards: IndexedSeq[String] = IndexedSeq.empty) extends AsyncRecordClient {
 
-  private final case class Pending(event: ProducerEvent,
-      onComplete: Option[Throwable] => Unit, enqueuedAt: Long) {
+  private final class Pending(val event: ProducerEvent,
+      val onComplete: Option[Throwable] => Unit, val enqueuedAt: Long) {
     // WIRE bytes (UTF-8), not UTF-16 chars — a multibyte partition key
-    // must count its encoded size toward the request bound
+    // must count its encoded size toward the size bounds
     def wireBytes: Long = event.data.length.toLong +
       event.partitionKey.getBytes("UTF-8").length
   }
 
-  private val buffer = mutable.ArrayBuffer.empty[Pending]
-  private var bufferBytes = 0L
+  /** One PutRecords entry and the user records it carries. */
+  private final class Entry(val key: String, val data: Array[Byte],
+      val records: Vector[Pending]) {
+    def wireBytes: Long = data.length.toLong + key.getBytes("UTF-8").length
+    def enqueuedAt: Long = records.head.enqueuedAt
+    def complete(outcome: Option[Throwable]): Unit =
+      records.foreach(_.onComplete(outcome))
+  }
+
+  /** One target shard's open aggregate. */
+  private final class Aggregate {
+    val records = mutable.ArrayBuffer.empty[Pending]
+    var bytes = 0L
+  }
+
+  private val maxPerEntry = if (shards.isEmpty) 1 else aggregationMaxCount
+  private val aggregates = mutable.LinkedHashMap.empty[String, Aggregate]
+  private val collection = mutable.ArrayBuffer.empty[Entry]
+  private var collectionBytes = 0L
 
   override def put(event: ProducerEvent)(
       onComplete: Option[Throwable] => Unit): Unit = this.synchronized {
-    val p = Pending(event, onComplete, clock())
-    if (buffer.nonEmpty && bufferBytes + p.wireBytes > collectionMaxSize) {
-      // size bound: ship BEFORE overflowing (KPL behavior). If the
-      // flush fails, THIS record was never attempted — it must still
-      // complete (with the failure) or an ack-counting drain (S11)
-      // would wait for a callback that never comes.
-      try flush()
+    val p = new Pending(event, onComplete, clock())
+    val shard = if (maxPerEntry == 1) ""
+      else KeyRouting.shardFor(event.partitionKey, shards)
+    val agg = aggregates.getOrElseUpdate(shard, new Aggregate)
+    if (agg.records.nonEmpty && agg.bytes + p.wireBytes > aggregationMaxSize) {
+      // size bound: seal BEFORE overflowing (KPL behavior). If that
+      // ships and the ship fails, THIS record was never attempted — it
+      // must still complete (with the failure) or an ack-counting drain
+      // (S11) would wait for a callback that never comes.
+      try seal(agg)
       catch { case e: Throwable => onComplete(Some(e)); throw e }
     }
-    buffer += p
-    bufferBytes += p.wireBytes
-    if (buffer.size >= collectionMaxCount) flush()
+    agg.records += p
+    agg.bytes += p.wireBytes
+    if (agg.records.size >= maxPerEntry) seal(agg)
+  }
+
+  /** Close one aggregate into a collection entry. */
+  private def seal(agg: Aggregate): Unit = {
+    val recs = agg.records.toVector
+    agg.records.clear()
+    agg.bytes = 0L
+    val entry = new Entry(recs.head.event.partitionKey,
+      KinesisWire.encodeData(recs.map(r =>
+        SubRecord(r.event.partitionKey, r.event.data))), recs)
+    if (collection.nonEmpty &&
+        collectionBytes + entry.wireBytes > collectionMaxSize) {
+      // request size bound: ship BEFORE overflowing; if that fails,
+      // this entry was never attempted and completes here
+      try flush()
+      catch { case e: Throwable => entry.complete(Some(e)); throw e }
+    }
+    collection += entry
+    collectionBytes += entry.wireBytes
+    if (collection.size >= collectionMaxCount) flush()
   }
 
   private def isThrottle(code: String): Boolean =
@@ -75,9 +127,9 @@ final class HttpRecordClient(
 
   /** Ship the buffered collection; retry failed entries only. */
   private def flush(): Unit = {
-    var pending = buffer.toVector
-    buffer.clear()
-    bufferBytes = 0L
+    var pending = collection.toVector
+    collection.clear()
+    collectionBytes = 0L
     var attempt = 0
     while (pending.nonEmpty) {
       // a whole-request transport failure (retries exhausted in the
@@ -86,26 +138,29 @@ final class HttpRecordClient(
       // rethrow, or an ack-counting drain (S11) would leak its window
       // permits and wait forever on callbacks that never fire
       val results =
-        try service.putRecords(
-          pending.map(p => (p.event.partitionKey, p.event.data)))
+        try service.putRecords(pending.map(e => (e.key, e.data)))
         catch { case e: Throwable =>
-          pending.foreach(_.onComplete(Some(e)))
+          pending.foreach(_.complete(Some(e)))
           throw e
         }
-      // producer-side counters (KPL CloudWatch vocabulary): acked
-      // records + payload bytes per landed shard, per-entry retries and
-      // error codes, and the request count (collection efficiency)
+      // producer-side counters (KPL CloudWatch vocabulary): acked user
+      // records + their payload bytes and acked wire entries per landed
+      // shard, per-record retries, per-entry error codes, and the
+      // request count (collection efficiency)
       service.metrics.record("PutRecordsRequests", null, 1L)
       val failed = pending.zip(results).flatMap {
-        case (p, Right(shardId)) =>
-          service.metrics.record("UserRecordsPut", shardId, 1L)
+        case (e, Right(shardId)) =>
+          service.metrics.record("KinesisRecordsPut", shardId, 1L)
+          service.metrics.record("UserRecordsPut", shardId,
+            e.records.size.toLong)
           service.metrics.record("UserRecordsDataPut", shardId,
-            p.event.data.length.toLong)
-          p.onComplete(None); None
-        case (p, Left(code)) =>
-          service.metrics.record("RetriesPerRecord", null, 1L)
+            e.records.iterator.map(_.event.data.length.toLong).sum)
+          e.complete(None); None
+        case (e, Left(code)) =>
+          service.metrics.record("RetriesPerRecord", null,
+            e.records.size.toLong)
           service.metrics.record(s"ErrorsByCode.$code", null, 1L)
-          Some((p, code))
+          Some((e, code))
       }
       if (failed.isEmpty) return
       // KPL taxonomy: FailIfThrottled fast-fails THROTTLED entries
@@ -117,15 +172,15 @@ final class HttpRecordClient(
         val e = new ProducerThrottledException(
           s"${throttled.size} record(s) throttled " +
             s"(fail-if-throttled; first: ${throttled.head._2})")
-        failed.foreach(_._1.onComplete(Some(e)))
+        failed.foreach(_._1.complete(Some(e)))
         throw e
       }
       val now = clock()
       val (expired, alive) =
-        failed.partition { case (p, _) => now - p.enqueuedAt >= recordTtlMs }
-      expired.foreach { case (p, code) =>
-        p.onComplete(Some(new RecordExpiredException(
-          s"record expired after ${now - p.enqueuedAt} ms in the " +
+        failed.partition { case (e, _) => now - e.enqueuedAt >= recordTtlMs }
+      expired.foreach { case (e, code) =>
+        e.complete(Some(new RecordExpiredException(
+          s"record expired after ${now - e.enqueuedAt} ms in the " +
             s"PutRecords retry loop (recordTtl=$recordTtlMs ms, " +
             s"last error $code)")))
       }
@@ -138,7 +193,7 @@ final class HttpRecordClient(
           if (alive.exists(f => isThrottle(f._2)))
             new ProducerThrottledException(msg)
           else new RuntimeException(msg)
-        alive.foreach(_._1.onComplete(Some(e)))
+        alive.foreach(_._1.complete(Some(e)))
         throw e
       }
       if (alive.nonEmpty) sleeper(backoffBaseMs << (attempt - 1))
@@ -146,12 +201,16 @@ final class HttpRecordClient(
     }
   }
 
-  /** Ship the buffered collection now (the writer's pre-drain hook). */
-  override def flushPending(): Unit = this.synchronized { flush() }
+  /** Seal every aggregate and ship the collection now (the writer's
+    * hook before it blocks on a full window, and before its drain). */
+  override def flushPending(): Unit = this.synchronized {
+    aggregates.valuesIterator.filter(_.records.nonEmpty).foreach(seal)
+    flush()
+  }
 
   /** Drain (KinesisProducer.stop flushSync analogue, reference
     * main/producer/KinesisProducer.scala:159-163). */
-  override def close(): Unit = this.synchronized { flush() }
+  override def close(): Unit = flushPending()
 }
 
 object HttpRecordClient {
@@ -160,29 +219,45 @@ object HttpRecordClient {
     * id (no JVM-local registry registration needed — the deployment
     * shape for a real cluster; params carry retry backoff and the
     * SigV4 signing block, see
-    * [[graft.sources.ShardServiceRegistry.httpId]]). */
+    * [[graft.sources.ShardServiceRegistry.httpId]]). `openShards` is
+    * the routing snapshot aggregation buckets by, taken once on the
+    * driver; empty ships one entry per record. */
   final case class Factory(
       serviceId: String,
       collectionMaxCount: Int = 500,
       collectionMaxSize: Int = 5242880,
       recordTtlMs: Long = 30000L,
-      failIfThrottled: Boolean = false) extends AsyncRecordClientFactory {
-    override def create(): AsyncRecordClient = {
-      val svc = graft.sources.ShardServiceRegistry.get(serviceId) match {
-        case h: HttpShardService => h
-        case other => throw new IllegalStateException(
-          // redacted: the raw id may carry SigV4 secrets in its params
-          s"id ${graft.sources.ShardServiceRegistry.redactId(serviceId)} " +
-            s"resolved to a non-wire service: $other")
-      }
-      new HttpRecordClient(svc,
-        collectionMaxCount, collectionMaxSize, recordTtlMs, failIfThrottled)
-    }
+      failIfThrottled: Boolean = false,
+      aggregationMaxCount: Int = 1,
+      aggregationMaxSize: Int = 51200,
+      openShards: Seq[String] = Nil) extends AsyncRecordClientFactory {
+    override def create(): AsyncRecordClient =
+      new HttpRecordClient(wireService(serviceId),
+        collectionMaxCount, collectionMaxSize, recordTtlMs, failIfThrottled,
+        aggregationMaxCount = aggregationMaxCount,
+        aggregationMaxSize = aggregationMaxSize,
+        shards = openShards.toIndexedSeq)
   }
 
-  /** Factory honoring the producer config's KPL collection block. */
+  private def wireService(serviceId: String): HttpShardService =
+    ShardServiceRegistry.get(serviceId) match {
+      case h: HttpShardService => h
+      case other => throw new IllegalStateException(
+        // redacted: the raw id may carry SigV4 secrets in its params
+        s"id ${ShardServiceRegistry.redactId(serviceId)} " +
+          s"resolved to a non-wire service: $other")
+    }
+
+  /** Factory honoring the producer config's KPL collection block and,
+    * when `aggregationEnabled`, its aggregation block — with the open
+    * shards listed here, once per write, for every task to route by. */
   def factoryFor(conf: graft.config.ProducerConf,
-      serviceId: String): Factory =
-    Factory(serviceId, conf.collectionMaxCount,
+      serviceId: String): Factory = {
+    val collecting = Factory(serviceId, conf.collectionMaxCount,
       conf.collectionMaxSize, conf.recordTtl.toMillis, conf.failIfThrottled)
+    if (!conf.aggregationEnabled) collecting
+    else collecting.copy(aggregationMaxCount = conf.aggregationMaxCount,
+      aggregationMaxSize = conf.aggregationMaxSize,
+      openShards = wireService(serviceId).openShards())
+  }
 }

@@ -71,6 +71,33 @@ class MetricsSpec extends SparkSpec {
     }
   }
 
+  test("aggregation on: UserRecordsPut / UserRecordsDataPut count user " +
+      "records and bytes, KinesisRecordsPut the fewer wire entries; a " +
+      "throttled aggregate retries and acks each of its records once") {
+    withWire(MetricsLevel.Detailed) { (stub, svc) =>
+      val shards = svc.openShards().toIndexedSeq
+      val client = new HttpRecordClient(svc, aggregationMaxCount = 500,
+        shards = shards, sleeper = _ => ())
+      val acks = new java.util.concurrent.atomic.AtomicInteger(0)
+      // the first request's entry 0 is the aggregate of key-0's shard
+      stub.faults.throttlePlan.add(Set(0))
+      (0 until 10).foreach(i =>
+        client.put(ProducerEvent(s"key-$i", s"payld-$i"))(r => {
+          assert(r.isEmpty); acks.incrementAndGet() }))
+      client.close()
+      assert(acks.get() === 10)
+      val s = GraftMetrics.snapshot()
+      assert(s("UserRecordsPut[stream=m]") === 10L)
+      assert(s("UserRecordsDataPut[stream=m]") === 70L)
+      // one aggregate per shard the keys route to
+      assert(s("KinesisRecordsPut[stream=m]") === 2L)
+      assert(s("PutRecordsRequests[stream=m]") === 2L)
+      val firstShard = graft.sources.KeyRouting.shardFor("key-0", shards)
+      assert(s("RetriesPerRecord[stream=m]") === (0 until 10).count(i =>
+        graft.sources.KeyRouting.shardFor(s"key-$i", shards) == firstShard))
+    }
+  }
+
   test("summary: identical stream totals, NO shard dimension rows") {
     withWire(MetricsLevel.Summary) { (stub, svc) =>
       replay(svc, stub)

@@ -339,4 +339,43 @@ class GraftKinesisSinkSpec extends SparkSpec {
         svc.latestPosition(shard)).map(_.subRecords.size).sum
     assert(count("shard-0") == 360 && count("shard-1") == 360)
   }
+
+  test("a window smaller than one PutRecords collection does not hang: " +
+      "the writer ships the transport's buffer before blocking on it") {
+    import graft.sources.{InMemoryShardService, ShardPos, ShardServiceRegistry}
+    import graft.transport.{HttpRecordClient, HttpShardService,
+      KinesisWireStub, RetryPolicy}
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    import org.apache.spark.sql.types._
+    val store = new InMemoryShardService("small-window", Seq("s0", "s1"))
+    val stub = new KinesisWireStub(store)
+    val id = ShardServiceRegistry.register(new HttpShardService(
+      stub.endpoint, "small-window", RetryPolicy(sleeper = _ => ())))
+    val schema = StructType(Seq(StructField("partitionKey", StringType),
+      StructField("data", BinaryType)))
+    // 200 rows, window 100, default collection-max-count 500: the
+    // 101st send would wait on acks that only a flush produces
+    val writer = new GraftSinkWriter(HttpRecordClient.Factory(id),
+      ProducerConf("small-window", maxOutstandingRequests = 100))
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val run = pool.submit(new Runnable {
+        override def run(): Unit = {
+          writer.open(0, 0)
+          (1 to 200).foreach(i => writer.process(new GenericRowWithSchema(
+            Array[Any](s"pk${i % 7}", s"$i".getBytes("UTF-8")), schema)))
+          writer.close(null)
+        }
+      })
+      // fail by timeout instead of hanging the suite
+      run.get(15, java.util.concurrent.TimeUnit.SECONDS)
+      val landed = Seq("s0", "s1").flatMap(sh => store.read(sh,
+        ShardPos.Beginning, store.latestPosition(sh)).toSeq)
+        .flatMap(_.subRecords.map(r => new String(r.data, "UTF-8")))
+      assert(landed.sorted == (1 to 200).map(_.toString).sorted)
+    } finally {
+      pool.shutdownNow()
+      stub.stop()
+    }
+  }
 }

@@ -889,4 +889,107 @@ class TransportSpec extends SparkSpec {
         Seq("v4", "v5", "v6"))
     }
   }
+
+  // ------------------------------------------------ wire aggregation --
+
+  test("openShards costs one ListShards listing: 5 shards at page " +
+      "size 2 are 3 requests, and closed parents are left out") {
+    withStub(shards = 5, pageSize = 2) { (stub, svc) =>
+      assert(svc.openShards() === (0 until 5).map(i => s"shard-$i"))
+      assert(stub.requests("ListShards").size === 3)
+      stub.store.split("shard-0", Seq("shard-5"))
+      assert(svc.openShards() === (1 to 5).map(i => s"shard-$i"))
+    }
+  }
+
+  /** `rows` rows over `keys` keys, each key's rows in one partition in
+    * sequence order; payload `key:seq`. */
+  private def keyedFrame(rows: Int, keys: Int) = {
+    import spark.implicits._
+    (0 until rows).map(n => (s"key-${n % keys}", n / keys))
+      .toDF("partitionKey", "seq")
+      .repartition(4, col("partitionKey"))
+      .sortWithinPartitions("seq")
+      .select(col("partitionKey"),
+        encode(concat_ws(":", col("partitionKey"), col("seq")), "UTF-8")
+          .as("data"))
+  }
+
+  private def putEntries(stub: KinesisWireStub): Int =
+    stub.requests("PutRecords").map(_.get("Records").size()).sum
+
+  test("DSv2 wire write with default options aggregates per target " +
+      "shard: fewer entries than rows, one ListShards listing, every " +
+      "sub-record on its key's shard, read back exactly once in key order") {
+    withStub(shards = 4, pageSize = 2) { (stub, _) =>
+      val rows = 2000
+      keyedFrame(rows, keys = 37).write.format("graft-kinesis")
+        .option("endpoint", stub.endpoint)
+        .option("stream-name", "wire")
+        .mode("append").save()
+      assert(putEntries(stub) < rows,
+        s"aggregation must pack rows: ${putEntries(stub)} entries")
+      // 4 shards at page size 2: one listing is 2 requests, taken once
+      // on the driver for the whole write, not once per task
+      assert(stub.requests("ListShards").size === 2)
+      // the store keeps each aggregate as one record: every sub-record
+      // routes to the shard its aggregate landed on
+      val open = stub.store.openShards().toIndexedSeq
+      val stored = open.flatMap(sh => stub.store.read(sh, ShardPos.Beginning,
+        ShardPos(BigInt(2).pow(159), Long.MaxValue)).map(sh -> _))
+      assert(stored.exists(_._2.subRecords.size > 1))
+      stored.foreach { case (sh, r) =>
+        r.subRecords.foreach(sub => assert(
+          graft.sources.KeyRouting.shardFor(sub.partitionKey, open) === sh))
+      }
+      // read back through the source: every row once, per-key order kept
+      val back = spark.read.format("graft-kinesis")
+        .option("endpoint", stub.endpoint)
+        .option("stream-name", "wire")
+        .load()
+        .orderBy("shardId", "seqNo", "subSeqNo")
+        .selectExpr("CAST(data AS STRING)").collect().map(_.getString(0))
+      assert(back.length === rows && back.distinct.length === rows)
+      val perKey = back.toSeq.map { v =>
+        val Array(k, n) = v.split(":"); (k, n.toInt)
+      }.groupBy(_._1)
+      assert(perKey.size === 37)
+      perKey.values.foreach { seqs =>
+        assert(seqs.map(_._2) === seqs.map(_._2).sorted, seqs.take(5))
+      }
+    }
+  }
+
+  test("aggregation-enabled=false keeps one PutRecords entry per row") {
+    withStub(shards = 4) { (stub, _) =>
+      keyedFrame(300, keys = 11).write.format("graft-kinesis")
+        .option("endpoint", stub.endpoint)
+        .option("stream-name", "wire")
+        .option("aggregation-enabled", "false")
+        .mode("append").save()
+      assert(putEntries(stub) === 300)
+      assert(stub.requests("ListShards").isEmpty)
+    }
+  }
+
+  test("a split between the routing snapshot and the put loses and " +
+      "duplicates nothing") {
+    withStub(shards = 2) { (stub, svc) =>
+      val id = ShardServiceRegistry.register(svc)
+      val conf = graft.config.ProducerConf("wire")
+      val factory = HttpRecordClient.factoryFor(conf, id)
+      assert(factory.openShards === Seq("shard-0", "shard-1"))
+      stub.store.split("shard-0", Seq("shard-2", "shard-3"))
+      graft.sinks.GraftKinesisSink.writeBatch(keyedFrame(500, keys = 23),
+        factory, conf)
+      val landed = stub.store.listShards().flatMap(sh =>
+        stub.store.read(sh, ShardPos.Beginning,
+          ShardPos(BigInt(2).pow(159), Long.MaxValue)).toSeq)
+        .flatMap(_.subRecords.map(r => new String(r.data, UTF_8)))
+      assert(landed.size === 500 && landed.distinct.size === 500)
+      assert(stub.store.read("shard-0", ShardPos.Beginning,
+        ShardPos(BigInt(2).pow(159), Long.MaxValue)).isEmpty,
+        "the closed parent takes no writes")
+    }
+  }
 }
