@@ -82,7 +82,8 @@ final class DimensionRecorder(streamName: String,
   * UserRecordsPut / UserRecordsDataPut / RetriesPerRecord count user
   * records (and their payload bytes), KinesisRecordsPut counts the wire
   * entries that carried them (one per KPL aggregate), and
-  * ErrorsByCode.<code> counts failed entries (KPL); RecordsFetched /
+  * ErrorsByCode.<code> counts failed entries (KPL; `WrongShard`: an
+  * entry acked off the shard it was sealed for); RecordsFetched /
   * BytesFetched re-express KCL's per-shard ProcessTask counters for the
   * pull-based scan; PutRecordsRequests / GetRecordsRequests count wire
   * calls. UserRecordsPut / KinesisRecordsPut is KPL's "User Records per

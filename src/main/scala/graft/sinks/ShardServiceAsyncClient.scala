@@ -2,7 +2,6 @@ package graft.sinks
 
 import graft.models.ProducerEvent
 import graft.sources.{InMemoryShardService, SubRecord}
-import scala.collection.mutable
 
 /** Producer-side transport writing into a [[graft.sources.ShardService]]
   * stream — closes the loop with the `graft-kinesis` source so
@@ -34,76 +33,51 @@ final class ShardServiceAsyncClient(
   // route over OPEN shards only: after a reshard, writes go to children
   // (the closed parent rejects appends). One epoch snapshot per client —
   // a writer constructed mid-reshard routes consistently for its task.
-  private val shards = service.openShards().toIndexedSeq
-  // per-shard aggregation buffers of pending events + their byte size
-  private val buffers =
-    mutable.Map.empty[String, mutable.ArrayBuffer[ProducerEvent]]
-  private val bufferBytes = mutable.Map.empty[String, Long]
-
-  // one-entry route memo: the writer resolves each record's shard twice
-  // when the rate cap is on (targetShard for the limiter, then put) —
-  // a client serves exactly one single-threaded task writer, so the
-  // second lookup hits the memo instead of re-hashing the key
-  private var lastKey: String = _
-  private var lastShard: String = _
-  private def shardOf(partitionKey: String): String = {
-    if (partitionKey != lastKey) {
-      lastKey = partitionKey
-      lastShard = graft.sources.KeyRouting.shardFor(partitionKey, shards)
-    }
-    lastShard
-  }
+  private val aggregator = new ShardAggregator[ProducerEvent](
+    service.openShards().toIndexedSeq, aggregationMaxCount, aggregationMaxSize)
 
   /** Expose routing so the writer's per-shard rate cap keys its buckets
     * by the shard this key actually lands on. */
   override def targetShard(partitionKey: String): Option[String] =
-    Some(shardOf(partitionKey))
+    Some(this.synchronized(aggregator.shardOf(partitionKey)))
 
   override def put(event: ProducerEvent)(
       onComplete: Option[Throwable] => Unit): Unit = {
-    val shard = shardOf(event.partitionKey)
     // wire-size contribution: payload + partition-key bytes (the two
     // components a sub-record carries); UTF-8 bytes, not UTF-16 chars,
     // so multibyte keys count their encoded size
     val evBytes = event.data.length.toLong +
       event.partitionKey.getBytes("UTF-8").length
     this.synchronized {
-      val buf = buffers.getOrElseUpdate(shard, mutable.ArrayBuffer.empty)
-      if (buf.nonEmpty &&
-          bufferBytes.getOrElse(shard, 0L) + evBytes > aggregationMaxSize)
-        flushShard(shard) // size bound: flush BEFORE overflowing
-      buf += event
-      bufferBytes(shard) = bufferBytes.getOrElse(shard, 0L) + evBytes
-      if (buf.size >= aggregationMaxCount) flushShard(shard)
+      aggregator.add(event.partitionKey, evBytes, event)
+      appendSealed()
     }
     onComplete(None)
   }
 
-  private def flushShard(shard: String): Unit = {
-    val buf = buffers(shard)
-    if (buf.nonEmpty) {
+  private def appendSealed(): Unit =
+    aggregator.drainSealed().foreach { batch =>
       // idempotent re-send drop: a task retry replays the partition in
       // the same order, so the aggregated wire record carries the same
       // composite key and the service drops it (only when every event
       // has a dedupId — mixed batches fall back to at-least-once).
       // Components are length-prefixed so ids containing the separator
       // can't collide: ["a|b"] -> "3:a|b" vs ["a","b"] -> "1:a|1:b".
+      val buf = batch.items
       val key =
         if (buf.forall(_.dedupId.isDefined))
           Some(buf.flatMap(_.dedupId).map(id => s"${id.length}:$id")
             .mkString("|"))
         else None
-      service.appendAssigned(shard,
-        buf.map(e => SubRecord(e.partitionKey, e.data)).toSeq, key)
-      buf.clear()
-      bufferBytes(shard) = 0L
+      service.appendAssigned(batch.shard,
+        buf.map(e => SubRecord(e.partitionKey, e.data)), key)
     }
-  }
 
   /** flushSync: drain every aggregation buffer (KinesisProducer.stop,
     * reference main/producer/KinesisProducer.scala:159-163). */
   override def close(): Unit = this.synchronized {
-    buffers.keys.foreach(flushShard)
+    aggregator.sealAll()
+    appendSealed()
   }
 }
 

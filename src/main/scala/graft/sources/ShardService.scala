@@ -100,7 +100,7 @@ trait ShardService extends Serializable {
     * (closed parents stay in `listShards()` for readers, as Kinesis
     * keeps closed shards listed until retention expiry). */
   def openShards(): Seq[String] =
-    listShards().filterNot(s => shardInfo(s).closed)
+    shardTopology().filterNot(_.closed).map(_.shardId)
   /** Full topology in listing order — override where one bulk call is
     * cheaper than per-shard lookups (the wire client's ListShards
     * already carries lineage + closed markers for every shard, so the

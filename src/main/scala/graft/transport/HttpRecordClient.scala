@@ -2,7 +2,7 @@ package graft.transport
 
 import graft.models.ProducerEvent
 import graft.sinks.{AsyncRecordClient, AsyncRecordClientFactory,
-  ProducerThrottledException, RecordExpiredException}
+  ProducerThrottledException, RecordExpiredException, ShardAggregator}
 import graft.sources.{KeyRouting, ShardServiceRegistry, SubRecord}
 import scala.collection.mutable
 
@@ -13,15 +13,25 @@ import scala.collection.mutable
   *
   *  - '''aggregation''' (KPL `AggregationEnabled`/`AggregationMaxCount`/
   *    `AggregationMaxSize`, reference.conf:57-92): records buffer per
-  *    TARGET SHARD, routed by [[graft.sources.KeyRouting]] over the
-  *    `shards` snapshot, until `aggregationMaxCount` records or a record
-  *    that would push the buffer past `aggregationMaxSize` bytes. A
-  *    sealed buffer becomes ONE collection entry through
+  *    TARGET SHARD in a [[graft.sinks.ShardAggregator]], routed by
+  *    [[graft.sources.KeyRouting]] over the `shards` snapshot. A sealed
+  *    buffer becomes ONE collection entry through
   *    [[KinesisWire.encodeData]] (one record ships raw, several as a KPL
-  *    container) keyed by its first sub-record's partition key, so every
-  *    sub-record lands on the shard its own key routes to and per-key
-  *    order holds. With no snapshot (or a max count of 1) every record
-  *    is its own entry.
+  *    container) keyed by its first sub-record's partition key. On an
+  *    endpoint that routes by KeyRouting over the same open shards, every
+  *    sub-record lands on its own key's shard. Otherwise the response
+  *    shows it: an entry acked on another shard than it was sealed for
+  *    (KPL's "Wrong Shard") re-lists the open shards and re-buckets what
+  *    is buffered, and its records whose keys route elsewhere are
+  *    resent, each under its own key, so they land on their key's shard
+  *    and their later records follow them there. The stored copies
+  *    stay: on a reshard during the write the sink is at-least-once, as
+  *    KPL is, and a key whose records sat in two entries of one request
+  *    can be reordered, as a partial-failure retry can reorder it. An
+  *    endpoint that routes otherwise with no reshard (real Kinesis
+  *    routes by MD5 hash ranges) turns aggregation off for the client
+  *    after its first such response. With no snapshot every record is
+  *    its own entry.
   *  - '''collection''' (KPL `CollectionMaxCount`/`CollectionMaxSize`):
   *    entries buffer until `collectionMaxCount` entries or an entry
   *    that would push the request past `collectionMaxSize` bytes, then
@@ -62,53 +72,47 @@ final class HttpRecordClient(
       event.partitionKey.getBytes("UTF-8").length
   }
 
-  /** One PutRecords entry and the user records it carries. */
+  /** One PutRecords entry and the user records it carries, sealed for
+    * `shard` (`""`: no prediction). */
   private final class Entry(val key: String, val data: Array[Byte],
-      val records: Vector[Pending]) {
+      val records: Vector[Pending], val shard: String) {
     def wireBytes: Long = data.length.toLong + key.getBytes("UTF-8").length
     def enqueuedAt: Long = records.head.enqueuedAt
     def complete(outcome: Option[Throwable]): Unit =
       records.foreach(_.onComplete(outcome))
   }
 
-  /** One target shard's open aggregate. */
-  private final class Aggregate {
-    val records = mutable.ArrayBuffer.empty[Pending]
-    var bytes = 0L
-  }
+  private def entryOf(records: Vector[Pending], shard: String): Entry =
+    new Entry(records.head.event.partitionKey,
+      KinesisWire.encodeData(records.map(r =>
+        SubRecord(r.event.partitionKey, r.event.data))), records, shard)
 
-  private val maxPerEntry = if (shards.isEmpty) 1 else aggregationMaxCount
-  private val aggregates = mutable.LinkedHashMap.empty[String, Aggregate]
+  private val aggregator = new ShardAggregator[Pending](shards,
+    aggregationMaxCount, aggregationMaxSize)
   private val collection = mutable.ArrayBuffer.empty[Entry]
   private var collectionBytes = 0L
 
   override def put(event: ProducerEvent)(
       onComplete: Option[Throwable] => Unit): Unit = this.synchronized {
     val p = new Pending(event, onComplete, clock())
-    val shard = if (maxPerEntry == 1) ""
-      else KeyRouting.shardFor(event.partitionKey, shards)
-    val agg = aggregates.getOrElseUpdate(shard, new Aggregate)
-    if (agg.records.nonEmpty && agg.bytes + p.wireBytes > aggregationMaxSize) {
-      // size bound: seal BEFORE overflowing (KPL behavior). If that
-      // ships and the ship fails, THIS record was never attempted — it
-      // must still complete (with the failure) or an ack-counting drain
-      // (S11) would wait for a callback that never comes.
-      try seal(agg)
-      catch { case e: Throwable => onComplete(Some(e)); throw e }
+    guarded {
+      aggregator.add(event.partitionKey, p.wireBytes, p)
+      aggregator.drainSealed().foreach(b => collect(entryOf(b.items, b.shard)))
     }
-    agg.records += p
-    agg.bytes += p.wireBytes
-    if (agg.records.size >= maxPerEntry) seal(agg)
   }
 
-  /** Close one aggregate into a collection entry. */
-  private def seal(agg: Aggregate): Unit = {
-    val recs = agg.records.toVector
-    agg.records.clear()
-    agg.bytes = 0L
-    val entry = new Entry(recs.head.event.partitionKey,
-      KinesisWire.encodeData(recs.map(r =>
-        SubRecord(r.event.partitionKey, r.event.data))), recs)
+  /** A failed ship fails the write: every record still held, sealed or
+    * buffered, completes with the error before the rethrow, or an
+    * ack-counting drain (S11) would wait for callbacks that never come. */
+  private def guarded(body: => Unit): Unit =
+    try body
+    catch { case e: Throwable =>
+      aggregator.clear().foreach(_.onComplete(Some(e)))
+      throw e
+    }
+
+  /** Add one entry to the collection, shipping it when full. */
+  private def collect(entry: Entry): Unit = {
     if (collection.nonEmpty &&
         collectionBytes + entry.wireBytes > collectionMaxSize) {
       // request size bound: ship BEFORE overflowing; if that fails,
@@ -125,6 +129,34 @@ final class HttpRecordClient(
     code.endsWith("ProvisionedThroughputExceededException") ||
       code.endsWith("ThrottlingException")
 
+  private val WrongShard = "WrongShard"
+
+  /** An entry that landed on another shard than it was sealed for. */
+  private def wrongShard(e: Entry, landed: String): Boolean =
+    e.shard.nonEmpty && e.shard != landed
+
+  /** A wrong shard the CURRENT routing predicted means the routing is
+    * stale: re-list the open shards (one ListShards listing). A changed
+    * set is a reshard: route over it, buffered records included. An
+    * unchanged set means the endpoint does not route by
+    * [[graft.sources.KeyRouting]]: stop aggregating, so every later
+    * record is its own entry under its own key. */
+  private def refreshRouting(): Unit = {
+    val fresh = service.openShards().toIndexedSeq
+    aggregator.reroute(
+      if (fresh.toSet == aggregator.routing.toSet) IndexedSeq.empty else fresh)
+  }
+
+  private def predictedNow(e: Entry): Boolean =
+    aggregator.routing.nonEmpty &&
+      KeyRouting.shardFor(e.key, aggregator.routing) == e.shard
+
+  /** Whether `r`, carried by `e`, sits on its own key's shard now that
+    * `e` landed on `landed`. */
+  private def placed(r: Pending, e: Entry, landed: String): Boolean =
+    r.event.partitionKey == e.key || (aggregator.routing.nonEmpty &&
+      KeyRouting.shardFor(r.event.partitionKey, aggregator.routing) == landed)
+
   /** Ship the buffered collection; retry failed entries only. */
   private def flush(): Unit = {
     var pending = collection.toVector
@@ -138,8 +170,14 @@ final class HttpRecordClient(
       // rethrow, or an ack-counting drain (S11) would leak its window
       // permits and wait forever on callbacks that never fire
       val results =
-        try service.putRecords(pending.map(e => (e.key, e.data)))
-        catch { case e: Throwable =>
+        try {
+          val r = service.putRecords(pending.map(e => (e.key, e.data)))
+          if (pending.zip(r).exists {
+                case (e, Right(landed)) => wrongShard(e, landed) && predictedNow(e)
+                case _ => false
+              }) refreshRouting()
+          r
+        } catch { case e: Throwable =>
           pending.foreach(_.complete(Some(e)))
           throw e
         }
@@ -150,17 +188,29 @@ final class HttpRecordClient(
       service.metrics.record("PutRecordsRequests", null, 1L)
       val failed = pending.zip(results).flatMap {
         case (e, Right(shardId)) =>
+          // KPL "Wrong Shard": the entry is stored where it landed, but
+          // records whose keys route elsewhere are resent, each under
+          // its own key, which lands on its key's shard on any
+          // endpoint. The stored copies stay (at-least-once).
+          val (ok, misrouted) =
+            if (!wrongShard(e, shardId)) (e.records, Vector.empty)
+            else e.records.partition(placed(_, e, shardId))
           service.metrics.record("KinesisRecordsPut", shardId, 1L)
-          service.metrics.record("UserRecordsPut", shardId,
-            e.records.size.toLong)
+          service.metrics.record("UserRecordsPut", shardId, ok.size.toLong)
           service.metrics.record("UserRecordsDataPut", shardId,
-            e.records.iterator.map(_.event.data.length.toLong).sum)
-          e.complete(None); None
+            ok.iterator.map(_.event.data.length.toLong).sum)
+          ok.foreach(_.onComplete(None))
+          if (misrouted.nonEmpty) {
+            service.metrics.record("RetriesPerRecord", null,
+              misrouted.size.toLong)
+            service.metrics.record(s"ErrorsByCode.$WrongShard", null, 1L)
+          }
+          misrouted.map(r => (entryOf(Vector(r), ""), WrongShard))
         case (e, Left(code)) =>
           service.metrics.record("RetriesPerRecord", null,
             e.records.size.toLong)
           service.metrics.record(s"ErrorsByCode.$code", null, 1L)
-          Some((e, code))
+          Vector((e, code))
       }
       if (failed.isEmpty) return
       // KPL taxonomy: FailIfThrottled fast-fails THROTTLED entries
@@ -184,19 +234,23 @@ final class HttpRecordClient(
             s"PutRecords retry loop (recordTtl=$recordTtlMs ms, " +
             s"last error $code)")))
       }
-      attempt += 1
-      if (attempt > maxFlushRetries) {
-        val codes = alive.map(_._2).distinct.mkString(", ")
-        val msg = s"PutRecords still failing ${alive.size} record(s) " +
-          s"after $maxFlushRetries retries (codes: $codes)"
-        val e: RuntimeException =
-          if (alive.exists(f => isThrottle(f._2)))
-            new ProducerThrottledException(msg)
-          else new RuntimeException(msg)
-        alive.foreach(_._1.complete(Some(e)))
-        throw e
+      // a wrong-shard resend alone is no failure: it neither counts
+      // toward the retry budget nor backs off
+      if (failed.exists(_._2 != WrongShard)) {
+        attempt += 1
+        if (attempt > maxFlushRetries) {
+          val codes = alive.map(_._2).distinct.mkString(", ")
+          val msg = s"PutRecords still failing ${alive.size} record(s) " +
+            s"after $maxFlushRetries retries (codes: $codes)"
+          val e: RuntimeException =
+            if (alive.exists(f => isThrottle(f._2)))
+              new ProducerThrottledException(msg)
+            else new RuntimeException(msg)
+          alive.foreach(_._1.complete(Some(e)))
+          throw e
+        }
+        if (alive.nonEmpty) sleeper(backoffBaseMs << (attempt - 1))
       }
-      if (alive.nonEmpty) sleeper(backoffBaseMs << (attempt - 1))
       pending = alive.map(_._1)
     }
   }
@@ -204,8 +258,11 @@ final class HttpRecordClient(
   /** Seal every aggregate and ship the collection now (the writer's
     * hook before it blocks on a full window, and before its drain). */
   override def flushPending(): Unit = this.synchronized {
-    aggregates.valuesIterator.filter(_.records.nonEmpty).foreach(seal)
-    flush()
+    guarded {
+      aggregator.sealAll()
+      aggregator.drainSealed().foreach(b => collect(entryOf(b.items, b.shard)))
+      flush()
+    }
   }
 
   /** Drain (KinesisProducer.stop flushSync analogue, reference

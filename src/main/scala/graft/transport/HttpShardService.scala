@@ -226,11 +226,6 @@ final class HttpShardService(
       ShardInfo(id, parents, closed)
     }
 
-  /** The producer's routing domain from one listing, for the same
-    * reason. */
-  override def openShards(): Seq[String] =
-    listShardObjects().collect { case (id, _, false) => id }
-
   private def iteratorAt(shardId: String, tpe: String,
       f: ObjectNode => Unit = _ => ()): (String, ShardPos) = {
     val req = obj()

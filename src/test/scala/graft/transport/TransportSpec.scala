@@ -972,24 +972,141 @@ class TransportSpec extends SparkSpec {
     }
   }
 
-  test("a split between the routing snapshot and the put loses and " +
-      "duplicates nothing") {
+  /** Every stored sub-record as (shard, `key:seq` payload), in shard
+    * and sequence order. */
+  private def storedCopies(store: InMemoryShardService): Seq[(String, String)] =
+    store.listShards().flatMap(sh => store.read(sh, ShardPos.Beginning,
+      ShardPos(BigInt(2).pow(159), Long.MaxValue)).toSeq
+      .flatMap(_.subRecords.map(r => sh -> new String(r.data, UTF_8))))
+
+  private def keyOf(row: String): String = row.split(":")(0)
+  private def seqOf(row: String): Int = row.split(":")(1).toInt
+
+  test("a split between the routing snapshot and the put: the writer " +
+      "sees the wrong shard, re-lists once per task and resends the " +
+      "misrouted rows under their own keys — nothing lost, every row " +
+      "once on its key's shard in key order, only strays duplicated") {
     withStub(shards = 2) { (stub, svc) =>
       val id = ShardServiceRegistry.register(svc)
       val conf = graft.config.ProducerConf("wire")
       val factory = HttpRecordClient.factoryFor(conf, id)
       assert(factory.openShards === Seq("shard-0", "shard-1"))
       stub.store.split("shard-0", Seq("shard-2", "shard-3"))
+      val listed = stub.requests("ListShards").size
       graft.sinks.GraftKinesisSink.writeBatch(keyedFrame(500, keys = 23),
         factory, conf)
-      val landed = stub.store.listShards().flatMap(sh =>
-        stub.store.read(sh, ShardPos.Beginning,
-          ShardPos(BigInt(2).pow(159), Long.MaxValue)).toSeq)
-        .flatMap(_.subRecords.map(r => new String(r.data, UTF_8)))
-      assert(landed.size === 500 && landed.distinct.size === 500)
+      // 4 shards at page size 2: one listing is 2 requests; a task
+      // re-lists at most once, on its first wrong shard
+      val relists = stub.requests("ListShards").size - listed
+      assert(relists > 0 && relists <= 4 * 2, relists)
+      val open = stub.store.openShards().toIndexedSeq
+      val copies = storedCopies(stub.store)
+      val home = copies.filter { case (sh, row) =>
+        graft.sources.KeyRouting.shardFor(keyOf(row), open) == sh }
+      assert(home.map(_._2).sorted ===
+        (0 until 500).map(n => s"key-${n % 23}:${n / 23}").sorted)
+      val strays = copies.size - home.size
+      assert(strays > 0, "the split must have misrouted some aggregate")
+      assert(copies.map(_._2).distinct.size === 500)
+      home.groupBy(r => keyOf(r._2)).values.foreach { rows =>
+        val seqs = rows.map(r => seqOf(r._2))
+        assert(seqs === seqs.sorted, rows.take(5))
+      }
       assert(stub.store.read("shard-0", ShardPos.Beginning,
         ShardPos(BigInt(2).pow(159), Long.MaxValue)).isEmpty,
         "the closed parent takes no writes")
+      // a fresh snapshot routes right: the next write adds no stray
+      graft.sinks.GraftKinesisSink.writeBatch(keyedFrame(500, keys = 23),
+        HttpRecordClient.factoryFor(conf, id), conf)
+      assert(storedCopies(stub.store).size === copies.size + 500)
+      assert(storedCopies(stub.store).count { case (sh, row) =>
+        graft.sources.KeyRouting.shardFor(keyOf(row), open) != sh } ===
+        strays)
+    }
+  }
+
+  test("a reshard found mid-write re-buckets the buffered records: " +
+      "every row once on its key's shard, in key order, one re-listing") {
+    withStub(shards = 2) { (stub, svc) =>
+      val stale = svc.openShards().toIndexedSeq
+      stub.store.split("shard-0", Seq("shard-2", "shard-3"))
+      val listed = stub.requests("ListShards").size
+      // small aggregates shipped one per request: the first wrong shard
+      // comes back while the other buffers still hold records
+      val client = new HttpRecordClient(svc, collectionMaxCount = 1,
+        aggregationMaxCount = 5, shards = stale, sleeper = _ => ())
+      val acks = new java.util.concurrent.atomic.AtomicInteger(0)
+      (0 until 200).foreach { n =>
+        val key = s"key-${n % 13}"
+        client.put(ProducerEvent(key, s"$key:${n / 13}"))(r => {
+          assert(r.isEmpty, r); acks.incrementAndGet() })
+      }
+      client.close()
+      assert(acks.get() === 200)
+      // 4 shards at page size 2: one listing is 2 requests
+      assert(stub.requests("ListShards").size - listed === 2)
+      val open = stub.store.openShards().toIndexedSeq
+      val home = storedCopies(stub.store).filter { case (sh, row) =>
+        graft.sources.KeyRouting.shardFor(keyOf(row), open) == sh }
+      assert(home.map(_._2).sorted ===
+        (0 until 200).map(n => s"key-${n % 13}:${n / 13}").sorted)
+      home.groupBy(r => keyOf(r._2)).values.foreach { rows =>
+        val seqs = rows.map(r => seqOf(r._2))
+        assert(seqs === seqs.sorted, rows.take(5))
+      }
+    }
+  }
+
+  test("an endpoint that routes otherwise with no reshard turns " +
+      "aggregation off after one listing: every row reaches its key's " +
+      "shard and later rows ship one entry each") {
+    withStub(shards = 2) { (stub, svc) =>
+      // the same open shards in another order: KeyRouting over it
+      // predicts the other shard for every key, as an endpoint with its
+      // own routing would
+      val client = new HttpRecordClient(svc, aggregationMaxCount = 500,
+        shards = IndexedSeq("shard-1", "shard-0"), sleeper = _ => ())
+      val acks = new java.util.concurrent.atomic.AtomicInteger(0)
+      def put(n: Int): Unit =
+        client.put(ProducerEvent(s"key-${n % 9}", s"key-${n % 9}:$n"))(r => {
+          assert(r.isEmpty, r); acks.incrementAndGet() })
+      (0 until 90).foreach(put)
+      client.flushPending()
+      assert(acks.get() === 90)
+      assert(stub.requests("ListShards").size === 1)
+      val open = stub.store.openShards().toIndexedSeq
+      val home = storedCopies(stub.store).filter { case (sh, row) =>
+        graft.sources.KeyRouting.shardFor(keyOf(row), open) == sh }
+      assert(home.map(_._2).distinct.size === 90)
+      // the first copy of each row on its key's shard is in key order
+      home.map(_._2).distinct.groupBy(keyOf).values.foreach { rows =>
+        assert(rows.map(seqOf) === rows.map(seqOf).sorted, rows.take(5))
+      }
+      val entries = putEntries(stub)
+      (90 until 100).foreach(put)
+      client.close()
+      assert(acks.get() === 100)
+      assert(putEntries(stub) - entries === 10)
+      assert(stub.requests("ListShards").size === 1)
+    }
+  }
+
+  test("a whole-request failure with several shards buffered completes " +
+      "every buffered record with the error") {
+    withStub(shards = 4) { (stub, svc) =>
+      val client = new HttpRecordClient(svc, collectionMaxCount = 1,
+        aggregationMaxCount = 500, shards = svc.openShards().toIndexedSeq,
+        sleeper = _ => ())
+      val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[
+        Option[Throwable]]()
+      (0 until 40).foreach(i => client.put(ProducerEvent(s"key-$i", s"v$i"))(
+        r => outcomes.add(r)))
+      assert(outcomes.isEmpty)
+      stub.faults.failNext("PutRecords", 1, status = 400,
+        errorType = "ValidationException")
+      intercept[Exception](client.flushPending())
+      assert(outcomes.size === 40)
+      assert(outcomes.asScala.forall(_.isDefined))
     }
   }
 }
