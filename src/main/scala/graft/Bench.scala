@@ -151,8 +151,7 @@ object Bench {
     * it instead of wall time. The critical path — each stage's largest
     * task CPU, summed over stages — keeps lost parallelism visible: a
     * fan-out collapsed into one task leaves total CPU flat but grows
-    * its longest task. Shared with [[ScaleCurve]]'s two-scale
-    * measurement. */
+    * its longest task. */
   private[graft] final class MetricsListener extends SparkListener {
     val shuffleRead = new AtomicLong
     val shuffleWrite = new AtomicLong

@@ -114,6 +114,12 @@ trait ShardService extends Serializable {
     * wire records (per-shard admission control, reference `kcl.maxRecords`
     * main/resources/reference.conf:479-482). */
   def positionAfter(shardId: String, from: ShardPos, maxRecords: Int): ShardPos
+  /** [[positionAfter]], and whether the read-ahead saw that position is
+    * the shard's latest (then the caller need not ask [[latestPosition]]
+    * too). The default never knows. */
+  def positionAfterAtTip(shardId: String, from: ShardPos,
+      maxRecords: Int): (ShardPos, Boolean) =
+    (positionAfter(shardId, from, maxRecords), false)
   /** Ordered records with position in (from, to]. */
   def read(shardId: String, from: ShardPos, to: ShardPos)
       : Iterator[RawShardRecord]

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.config.ConsumerConf
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, when}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.streaming.DataStreamWriter
 import scala.util.control.NonFatal
 
 /** The reference's batch state machine (ConsumerWorker, S3/S4/S8/S15 in
@@ -31,7 +31,9 @@ import scala.util.control.NonFatal
   *
   * Everything here is distributed: per-record attempts run in
   * `mapPartitions` on executors, the retry loop on the driver only
-  * orchestrates Dataset handles (no row ever reaches the driver).
+  * orchestrates Dataset handles (no row ever reaches the driver). Each
+  * round is one Spark job: the job that tallies the round's results also
+  * fills its checkpoint.
   */
 object CommitHarness {
 
@@ -78,11 +80,17 @@ object CommitHarness {
       // invoked exactly once per record per round — a later action on the
       // dead-letter Dataset must not re-run user code (the reference's
       // ack bookkeeping is similarly write-once,
-      // main/consumer/ConsumerWorker.scala:368-383)
-      val results = pending.map(t => (t, safe(t))).localCheckpoint(true)
-      val tally = results.agg(count(lit(1)), count(when(!col("_2"), 1))).head()
-      if (attemptsMade == 0) total = tally.getLong(0)
-      pendingCount = tally.getLong(1)
+      // main/consumer/ConsumerWorker.scala:368-383). The tally job fills
+      // the lazy checkpoint and cuts the lineage when it ends
+      val results = pending.map(t => (t, safe(t))).localCheckpoint(eager = false)
+      val rdd = results.queryExecution.toRdd
+      val tally = rdd.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) => {
+        var n, failed = 0L
+        rows.foreach { r => n += 1; if (!r.getBoolean(1)) failed += 1 }
+        (n, failed)
+      })
+      if (attemptsMade == 0) total = tally.map(_._1).sum
+      pendingCount = tally.map(_._2).sum
       // previous round's checkpoint blocks are no longer referenced once
       // this round's results are checkpointed — free them now; the last
       // round backs the returned dead-letter Dataset and is freed by

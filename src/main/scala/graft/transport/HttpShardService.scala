@@ -255,10 +255,11 @@ final class HttpShardService(
     })._1
 
   /** One GetRecords page, undecoded: (wire records, nextIterator or
-    * None at SHARD_END). Decoding is the caller's choice — the driver's
-    * pre-read needs only the last record of a page. */
+    * None at SHARD_END, whether it ends at the tip: `MillisBehindLatest`
+    * 0). Decoding is the caller's choice — the driver's pre-read needs
+    * only the last record of a page. */
   private def getRecordsPage(shardId: String, iterator: String,
-      limit: Int): (IndexedSeq[JsonNode], Option[String]) = {
+      limit: Int): (IndexedSeq[JsonNode], Option[String], Boolean) = {
     val req = obj()
     req.put("ShardIterator", iterator)
     req.put("Limit", limit)
@@ -273,7 +274,8 @@ final class HttpShardService(
       metrics.record("BytesFetched", shardId,
         recs.iterator.map(r => decodedLength(r.get("Data").asText())).sum)
     }
-    (recs, Option(resp.get("NextShardIterator")).map(_.asText()))
+    (recs, Option(resp.get("NextShardIterator")).map(_.asText()),
+      Option(resp.get("MillisBehindLatest")).exists(_.asLong() == 0L))
   }
 
   private def decodeRecord(r: JsonNode): RawShardRecord = {
@@ -300,20 +302,27 @@ final class HttpShardService(
     * data on the driver); the per-GetRecords page is bounded at 10000
     * wire records either way. The in-memory/test services compute this
     * positionally at O(1), which is why the tax only exists on the
-    * wire path. */
+    * wire path. The pre-read stops on the page that ends at the tip (or
+    * at SHARD_END), so a backlog under the cap costs one GetRecords, and
+    * the source's lag report need not ask LATEST for that shard. */
   override def positionAfter(shardId: String, from: ShardPos,
-      maxRecords: Int): ShardPos = {
+      maxRecords: Int): ShardPos =
+    positionAfterAtTip(shardId, from, maxRecords)._1
+
+  override def positionAfterAtTip(shardId: String, from: ShardPos,
+      maxRecords: Int): (ShardPos, Boolean) = {
     var pos = from
     var it = Option(iteratorAfter(shardId, from))
     var remaining = maxRecords
     while (remaining > 0 && it.isDefined) {
-      val (recs, next) = getRecordsPage(shardId, it.get, math.min(remaining, 10000))
-      if (recs.isEmpty) return pos
-      pos = posOf(decodeRecord(recs.last))
+      val (recs, next, atTip) =
+        getRecordsPage(shardId, it.get, math.min(remaining, 10000))
+      if (recs.nonEmpty) pos = posOf(decodeRecord(recs.last))
+      if (recs.isEmpty || atTip) return (pos, atTip)
       remaining -= recs.size
       it = next
     }
-    pos
+    (pos, it.isEmpty)
   }
 
   /** Ordered records in (from, to]. Stops paging once a page reaches
@@ -324,7 +333,7 @@ final class HttpShardService(
     var it = Option(iteratorAfter(shardId, from))
     var done = false
     while (!done && it.isDefined) {
-      val (page, next) = getRecordsPage(shardId, it.get, 10000)
+      val (page, next, _) = getRecordsPage(shardId, it.get, 10000)
       val recs = page.map(decodeRecord)
       val inRange = recs.takeWhile(r => ShardPos.ordering.lteq(posOf(r), to))
       out ++= inRange

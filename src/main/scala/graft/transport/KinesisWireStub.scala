@@ -368,13 +368,15 @@ final class KinesisWireStub(
       o.put("Data", b64e.encodeToString(encodeData(r.subRecords)))
     }
     val last = recs.lastOption.map(posOf).getOrElse(from)
-    val info = backing.shardInfo(shardId)
-    val drained = info.closed &&
-      ShardPos.ordering.gteq(last, backing.latestPosition(shardId))
+    val atTip = ShardPos.ordering.gteq(last, backing.latestPosition(shardId))
+    val drained = backing.shardInfo(shardId).closed && atTip
     // null NextShardIterator == SHARD_END (the real API's closed-shard
     // drain signal)
     if (!drained) resp.put("NextShardIterator", token(shardId, last))
-    resp.put("MillisBehindLatest", 0L)
+    // 0 only on a page ending at the shard's latest record (the real
+    // API's caught-up signal), else the page's age, at least 1 ms
+    resp.put("MillisBehindLatest", if (atTip) 0L else recs.lastOption.fold(1L)(r =>
+      math.max(1L, System.currentTimeMillis() - r.arrivalEpochMicros / 1000)))
     resp
   }
 

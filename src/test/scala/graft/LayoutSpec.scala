@@ -39,4 +39,19 @@ class LayoutSpec extends AnyFunSuite {
     val gone = pendingRename -- names
     assert(gone.isEmpty, s"renamed; drop from pendingRename: $gone")
   }
+
+  /** The driver-contract mains, the per-query tools and the KCL
+    * checkpoint import; anything else runnable is a dev main, and those
+    * live outside `src/main`. */
+  private val mains = Set("Bench.scala", "Verify.scala", "Explain.scala",
+    "RunQuery.scala", "ImportKclCheckpoints.scala")
+
+  test("src/main defines no main beyond the driver and operator mains") {
+    val defMain = """\bdef\s+main\s*\(""".r
+    val bad = files("src/main").filter { f =>
+      f.toString.endsWith(".scala") && !mains(f.getFileName.toString) &&
+        defMain.findFirstIn(new String(Files.readAllBytes(f), "UTF-8")).isDefined
+    }
+    assert(bad.isEmpty, s"dev mains in src/main: ${bad.mkString(", ")}")
+  }
 }

@@ -79,14 +79,49 @@ class ShardSyncSpec extends SparkSpec {
         assert(offsets(ms.latestOffset(end, ms.getDefaultReadLimit)) ===
           offsets(end), "the next trigger finds nothing new")
       } finally ms.stop()
-      // listings: initialOffset, getDefaultReadLimit x2, both latestOffset
-      // passes and reportLatestOffset. Per shard: the capped pre-read
-      // (iterator + data page + empty page), a LATEST iterator for the
-      // report, the executor read (iterator + one page, which reaches the
-      // range end) and the empty trigger (iterator + empty page).
-      assert(stub.requests("ListShards").size === 6)
-      assert(stub.requests("GetShardIterator").size === 8 * 4)
-      assert(stub.requests("GetRecords").size === 8 * 4)
+      // listings: one at query start (initialOffset; getDefaultReadLimit
+      // reuses it), which also serves the first pass, and one for the
+      // second pass; the report reuses its pass's. Per shard: the capped
+      // pre-read (iterator + one data page, which ends at the tip), no
+      // LATEST for the report (the pre-read saw the tip), the executor
+      // read (iterator + one page, which reaches the range end) and the
+      // empty trigger (iterator + one empty page at the tip).
+      assert(stub.requests("ListShards").size === 2)
+      assert(stub.requests("GetShardIterator").size === 8 * 3)
+      assert(stub.requests("GetRecords").size === 8 * 3)
+    } finally stub.stop()
+  }
+
+  test("the lag report stays true: a pass capped below the backlog asks " +
+      "LATEST per shard, a pass that reached the tip asks nothing") {
+    val shards = (0 until 4).map(i => s"shard-$i")
+    val store = new InMemoryShardService("wire", shards)
+    for (s <- shards; n <- 1 to 3) store.appendAssigned(s,
+      Seq(SubRecord("k", s"$s/$n".getBytes(UTF_8))))
+    val stub = new KinesisWireStub(store, listShardsPageSize = 10)
+    try {
+      val svc = new HttpShardService(stub.endpoint, "wire",
+        RetryPolicy(sleeper = _ => ()))
+      val ms = new GraftKinesisMicroBatchStream(Map(
+        "service.id" -> ShardServiceRegistry.register(svc)))
+      try {
+        val tips = shards.map(s => s -> store.latestPosition(s)).toMap
+        def requests: Int = stub.requestLog.size
+        def latestCalls: Int = stub.requests("GetShardIterator")
+          .count(_.get("ShardIteratorType").asText() == "LATEST")
+        // one record per shard: every pre-read stops at the cap
+        val capped = ms.latestOffset(ms.initialOffset(), ReadLimit.maxRows(4))
+        assert(offsets(capped).values.forall(_.seqNo > BigInt(0)))
+        assert(offsets(capped) !== tips, "the cap binds below the backlog")
+        val before = latestCalls
+        assert(offsets(ms.reportLatestOffset()) === tips)
+        assert(latestCalls - before === 4, "one LATEST per capped shard")
+        val drained = ms.latestOffset(capped, ms.getDefaultReadLimit)
+        assert(offsets(drained) === tips)
+        val quiet = requests
+        assert(offsets(ms.reportLatestOffset()) === tips)
+        assert(requests === quiet, "an uncapped pass reports for free")
+      } finally ms.stop()
     } finally stub.stop()
   }
 

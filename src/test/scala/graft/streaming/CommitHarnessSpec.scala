@@ -2,6 +2,8 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.config.ConsumerConf
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import scala.collection.concurrent.TrieMap
 
 /** Port of the reference's ConsumerWorkerSpec semantics matrix
@@ -53,6 +55,41 @@ class CommitHarnessSpec extends SparkSpec {
     val (_, stats) = processBatch(batch, mkAttempt("once"), conf(1, 0.25))
     assert(stats == BatchStats(100, 100, 0, 1))
     assert(evaluated.value == 100, "n evaluations, not one more scan")
+  }
+
+  test("each round is one Spark job: the tally fills the round's " +
+      "checkpoint") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def jobsOf(group: String)(f: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null &&
+              e.properties.getProperty(GraftTestBridge.JobGroupKey) == group)
+            jobs.incrementAndGet()
+      }
+      sc.addSparkListener(l)
+      sc.setJobGroup(group, group)
+      try f finally {
+        sc.clearJobGroup()
+        GraftTestBridge.drainListenerBus(sc)
+        sc.removeSparkListener(l)
+      }
+      jobs.get
+    }
+    val retried = (Seq("flaky1") ++ (1 to 99).map(i => s"j$i")).toDS()
+    assert(jobsOf("harness-retry") {
+      val (_, stats) = processBatch(retried, mkAttempt("jobs"), conf(1, 0.0))
+      assert(stats == BatchStats(100, 100, 0, 2))
+    } === 2)
+    val clean = (1 to 100).map(i => s"clean$i").toDS()
+    assert(jobsOf("harness-clean") {
+      assert(processBatch(clean, mkAttempt("jobs"), conf(1, 0.0))._2 ==
+        BatchStats(100, 100, 0, 1))
+    } === 1)
+    assert(attemptsOf("jobs", "flaky1") == 2 &&
+      (1 to 99).forall(i => attemptsOf("jobs", s"j$i") == 1))
   }
 
   test("an empty batch attempts nothing") {

@@ -414,6 +414,43 @@ class TransportSpec extends SparkSpec {
     }
   }
 
+  test("MillisBehindLatest is 0 only on the page that ends at the tip; " +
+      "the pre-read stops there") {
+    withStub(shards = 1) { (stub, svc) =>
+      (1 to 5).foreach(n => stub.store.appendAssigned("shard-0",
+        Seq(SubRecord("k", s"v$n".getBytes(UTF_8)))))
+      def page(iterator: String, limit: Int) = {
+        val req = KinesisWire.obj()
+        req.put("ShardIterator", iterator)
+        req.put("Limit", limit)
+        svc.call("GetRecords", req)
+      }
+      val start = KinesisWire.obj()
+      start.put("StreamName", "wire")
+      start.put("ShardId", "shard-0")
+      start.put("ShardIteratorType", "TRIM_HORIZON")
+      val cut = page(svc.call("GetShardIterator", start)
+        .get("ShardIterator").asText(), 2)
+      assert(cut.get("Records").size() === 2)
+      assert(cut.get("MillisBehindLatest").asLong() > 0L,
+        "a page cut short by Limit is behind the tip")
+      val tip = page(cut.get("NextShardIterator").asText(), 10)
+      assert(tip.get("Records").size() === 3)
+      assert(tip.get("MillisBehindLatest").asLong() === 0L)
+      val empty = page(tip.get("NextShardIterator").asText(), 10)
+      assert(empty.get("Records").size() === 0)
+      assert(empty.get("MillisBehindLatest").asLong() === 0L)
+      val before = stub.requests("GetRecords").size
+      val (end, atTip) = svc.positionAfterAtTip("shard-0", ShardPos.Beginning, 100)
+      assert(end === svc.latestPosition("shard-0") && atTip)
+      assert(stub.requests("GetRecords").size - before === 1,
+        "no empty page after the tip page")
+      val (capped, cappedAtTip) =
+        svc.positionAfterAtTip("shard-0", ShardPos.Beginning, 2)
+      assert(ShardPos.ordering.lt(capped, end) && !cappedAtTip)
+    }
+  }
+
   test("a read whose range ends at the shard's last record stops on that " +
       "page: exactly one GetRecords") {
     withStub(shards = 1) { (stub, svc) =>
