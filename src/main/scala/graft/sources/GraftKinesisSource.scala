@@ -4,6 +4,7 @@ import java.util
 import graft.config.InitialPosition
 import graft.models.Envelope
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -173,32 +174,39 @@ final class GraftKinesisScan(options: Map[String, String],
 
   /** Bounded snapshot read of the stream (backfill/replay as a batch
     * table): every admitted shard from TRIM_HORIZON to the current
-    * latest. */
-  override def toBatch: Batch = new Batch {
+    * latest. Spark plans a scan more than once (physical planning, then
+    * the copy `prepareForExecution` makes, each calling `toBatch` and
+    * `planInputPartitions`), so the scan fixes its snapshot once: every
+    * copy reads the same ranges, and the listing is paid once. */
+  override lazy val toBatch: Batch = new Batch {
     private val serviceId = ShardServiceRegistry.resolveId(options)
-    override def planInputPartitions(): Array[InputPartition] = {
+    override def planInputPartitions(): Array[InputPartition] = partitions
+    private lazy val partitions: Array[InputPartition] = {
       val service = ShardServiceRegistry.get(serviceId)
+      // one listing answers the reshard check, the key routing and the
+      // shard list (over the wire, each listing is a ListShards fold)
+      val topology = service.shardTopology()
       // key-routing pruning is only sound while ONE routing epoch covers
       // the whole stream: after a split/merge, records in closed parents
       // (and in open shards written pre-reshard) were routed over a
       // different shard list, so the current mapping can't prune them.
       // Degrade to no key pruning the moment lineage metadata shows a
       // reshard ever happened. shardId pushdown stays exact regardless.
-      val resharded = service.listShards().exists { s =>
-        val i = service.shardInfo(s); i.closed || i.parentIds.nonEmpty
-      }
-      // key-routed shards resolve against the UNSORTED openShards() order
-      // — the exact IndexedSeq the producer transport routed over
+      val resharded = topology.exists(i => i.closed || i.parentIds.nonEmpty)
+      // key-routed shards resolve against the UNSORTED open shards in
+      // listing order (`openShards()`) — the exact IndexedSeq the
+      // producer transport routed over; with no reshard, every listed
+      // shard is open
       val keyShards: Option[Set[String]] =
         if (resharded) None
         else allowedKeys.map { keys =>
-          val routed = service.openShards().toIndexedSeq
+          val routed = topology.map(_.shardId).toIndexedSeq
           keys.map(k => KeyRouting.shardFor(k, routed))
         }
       // `shard-filter` option (static assignment) composes with pushdown
       val optFilter: Option[Set[String]] = options.get("shard-filter")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      val shards = service.listShards().sorted
+      val shards = topology.map(_.shardId).sorted
         .filter(s => allowedShards.forall(_.contains(s)) &&
           optFilter.forall(_.contains(s)) &&
           keyShards.forall(_.contains(s)))
@@ -620,46 +628,81 @@ final class GraftShardReaderFactory(fieldNames: Array[String])
 /** Reads one shard range, deaggregating producer-aggregated records into
   * sub-records (consecutive subSeqNo) — the KCL `UserRecord` semantics
   * (S13). Emits envelope rows in per-shard order.
+  *
+  * One row is reused for every sub-record: the scan's `UnsafeProjection`
+  * copies each row out before `next()` is called again. Only the fields
+  * of the pruned schema are set (notably, unread payload bytes are never
+  * touched); the stream and shard names are encoded once per reader and
+  * the sequence number once per wire record.
   */
 final class GraftShardPartitionReader(p: GraftShardInputPartition,
     fieldNames: Array[String]) extends PartitionReader[InternalRow] {
+  import GraftShardPartitionReader._
 
   private val service = ShardServiceRegistry.get(p.serviceId)
   private val raw = service.read(p.shardId, p.from, p.to)
-  private var subs: Iterator[InternalRow] = Iterator.empty
-  private var current: InternalRow = _
-
-  // per-field extractors for the pruned schema: unneeded envelope fields
-  // (notably the payload bytes) are never materialized
-  private type Extract = (RawShardRecord, SubRecord, Long) => Any
-  private val extractors: Array[Extract] = fieldNames.map {
-    case "streamName" => (_, _, _) => UTF8String.fromString(p.streamName)
-    case "shardId" => (_, _, _) => UTF8String.fromString(p.shardId)
-    case "partitionKey" =>
-      (_, sub, _) => UTF8String.fromString(sub.partitionKey)
-    case "seqNo" =>
-      (r, _, _) => Decimal(scala.math.BigDecimal(r.seqNo), 38, 0)
-    case "subSeqNo" => (_, _, i) => i
-    case "data" => (_, sub, _) => sub.data
-    case "approxArrivalTs" => (r, _, _) => r.arrivalEpochMicros
+  private val fields: Array[Int] = fieldNames.map {
+    case "streamName" => StreamName
+    case "shardId" => ShardId
+    case "partitionKey" => PartitionKey
+    case "seqNo" => SeqNo
+    case "subSeqNo" => SubSeqNo
+    case "data" => Data
+    case "approxArrivalTs" => ArrivalTs
     case other => throw new IllegalArgumentException(
       s"unknown envelope field: $other")
   }
+  private val row = new GenericInternalRow(fields.length)
+  private val streamName = UTF8String.fromString(p.streamName)
+  private val shardId = UTF8String.fromString(p.shardId)
+  private val needsSeqNo = fields.contains(SeqNo)
 
-  private def expand(r: RawShardRecord): Iterator[InternalRow] =
-    r.subRecords.iterator.zipWithIndex
-      // resume mid-aggregate: skip sub-records at/before the from position
-      .filter { case (_, i) =>
-        r.seqNo != p.from.seqNo || i.toLong > p.from.subSeqNo
-      }
-      .map { case (sub, i) =>
-        InternalRow.fromSeq(extractors.map(_(r, sub, i.toLong)).toSeq)
-      }
+  // the wire record being expanded, its next sub-record and that one's
+  // index (its subSeqNo)
+  private var rec: RawShardRecord = _
+  private var subs: Iterator[SubRecord] = Iterator.empty
+  private var subSeqNo = 0L
+  private var seqNo: Decimal = _
 
   override def next(): Boolean = {
-    while (!subs.hasNext && raw.hasNext) subs = expand(raw.next())
-    if (subs.hasNext) { current = subs.next(); true } else false
+    while (!subs.hasNext) {
+      if (!raw.hasNext) return false
+      rec = raw.next()
+      if (needsSeqNo) seqNo = Decimal(scala.math.BigDecimal(rec.seqNo), 38, 0)
+      // resume mid-aggregate: skip sub-records at/before the from position
+      val skip =
+        if (rec.seqNo != p.from.seqNo) 0
+        else (math.min(p.from.subSeqNo, Int.MaxValue - 1L) + 1L).max(0L).toInt
+      subs = rec.subRecords.iterator.drop(skip)
+      subSeqNo = skip.toLong
+    }
+    val sub = subs.next()
+    var i = 0
+    while (i < fields.length) {
+      fields(i) match {
+        case StreamName => row.update(i, streamName)
+        case ShardId => row.update(i, shardId)
+        case PartitionKey => row.update(i, UTF8String.fromString(sub.partitionKey))
+        case SeqNo => row.update(i, seqNo)
+        case SubSeqNo => row.setLong(i, subSeqNo)
+        case Data => row.update(i, sub.data)
+        case ArrivalTs => row.setLong(i, rec.arrivalEpochMicros)
+      }
+      i += 1
+    }
+    subSeqNo += 1
+    true
   }
-  override def get(): InternalRow = current
+  override def get(): InternalRow = row
   override def close(): Unit = ()
+}
+
+object GraftShardPartitionReader {
+  private final val StreamName = 0
+  private final val ShardId = 1
+  private final val PartitionKey = 2
+  private final val SeqNo = 3
+  private final val SubSeqNo = 4
+  private final val Data = 5
+  private final val ArrivalTs = 6
 }

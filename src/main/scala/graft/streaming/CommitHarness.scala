@@ -1,9 +1,13 @@
 package graft.streaming
 
 import graft.config.ConsumerConf
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, Encoder, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 import scala.util.control.NonFatal
 
 /** The reference's batch state machine (ConsumerWorker, S3/S4/S8/S15 in
@@ -32,8 +36,12 @@ import scala.util.control.NonFatal
   * Everything here is distributed: per-record attempts run in
   * `mapPartitions` on executors, the retry loop on the driver only
   * orchestrates Dataset handles (no row ever reaches the driver). Each
-  * round is one Spark job: the job that tallies the round's results also
-  * fills its checkpoint.
+  * round is one Spark job, and a round keeps only its failures: each
+  * partition emits its failed records plus one row counting every record
+  * it attempted, and the job that tallies those rows also fills the
+  * round's local checkpoint. The next round scans only that checkpoint,
+  * so a batch's succeeded records are never held; the last round's
+  * checkpoint backs the dead-letter Dataset.
   */
 object CommitHarness {
 
@@ -63,12 +71,18 @@ object CommitHarness {
       try attempt(t)
       catch { case NonFatal(_) => false }
 
-    implicit val tupleEnc: Encoder[(T, Boolean)] =
-      Encoders.tuple(implicitly[Encoder[T]], Encoders.scalaBoolean)
+    // a round's rows: a failed record (`failed`, its encoded `value`) or
+    // a partition's count of attempted records (`n`); the explicit
+    // `failed` column tells them apart for every T, primitives included
+    val valueSchema = encoderFor(implicitly[Encoder[T]]).schema
+    val roundSchema = StructType(Seq(
+      StructField("failed", BooleanType, nullable = false),
+      StructField("n", LongType, nullable = false),
+      StructField("value", valueSchema, nullable = true)))
 
     var total = 0L
     var pending = batch
-    var toFree: List[Dataset[(T, Boolean)]] = Nil
+    var toFree: Option[RDD[InternalRow]] = None
     var pendingCount = 0L
     var attemptsMade = 0
     val maxAttempts = conf.failedMessageRetries + 1
@@ -76,28 +90,37 @@ object CommitHarness {
     // the source is read once for both
     while (attemptsMade == 0 ||
         (pendingCount > 0 && attemptsMade < maxAttempts)) {
+      val enc = GraftBridge.boundEncoder(implicitly[Encoder[T]], pending)
       // localCheckpoint severs lineage: the (side-effecting) processor is
       // invoked exactly once per record per round — a later action on the
       // dead-letter Dataset must not re-run user code (the reference's
       // ack bookkeeping is similarly write-once,
       // main/consumer/ConsumerWorker.scala:368-383). The tally job fills
       // the lazy checkpoint and cuts the lineage when it ends
-      val results = pending.map(t => (t, safe(t))).localCheckpoint(eager = false)
-      val rdd = results.queryExecution.toRdd
-      val tally = rdd.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) => {
+      val round = pending.queryExecution.toRdd.mapPartitions { rows =>
+        val decode = enc.createDeserializer()
+        val encode = enc.createSerializer()
+        var n = 0L
+        rows.map { r => n += 1; decode(r) }
+          .filterNot(safe)
+          .map(t => InternalRow(true, 0L, encode(t).copy())) ++
+          Iterator.single(InternalRow(false, n, null))
+      }.localCheckpoint()
+      val tally = round.sparkContext.runJob(round, (rows: Iterator[InternalRow]) => {
         var n, failed = 0L
-        rows.foreach { r => n += 1; if (!r.getBoolean(1)) failed += 1 }
+        rows.foreach { r => if (r.getBoolean(0)) failed += 1 else n += r.getLong(1) }
         (n, failed)
       })
       if (attemptsMade == 0) total = tally.map(_._1).sum
       pendingCount = tally.map(_._2).sum
       // previous round's checkpoint blocks are no longer referenced once
-      // this round's results are checkpointed — free them now; the last
+      // this round's failures are checkpointed — free them now; the last
       // round backs the returned dead-letter Dataset and is freed by
       // freeDeadLetters (runStream does this after the dead-letter write)
-      toFree.foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
-      toFree = List(results)
-      pending = results.filter(!_._2).map(_._1)
+      toFree.foreach(_.unpersist(blocking = false))
+      toFree = Some(round)
+      pending = GraftBridge.ofInternalRows(batch.sparkSession, round, roundSchema)
+        .where(col("failed")).select("value.*").as[T]
       attemptsMade += 1
     }
     val allowed = conf.allowedFailures(total)
@@ -111,7 +134,7 @@ object CommitHarness {
   /** Release the checkpoint storage behind the dead-letter Dataset
     * returned by [[processBatch]] (call after consuming it). */
   def freeDeadLetters(dead: Dataset[_]): Unit =
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(dead)
+    GraftBridge.unpersistCheckpoint(dead)
 
   /** Wire the harness into a streaming query: per-batch retry/tolerance
     * processing with dead letters appended to a parquet path (the

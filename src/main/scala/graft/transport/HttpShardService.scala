@@ -1,10 +1,12 @@
 package graft.transport
 
+import com.fasterxml.jackson.core.{JsonParseException, JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.sources.{RawShardRecord, ShardInfo, ShardPos, ShardService}
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** Retry/backoff policy for wire calls — the SDK taxonomy: retry 5xx,
@@ -72,6 +74,7 @@ final class HttpShardService(
     val metrics: graft.metrics.MetricsRecorder =
       graft.metrics.MetricsRecorder.Noop) extends ShardService {
   import KinesisWire._
+  import HttpShardService.{LastRecord, expect, recordFields}
 
   @transient private lazy val http: HttpClient = {
     HttpShardService.initDnsCacheTtl()
@@ -95,14 +98,21 @@ final class HttpShardService(
   /** Total wire requests issued (retries included) — spec observability. */
   val requestCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private[transport] def call(action: String, body: ObjectNode): JsonNode = {
+  private[transport] def call(action: String, body: ObjectNode): JsonNode =
+    call(action, bytes(body))(parse)
+
+  /** One wire call with the retry taxonomy: `payload` is the request
+    * body, `decode` reads a 200 response body. The decode runs inside
+    * the retry loop, so a body it cannot read (a `JacksonException` is
+    * an `IOException`) is retried like a failed connection. */
+  private[transport] def call[A](action: String, payload: Array[Byte])(
+      decode: Array[Byte] => A): A = {
     var attempt = 0
     while (true) {
-      val failure: Either[Throwable, JsonNode] =
+      val failure: Either[Throwable, A] =
         try {
           requestCount.incrementAndGet()
           val uri = URI.create(endpoint + "/")
-          val payload = bytes(body)
           val builder = HttpRequest.newBuilder(uri)
             .header("Content-Type", ContentType)
             .header(TargetHeader, TargetPrefix + action)
@@ -148,7 +158,7 @@ final class HttpShardService(
           val resp =
             try http.send(req, HttpResponse.BodyHandlers.ofByteArray())
             finally connectionWindow.release()
-          if (resp.statusCode() == 200) Right(parse(resp.body()))
+          if (resp.statusCode() == 200) Right(decode(resp.body()))
           else {
             val err = try parse(resp.body()) catch { case _: Exception => null }
             val tpe = Option(err).flatMap(e => Option(e.get("__type")))
@@ -166,7 +176,7 @@ final class HttpShardService(
           case e: java.io.IOException => Left(e)
         }
       failure match {
-        case Right(node) => return node
+        case Right(result) => return result
         case Left(e) =>
           val retryable = e match {
             case k: KinesisApiException => k.retryable
@@ -254,35 +264,66 @@ final class HttpShardService(
       r.put("SubSequenceNumber", from.subSeqNo)
     })._1
 
-  /** One GetRecords page, undecoded: (wire records, nextIterator or
-    * None at SHARD_END, whether it ends at the tip: `MillisBehindLatest`
-    * 0). Decoding is the caller's choice — the driver's pre-read needs
-    * only the last record of a page. */
-  private def getRecordsPage(shardId: String, iterator: String,
-      limit: Int): (IndexedSeq[JsonNode], Option[String], Boolean) = {
+  /** One GetRecords call, decoded in one pass of Jackson's streaming
+    * parser into a fresh `newPage()` (a retried call starts a new one):
+    * `record` reads each wire record into it (the parser on the
+    * record's START_OBJECT, to be left on its END_OBJECT) and returns
+    * its payload byte count. Returns (the page, nextIterator or None at
+    * SHARD_END, whether the page ends at the tip: `MillisBehindLatest`
+    * 0). */
+  private def getRecordsPage[S](shardId: String, iterator: String, limit: Int,
+      newPage: () => S)(record: (S, JsonParser) => Long)
+      : (S, Option[String], Boolean) = {
     val req = obj()
     req.put("ShardIterator", iterator)
     req.put("Limit", limit)
-    val resp = call("GetRecords", req)
-    val recs = resp.get("Records").elements().asScala.toVector
+    val (page, recs, payload, next, atTip) = call("GetRecords", bytes(req)) { body =>
+      val p = mapper.getFactory.createParser(body)
+      try {
+        val page = newPage()
+        var recs, payload = 0L
+        var next: Option[String] = None
+        var atTip = false
+        expect(p, p.nextToken(), JsonToken.START_OBJECT)
+        while (p.nextToken() == JsonToken.FIELD_NAME) {
+          val field = p.currentName()
+          val value = p.nextToken()
+          field match {
+            case "Records" =>
+              expect(p, value, JsonToken.START_ARRAY)
+              while (p.nextToken() == JsonToken.START_OBJECT) {
+                payload += record(page, p); recs += 1
+              }
+              expect(p, p.currentToken(), JsonToken.END_ARRAY)
+            case "NextShardIterator" =>
+              next = if (value == JsonToken.VALUE_NULL) None else Some(p.getText)
+            case "MillisBehindLatest" => atTip = p.getLongValue == 0L
+            case _ => p.skipChildren()
+          }
+        }
+        expect(p, p.currentToken(), JsonToken.END_OBJECT)
+        (page, recs, payload, next, atTip)
+      } finally p.close()
+    }
     // consumer-side counters (KCL ProcessTask re-expression): wire
     // records + payload bytes per shard, plus the request count the
     // per-shard dimension can't carry
     metrics.record("GetRecordsRequests", shardId, 1L)
-    if (recs.nonEmpty) {
-      metrics.record("RecordsFetched", shardId, recs.size.toLong)
-      metrics.record("BytesFetched", shardId,
-        recs.iterator.map(r => decodedLength(r.get("Data").asText())).sum)
+    if (recs > 0) {
+      metrics.record("RecordsFetched", shardId, recs)
+      metrics.record("BytesFetched", shardId, payload)
     }
-    (recs, Option(resp.get("NextShardIterator")).map(_.asText()),
-      Option(resp.get("MillisBehindLatest")).exists(_.asLong() == 0L))
+    (page, next, atTip)
   }
 
-  private def decodeRecord(r: JsonNode): RawShardRecord = {
-    val key = r.get("PartitionKey").asText()
-    RawShardRecord(key, BigInt(r.get("SequenceNumber").asText()),
-      r.get("ApproximateArrivalTimestamp").asLong(),
-      decodeData(key, b64d.decode(r.get("Data").asText())))
+  /** One wire record, fully decoded: `Data` base64-decodes straight to
+    * bytes, with no intermediate `String`. */
+  private def readRecord(page: ArrayBuffer[RawShardRecord], p: JsonParser): Long = {
+    var data: Array[Byte] = null
+    val (key, seqNo, arrival) = recordFields(p)(q => data = q.getBinaryValue)
+    if (data == null) throw new JsonParseException(p, "GetRecords record without Data")
+    page += RawShardRecord(key, BigInt(seqNo), arrival, decodeData(key, data))
+    data.length.toLong
   }
 
   private def posOf(r: RawShardRecord): ShardPos =
@@ -295,9 +336,10 @@ final class HttpShardService(
     * range again. The source resolves all shards of a trigger
     * concurrently, so a trigger waits about as long as its slowest
     * shard's round trips, not their sum, and each page is decoded only
-    * as far as the end offset needs: the record count from the JSON and
-    * the last record's sub-record count (no base64 or KPL decode of the
-    * rest). On an endpoint-backed stream, uncapped triggers avoid the
+    * as far as the end offset needs: one pass over the JSON counts the
+    * records and decodes each payload into one reused buffer, and only
+    * the last record is deaggregated, for its sub-record count. On an
+    * endpoint-backed stream, uncapped triggers avoid the
     * pre-read altogether (end offset = one LATEST iterator call, zero
     * data on the driver); the per-GetRecords page is bounded at 10000
     * wire records either way. The in-memory/test services compute this
@@ -314,12 +356,14 @@ final class HttpShardService(
     var pos = from
     var it = Option(iteratorAfter(shardId, from))
     var remaining = maxRecords
+    val last = new LastRecord
     while (remaining > 0 && it.isDefined) {
-      val (recs, next, atTip) =
-        getRecordsPage(shardId, it.get, math.min(remaining, 10000))
-      if (recs.nonEmpty) pos = posOf(decodeRecord(recs.last))
-      if (recs.isEmpty || atTip) return (pos, atTip)
-      remaining -= recs.size
+      val (page, next, atTip) = getRecordsPage(shardId, it.get,
+          math.min(remaining, 10000), () => last.reset())(_.read(_))
+      if (page.count > 0) pos = ShardPos(BigInt(page.seqNo),
+        (decodeData(page.key, page.data.toByteArray).size - 1).toLong)
+      if (page.count == 0 || atTip) return (pos, atTip)
+      remaining -= page.count
       it = next
     }
     (pos, it.isEmpty)
@@ -333,8 +377,8 @@ final class HttpShardService(
     var it = Option(iteratorAfter(shardId, from))
     var done = false
     while (!done && it.isDefined) {
-      val (page, next, _) = getRecordsPage(shardId, it.get, 10000)
-      val recs = page.map(decodeRecord)
+      val (recs, next, _) = getRecordsPage(shardId, it.get, 10000,
+        () => ArrayBuffer.empty[RawShardRecord])(readRecord)
       val inRange = recs.takeWhile(r => ShardPos.ordering.lteq(posOf(r), to))
       out ++= inRange
       done = recs.isEmpty || inRange.size < recs.size ||
@@ -351,15 +395,25 @@ final class HttpShardService(
     * the partial-failure shape the KPL retry loop consumes. */
   def putRecords(entries: Seq[(String, Array[Byte])])
       : Seq[Either[String, String]] = {
-    val req = obj()
-    req.put("StreamName", streamName)
-    val arr = req.putArray("Records")
+    // the body streams out of a JsonGenerator: `writeBinary` base64-
+    // encodes each payload straight into it, with no `String` between
+    val body = new java.io.ByteArrayOutputStream(
+      64 + entries.iterator.map(e => e._1.length + e._2.length * 4 / 3 + 40).sum)
+    val g = mapper.getFactory.createGenerator(body)
+    g.writeStartObject()
+    g.writeStringField("StreamName", streamName)
+    g.writeArrayFieldStart("Records")
     entries.foreach { case (key, data) =>
-      val o = arr.addObject()
-      o.put("PartitionKey", key)
-      o.put("Data", b64e.encodeToString(data))
+      g.writeStartObject()
+      g.writeStringField("PartitionKey", key)
+      g.writeFieldName("Data")
+      g.writeBinary(data)
+      g.writeEndObject()
     }
-    val resp = call("PutRecords", req)
+    g.writeEndArray()
+    g.writeEndObject()
+    g.close()
+    val resp = call("PutRecords", body.toByteArray)(parse)
     resp.get("Records").elements().asScala.map { r =>
       Option(r.get("ErrorCode")) match {
         case Some(code) => Left(code.asText())
@@ -370,6 +424,48 @@ final class HttpShardService(
 }
 
 object HttpShardService {
+  private[transport] def expect(p: JsonParser, got: JsonToken, want: JsonToken): Unit =
+    if (got != want) throw new JsonParseException(p,
+      s"GetRecords response: expected $want, found $got")
+
+  /** The fields of one wire record, the parser on its START_OBJECT:
+    * `data` reads the `Data` value (the parser on its VALUE_STRING). */
+  private[transport] def recordFields(p: JsonParser)(data: JsonParser => Unit)
+      : (String, String, Long) = {
+    var key, seqNo: String = null
+    var arrival = 0L
+    while (p.nextToken() == JsonToken.FIELD_NAME) {
+      val field = p.currentName()
+      p.nextToken()
+      field match {
+        case "PartitionKey" => key = p.getText
+        case "SequenceNumber" => seqNo = p.getText
+        case "ApproximateArrivalTimestamp" => arrival = p.getLongValue
+        case "Data" => data(p)
+        case _ => p.skipChildren()
+      }
+    }
+    if (key == null || seqNo == null)
+      throw new JsonParseException(p, "GetRecords record without key or sequence number")
+    (key, seqNo, arrival)
+  }
+
+  /** What the driver pre-read keeps of a GetRecords page: its record
+    * count and its last record, whose payload base64-decodes into one
+    * buffer reused across records and pages. */
+  private final class LastRecord {
+    var count = 0
+    var key, seqNo: String = _
+    val data = new java.io.ByteArrayOutputStream(1 << 16)
+    def reset(): LastRecord = { count = 0; this }
+    def read(p: JsonParser): Long = {
+      data.reset()
+      val (k, s, _) = recordFields(p)(_.readBinaryValue(data))
+      key = k; seqNo = s; count += 1
+      data.size().toLong
+    }
+  }
+
   /** JVM DNS cache TTL = 60 s, applied once when the first wire
     * client is built (reference main/consumer/KinesisConsumer.scala:
     * 233-234 does this at consumer init; SURVEY §7.4 "copy as-is").

@@ -90,15 +90,6 @@ object KinesisWire {
 
   val b64e: java.util.Base64.Encoder = java.util.Base64.getEncoder
   val b64d: java.util.Base64.Decoder = java.util.Base64.getDecoder
-
-  /** Byte length `b64d` decodes `b64` to, without decoding it: every 4
-    * characters carry 3 bytes, less one per `=` pad (a trailing group of
-    * 2 or 3 unpadded characters carries 1 or 2). */
-  def decodedLength(b64: String): Long = {
-    val chars = b64.length - (if (b64.endsWith("==")) 2
-      else if (b64.endsWith("=")) 1 else 0)
-    chars / 4 * 3L + chars % 4 * 3 / 4
-  }
 }
 
 /** Typed client-side view of the AWS JSON-1.1 error shape. `retryable`

@@ -66,22 +66,39 @@ object KplAggregation {
   }
 
   // ------------------------------------------------ protobuf writer --
-  private final class Writer {
-    private val out = new java.io.ByteArrayOutputStream(256)
+  // Encoding is two passes over the sub-records: one sizes every Record
+  // message, the other writes the container straight into its final
+  // array, so no sub-record is staged in a buffer of its own.
+
+  private def varintSize(v: Long): Int = {
+    var n = 1
+    var x = v >>> 7
+    while (x != 0L) { n += 1; x >>>= 7 }
+    n
+  }
+
+  /** Size of a length-delimited field (1-byte key) carrying `len` bytes. */
+  private def fieldSize(len: Int): Int = 1 + varintSize(len.toLong) + len
+
+  private def tagSize(k: String, v: Option[String]): Int =
+    fieldSize(k.getBytes(Utf8).length) +
+      v.fold(0)(tv => fieldSize(tv.getBytes(Utf8).length))
+
+  private final class Writer(out: Array[Byte], var pos: Int) {
     def varint(v: Long): Unit = {
       var x = v
       while ((x & ~0x7FL) != 0L) {
-        out.write(((x & 0x7FL) | 0x80L).toInt); x >>>= 7
+        out(pos) = ((x & 0x7FL) | 0x80L).toByte; pos += 1; x >>>= 7
       }
-      out.write(x.toInt)
+      out(pos) = x.toByte; pos += 1
     }
-    private def key(field: Int, wireType: Int): Unit =
-      varint(((field.toLong << 3) | wireType.toLong))
-    def uint64(field: Int, v: Long): Unit = { key(field, 0); varint(v) }
-    def lengthDelimited(field: Int, bytes: Array[Byte]): Unit = {
-      key(field, 2); varint(bytes.length.toLong); out.write(bytes, 0, bytes.length)
+    // every field number here is below 16: its key is one byte
+    def uint64(field: Int, v: Long): Unit = { varint((field << 3).toLong); varint(v) }
+    def header(field: Int, len: Int): Unit = { varint(((field << 3) | 2).toLong); varint(len.toLong) }
+    def bytes(field: Int, b: Array[Byte]): Unit = {
+      header(field, b.length)
+      System.arraycopy(b, 0, out, pos, b.length); pos += b.length
     }
-    def toBytes: Array[Byte] = out.toByteArray
   }
 
   /** Pack sub-records into one KPL aggregated record. Partition keys
@@ -101,32 +118,54 @@ object KplAggregation {
         if (!ehkIndex.contains(e)) ehkIndex.put(e, ehkIndex.size.toLong)
       }
     }
-    val w = new Writer
-    keyIndex.keysIterator.foreach(k => w.lengthDelimited(1, k.getBytes(Utf8)))
-    ehkIndex.keysIterator.foreach(k => w.lengthDelimited(2, k.getBytes(Utf8)))
+    val keys = keyIndex.keysIterator.map(_.getBytes(Utf8)).toArray
+    val ehks = ehkIndex.keysIterator.map(_.getBytes(Utf8)).toArray
+    val recSizes = new Array[Int](subRecords.size)
+    var bodyLen = keys.iterator.map(k => fieldSize(k.length)).sum +
+      ehks.iterator.map(k => fieldSize(k.length)).sum
+    var i = 0
     subRecords.foreach { s =>
-      val rw = new Writer
-      rw.uint64(1, keyIndex(s.partitionKey))
-      s.explicitHashKey.foreach(e => rw.uint64(2, ehkIndex(e)))
-      rw.lengthDelimited(3, s.data)
-      s.tags.foreach { case (k, v) =>
-        val tw = new Writer
-        tw.lengthDelimited(1, k.getBytes(Utf8))
-        v.foreach(tv => tw.lengthDelimited(2, tv.getBytes(Utf8)))
-        rw.lengthDelimited(4, tw.toBytes)
-      }
-      w.lengthDelimited(3, rw.toBytes)
+      recSizes(i) = 1 + varintSize(keyIndex(s.partitionKey)) +
+        s.explicitHashKey.fold(0)(e => 1 + varintSize(ehkIndex(e))) +
+        fieldSize(s.data.length) +
+        s.tags.iterator.map { case (k, v) => fieldSize(tagSize(k, v)) }.sum
+      bodyLen += fieldSize(recSizes(i))
+      i += 1
     }
-    val body = w.toBytes
-    val buf = java.nio.ByteBuffer.allocate(Magic.length + body.length + Md5Len)
-    buf.put(Magic).put(body).put(md5(body, 0, body.length))
-    buf.array()
+    val out = new Array[Byte](Magic.length + bodyLen + Md5Len)
+    System.arraycopy(Magic, 0, out, 0, Magic.length)
+    val w = new Writer(out, Magic.length)
+    keys.foreach(w.bytes(1, _))
+    ehks.foreach(w.bytes(2, _))
+    i = 0
+    subRecords.foreach { s =>
+      w.header(3, recSizes(i))
+      w.uint64(1, keyIndex(s.partitionKey))
+      s.explicitHashKey.foreach(e => w.uint64(2, ehkIndex(e)))
+      w.bytes(3, s.data)
+      s.tags.foreach { case (k, v) =>
+        w.header(4, tagSize(k, v))
+        w.bytes(1, k.getBytes(Utf8))
+        v.foreach(tv => w.bytes(2, tv.getBytes(Utf8)))
+      }
+      i += 1
+    }
+    System.arraycopy(md5(out, Magic.length, bodyLen), 0, out, w.pos, Md5Len)
+    out
   }
 
   // ------------------------------------------------ protobuf reader --
   private object Malformed extends RuntimeException("malformed protobuf") {
     override def fillInStackTrace(): Throwable = this // control-flow only
   }
+
+  // field keys (field number << 3 | wire type) the decoder acts on
+  private final val Key1Len = 10L // 1, length-delimited
+  private final val Key2Len = 18L // 2, length-delimited
+  private final val Key3Len = 26L // 3, length-delimited
+  private final val Key4Len = 34L // 4, length-delimited
+  private final val Key1Varint = 8L // 1, varint
+  private final val Key2Varint = 16L // 2, varint
 
   private final class Reader(buf: Array[Byte], var pos: Int, val end: Int) {
     def hasMore: Boolean = pos < end
@@ -142,24 +181,35 @@ object KplAggregation {
       }
       throw Malformed
     }
-    /** Returns (fieldNumber, wireType). */
-    def tag(): (Int, Int) = {
-      val t = varint()
-      val wt = (t & 0x7L).toInt
-      val f = (t >>> 3)
+    /** The next field's key: field number << 3 | wire type. */
+    def key(): Long = {
+      val k = varint()
+      val f = k >>> 3
       if (f <= 0 || f > Int.MaxValue) throw Malformed
-      (f.toInt, wt)
+      k
     }
-    def lengthDelimited(): (Int, Int) = { // (offset, length) into buf
+    /** Reads a length prefix, checked against the bytes left; the
+      * field's bytes start at `pos`. */
+    def length(): Int = {
       val len = varint()
       if (len < 0 || len > (end - pos).toLong) throw Malformed
-      val off = pos; pos += len.toInt
-      (off, len.toInt)
+      len.toInt
     }
-    def skip(wireType: Int): Unit = wireType match {
+    def str(): String = {
+      val len = length()
+      val s = new String(buf, pos, len, Utf8); pos += len
+      s
+    }
+    /** A reader over the embedded message at `pos`, which it moves past. */
+    def message(): Reader = {
+      val len = length()
+      val m = new Reader(buf, pos, pos + len); pos += len
+      m
+    }
+    def skip(key: Long): Unit = (key & 0x7L).toInt match {
       case 0 => varint(); ()
       case 1 => if (end - pos < 8) throw Malformed else pos += 8
-      case 2 => lengthDelimited(); ()
+      case 2 => val len = length(); pos += len
       case 5 => if (end - pos < 4) throw Malformed else pos += 4
       case _ => throw Malformed // groups (3/4) never appear here
     }
@@ -168,7 +218,11 @@ object KplAggregation {
   /** Strict structural deaggregation: `Some(subRecords)` iff the data
     * is a verifiably well-formed aggregated record; `None` means
     * "treat as a plain record" (KCL's fallback for magic-prefixed
-    * payloads that fail the checksum or parse). */
+    * payloads that fail the checksum or parse).
+    *
+    * Two passes over the body, since protobuf fields may arrive in any
+    * order: the first collects the key tables and counts the records,
+    * the second builds each [[SubRecord]] against the complete tables. */
   def tryDeaggregate(data: Array[Byte]): Option[Seq[SubRecord]] = {
     if (!hasMagic(data)) return None
     val bodyOff = Magic.length
@@ -180,80 +234,65 @@ object KplAggregation {
       i += 1
     }
     try {
-      val keys = Vector.newBuilder[String]
-      var nKeys = 0
-      val ehks = Vector.newBuilder[String]
-      var nEhks = 0
-      // (partitionKeyIndex, ehkIndex | -1, dataOff, dataLen, tags) per
-      // record, resolved after the key tables are complete (protobuf
-      // fields may arrive in any order)
-      val recs =
-        Vector.newBuilder[(Long, Long, Int, Int, Seq[(String, Option[String])])]
+      val keys = scala.collection.mutable.ArrayBuffer.empty[String]
+      val ehks = scala.collection.mutable.ArrayBuffer.empty[String]
       var nRecs = 0
       val r = new Reader(data, bodyOff, bodyOff + bodyLen)
       while (r.hasMore) {
-        r.tag() match {
-          case (1, 2) => // partition_key_table
-            val (off, len) = r.lengthDelimited()
-            keys += new String(data, off, len, Utf8)
-            nKeys += 1
-          case (2, 2) => // explicit_hash_key_table
-            val (off, len) = r.lengthDelimited()
-            ehks += new String(data, off, len, Utf8)
-            nEhks += 1
-          case (3, 2) => // records
-            val (off, len) = r.lengthDelimited()
-            val rr = new Reader(data, off, off + len)
-            var pkIdx = -1L
-            var ehkIdx = -1L
-            var dOff = -1
-            var dLen = -1
-            val tags = Vector.newBuilder[(String, Option[String])]
-            while (rr.hasMore) {
-              rr.tag() match {
-                case (1, 0) => pkIdx = rr.varint()
-                case (2, 0) => ehkIdx = rr.varint()
-                case (3, 2) =>
-                  val (o, l) = rr.lengthDelimited(); dOff = o; dLen = l
-                case (4, 2) => // Tag { required key = 1; optional value = 2 }
-                  val (to, tl) = rr.lengthDelimited()
-                  val tr = new Reader(data, to, to + tl)
-                  var tKey: String = null
-                  var tVal: Option[String] = None
-                  while (tr.hasMore) {
-                    tr.tag() match {
-                      case (1, 2) =>
-                        val (ko, kl) = tr.lengthDelimited()
-                        tKey = new String(data, ko, kl, Utf8)
-                      case (2, 2) =>
-                        val (vo, vl) = tr.lengthDelimited()
-                        tVal = Some(new String(data, vo, vl, Utf8))
-                      case (_, wt) => tr.skip(wt)
-                    }
-                  }
-                  if (tKey == null) throw Malformed // required tag key
-                  tags += ((tKey, tVal))
-                case (_, wt) => rr.skip(wt)
-              }
-            }
-            if (pkIdx < 0 || dOff < 0) throw Malformed // required fields
-            recs += ((pkIdx, ehkIdx, dOff, dLen, tags.result()))
-            nRecs += 1
-          case (_, wt) => r.skip(wt)
+        r.key() match {
+          case Key1Len => keys += r.str() // partition_key_table
+          case Key2Len => ehks += r.str() // explicit_hash_key_table
+          case k =>
+            if (k == Key3Len) nRecs += 1 // records: read in pass two
+            r.skip(k)
         }
       }
       if (nRecs == 0) return None // no sub-records: not an aggregate
-      val keyTable = keys.result()
-      val ehkTable = ehks.result()
-      val out = recs.result().map { case (pkIdx, ehkIdx, off, len, tags) =>
-        if (pkIdx >= nKeys) throw Malformed // dangling key index
-        if (ehkIdx >= nEhks) throw Malformed // dangling EHK index
-        SubRecord(keyTable(pkIdx.toInt),
-          java.util.Arrays.copyOfRange(data, off, off + len),
-          if (ehkIdx >= 0) Some(ehkTable(ehkIdx.toInt)) else None,
-          tags)
+      val out = new Array[SubRecord](nRecs)
+      var n = 0
+      r.pos = bodyOff
+      while (r.hasMore) {
+        val k = r.key()
+        if (k != Key3Len) r.skip(k)
+        else {
+          val rr = r.message()
+          var pkIdx = -1L
+          var ehkIdx = -1L
+          var dOff = -1
+          var dLen = -1
+          var tags: List[(String, Option[String])] = Nil
+          while (rr.hasMore) {
+            rr.key() match {
+              case Key1Varint => pkIdx = rr.varint()
+              case Key2Varint => ehkIdx = rr.varint()
+              case Key3Len => dLen = rr.length(); dOff = rr.pos; rr.pos += dLen
+              case Key4Len => // Tag { required key = 1; optional value = 2 }
+                val tr = rr.message()
+                var tKey: String = null
+                var tVal: Option[String] = None
+                while (tr.hasMore) {
+                  tr.key() match {
+                    case Key1Len => tKey = tr.str()
+                    case Key2Len => tVal = Some(tr.str())
+                    case tk => tr.skip(tk)
+                  }
+                }
+                if (tKey == null) throw Malformed // required tag key
+                tags = (tKey, tVal) :: tags
+              case rk => rr.skip(rk)
+            }
+          }
+          if (pkIdx < 0 || dOff < 0) throw Malformed // required fields
+          if (pkIdx >= keys.size) throw Malformed // dangling key index
+          if (ehkIdx >= ehks.size) throw Malformed // dangling EHK index
+          out(n) = SubRecord(keys(pkIdx.toInt),
+            java.util.Arrays.copyOfRange(data, dOff, dOff + dLen),
+            if (ehkIdx >= 0) Some(ehks(ehkIdx.toInt)) else None,
+            tags.reverse)
+          n += 1
+        }
       }
-      Some(out)
+      Some(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
     } catch { case Malformed => None }
   }
 }

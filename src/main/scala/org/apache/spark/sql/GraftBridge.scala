@@ -18,6 +18,22 @@ object GraftBridge {
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `encoder` resolved against `ds`'s output and bound to its ordinals,
+    * as a Dataset binds its own deserializer: it decodes the rows of
+    * `ds.queryExecution.toRdd`. */
+  def boundEncoder[T](encoder: Encoder[T],
+      ds: Dataset[_]): catalyst.encoders.ExpressionEncoder[T] =
+    catalyst.encoders.encoderFor(encoder).resolveAndBind(
+      ds.queryExecution.analyzed.output,
+      ds.sparkSession.asInstanceOf[classic.SparkSession].sessionState.analyzer)
+
+  /** A DataFrame over catalyst rows (`SparkSession.internalCreateDataFrame`
+    * is `private[sql]`): a `LogicalRDD` scan of `rows`. */
+  def ofInternalRows(spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+      schema: types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
   /** Free the block-manager storage behind a `localCheckpoint`ed Dataset.
     * `Dataset.unpersist()` only consults the CacheManager, which never
     * sees checkpoint RDDs — without this, every checkpointed retry round

@@ -92,6 +92,65 @@ class CommitHarnessSpec extends SparkSpec {
       (1 to 99).forall(i => attemptsOf("jobs", s"j$i") == 1))
   }
 
+  /** Ids 1..600 keyed by `runId`: multiples of 200 always fail,
+    * other multiples of 50 fail on their first attempt only. */
+  private def idAttempt(runId: String): Long => Boolean = {
+    val attempt = mkAttempt(runId)
+    (id: Long) => attempt(
+      if (id % 200 == 0) s"911-$id" else if (id % 50 == 0) s"flaky-$id" else s"p$id")
+  }
+
+  test("a Dataset[Long] and a Dataset[String] batch retry, dead-letter " +
+      "and count exactly as a case-class batch") {
+    import spark.implicits._
+    val ids = (1L to 600L).toVector
+    val c = conf(1, 0.5) // floor(0.5% of 600) = 3 allowed
+    val longs = processBatch(ids.toDS(), idAttempt("t-long"), c)
+    val byString = idAttempt("t-string")
+    val strings = processBatch(ids.map(i => s"r$i").toDS(),
+      (s: String) => byString(s.drop(1).toLong), c)
+    val byRec = idAttempt("t-rec")
+    val recs = processBatch(ids.map(i => HarnessRec(i, s"r$i")).toDS(),
+      (r: HarnessRec) => byRec(r.id), c)
+    val stats = BatchStats(600, 597, 3, 2)
+    assert(Seq(longs._2, strings._2, recs._2) === Seq(stats, stats, stats))
+    val dead = Seq(200L, 400L, 600L)
+    assert(longs._1.collect().sorted.toSeq === dead)
+    assert(strings._1.collect().sorted.toSeq === dead.map(i => s"r$i"))
+    assert(recs._1.collect().sortBy(_.id).toSeq === dead.map(i => HarnessRec(i, s"r$i")))
+    // the dead letters keep the batch's own columns
+    assert(longs._1.columns === ids.toDS().columns)
+    assert(recs._1.columns === Array("id", "payload"))
+    Seq("t-long", "t-string", "t-rec").foreach { run =>
+      val counts = ids.map { i =>
+        if (i % 200 == 0) attemptsOf(run, s"911-$i")
+        else if (i % 50 == 0) attemptsOf(run, s"flaky-$i")
+        else attemptsOf(run, s"p$i")
+      }
+      assert(counts === ids.map(i => if (i % 50 == 0) 2 else 1), run)
+    }
+    Seq(longs._1, strings._1, recs._1).foreach(freeDeadLetters)
+  }
+
+  test("a round checkpoints only its failures and one count row per " +
+      "partition") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val batch = (Seq("911a", "911b") ++ (1 to 998).map(i => s"p$i")).toDS()
+      .repartition(4)
+    val before = sc.getPersistentRDDs.keySet
+    val (dead, stats) = processBatch(batch, mkAttempt("stored"), conf(0, 100.0))
+    assert(stats == BatchStats(1000, 998, 2, 1))
+    val kept = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(kept.size === 1, "one checkpoint: the round's")
+    val (id, rdd) = kept.head
+    val info = sc.getRDDStorageInfo.find(_.id == id)
+    assert(info.exists(i => i.numCachedPartitions == 4 && i.memSize > 0), info)
+    assert(rdd.count() <= 2 + 4)
+    assert(dead.collect().sorted.toSeq === Seq("911a", "911b"))
+    freeDeadLetters(dead)
+  }
+
   test("an empty batch attempts nothing") {
     import spark.implicits._
     val (dead, stats) = processBatch(Seq.empty[String].toDS(),
@@ -212,6 +271,8 @@ class CommitHarnessSpec extends SparkSpec {
       "failed batch must be redelivered after restart")
   }
 }
+
+final case class HarnessRec(id: Long, payload: String)
 
 object CommitHarnessSpec {
   /** runId -> payload -> attempt count (JVM-shared; executors are local). */

@@ -1146,4 +1146,160 @@ class TransportSpec extends SparkSpec {
       assert(outcomes.asScala.forall(_.isDefined))
     }
   }
+
+  // -------------------------------------------- streaming codec -----
+
+  /** One shard holding every shape a GetRecords page carries: a plain
+    * record, a KPL aggregate with explicit hash keys and tags, a plain
+    * payload that starts with the KPL magic, an aggregate stored as an
+    * opaque blob (as a KPL producer's PutRecords leaves it), an empty
+    * payload and a unicode key over raw bytes. */
+  private def mixedShard(): (InMemoryShardService,
+      Seq[(String, Seq[(String, Seq[Byte], Option[String],
+        Seq[(String, Option[String])])])]) = {
+    def b(s: String) = s.getBytes(UTF_8)
+    val unlucky = KplAggregation.Magic ++ b("plain-bytes-that-only-look-aggregated")
+    val blob = KinesisWire.aggregate(Seq(SubRecord("b1", b("in-blob")),
+      SubRecord("b2", Array.emptyByteArray)))
+    val binary = Array[Byte](0, -1, 127, -128, 10)
+    val store = new InMemoryShardService("mixed", Seq("shard-0"))
+    Seq(
+      Seq(SubRecord("plain", b("p0"))),
+      Seq(SubRecord("agg-a", b("a0"), Some("170141183460469231731687303715884105727"),
+          Seq("src" -> Some("api"), "flag" -> None)),
+        SubRecord("agg-b", b("a1")),
+        SubRecord("agg-a", b("a2"), Some("1"))),
+      Seq(SubRecord("unlucky", unlucky)),
+      Seq(SubRecord("opaque", blob)),
+      Seq(SubRecord("empty", Array.emptyByteArray)),
+      Seq(SubRecord("ключ-ü", binary))
+    ).foreach(store.appendAssigned("shard-0", _))
+    // (wire partition key, decoded sub-records) per wire record
+    val expected = Seq(
+      "plain" -> Seq(("plain", b("p0").toSeq, None, Nil)),
+      "agg-a" -> Seq(
+        ("agg-a", b("a0").toSeq, Some("170141183460469231731687303715884105727"),
+          Seq("src" -> Some("api"), "flag" -> None)),
+        ("agg-b", b("a1").toSeq, None, Nil),
+        ("agg-a", b("a2").toSeq, Some("1"), Nil)),
+      "unlucky" -> Seq(("unlucky", unlucky.toSeq, None, Nil)),
+      "opaque" -> Seq(("b1", b("in-blob").toSeq, None, Nil),
+        ("b2", Seq.empty[Byte], None, Nil)),
+      "empty" -> Seq(("empty", Seq.empty[Byte], None, Nil)),
+      "ключ-ü" -> Seq(("ключ-ü", binary.toSeq, None, Nil)))
+    (store, expected)
+  }
+
+  test("GetRecords decode: a page mixing aggregated, plain, magic-" +
+      "prefixed-but-invalid, empty and EHK/tagged records decodes to the " +
+      "pinned records, with the store's sequence numbers and arrival " +
+      "times") {
+    val (store, expected) = mixedShard()
+    val stub = new KinesisWireStub(store)
+    try {
+      val svc = new HttpShardService(stub.endpoint, "mixed",
+        RetryPolicy(sleeper = _ => ()))
+      val top = ShardPos(BigInt(2).pow(159), Long.MaxValue)
+      val got = svc.read("shard-0", ShardPos.Beginning, top).toVector
+      val stored = store.read("shard-0", ShardPos.Beginning, top).toVector
+      assert(got.map(_.seqNo) === stored.map(_.seqNo))
+      assert(got.map(_.arrivalEpochMicros) === stored.map(_.arrivalEpochMicros))
+      assert(got.map(r => r.partitionKey -> r.subRecords.map(s =>
+        (s.partitionKey, s.data.toSeq, s.explicitHashKey, s.tags))) === expected)
+      // the pre-read ends after the last wire record's last sub-record
+      assert(svc.positionAfter("shard-0", ShardPos.Beginning, 100) ===
+        ShardPos(stored.last.seqNo, 0L))
+      assert(svc.positionAfter("shard-0", ShardPos.Beginning, 4) ===
+        ShardPos(stored(3).seqNo, 1L))
+    } finally stub.stop()
+  }
+
+  test("a garbled 200 GetRecords body is retried on both the read and " +
+      "the driver pre-read") {
+    withStub(shards = 1) { (stub, svc) =>
+      (1 to 3).foreach(n => stub.store.appendAssigned("shard-0",
+        Seq(SubRecord("k", s"v$n".getBytes(UTF_8)))))
+      val end = svc.latestPosition("shard-0")
+      stub.faults.garbleNext("GetRecords", 1)
+      val before = stub.requests("GetRecords").size
+      assert(svc.positionAfter("shard-0", ShardPos.Beginning, 10) === end)
+      stub.faults.garbleNext("GetRecords", 1)
+      assert(svc.read("shard-0", ShardPos.Beginning, end).map(r =>
+        new String(r.subRecords.head.data, UTF_8)).toVector ===
+        Seq("v1", "v2", "v3"))
+      assert(stub.requests("GetRecords").size - before === 4,
+        "one retry per garbled page")
+    }
+  }
+
+  test("the stub parses a signed PutRecords body into the entries sent: " +
+      "keys, binary and empty payloads, in order") {
+    withStub() { (stub, _) =>
+      stub.requireSigV4 = Some(StubSigV4(testCreds, "us-east-1"))
+      val svc = new HttpShardService(stub.endpoint, "wire",
+        RetryPolicy(sleeper = _ => ()),
+        sigv4 = Some(SigV4Config("us-east-1", testCreds)))
+      val entries = Seq(
+        "k1" -> "one".getBytes(UTF_8),
+        "ключ \"quoted\"\\" -> Array[Byte](0, -1, 127, -128),
+        "k3" -> Array.emptyByteArray,
+        "k4" -> Array.fill(70)(7.toByte))
+      assert(svc.putRecords(entries).forall(_.isRight))
+      val sent = stub.requests("PutRecords").last
+      assert(sent.get("StreamName").asText() === "wire")
+      assert(sent.get("Records").elements().asScala.map(e =>
+        e.get("PartitionKey").asText() ->
+          KinesisWire.b64d.decode(e.get("Data").asText()).toSeq).toVector ===
+        entries.map { case (k, d) => k -> d.toSeq })
+      val stored = Seq("shard-0", "shard-1").flatMap(s => stub.store.read(s,
+        ShardPos.Beginning, ShardPos(BigInt(2).pow(159), Long.MaxValue)))
+        .flatMap(_.subRecords).map(r => r.partitionKey -> r.data.toSeq)
+      assert(stored.toSet === entries.map { case (k, d) => k -> d.toSeq }.toSet)
+    }
+  }
+
+  test("a range read of aggregated records collects distinct rows: the " +
+      "reader's row is copied by the scan") {
+    val store = new InMemoryShardService("rows", Seq("shard-0", "shard-1"))
+    Seq("shard-0", "shard-1").foreach { s =>
+      (0 until 3).foreach { r => store.appendAssigned(s,
+        (0 until 4).map(i => SubRecord(s"$s-k$i", s"$s-$r-$i".getBytes(UTF_8)))) }
+    }
+    val stub = new KinesisWireStub(store)
+    try {
+      val rows = spark.read.format("graft-kinesis")
+        .option("endpoint", stub.endpoint).option("stream-name", "rows")
+        .load()
+        .selectExpr("streamName", "shardId", "partitionKey", "seqNo",
+          "subSeqNo", "CAST(data AS STRING)")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+          r.getDecimal(3).longValue, r.getLong(4), r.getString(5)))
+      val stored = Seq("shard-0", "shard-1").flatMap(s => store.read(s,
+        ShardPos.Beginning, ShardPos(BigInt(2).pow(159), Long.MaxValue))
+        .map(s -> _))
+      assert(rows.toSeq.sortBy(r => (r._2, r._4, r._5)) === stored.flatMap {
+        case (s, r) => r.subRecords.zipWithIndex.map { case (sub, i) =>
+          ("rows", s, sub.partitionKey, r.seqNo.toLong, i.toLong,
+            new String(sub.data, UTF_8))
+        }
+      })
+      assert(rows.map(_._6).distinct.length === 24)
+    } finally stub.stop()
+  }
+
+  test("a snapshot read plans from one ListShards listing: 8 shards") {
+    val store = new InMemoryShardService("snap", (0 until 8).map(i => s"shard-$i"))
+    (0 until 8).foreach(i => store.appendAssigned(s"shard-$i",
+      Seq(SubRecord(s"k$i", s"v$i".getBytes(UTF_8)))))
+    val stub = new KinesisWireStub(store, listShardsPageSize = 8)
+    try {
+      val df = spark.read.format("graft-kinesis")
+        .option("endpoint", stub.endpoint).option("stream-name", "snap")
+        .load()
+      val before = stub.requests("ListShards").size
+      assert(df.selectExpr("CAST(data AS STRING)").collect().map(_.getString(0))
+        .toSet === (0 until 8).map(i => s"v$i").toSet)
+      assert(stub.requests("ListShards").size - before === 1)
+    } finally stub.stop()
+  }
 }
