@@ -92,16 +92,26 @@ object Graph extends OperatorFamily {
     * candidate scores = exact long sums of sim_fp over owned items,
     * for users matching `targetFilter` and candidates the user does
     * NOT own. Returns (c, cand, score_fp, n_terms). The item
-    * vocabulary must be BOUNDED (the affinity matrix broadcasts).
-    * `brand` must be non-null: the dedup's `collect_set` silently
-    * drops NULL items, so a NULL brand would vanish from the matrix
-    * rather than count as an item.
+    * vocabulary must be BOUNDED (the affinity matrix and the brand
+    * dictionary broadcast). `brand` must be non-null: the dedup's
+    * `collect_set` silently drops NULL items, so a NULL brand would
+    * vanish from the matrix rather than count as an item.
     * Property-checked against brute force on random matrices
     * (Round8OpsSpec). Long-range note: co²·10⁹ needs the
     * DECIMAL(38,0) carrier past ~2e17 (see q196). The matrix is
     * materialized once — it feeds the item counts, both sides of the
-    * co-occurrence self-join, the target scan, and the ownership
-    * anti-join (5 consumers).
+    * co-occurrence self-join and the target scan.
+    *
+    * One-long-key rule: every broadcast hash join here keys on one
+    * long, so Spark builds a `LongHashedRelation`, sized to its rows. A
+    * string or multi-column key builds an `UnsafeHashedRelation`,
+    * whose map pins one whole `spark.buffer.pageSize` page (32 MiB on a
+    * 3 GB heap) on every executor for as long as the broadcast lives,
+    * even for a 25-row brand table. So the scoring runs on exact long
+    * brand ids: the cut numbers the distinct brands by their position
+    * in the sorted vocabulary (a dictionary, not a hash, so no two
+    * brands can share an id), and the names are re-attached by id at
+    * the end.
     */
   def itemCfScores(rMatIn: DataFrame, targetFilter: Column,
       materialize: Materialize = Materialize.LocalCheckpoint)
@@ -119,23 +129,50 @@ object Graph extends OperatorFamily {
     // lambda over string structs, while the co-partitioned self-join
     // stays whole-stage codegen — guide §1.2 step 2 feeding back into
     // step 1. Pair multiset is unchanged either way.
+    val owned = rMatIn.select(col("c"), col("brand"))
+      .groupBy(col("c"))
+      .agg(sort_array(collect_set(col("brand"))).as("bs"))
+    // the brand dictionary, built inside the cut: (bid, brand) with bid
+    // the brand's position in the sorted distinct vocabulary (one row
+    // before the posexplode; the vocabulary is bounded, see above). The
+    // string-keyed join that applies it runs in the cut's own job, and
+    // its relation is freed with that job's plan.
+    val dict = owned.select(explode(col("bs")).as("brand"))
+      .agg(sort_array(collect_set(col("brand"))).as("names"))
+      .select(posexplode(col("names")).as(Seq("bid", "brand")))
     val rMat = materialize(
-      rMatIn.select(col("c"), col("brand"))
-        .groupBy(col("c"))
-        .agg(sort_array(collect_set(col("brand"))).as("bs"))
-        .select(col("c"), explode(col("bs")).as("brand")))
-    val nPer = rMat.groupBy(col("brand")).agg(count(lit(1)).as("n"))
-    val co = rMat.as("x").join(rMat.as("y"),
+      owned.select(col("c"), explode(col("bs")).as("brand"))
+        .join(broadcast(dict), "brand")
+        .select(col("c"), col("bid").cast("long").as("bid"),
+          col("brand")))
+    val ids = rMat.select(col("c"), col("bid").as("brand"))
+    // grouped on (bid, brand): one aggregate gives the item counts and
+    // the id → name table (brand is a function of bid)
+    val counts = rMat.groupBy(col("bid"), col("brand"))
+      .agg(count(lit(1)).as("n"))
+    val co = ids.as("x").join(ids.as("y"),
         col("x.c") === col("y.c") && col("x.brand") < col("y.brand"))
       .groupBy(col("x.brand").as("bi"), col("y.brand").as("bj"))
       .agg(count(lit(1)).as("co"))
-    itemCfScoresFromCounts(rMat, nPer, co, targetFilter)
+    itemCfScoresFromCounts(ids,
+        counts.select(col("bid").as("brand"), col("n")), co, targetFilter)
+      .withColumnRenamed("cand", "cand_id")
+      .join(broadcast(counts.select(col("bid").as("cand_id"),
+        col("brand").as("cand"))), "cand_id")
+      .select(col("c"), col("cand"), col("score_fp"), col("n_terms"))
   }
 
   /** Scoring half of [[itemCfScores]], shared with the streaming twin
     * ([[StreamingOps.cfFold]] maintains `nPer`/`co` incrementally; this
     * scores them). `rMat` = the distinct (c, brand) matrix; `nPer` =
-    * (brand, n) item counts; `co` = (bi, bj, co) with bi < bj.
+    * (brand, n) item counts; `co` = (bi, bj, co) with bi < bj. The
+    * item key may be of any type (the batch surface passes long brand
+    * ids, the streaming twin brand names); it is `cand`'s type in the
+    * result. Broadcast hash joins key on the item alone, so a long key
+    * keeps every one a `LongHashedRelation` (see [[itemCfScores]]):
+    * owned candidates are dropped with a per-customer owned set
+    * (`array_contains`), not with a (c, cand) anti-join, whose
+    * two-column key would build an `UnsafeHashedRelation`.
     */
   def itemCfScoresFromCounts(rMat: DataFrame, nPer: DataFrame,
       co: DataFrame, targetFilter: Column): DataFrame = {
@@ -158,12 +195,15 @@ object Graph extends OperatorFamily {
       .select(col("bi"), col("bj"), col("sim_fp"))
     val simBoth = sim.unionByName(
       sim.select(col("bj").as("bi"), col("bi").as("bj"), col("sim_fp")))
+    // one row per target customer with its owned items; the explode
+    // keeps the c-partitioning, so the final (c, cand) aggregate needs
+    // no second exchange
     rMat.filter(targetFilter)
+      .groupBy(col("c")).agg(collect_list(col("brand")).as("owned"))
+      .select(col("c"), col("owned"), explode(col("owned")).as("brand"))
       .join(broadcast(simBoth), col("brand") === col("bi"))
-      .select(col("c"), col("bj").as("cand"), col("sim_fp"))
-      .join(rMat.withColumnRenamed("brand", "cand"),
-        Seq("c", "cand"), "left_anti")
-      .groupBy(col("c"), col("cand"))
+      .filter(!array_contains(col("owned"), col("bj")))
+      .groupBy(col("c"), col("bj").as("cand"))
       .agg(sum(col("sim_fp")).as("score_fp"),
         count(lit(1)).as("n_terms"))
   }
@@ -447,8 +487,10 @@ object Graph extends OperatorFamily {
     // BOUNDED (25 brands) — the affinity matrix is ≤ |brands|² rows
     // built from one self-join on customer and BROADCAST back; the
     // per-customer pair fan-out is C(k≤25, 2); candidate exclusion is
-    // an anti-join on the same purchase matrix. Everything keys on
-    // customer or brand — no global structure.
+    // a per-customer owned set (array_contains), not an anti-join.
+    // Everything keys on customer or brand id, and every broadcast join
+    // keys on one long (see itemCfScores); brand names come back by id
+    // before the window, which breaks ties by name.
     "q196_item_cf_recommend" -> ((s, d) => {
       val rMat = Tables.orders(s, d)
         .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))

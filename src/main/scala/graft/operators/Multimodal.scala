@@ -232,7 +232,7 @@ object Multimodal extends OperatorFamily {
 
   /** Media count up to which the banding stays 4 x 15 bits and an
     * n-row fingerprint side may be broadcast (see [[phashPairsFrom]]). */
-  private val BandKnee = 32768L
+  private[graft] val BandKnee = 32768L
 
   /** The banded-LSH pair search over a MATERIALIZED fingerprint frame
     * (round 13). The cut means the documents scan + ahash map pass runs
@@ -258,15 +258,23 @@ object Multimodal extends OperatorFamily {
     * back to the canonical shuffled LSH exchange on (band, bh) — never
     * a corpus-sized broadcast. Values are identical either way (same
     * nb/w per n_media as the old in-plan scalar; join strategy does not
-    * change results), so the oracle CTEs are untouched. */
-  private def phashPairsFrom(s: SparkSession, fp: DataFrame,
+    * change results), so the oracle CTEs are untouched.
+    *
+    * One-long-key rule: `bh` is an INT (it holds at most 20 bits), so the
+    * `(band int, bh int)` join key packs into one long
+    * (`HashJoin.rewriteKeyExpr`) and the broadcast builds a
+    * `LongHashedRelation`, sized to its rows. An `(int, bigint)` key
+    * builds an `UnsafeHashedRelation`, whose map pins one whole
+    * `spark.buffer.pageSize` page (32 MiB on a 3 GB heap) on every
+    * executor for as long as the broadcast lives. */
+  private[graft] def phashPairsFrom(s: SparkSession, fp: DataFrame,
       nMedia: Long): DataFrame = {
     val (nb, w) = if (nMedia <= BandKnee) (4, 15) else (3, 20)
     val banded = fp
       .select(col("doc_id"), col("ahash"),
         explode(expr(s"sequence(0, ${nb - 1})")).as("band"))
-      .withColumn("bh", expr(
-        s"shiftright(ahash, CAST(band * $w AS INT)) & ${(1L << w) - 1}L"))
+      .withColumn("bh", expr(s"CAST(shiftright(ahash, CAST(band * $w AS INT))" +
+        s" & ${(1L << w) - 1}L AS INT)"))
       .select(col("doc_id"), col("ahash"), col("band"), col("bh"))
     val a = banded.select(col("doc_id").as("doc_a"),
       col("ahash").as("ha"), col("band"), col("bh"))
@@ -279,6 +287,46 @@ object Multimodal extends OperatorFamily {
         expr("CAST(bit_count(ha ^ hb) AS INT)").as("hamming"))
       .filter(col("hamming") <= 12)
       .distinct()
+  }
+
+  /** m11's recall report over a MATERIALIZED fingerprint frame `fp`
+    * (doc_id, ahash): per hamming bucket, the exhaustive truth pairs
+    * (a < b, hamming <= 12) and how many of them the banded index
+    * ([[phashPairsFrom]]) finds. One cut is shared by the truth scan and
+    * the banded index (round 13): the documents scan + ahash pass ran
+    * 3x here before (truth + twice inside phashPairs). The truth side's
+    * build frame is explicitly broadcast — n rows of 16 bytes, and the
+    * O(n²) scan is this query's DECLARED eval-twin contract — because
+    * the cut erases the stats the auto-broadcast decision used. The
+    * hint is guarded by the banded index's knee, on the count the index
+    * needs anyway, so no corpus-sized frame is ever broadcast.
+    *
+    * found ⊆ truth: both keep doc_a < doc_b and hamming <= 12 over the
+    * same fingerprints, and doc ids are unique. So counting the union
+    * of both sides per bucket gives exactly the counts of a truth LEFT
+    * JOIN found on (doc_a, doc_b), without that join, whose two-long
+    * key would build an `UnsafeHashedRelation` (one-long-key rule, see
+    * [[phashPairsFrom]]). */
+  private[graft] def phashRecall(s: SparkSession, fp: DataFrame)
+      : DataFrame = {
+    val nMedia = fp.count()
+    val a = fp.select(col("doc_id").as("doc_a"), col("ahash").as("ha"))
+    val b = fp.select(col("doc_id").as("doc_b"), col("ahash").as("hb"))
+    val truth = a.join(if (nMedia <= BandKnee) broadcast(b) else b,
+        col("doc_a") < col("doc_b"))
+      .select(expr("CAST(bit_count(ha ^ hb) AS INT)").as("hamming"))
+      .filter(col("hamming") <= 12)
+    val found = phashPairsFrom(s, fp, nMedia).select(col("hamming"))
+    truth.withColumn("is_truth", lit(true))
+      .unionByName(found.withColumn("is_truth", lit(false)))
+      .groupBy(when(col("hamming") <= 4, "d00_04")
+        .when(col("hamming") <= 8, "d05_08")
+        .otherwise("d09_12").as("bucket"))
+      .agg(count_if(col("is_truth")).as("n_true"),
+        count_if(!col("is_truth")).as("n_found"))
+      .withColumn("recall",
+        col("n_found").cast("double") / col("n_true"))
+      .orderBy(col("bucket"))
   }
 
   /** Media near-dup clusters (doc_id, cluster_rep) over the
@@ -464,36 +512,8 @@ object Multimodal extends OperatorFamily {
     // pairs where it matters (near-threshold distances). Ground-truth
     // side is the O(n²) scan — per-bucket / sampled only, like every
     // eval twin (e02/e07/e14); the index side is the m07 scale path.
-    "m11_phash_recall" -> ((s, d) => {
-      // one cut shared by the truth scan and the banded index (round
-      // 13): the documents scan + ahash pass ran 3x here before (truth
-      // + twice inside phashPairs). The truth side's build frame is
-      // explicitly broadcast — n rows of 16 bytes, and the O(n²) scan
-      // is this query's DECLARED eval-twin contract — because the cut
-      // erases the stats the auto-broadcast decision used. The hint is
-      // guarded by the banded index's knee, on the count the index
-      // needs anyway, so no corpus-sized frame is ever broadcast.
-      val fp = Materialize.LocalCheckpoint(ahashFrame(s, d))
-      val nMedia = fp.count()
-      val a = fp.select(col("doc_id").as("doc_a"), col("ahash").as("ha"))
-      val b = fp.select(col("doc_id").as("doc_b"), col("ahash").as("hb"))
-      val truth = a.join(if (nMedia <= BandKnee) broadcast(b) else b,
-          col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          expr("CAST(bit_count(ha ^ hb) AS INT)").as("hamming"))
-        .filter(col("hamming") <= 12)
-      val found = phashPairsFrom(s, fp, nMedia)
-        .select(col("doc_a"), col("doc_b"), lit(1L).as("hit"))
-      truth.join(found, Seq("doc_a", "doc_b"), "left")
-        .groupBy(when(col("hamming") <= 4, "d00_04")
-          .when(col("hamming") <= 8, "d05_08")
-          .otherwise("d09_12").as("bucket"))
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_found"))
-        .withColumn("recall",
-          col("n_found").cast("double") / col("n_true"))
-        .orderBy(col("bucket"))
-    }),
+    "m11_phash_recall" -> ((s, d) =>
+      phashRecall(s, Materialize.LocalCheckpoint(ahashFrame(s, d)))),
 
     // Media near-dup CLUSTERS: m07's verified pair graph collapsed by
     // the same path-halving connected components the text corpus uses
